@@ -33,7 +33,7 @@ object Bench {
     val realOut = System.out
     System.setOut(System.err)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCpus
     // Child mode for the END-of-session canary pair (r13 verdict item 5):
     // run ONLY the canaries in a fresh JVM and print one JSON line. The
     // parent's end pair used to read up to ~25 % below cold start on a
@@ -43,13 +43,7 @@ object Bench {
     // conditions (cold JIT, settled heap), so the pinned COLD references
     // stay valid for both and start ≈ end on a sustained box.
     if (sys.env.contains("SPARK_GRAFT_CANARY_ONLY")) {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName("graft-canary-child")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = GraftSession.builder("graft-canary-child", sfDir, cpus).getOrCreate()
       s.sparkContext.setLogLevel("ERROR")
       val (c, m, sc) = runCanaries(s)
       s.stop()
@@ -57,59 +51,7 @@ object Bench {
       realOut.flush()
       return
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // SPARK_GRAFT_AQE=off: diagnostic control for A/Bing AQE's per-stage
-      // re-optimization latency against its coalescing/skew wins (r15)
-      .config("spark.sql.adaptive.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_AQE", "on") != "off").toString)
-      // reducer count must TRACK data size, not sit pinned at core count:
-      // AQE starts every un-pinned shuffle at inputBytes/8MB partitions
-      // (floor cpus, cap 1024 — the same 8 MB granule as
-      // files.maxPartitionBytes) and coalesces back by measured bytes.
-      // sf0.1/sf1 degenerate to cpus (plans identical to r8); sf3 39,
-      // sf10 150, 1024 by ~sf70. Motivation: q17's near-no-reduction pair
-      // aggregation spills 62 GB at sf3 when 32 fixed reducers each hold
-      // ~12 M groups — per-reducer state must be BOUNDED, and only a
-      // data-derived reducer count bounds it (DiagQ17 A/B at 512-init:
-      // spill halved; a fixed cpus×16 was rejected — it taxed sf1 ~45%.
-      // Full analysis: SCALE.md §0c.1).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.sources.Layout.initialPartitionsFor(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r15 (DiagStages): generated-class cache holds 100 entries by default
-      // while one catalog round compiles ~2 000 distinct codegen classes, so
-      // every min-of-3 re-run of an entry recompiled every stage (janino is
-      // 50–200 ms per class, charged to the driver gaps BETWEEN stages —
-      // q15's timed wall carried ~0.8 s of such gaps against 1.1 s of stage
-      // time). Scale-independent: compiled classes are keyed by source text,
-      // a few tens of KB each (~5 000 ≈ low hundreds of MB driver-side,
-      // sized for the 197-entry catalog; a deployment with one query per
-      // JVM can leave the default).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // split scans at row-group size (GenScale writes 8 MB groups): the
-      // default 128 MB puts a whole ≤128 MB single-file table in ONE task,
-      // serializing every map-side operator regardless of core count
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // open-cost floor below the split target: the default 4 MB makes
-      // maxSplitBytes = max(4m, bytesPerCore), so a well-compressed 22 MB
-      // table yields only ~6 splits on 32 cores and CPU-heavy map stages
-      // (tx05's regex pair: 8.6 s at sf3) serialize on them
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // all-pairs exact-baseline ceiling (dd05/ann01): default guards at 10 k
-      // rows; a scale run that deliberately wants the exact baselines (e.g.
-      // sf1's 20 k embeddings) raises it via env — visible in the command
-      // line rather than a silent in-code bump (ADVICE r5)
-      .config(graft.pipeline.ExactBaseline.ConfKey,
-        sys.env.getOrElse("SPARK_GRAFT_EXACT_MAXROWS",
-          graft.pipeline.ExactBaseline.DefaultMaxRows.toString))
-      // RocksDB state store by default (r13 item 2) — see StateStores
-      .config(graft.streaming.StateStores.ConfKey,
-        graft.streaming.StateStores.providerClass)
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench", sfDir, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Route ALL log4j output to a file (target/bench_spark.log) and nothing
     // to the console: r5's captured tail carried `ERROR DataWritingSparkTask:
@@ -302,16 +244,7 @@ object Bench {
     catch { case _: Throwable => () }
     Residency.release(spark)
 
-    // Defensive conf hygiene: no catalog entry mutates the AQE initial
-    // shuffle-partition count anymore (r11 removed q17's pair-mass raise
-    // after the A/B in SCALE.md §0f.3), but the reset stays so a future
-    // entry-scoped conf experiment can never leak into a neighbor's timing
-    // (BasketCapSpec pins that q15/q17 leave the conf untouched).
-    val initPartsKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val initPartsDefault = spark.conf.get(initPartsKey)
-
     def materialize(name: String): Double = gateCodegen(name) {
-      spark.conf.set(initPartsKey, initPartsDefault)
       val t0 = System.nanoTime()
       val secs =
         try { SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -498,7 +431,7 @@ object Bench {
     * parent drive doesn't double-reserve the box (the canaries need ~2 g).
     * None on any failure — caller falls back to the in-JVM pair.
     */
-  private def spawnEndCanaries(cpus: String): Option[(Double, Double, Double)] = try {
+  private def spawnEndCanaries(cpus: Int): Option[(Double, Double, Double)] = try {
     import scala.jdk.CollectionConverters._
     val javaBin = java.nio.file.Paths
       .get(System.getProperty("java.home"), "bin", "java").toString
@@ -509,7 +442,7 @@ object Bench {
       "graft.Bench")
     val pb = new ProcessBuilder(cmd.asJava)
     pb.environment().put("SPARK_GRAFT_CANARY_ONLY", "1")
-    pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+    pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
     // Child stdout goes to a temp FILE, not a parent-read pipe: reading the
     // pipe to EOF before waitFor meant the 300 s timeout could never fire

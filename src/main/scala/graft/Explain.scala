@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection helper: `runMain graft.Explain <queryName> [sfDir] [runs]`
   * prints the formatted physical plan and wall times for repeated
   * materializations (noop sink). Used to keep every catalog query on the plan
@@ -13,22 +11,7 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench's scan/codegen environment so Explain timings and plans
-      // track the bench's (r15)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.sources.Layout.initialPartitionsFor(sfDir, cpus.toInt).toString)
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-explain", sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     Residency.release(spark)

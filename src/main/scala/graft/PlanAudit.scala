@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Read-only plan audit across the whole catalog: flags plan shapes that are
   * fine at test scale but wrong at 100 TB (cartesian products, broadcast
   * nested loops, single-partition exchanges) so intentional uses stay
@@ -166,30 +164,17 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-plan-audit", sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // "lambdafunction" marks interpreted higher-order-function evaluation —
     // acceptable only on metadata-scale or post-aggregation columns; hot-path
     // occurrences must move to codegen kernels (graft.functions.*)
     val flags = Seq("CartesianProduct", "BroadcastNestedLoopJoin", "SinglePartition",
       "lambdafunction")
-    // per-job shuffle-sizing raises (q17) reset before each entry, as in
-    // Bench/Verify — benign at audit scale (the raise needs sf3-sized mass)
-    // but audits at any sfDir must see each entry's own conf
-    val initPartsKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val initPartsDefault = spark.conf.getOption(initPartsKey)
     val verbose = sys.env.contains("SPARK_GRAFT_AUDIT_VERBOSE")
     Catalog.all.foreach { d =>
       try {
         if (verbose) println(s"[audit] building ${d.name}")
-        initPartsDefault match {
-          case Some(v) => spark.conf.set(initPartsKey, v)
-          case None => spark.conf.unset(initPartsKey)
-        }
         val plan = d.build(spark, sfDir).queryExecution.executedPlan.toString
         val hits = flags.filter(plan.contains)
         if (hits.nonEmpty) println(s"[audit] ${d.name}: ${hits.mkString(", ")}")

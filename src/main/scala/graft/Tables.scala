@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
 final case class Tables(spark: SparkSession, dir: String) {
   /** r15 (guide §1.2 "per-task work" / §7.3 driver latency): every bare
     * `spark.read.parquet(path)` runs a 1-task footer-read JOB at DataFrame
-    * BUILD time to infer the schema — DiagStages measured 3 such jobs plus
-    * their driver gaps ≈ 150 ms at the head of q15's 1.9 s wall, paid again
+    * BUILD time to infer the schema — a stage timeline measured 3 such jobs plus
+    * their driver gaps ≈ 150 ms at the head of q15's 1.9 s wall
+    * (OPTIMIZATION_r15.md §1), paid again
     * on every rebuild of every entry (the bench rebuilds each entry 3×).
     * The testdata files are immutable for a process lifetime, so the schema
     * is cached per path JVM-wide and handed to the reader explicitly —
@@ -39,7 +40,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   /** r15 (guide §2.5 "one huge unsplittable file"): parquet scans split at
     * ROW-GROUP granularity, and every sf0.1 testdata file is a single row
     * group — so every map-side stage over these tables runs on ONE task
-    * regardless of core count (DiagStages: pp03's redact+gate stage,
+    * regardless of core count (OPTIMIZATION_r15.md §2: pp03's redact+gate stage,
     * 2.83 s wall / 2.82 s cpu, 1 task on a 32-core session; localCheckpoint
     * then pins the 1-partition layout for the rest of the chain). For a
     * KERNEL-HEAVY MAP consumer (regex scrubbing, shingle/signature builds,
@@ -63,7 +64,6 @@ final case class Tables(spark: SparkSession, dir: String) {
     * proportionally fewer partitions.
     */
   private def widen(df: DataFrame, name: String, key: String): DataFrame = {
-    if (sys.env.getOrElse("SPARK_GRAFT_WIDEN", "on") == "off") return df // A/B control
     val parallel = spark.sparkContext.defaultParallelism
     val meta = Tables.metaCache.get(s"$dir/$name.parquet")
     if (meta != null && meta.rowGroups > 0 && meta.rowGroups < (parallel + 1) / 2)
@@ -87,17 +87,18 @@ final case class Tables(spark: SparkSession, dir: String) {
   def orders: DataFrame     = t("orders")
   def lineitem: DataFrame   = t("lineitem")
 
-  /** events.parquet stores `ts` as INT64 TIMESTAMP(NANOS), which Spark's
+  /** events.parquet may store `ts` as INT64 TIMESTAMP(NANOS), which Spark's
     * vectorized reader rejects. The values are µs-grain (verified: ns%1000==0
-    * at every sf), so read nanos as long and rebuild a microsecond timestamp —
-    * lossless, and identical to what DuckDB's TIMESTAMP_NS sees.
+    * at every sf), so the session reads nanos as long
+    * (`spark.sql.legacy.parquet.nanosAsLong`, set by [[GraftSession]]) and
+    * this rebuilds a microsecond timestamp — lossless, and identical to what
+    * DuckDB's TIMESTAMP_NS sees.
     *
     * GenScale-produced directories store `ts` as TIMESTAMP(MICROS) instead
     * (Spark cannot write the NANOS physical type), which the reader surfaces
     * as TimestampType directly — detect by schema and skip the rebuild.
     */
   def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = t("events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

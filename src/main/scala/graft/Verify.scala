@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,43 +9,12 @@ object Verify {
     // name prefixes — run just those catalog entries.
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // reducer count tracks data via AQE (see Bench.scala) — keeps the big
-      // pair/shingle shuffles spill-free at sf1+ verify drives too
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.sources.Layout.initialPartitionsFor(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen class cache sized for the catalog (r15) — see Bench.scala
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // row-group-sized splits — see Bench.scala (single-task scan pitfall)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // open-cost floor below the split target: the default 4 MB makes
-      // maxSplitBytes = max(4m, bytesPerCore), so a well-compressed 22 MB
-      // table yields only ~6 splits on 32 cores and CPU-heavy map stages
-      // (tx05's regex pair: 8.6 s at sf3) serialize on them
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // exact-baseline (dd05/ann01) ceiling — overridable for deliberate
-      // scale runs, same knob as Bench (ADVICE r5)
-      .config(graft.pipeline.ExactBaseline.ConfKey,
-        sys.env.getOrElse("SPARK_GRAFT_EXACT_MAXROWS",
-          graft.pipeline.ExactBaseline.DefaultMaxRows.toString))
-      // RocksDB state store by default (r13 item 2) — see StateStores
-      .config(graft.streaming.StateStores.ConfKey,
-        graft.streaming.StateStores.providerClass)
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-verify", sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // defensive per-entry conf reset (no entry mutates it since r11) — see Bench
-    val initPartsKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val initPartsDefault = spark.conf.get(initPartsKey)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .foreach { case (name, fn) =>
-      spark.conf.set(initPartsKey, initPartsDefault)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -40,16 +40,6 @@ object LshExpressions {
     ColumnBridge.column(ArrayLongEqCount(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Σ popcount(a_i XOR b_i) over two long arrays — the Hamming distance
-    * between packed hyperplane signatures. sign-random-projection theory
-    * (Goemans–Williamson / Charikar SimHash): P[bit differs] = θ(a,b)/π, so
-    * hamming/T estimates the angle and cos(π·ham/T) the cosine — the dd06
-    * confirm-gate signal. Mirrors DuckDB `SUM(bit_count(xor(...)))`.
-    */
-  def xorPopcount(a: Column, b: Column): Column =
-    ColumnBridge.column(ArrayLongXorPopcount(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
   /** Polynomial fold of a long array: `acc = (acc*31 + v) % 1e9+7` —
     * the band-bucket key for banded MinHash LSH. Chosen over `xxhash64`
     * because the identical fold is expressible in the DuckDB oracle
@@ -140,50 +130,6 @@ case class ArrayLongEqCount(left: Expression, right: Expression)
          |int $cnt = 0;
          |for (int $i = 0; $i < $n; $i++) {
          |  if (!$a.isNullAt($i) && !$b.isNullAt($i) && $a.getLong($i) == $b.getLong($i)) $cnt++;
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-case class ArrayLongXorPopcount(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_xor_popcount requires two array<bigint>, got ${l.catalogString}, ${r.catalogString}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    val n = math.min(x.numElements(), y.numElements())
-    var cnt = 0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i))
-        cnt += java.lang.Long.bitCount(x.getLong(i) ^ y.getLong(i))
-      i += 1
-    }
-    cnt
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val (n, i, cnt) = (ctx.freshName("n"), ctx.freshName("i"), ctx.freshName("cnt"))
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $cnt = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i))
-         |    $cnt += java.lang.Long.bitCount($a.getLong($i) ^ $b.getLong($i));
          |}
          |${ev.value} = $cnt;
        """.stripMargin

@@ -254,20 +254,15 @@ object Analytics {
       // min-of-3) because the near-no-reduction pair aggregate shrinks to
       // the screen's survivors. The loud cellsFor refusal already guards
       // the only regime where the screen can't pay (mass past the sketch
-      // ceiling). SPARK_GRAFT_Q17_SCREEN=off remains as the diagnostic
-      // control for A/Bs.
+      // ceiling).
       //
-      // Screened mode: the sketch pass is a SECOND job over the capped
-      // baskets, which ReusedExchange cannot span (reuse is per-query-
-      // execution), so the capped distinct is persisted once — the mass
-      // probe, the sketch pass, and the main pass all read the columnar
-      // cache, still clustered by user. The off-control keeps the r14
-      // single-execution shape: three consumers share the cap's exchange
-      // via ReusedExchange, no materialization (round 2's eager
-      // localCheckpoint here cost 6.9×). Residency.release drops any
-      // persisted blocks after the entry is consumed.
-      val screenOn = sys.env.getOrElse("SPARK_GRAFT_Q17_SCREEN", "on") != "off"
-      val upC = if (screenOn) up.persist() else up
+      // The sketch pass is a SECOND job over the capped baskets, which
+      // ReusedExchange cannot span (reuse is per-query-execution), so the
+      // capped distinct is persisted once — the mass probe, the sketch
+      // pass, and the main pass all read the columnar cache, still
+      // clustered by user. Residency.release drops the persisted blocks
+      // after the entry is consumed.
+      val upC = up.persist()
       val buyers = upC.groupBy("part_id").agg(count(lit(1)).as("buyer_count"))
       val a = upC.toDF("u", "part_a")
       val b = upC.toDF("u", "part_b")
@@ -275,10 +270,10 @@ object Analytics {
       // pairs hold 381 M DISTINCT (part_a, part_b) groups (only 270 k reach
       // both_count >= 3), so at 32 FIXED reducers each final-agg hash map
       // held ~12 M groups, outgrew task memory, and spilled 62 GB — the r8
-      // verdict's superlinear sf1→sf3 curve (4.8× on 3×), measured in
-      // tools/DiagQ17. The fix is the session's AQE initialPartitionNum
-      // (Bench/Verify): reducer count derives from input size, bounding
-      // per-reducer aggregation state (DiagQ17 512-init A/B halved the
+      // verdict's superlinear sf1→sf3 curve (4.8× on 3×), SCALE.md §0c.1.
+      // The fix is the session's AQE initialPartitionNum (GraftSession):
+      // reducer count derives from input size, bounding per-reducer
+      // aggregation state (a 512-init A/B halved the
       // spill; r9 full-bench sf3 reads 50.3 s vs r8's 85.1 on this same
       // plan — attribution split between conf and session variance,
       // SCALE §0c.1). Two plan rewrites were measured
@@ -303,7 +298,7 @@ object Analytics {
       // pressure ∝ bytes moved, and shrinking the partial-agg exchange row
       // from (long, long, count) to (long, count) is a measured ~20 % wall
       // win at sf10, POSITION-MATCHED ACROSS BOTH RUN ORDERS (ratios 0.79 /
-      // 0.81 — tools/DiagQ17Pack ran the A/B twice with the variant order
+      // 0.81 — the A/B ran twice with the variant order
       // reversed because same-JVM warmth is worth ~2×, bigger than the plan
       // effect itself; SCALE.md §0g.3). Re-measures and overturns the
       // r8-era rejection, which ran at sf3 under fixed 32 reducers where
@@ -333,7 +328,7 @@ object Analytics {
       // past the sketch's mass ceiling.
       val pairStream = a.join(b, Seq("u")).filter(col("part_a") < col("part_b"))
         .select(shiftleft(col("part_a"), 32).bitwiseOR(col("part_b")).as("pk"))
-      val screened = if (!screenOn) pairStream else {
+      val screened = {
         // exact screened mass from the capped basket sizes: upC is already
         // clustered by user, so this aggregate adds no exchange
         val massRow = upC.groupBy("user_id").agg(count(lit(1)).as("n"))

@@ -255,15 +255,53 @@ object CorpusPipeline {
     * shard) roster computed from the JSONL export read-back.
     */
   def curationChain(spark: SparkSession, dir: String): DataFrame = {
+    // The cluster map (step 6) derives from the RAW documents, independent
+    // of stages 1–5 — its eager subchain (dd02 shingle join + the union-find
+    // edge collect) back-fills the serial chain's executor slack (guide §2.6).
+    val (clusters, selected) = graft.Concurrently(spark,
+      graft.Catalog.byName("ts02_dedup_clusters").build(spark, dir),
+      curatedSelection(spark, dir))
+
+    // 6. leakage-safe split (sp01's cluster-representative hash)
+    val rep = coalesce(col("cluster_id"), col("doc_id"))
+    val bkt = pmod((rep % 1000L) * Curation.KnuthA, lit(1000L))
+    val withSplit = selected.join(clusters, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("t2"),
+        when(bkt < Curation.TrainUpper, "train")
+          .when(bkt < Curation.ValidUpper, "valid")
+          .otherwise("test").as("split"))
+
+    // 7. epoch shuffle (sh01's seeded md5 order, DistributedRank positions)
+    val keyed = withSplit.withColumn("shuffle_key",
+      md5(concat(lit("ep7:"), col("doc_id").cast("string")).cast("binary")))
+    val positioned = graft.operators.DistributedRank
+      .withGlobalRank(keyed, "position", col("shuffle_key"), col("doc_id"))
+      .select(col("doc_id"), col("t2"), col("split"),
+        col("position").cast("long").as("position"),
+        pmod(col("position") - 1, lit(4L)).cast("long").as("shard"))
+
+    // 8. sharded JSONL export + read-back roster (ex01's round-trip proof)
+    val out = s"target/export_pp03_${math.abs(dir.hashCode)}"
+    positioned.write.mode("overwrite").partitionBy("split", "shard").json(out)
+    val back = spark.read
+      .schema("doc_id BIGINT, t2 STRING, position BIGINT, split STRING, shard BIGINT")
+      .json(out)
+    val chainMd5 = md5(concat_ws("",
+      transform(array_sort(collect_list(struct(col("position"), md5(col("t2").cast("binary")).as("h")))),
+        x => x.getField("h"))).cast("binary"))
+    back.groupBy("split", "shard")
+      .agg(count(lit(1)).cast("long").as("n_docs"),
+        sum(length(col("t2"))).cast("long").as("total_chars"),
+        chainMd5.as("chain_md5"))
+      .orderBy("split", "shard")
+  }
+
+  /** pp03 steps 1–5: redaction, quality gate, segment dedup, LM score and
+    * token-budget selection, as (doc_id, t2).
+    */
+  private def curatedSelection(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextExpressions
     import org.apache.spark.sql.expressions.Window
-
-    // The cluster map (step 6) derives from the RAW documents, independent
-    // of stages 1–5 — start its eager subchain (dd02 shingle join + the
-    // union-find edge collect) now so its jobs back-fill the serial chain's
-    // executor slack (guide §2.6); joined where step 6 needs it.
-    val clustersF = java.util.concurrent.CompletableFuture.supplyAsync(() =>
-      graft.Catalog.byName("ts02_dedup_clusters").build(spark, dir))
 
     // 1. PII redaction (px01's planted-PII construction)
     val planted = concat(
@@ -275,7 +313,7 @@ object CorpusPipeline {
     val t1 = regexp_replace(regexp_replace(regexp_replace(planted,
       Scrub.EmailRe, "<EMAIL>"), Scrub.PhoneRe, "<PHONE>"), Scrub.IpRe, "<IP>")
     // documentsWide (r15): the redact+gate head was a measured 2.83 s
-    // SINGLE-TASK stage (DiagStages) — the whole chain then inherited the
+    // SINGLE-TASK stage (OPTIMIZATION_r15.md §2) — the whole chain then inherited the
     // 1-partition layout through its checkpoints. The localCheckpoint is a
     // PUSHDOWN BARRIER, not a convenience: without it Catalyst pushes the
     // quality gate's filter (which re-embeds the full triple-regex chain in
@@ -347,49 +385,10 @@ object CorpusPipeline {
       .localCheckpoint(true) // budget scalar + running total both read it
     val budgetRow = scored.agg(sum("n_tokens")).head()
     val budget = if (budgetRow.isNullAt(0)) 0L else budgetRow.getLong(0) / 2
-    val selected = graft.operators.DistributedRank
+    graft.operators.DistributedRank
       .withRunningTotal(scored, "cum_tokens", "n_tokens",
         col("quality_score").desc, col("doc_id"))
       .filter(col("cum_tokens") <= budget)
       .select("doc_id", "t2")
-
-    // 6. leakage-safe split (sp01's cluster-representative hash)
-    val clusters =
-      try clustersF.join()
-      catch {
-        case e: java.util.concurrent.CompletionException if e.getCause != null =>
-          throw e.getCause
-      }
-    val rep = coalesce(col("cluster_id"), col("doc_id"))
-    val bkt = pmod((rep % 1000L) * Curation.KnuthA, lit(1000L))
-    val withSplit = selected.join(clusters, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("t2"),
-        when(bkt < Curation.TrainUpper, "train")
-          .when(bkt < Curation.ValidUpper, "valid")
-          .otherwise("test").as("split"))
-
-    // 7. epoch shuffle (sh01's seeded md5 order, DistributedRank positions)
-    val keyed = withSplit.withColumn("shuffle_key",
-      md5(concat(lit("ep7:"), col("doc_id").cast("string")).cast("binary")))
-    val positioned = graft.operators.DistributedRank
-      .withGlobalRank(keyed, "position", col("shuffle_key"), col("doc_id"))
-      .select(col("doc_id"), col("t2"), col("split"),
-        col("position").cast("long").as("position"),
-        pmod(col("position") - 1, lit(4L)).cast("long").as("shard"))
-
-    // 8. sharded JSONL export + read-back roster (ex01's round-trip proof)
-    val out = s"target/export_pp03_${math.abs(dir.hashCode)}"
-    positioned.write.mode("overwrite").partitionBy("split", "shard").json(out)
-    val back = spark.read
-      .schema("doc_id BIGINT, t2 STRING, position BIGINT, split STRING, shard BIGINT")
-      .json(out)
-    val chainMd5 = md5(concat_ws("",
-      transform(array_sort(collect_list(struct(col("position"), md5(col("t2").cast("binary")).as("h")))),
-        x => x.getField("h"))).cast("binary"))
-    back.groupBy("split", "shard")
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        sum(length(col("t2"))).cast("long").as("total_chars"),
-        chainMd5.as("chain_md5"))
-      .orderBy("split", "shard")
   }
 }

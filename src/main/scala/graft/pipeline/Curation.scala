@@ -315,7 +315,7 @@ object Curation {
     ) { (spark, dir) =>
       // cluster map and contamination verdicts derive independently; overlap
       // their eager build jobs (guide §2.6)
-      val (clusters, cont0) = graft.Concurrently(
+      val (clusters, cont0) = graft.Concurrently(spark,
         graft.Catalog.byName("ts02_dedup_clusters").build(spark, dir),
         graft.Catalog.byName("dc01_decontamination").build(spark, dir))
       val cont = cont0.select(col("doc_id"), col("contaminated"))

@@ -341,7 +341,7 @@ object Dedup {
       // feeds a join and a count — see nearDupEdges. Truth (shingle snap)
       // and candidates (signature snap) build independently — overlap their
       // eager checkpoint jobs (guide §2.6).
-      val (truth0, j0) = graft.Concurrently(
+      val (truth0, j0) = graft.Concurrently(spark,
         nearDupEdges(spark, dir),
         minhashPairs(spark, dir, threshold = 0.0))
       val truth = truth0.withColumn("t", lit(1L))
@@ -822,7 +822,7 @@ object Dedup {
       // the three detectors are independent until the final joins; their
       // eager build jobs (ts02's edge snap + union-find inside dd07, sd01's
       // centroid work) overlap instead of serializing (guide §2.6)
-      val (near0, sem0, exact) = graft.Concurrently(
+      val (near0, sem0, exact) = graft.Concurrently(spark,
         graft.Catalog.byName("dd07_dedup_survivors").build(spark, dir),
         graft.Catalog.byName("sd01_semantic_dedup").build(spark, dir),
         graft.Catalog.byName("dd01_exact_dedup").build(spark, dir))

@@ -82,7 +82,7 @@ object Similarity {
   private[pipeline] val HMax = 20
   private[pipeline] val TargetOcc = 8
   /** Generalized over the occupancy target (r10 verdict item 4's geometry
-    * sweep — DiagDd06Sweep): smaller occ → more leading bits → finer buckets
+    * sweep — SCALE.md §0f.4): smaller occ → more leading bits → finer buckets
     * → fewer candidates, traded against recall at the confirm threshold.
     */
   private[graft] def adaptiveBitsFor(n: Long, occ: Int): Int = {

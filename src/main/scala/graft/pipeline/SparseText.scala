@@ -103,6 +103,45 @@ object SparseText {
   val LabelPropLocalMaxEdgesKey = "graft.labelProp.localMaxEdges"
   private val LabelPropLocalMaxEdgesDefault = 2000000L
 
+  /** (doc_id, cluster_id = min member) for every node of the (doc_a, doc_b)
+    * edge set, sorted by doc_id: driver union-find up to
+    * [[LabelPropLocalMaxEdgesKey]] edges, the distributed fixpoint above it.
+    * `edges` is read twice (count, then collect or every round), so callers
+    * pass a materialized frame.
+    */
+  private[pipeline] def clusterMap(spark: SparkSession, edges: DataFrame): DataFrame = {
+    val maxLocal = spark.conf.get(LabelPropLocalMaxEdgesKey,
+      LabelPropLocalMaxEdgesDefault.toString).toLong
+    // metadata job over the materialized blocks, not a recompute
+    val nEdges = edges.count()
+    if (maxLocal > 0 && nEdges <= maxLocal) {
+      // Small-graph fast path: exact union-find on the collected edge
+      // list (bounded by maxLocal — see the key's doc). Same components,
+      // same (doc_id, min-member) rows; the result is driver-local, so
+      // downstream joins (dd07/dd11/sp01/sp02/pp03) broadcast it for free.
+      val comp = localComponents(
+        edges.collect().map(r => (r.getLong(0), r.getLong(1))))
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      val schema = StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("cluster_id", LongType, nullable = false)))
+      // comp is sorted by doc_id; one partition keeps that order — the
+      // ORDER BY contract holds without a range-exchange job
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(
+          comp.map(p => org.apache.spark.sql.Row(p._1, p._2)), 1),
+        schema)
+    } else {
+      val undirected = edges
+        .unionByName(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+        .toDF("src", "dst")
+      val maxIters = spark.conf.get(LabelPropMaxItersKey, "20").toInt
+      propagateMinLabels(undirected, maxIters)
+        .select(col("doc").as("doc_id"), col("label").cast("long").as("cluster_id"))
+        .orderBy("doc_id")
+    }
+  }
+
   /** Exact connected components of an edge list by union-find with path
     * compression — the driver-side twin of [[propagateMinLabels]] for
     * metadata-scale graphs (guide §1.2: the distributed fixpoint costs ~15
@@ -153,7 +192,7 @@ object SparseText {
     */
   private[graft] def propagateMinLabels(
       undirected: org.apache.spark.sql.DataFrame, maxIters: Int): org.apache.spark.sql.DataFrame = {
-    // r15 (per-round cost, DiagTs02: 2 rounds × ~0.3–0.6 s on a 512-row
+    // r15 (per-round cost, OPTIMIZATION_r15.md §3: 2 rounds × ~0.3–0.6 s on a 512-row
     // graph — fixed job latency, not data): the neighbor-min and the keep-
     // own-label leg fold into ONE join + ONE aggregate per round by adding
     // self-loops to the edge frame once up front — min over {self} ∪
@@ -252,36 +291,7 @@ object SparseText {
       val edges = Dedup.nearDupEdges(spark, dir)
         .localCheckpoint(true) // reused by count + (collect | every round);
                                // snap the expensive dd02 shingle join once
-      val maxLocal = spark.conf.get(LabelPropLocalMaxEdgesKey,
-        LabelPropLocalMaxEdgesDefault.toString).toLong
-      // metadata job over the materialized blocks, not a recompute
-      val nEdges = edges.count()
-      if (nEdges <= maxLocal) {
-        // Small-graph fast path: exact union-find on the collected edge
-        // list (bounded by maxLocal — see the key's doc). Same components,
-        // same (doc_id, min-member) rows; the result is driver-local, so
-        // downstream joins (dd07/dd11/sp01/sp02/pp03) broadcast it for free.
-        val comp = localComponents(
-          edges.collect().map(r => (r.getLong(0), r.getLong(1))))
-        import org.apache.spark.sql.types.{LongType, StructField, StructType}
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType, nullable = false),
-          StructField("cluster_id", LongType, nullable = false)))
-        // comp is sorted by doc_id; one partition keeps that order — the
-        // ORDER BY contract holds without a range-exchange job
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            comp.map(p => org.apache.spark.sql.Row(p._1, p._2)), 1),
-          schema)
-      } else {
-        val undirected = edges
-          .unionByName(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-          .toDF("src", "dst")
-        val maxIters = spark.conf.get(LabelPropMaxItersKey, "20").toInt
-        propagateMinLabels(undirected, maxIters)
-          .select(col("doc").as("doc_id"), col("label").cast("long").as("cluster_id"))
-          .orderBy("doc_id")
-      }
+      clusterMap(spark, edges)
     },
 
     // ----- ts03: TF-IDF top terms per document (keyword extraction) — the

@@ -172,8 +172,8 @@ object TextAnalysis {
         graft.functions.TextExpressions.filterNotInSet(split(col("clean"), " "), stopEn))
       // materialize the FINAL (small) projection before the global sort:
       // RangePartitioning's boundary-sampling job re-executes the child, so
-      // an unmaterialized sort tail paid the whole regex map twice (DiagMap
-      // at sf3: 8.3 s map → 17.0 s with orderBy). The checkpoint stores the
+      // an unmaterialized sort tail paid the whole regex map twice (SCALE.md
+      // §0c, sf3: 8.3 s map → 17.0 s with orderBy). The checkpoint stores the
       // ~100 B/doc output columns, not the text — the dc02
       // materialize-once-vs-recompute-twice trade, on the cheap side.
       f.select(col("doc_id"), col("lang"),
@@ -648,7 +648,7 @@ object TextAnalysis {
       .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("sp"), col("c"))
       .localCheckpoint(true) // vocab-sized; re-read every merge round
     val maxLocal = spark.conf.get(BpeLocalMaxVocabKey, "2000000").toLong
-    if (cur.count() <= maxLocal)
+    if (maxLocal > 0 && cur.count() <= maxLocal)
       return trainMergesLocal(
         cur.collect().map(r => (r.getString(0), r.getLong(1))), rounds, charsetGuard)
     val steps = Seq.newBuilder[(Int, String, String, String, Long)]

@@ -75,19 +75,13 @@ object TopKPerGroup {
       spark.experimental.extraStrategies = s :+ TopKStrategy
   }
 
-  /** Plan `df` with the [[WindowTopKRewrite]] optimizer rule active, then
-    * restore the session's rule set. The physical plan is forced (and
-    * memoized by QueryExecution) while the rule is installed, so only this
-    * frame gets the rewrite — other queries in the session keep their
-    * deterministic plans.
+  /** `df` with [[WindowTopKRewrite]] applied once to its optimized plan.
+    * Only this frame gets the rewrite; the session's rule set is never
+    * touched, so concurrent queries in the session keep their plans.
     */
-  def withAutoRewrite(df: DataFrame): DataFrame = synchronized {
-    val spark = df.sparkSession
-    install(spark)
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before :+ WindowTopKRewrite
-    try { df.queryExecution.executedPlan; df }
-    finally spark.experimental.extraOptimizations = before
+  def withAutoRewrite(df: DataFrame): DataFrame = {
+    install(df.sparkSession)
+    ColumnBridge.ofRows(df.sparkSession, WindowTopKRewrite(df.queryExecution.optimizedPlan))
   }
 
   import graft.{QueryDef, Tables}

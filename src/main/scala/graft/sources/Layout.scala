@@ -30,7 +30,7 @@ object Layout {
     * is just `cpus` — identical plans to a fixed setting; at sf1/sf3/sf10
     * the big near-no-reduction shuffles (q17's pair count) get reducers
     * proportional to data so per-reducer hash state stays bounded, and AQE
-    * coalesces the small shuffles back down. See Bench/Verify builders.
+    * coalesces the small shuffles back down. See [[graft.GraftSession]].
     */
   /** Total bytes under a data directory — the scale signal the AQE reducer
     * sizing and the q17 screen gate derive from (r15).

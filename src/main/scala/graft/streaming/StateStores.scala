@@ -5,7 +5,7 @@ package graft.streaming
   *
   * Why: the maintained streaming MVs (st01–st19 family) carry state that
   * grows with the key domain — st19's per-(user, day) span rows are exactly
-  * linear at 239 B/row on the default heap provider (r11, DiagSt19State) —
+  * linear at 239 B/row on the default heap provider (r11, SCALE.md §0g.4) —
   * so at 100 TB the executor HEAP is the ceiling: every state row lives on
   * the JVM old gen and is rewritten into each checkpoint delta. The r11 A/B
   * measured RocksDB wall-neutral-or-better at every scale with ~8× smaller
@@ -15,8 +15,9 @@ package graft.streaming
   * var away for A/Bs and for the tiny-state local demos where provider
   * startup cost dominates.
   *
-  * Every graft session factory (Bench, Verify, SparkSpec, DiagSt19State)
-  * routes through [[providerClass]]; `SPARK_GRAFT_STATE_PROVIDER=heap`
+  * [[graft.GraftSession]], which builds every graft session (the mains and
+  * the test suites), routes through [[providerClass]];
+  * `SPARK_GRAFT_STATE_PROVIDER=heap`
   * forces the Spark default heap provider, `rocksdb` (or unset) the RocksDB
   * one.
   */

@@ -46,7 +46,6 @@ object StreamingMVs {
     * actual schema.
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val actualTs = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
     val schema = StructType(eventsRawSchema.map {
       case f if f.name == "ts" => f.copy(dataType = actualTs)
@@ -187,13 +186,13 @@ object StreamingMVs {
         "compact the source to one batch or switch this sink to a merge-upsert")
     writtenPartitions.update(path,
       perBatch.updated(batchId, perBatch.getOrElse(batchId, Set.empty) ++ touched))
-    batch.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     batch
       // one file per key partition per batch (not shuffle.partitions files):
       // the part-like layout compaction expects, and far less file churn on
       // a sink that rewrites its touched partitions every micro-batch
       .repartition(col(partitionCol))
       .write
+      .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .partitionBy(partitionCol)
       .parquet(path)

@@ -51,14 +51,8 @@ object GenScale {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "target/testdata/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-genscale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder("graft-genscale", src)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, src, dst, factor)
@@ -120,7 +114,7 @@ object GenScale {
       // at least ~cores splits from sf1 up. Real 100 TB tables have
       // thousands of row groups/files; this makes the scale-up data
       // splittable the way production data is (pairs with
-      // maxPartitionBytes=8m in Bench/Verify).
+      // maxPartitionBytes=8m in GraftSession).
       df.coalesce(1).write.mode("overwrite")
         .option("parquet.block.size", 1L * 1024 * 1024)
         .parquet(tmp)

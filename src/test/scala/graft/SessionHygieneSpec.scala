@@ -1,0 +1,59 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** Source scan: one session builder, and no operator code that changes
+  * session-global state as it runs. Queries built in one session run
+  * concurrently (`Concurrently`, the serving shim), so a conf set by one
+  * entry leaks into whatever runs next to it.
+  */
+class SessionHygieneSpec extends AnyFunSuite {
+
+  private case class Hit(file: Path, line: Int, enclosingDef: String, text: String) {
+    override def toString = s"$file:$line (nearest def above: $enclosingDef): ${text.trim}"
+  }
+
+  private val DefName = """\bdef\s+(\w+)""".r.unanchored
+
+  private def scalaFiles(root: String): Seq[Path] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir), s"$dir not found; run the suite from the repository root")
+    val s = Files.walk(dir)
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+  }
+
+  /** Lines matching `pattern`, each with the nearest `def` above it. */
+  private def scan(root: String, pattern: scala.util.matching.Regex): Seq[Hit] =
+    scalaFiles(root).flatMap { f =>
+      var enclosing = "<none>"
+      Files.readAllLines(f).asScala.zipWithIndex.flatMap { case (text, i) =>
+        text match { case DefName(n) => enclosing = n; case _ => () }
+        if (pattern.findFirstIn(text).isDefined) Some(Hit(f, i + 1, enclosing, text)) else None
+      }
+    }
+
+  private def fileName(h: Hit) = h.file.getFileName.toString
+
+  test("GraftSession is the only session builder in src/") {
+    // split so this file does not match itself
+    val builder = ("SparkSession" + """\.builder\b""").r
+    val hits = scan("src", builder).filterNot(fileName(_) == "GraftSession.scala")
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("src/main sets or unsets session conf only in StateStores.withStatePartitions") {
+    val hits = scan("src/main", """\bconf\.(set|unset)\b""".r)
+      .filterNot(h => fileName(h) == "StateStores.scala" && h.enclosingDef == "withStatePartitions")
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("src/main assigns spark.experimental only in TopKPerGroup.install") {
+    val hits = scan("src/main", """\bexperimental\.\w+\s*=(?!=)""".r)
+      .filterNot(h => fileName(h) == "TopKPerGroup.scala" && h.enclosingDef == "install")
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+}

@@ -3,22 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one local SparkSession per suite (lazy, UTC, small shuffle). */
+/** Shared session: the engine's [[GraftSession]] configuration on local[4],
+  * plus a throwaway warehouse dir.
+  */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    // the shipped default: every streaming suite proves its MV under the
-    // same RocksDB provider Bench/Verify run (r13 item 2)
-    .config(graft.streaming.StateStores.ConfKey,
-      graft.streaming.StateStores.providerClass)
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.builder(getClass.getSimpleName, sf(), cpus = 4)
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+      .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }

@@ -49,6 +49,28 @@ class SparseTextSpec extends SparkSpec {
       SparseText.localComponents(edges).map(_._1).toSeq.sorted)
   }
 
+  test("localMaxEdges = 0 forces the distributed fixpoint, even on an empty edge set") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    // the distributed path ends in the ORDER BY; the driver union-find
+    // returns a pre-sorted one-partition RDD with no Sort node
+    def distributed(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.isInstanceOf[Sort]
+    val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    val chain = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
+    assert(!distributed(SparseText.clusterMap(spark, empty)))
+    val local = SparseText.clusterMap(spark, chain).collect().map(_.toSeq).toSeq
+    spark.conf.set(SparseText.LabelPropLocalMaxEdgesKey, "0")
+    try {
+      val e = SparseText.clusterMap(spark, empty)
+      assert(distributed(e) && e.isEmpty)
+      val c = SparseText.clusterMap(spark, chain)
+      assert(distributed(c))
+      assert(c.collect().map(_.toSeq).toSeq == local)
+      assert(local == Seq(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 1L), Seq(5L, 5L), Seq(6L, 5L)))
+    } finally spark.conf.unset(SparseText.LabelPropLocalMaxEdgesKey)
+  }
+
   test("ir01: BM25 top-20 matches a brute-force recompute of every doc's score") {
     val got = graft.Catalog.byName("ir01_bm25_retrieval").build(spark, sf()).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))

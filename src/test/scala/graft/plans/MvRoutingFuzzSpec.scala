@@ -1,12 +1,11 @@
 package graft.plans
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.{functions}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Randomized equivalence harness for MV routing (r7 verdict item 2).
   *
@@ -36,17 +35,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * this shape space. Future environment shifts (the r7 NTZ episode's class)
   * now fail here instead of falling back silently.
   */
-class MvRoutingFuzzSpec extends AnyFunSuite {
+class MvRoutingFuzzSpec extends graft.SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("mv-routing-fuzz")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ---- shape space ----
 

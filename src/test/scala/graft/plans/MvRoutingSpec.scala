@@ -1,27 +1,19 @@
 package graft.plans
 
 import graft.{Catalog, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Transparent MV routing: the routed plan must actually read the MV parquet
   * (not the base table), produce EXACTLY the base plan's rows, and decline
   * everything outside the provable envelope.
   */
-class MvRoutingSpec extends AnyFunSuite {
+class MvRoutingSpec extends graft.SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("mv-routing-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** All file scans in the executed plan — recursing through AQE query
     * stages (QueryStageExec is a leaf whose wrapped plan `collect` skips).
