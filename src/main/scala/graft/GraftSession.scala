@@ -43,7 +43,7 @@ object GraftSession {
       .config(graft.streaming.StateStores.ConfKey,
         graft.streaming.StateStores.providerClass)
       // events.parquet may store `ts` as INT64 TIMESTAMP(NANOS), which the
-      // vectorized reader rejects; read it as a long and let Tables.events
-      // rebuild the microsecond timestamp.
+      // vectorized reader rejects; read it as a long and let
+      // Tables.decodeEventsTs rebuild the microsecond timestamp.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 }

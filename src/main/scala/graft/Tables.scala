@@ -26,16 +26,17 @@ final case class Tables(spark: SparkSession, dir: String) {
     * runs again. NOT result caching: only the parquet footer's StructType
     * is held (~KB per table).
     */
-  private def t(name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val meta = Tables.metaCache.computeIfAbsent(path, { p =>
+  private def t(name: String): DataFrame =
+    spark.read.schema(storedSchema(name)).parquet(s"$dir/$name.parquet")
+
+  /** The table's schema as stored in its parquet footer (cached, see [[t]]). */
+  def storedSchema(name: String): org.apache.spark.sql.types.StructType =
+    Tables.metaCache.computeIfAbsent(s"$dir/$name.parquet", { p =>
       val st = spark.read.parquet(p).schema
       val rowGroups = Tables.rowGroupCount(spark, p)
       val bytes = try new java.io.File(p).length() catch { case _: Throwable => 0L }
       Tables.TableMeta(st, rowGroups, bytes)
-    })
-    spark.read.schema(meta.schema).parquet(path)
-  }
+    }).schema
 
   /** r15 (guide §2.5 "one huge unsplittable file"): parquet scans split at
     * ROW-GROUP granularity, and every sf0.1 testdata file is a single row
@@ -87,30 +88,8 @@ final case class Tables(spark: SparkSession, dir: String) {
   def orders: DataFrame     = t("orders")
   def lineitem: DataFrame   = t("lineitem")
 
-  /** events.parquet may store `ts` as INT64 TIMESTAMP(NANOS), which Spark's
-    * vectorized reader rejects. The values are µs-grain (verified: ns%1000==0
-    * at every sf), so the session reads nanos as long
-    * (`spark.sql.legacy.parquet.nanosAsLong`, set by [[GraftSession]]) and
-    * this rebuilds a microsecond timestamp — lossless, and identical to what
-    * DuckDB's TIMESTAMP_NS sees.
-    *
-    * GenScale-produced directories store `ts` as TIMESTAMP(MICROS) instead
-    * (Spark cannot write the NANOS physical type), which the reader surfaces
-    * as TimestampType directly — detect by schema and skip the rebuild.
-    */
-  def events: DataFrame = {
-    val df = t("events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // GenScale layout: naive micros; session tz is UTC so this cast is
-        // an exact instant-preserving retype to the TimestampType the
-        // catalog expects
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }
-  }
+  /** events with `ts` decoded to a µs timestamp ([[Tables.decodeEventsTs]]). */
+  def events: DataFrame = Tables.decodeEventsTs(t("events"))
   def documents: DataFrame  = t("documents")
   def embeddings: DataFrame = t("embeddings")
 
@@ -125,6 +104,27 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+
+  /** `ts` of an events frame (batch or stream) as a µs TimestampType,
+    * whatever the stored type:
+    *   - naive TIMESTAMP(MICROS), which the testdata and GenScale output
+    *     store, reads as TIMESTAMP_NTZ; the session tz is UTC, so the cast
+    *     to timestamp keeps the instant;
+    *   - TIMESTAMP(NANOS) reads as a long of nanos (Spark's vectorized reader
+    *     rejects the type, so [[GraftSession]] sets
+    *     `spark.sql.legacy.parquet.nanosAsLong`); the values are µs-grain, so
+    *     dividing down to micros is lossless and matches DuckDB's
+    *     TIMESTAMP_NS;
+    *   - a UTC-adjusted TIMESTAMP passes through.
+    */
+  def decodeEventsTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
+    case org.apache.spark.sql.types.LongType =>
+      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case org.apache.spark.sql.types.TimestampNTZType =>
+      df.withColumn("ts", col("ts").cast("timestamp"))
+    case _ => df
+  }
+
   final case class TableMeta(schema: org.apache.spark.sql.types.StructType,
       rowGroups: Int, bytes: Long)
 

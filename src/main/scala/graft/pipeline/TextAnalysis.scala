@@ -597,11 +597,23 @@ object TextAnalysis {
     */
   private[pipeline] val BpeLocalMaxVocabKey = "graft.bpe.localMaxVocab"
 
+  /** The distributed loop's argmax, `orderBy(desc("cnt"), asc("a"),
+    * asc("b"))`, on the driver. Spark orders strings by their UTF-8 bytes;
+    * Java's `String` order compares UTF-16 code units, which disagrees above
+    * U+FFFF (a surrogate pair sorts below U+E000–U+FFFF), so the ties break
+    * on the bytes.
+    */
+  private[pipeline] def bestPair(counts: Iterable[((String, String), Long)]): ((String, String), Long) = {
+    val utf8: Ordering[String] = (x, y) => java.util.Arrays.compareUnsigned(
+      x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    counts.minBy { case ((a, b), c) => (-c, a, b) }(Ordering.Tuple3(Ordering.Long, utf8, utf8))
+  }
+
   /** Driver-side merge loop — exact twin of the distributed one: same pair
-    * counting (Σc per adjacent pair), same argmax order (cnt DESC, a ASC,
-    * b ASC — pure-ASCII tokens, so UTF8-binary and String order agree; the
-    * [a-z]+ guard below enforces that), same java.util.regex replacement
-    * both engines use. Pinned equal to the distributed loop in ScrubSpec.
+    * counting (Σc per adjacent pair), same argmax order ([[bestPair]]), same
+    * java.util.regex replacement both engines use. Pinned equal to the
+    * distributed loop in ScrubSpec.
     */
   private def trainMergesLocal(vocab: Array[(String, Long)], rounds: Int,
       guard: (Int, String, String) => Unit): Seq[(Int, String, String, String, Long)] = {
@@ -621,7 +633,7 @@ object TextAnalysis {
       }
       if (cnt.isEmpty) exhausted = true
       else {
-        val ((a, b), c) = cnt.minBy { case ((a, b), c) => (-c, a, b) }
+        val ((a, b), c) = bestPair(cnt)
         guard(step, a, b)
         steps += ((step, a, b, a + b, c))
         if (step < rounds)

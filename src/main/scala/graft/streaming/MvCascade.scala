@@ -1,14 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import scala.collection.concurrent.TrieMap
-
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** The reference's concurrent MV fan-out (init-scripts/01-create-tables.sql:
   * 87–168): one insert stream feeds six materialized views simultaneously —
@@ -23,10 +18,10 @@ import org.apache.spark.sql.types._
   * JOINs at query time" property the reference gets from denormalized MV
   * columns (events has no country column; customer→nation supplies it).
   *
-  * The cascade runs ONCE per data dir (memoized): the catalog entries
-  * st04–st08 read back one MV each, and every one is hash-checked against
-  * its batch SQL — incremental-equals-batch, per MV, while all MVs ran
-  * concurrently off the same source.
+  * The cascade runs ONCE per data dir (memoized by [[StreamRunner]]): the
+  * catalog entries st04–st08 read back one MV each, and every one is
+  * hash-checked against its batch SQL — incremental-equals-batch, per MV,
+  * while all MVs ran concurrently off the same source.
   *
   * st09 is the AggregatingMergeTree analog (01:119–132 `uniqState`): each
   * micro-batch appends a "part" (dir keyed by batchId — idempotent under
@@ -36,57 +31,39 @@ import org.apache.spark.sql.types._
   */
 object MvCascade {
 
-  /** Raw parquet schema of lineitem (l_shipdate is µs TIMESTAMP — readable
-    * directly, unlike events' nanos).
+  /** The cascade's eight queries, one per MV. */
+  val members: Seq[String] = Seq(
+    "mv_daily_activity", "mv_hourly_events", "mv_user_funnel", "mv_country_stats",
+    "mv_product_revenue", "mv_sessions", "mv_sessions_final", "mv_hll_daily_users")
+
+  /** Per-MV setup cost of the last cascade run over `dir`, from the stream
+    * runner: it localizes WHICH of the concurrent members drives the
+    * aggregate setup time (wall overlaps across members; busy is additive).
     */
-  val lineitemRawSchema: StructType = StructType(Seq(
-    StructField("l_orderkey", LongType), StructField("l_partkey", LongType),
-    StructField("l_suppkey", LongType), StructField("l_linenumber", IntegerType),
-    StructField("l_quantity", DoubleType), StructField("l_extendedprice", DoubleType),
-    StructField("l_discount", DoubleType), StructField("l_tax", DoubleType),
-    StructField("l_returnflag", StringType), StructField("l_linestatus", StringType),
-    StructField("l_shipdate", TimestampType)))
+  def setupBreakdown(dir: String): Seq[(String, StreamRunner.Cost)] =
+    StreamRunner.costs(dir, members)
 
-  def lineitemStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(lineitemRawSchema)
-      .option("pathGlobFilter", "lineitem.parquet")
-      .parquet(dir)
-
-  // one cascade run per data dir per JVM; Verify/Bench re-read the sinks
-  private val runs = TrieMap[String, String]()
-
-  /** Per-MV setup cost of the last cascade run for a dir (r8 verdict item 3:
-    * the aggregate `streaming_setup_sec` grew 5.4× on 3× data with no way to
-    * see WHICH of the concurrent members drove it). wall = start→termination
-    * of that one query (they run concurrently, so walls overlap); busy =
-    * Σ triggerExecution over its micro-batches (additive, the cost signal);
-    * batches = micro-batch count.
-    */
-  /** stateBytes = the LAST progress event's Σ stateOperators.memoryUsedBytes
-    * (resident state under the session's provider — heap object bytes for
-    * the default provider, RocksDB mem+SST for the shipped one): the
-    * before/after evidence for the r14 provider flip.
-    */
-  final case class MvSetupCost(wallSec: Double, busySec: Double, batches: Long,
-      stateBytes: Long)
-  private val breakdowns = TrieMap[String, Seq[(String, MvSetupCost)]]()
-  def setupBreakdown(dir: String): Seq[(String, MvSetupCost)] =
-    breakdowns.getOrElse(dir, Seq.empty)
-
+  /** Run the cascade once per data dir; returns its root. */
   def run(spark: SparkSession, dir: String): String =
-    runs.getOrElseUpdate(dir,
-      executeAt(spark, dir, Files.createTempDirectory("graft_cascade_").toString))
+    StreamRunner.maintainedRoot(dir, "cascade")(executeAt(spark, dir, _))
 
   /** Run the cascade against an explicit root (checkpoints live under it):
     * re-running with the same root is the checkpoint-recovery path — every
     * query's AvailableNow trigger finds its source offsets already committed
     * and changes nothing (MvCascadeSpec asserts this exactly-once property).
     */
-  private[streaming] def executeAt(spark: SparkSession, dir: String, root: String): String = {
+  private[streaming] def executeAt(spark: SparkSession, dir: String, root: String): Unit = {
     // fingerprint the base tables BEFORE any stream reads them: if a base
     // overwrite lands mid-cascade, register() sees the mismatch and declines
     val preFingerprints = graft.plans.MvRouting.fingerprintNow(dir)
+    // all eight run concurrently off the same source
+    StreamRunner.run(spark, dir)(queries(_, dir, root))
+    // MVs complete for `dir` → eligible for transparent aggregate routing
+    graft.plans.MvRouting.register(dir, root, preFingerprints)
+  }
+
+  private def queries(spark: SparkSession, dir: String, root: String)
+      : Seq[(String, DataStreamWriter[Row])] = {
     val events = StreamingMVs.eventsStream(spark, dir)
       // ST7: event-time metadata does NOT propagate through to_date(), so
       // this watermark neither drops late rows nor evicts these aggregations'
@@ -125,7 +102,7 @@ object MvCascade {
       .groupBy(col("country"), to_date(col("ts")).as("event_date"), col("event_type"))
       .agg(count(lit(1)).as("event_count"), sum(valDec).as("val_dec"))
 
-    val product = lineitemStream(spark, dir)
+    val product = StreamingMVs.tableStream(spark, dir, "lineitem")
       .groupBy(col("l_partkey").as("product_id"), col("l_returnflag").as("status"))
       .agg(count(lit(1)).as("order_count"),
         // decimal × decimal, not cast-of-double-product: price and (1-disc)
@@ -157,15 +134,17 @@ object MvCascade {
         col("session_window.end").as("session_end"),
         col("session_events"), col("val_dec"))
 
-    def upsert(mv: DataFrame, partitionCol: String, name: String) =
-      mv.writeStream
-        .outputMode("update")
+    // every member checkpoints under the root and writes its own sink
+    def sink(mv: DataFrame, mode: String, name: String)(write: (DataFrame, Long) => Unit) =
+      name -> mv.writeStream
+        .outputMode(mode)
         .option("checkpointLocation", s"$root/_ckpt/$name")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          StreamingMVs.upsertByPartition(batch, partitionCol, s"$root/$name", batchId)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
+        .foreachBatch(write)
+
+    def upsert(mv: DataFrame, partitionCol: String, name: String) =
+      sink(mv, "update", name) { (batch, batchId) =>
+        StreamingMVs.upsertByPartition(batch, partitionCol, s"$root/$name", batchId)
+      }
 
     // Session windows reject update mode (merging sessions can't be keyed
     // updates — STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION), so the session
@@ -177,15 +156,10 @@ object MvCascade {
     // history — is its twin below (appendFinalized → mv_sessions_final,
     // proven equal to the batch gap construction by st12).
     def completeSnapshot(mv: DataFrame, partitionCol: String, name: String) =
-      mv.writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", s"$root/_ckpt/$name")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.repartition(col(partitionCol)).write.mode("overwrite")
-            .partitionBy(partitionCol).parquet(s"$root/$name")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
+      sink(mv, "complete", name) { (batch, _) =>
+        batch.repartition(col(partitionCol)).write.mode("overwrite")
+          .partitionBy(partitionCol).parquet(s"$root/$name")
+      }
 
     // st12: the finalized-session APPEND path — the session MV's scale
     // story. Append mode is legal for session_window with a watermark: a
@@ -201,86 +175,27 @@ object MvCascade {
     // its own part) and partitioned by session_date inside each part so
     // date-bounded reads still prune.
     def appendFinalized(mv: DataFrame, name: String) =
-      mv.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/_ckpt/$name")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.repartition(col("session_date")).write.mode("overwrite")
-            .partitionBy("session_date").parquet(s"$root/$name/part=$batchId")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-
-    def appendParts(mv: DataFrame, name: String) =
-      mv.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", s"$root/_ckpt/$name")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // one "part" per micro-batch, ClickHouse-style; replay-idempotent
-          // because a batch always overwrites its own part dir
-          batch.write.mode("overwrite").parquet(s"$root/$name/part=$batchId")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-
-    // start all eight, then await — they run concurrently. A listener
-    // records each query's termination instant so per-MV wall is exact even
-    // though awaitTermination is called in sequence.
-    val t0 = System.nanoTime()
-    val endNs = TrieMap[java.util.UUID, Long]()
-    // busy/batches accumulate IN the listener, keyed by runId: recentProgress
-    // is a bounded rolling buffer (default 100 entries), so a member running
-    // more micro-batches than that would silently undercount — the exact
-    // superlinear member this breakdown exists to localize (ADVICE r9).
-    val busyMs = TrieMap[java.util.UUID, Long]()
-    val batchN = TrieMap[java.util.UUID, Long]()
-    val stateB = TrieMap[java.util.UUID, Long]()
-    val term = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val trig = e.progress.durationMs
-          .getOrDefault("triggerExecution", java.lang.Long.valueOf(0L)).longValue
-        busyMs.updateWith(e.progress.runId) { v => Some(v.getOrElse(0L) + trig) }
-        batchN.updateWith(e.progress.runId) { v => Some(v.getOrElse(0L) + 1L) }
-        val st = Option(e.progress.stateOperators).toSeq.flatten
-          .map(_.memoryUsedBytes).sum
-        if (st > 0) stateB.put(e.progress.runId, st)
+      sink(mv, "append", name) { (batch, batchId) =>
+        batch.repartition(col("session_date")).write.mode("overwrite")
+          .partitionBy("session_date").parquet(s"$root/$name/part=$batchId")
       }
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        endNs.put(e.runId, System.nanoTime())
-    }
-    spark.streams.addListener(term)
-    // all eight start inside one data-derived state-partition scope (r16):
-    // the conf is snapshotted per query at start — see
-    // StateStores.withStatePartitions
-    val queries = StateStores.withStatePartitions(spark, dir) { Seq(
-      "mv_daily_activity" -> upsert(daily, "event_date", "mv_daily_activity"),
-      "mv_hourly_events" -> upsert(hourly, "event_date", "mv_hourly_events"),
-      "mv_user_funnel" -> upsert(funnel, "event_date", "mv_user_funnel"),
-      "mv_country_stats" -> upsert(country, "event_date", "mv_country_stats"),
-      "mv_product_revenue" -> upsert(product, "status", "mv_product_revenue"),
-      "mv_sessions" -> completeSnapshot(sessions, "session_date", "mv_sessions"),
-      "mv_sessions_final" -> appendFinalized(sessions, "mv_sessions_final"),
-      "mv_hll_daily_users" -> appendParts(hllDaily, "mv_hll_daily_users")) }
-    queries.foreach(_._2.awaitTermination())
-    // listener dispatch is async — wait (bounded) for the last termination
-    // event before reading the map
-    val deadline = System.currentTimeMillis() + 10000
-    while (endNs.size < queries.size && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
-    try {
-      breakdowns.put(dir, queries.map { case (name, q) =>
-        val wall = endNs.get(q.runId).map(e => (e - t0) / 1e9).getOrElse(-1.0)
-        name -> MvSetupCost(wall,
-          busyMs.getOrElse(q.runId, 0L) / 1e3,
-          batchN.getOrElse(q.runId, 0L),
-          stateB.getOrElse(q.runId, 0L))
-      })
-    } finally spark.streams.removeListener(term)
-    // MVs complete for `dir` → eligible for transparent aggregate routing
-    graft.plans.MvRouting.register(dir, root, preFingerprints)
-    root
+
+    // one "part" per micro-batch, ClickHouse-style; replay-idempotent
+    // because a batch always overwrites its own part dir
+    def appendParts(mv: DataFrame, name: String) =
+      sink(mv, "update", name) { (batch, batchId) =>
+        batch.write.mode("overwrite").parquet(s"$root/$name/part=$batchId")
+      }
+
+    Seq(
+      upsert(daily, "event_date", "mv_daily_activity"),
+      upsert(hourly, "event_date", "mv_hourly_events"),
+      upsert(funnel, "event_date", "mv_user_funnel"),
+      upsert(country, "event_date", "mv_country_stats"),
+      upsert(product, "status", "mv_product_revenue"),
+      completeSnapshot(sessions, "session_date", "mv_sessions"),
+      appendFinalized(sessions, "mv_sessions_final"),
+      appendParts(hllDaily, "mv_hll_daily_users"))
   }
 
   /** Read one MV back from the cascade's sink. */

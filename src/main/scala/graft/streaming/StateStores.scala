@@ -1,25 +1,16 @@
 package graft.streaming
 
-/** Streaming state-store provider selection — RocksDB BY DEFAULT (r13
-  * verdict item 2; shipped r14).
+/** Streaming state-store provider selection: RocksDB by default.
   *
-  * Why: the maintained streaming MVs (st01–st19 family) carry state that
-  * grows with the key domain — st19's per-(user, day) span rows are exactly
-  * linear at 239 B/row on the default heap provider (r11, SCALE.md §0g.4) —
-  * so at 100 TB the executor HEAP is the ceiling: every state row lives on
-  * the JVM old gen and is rewritten into each checkpoint delta. The r11 A/B
-  * measured RocksDB wall-neutral-or-better at every scale with ~8× smaller
-  * resident state (native memory + SST files, incremental checkpoints), and
-  * r14 re-measured it on the full 8-MV cascade (SCALE.md §0i). That is the
-  * production posture for stateful streaming at scale; heap remains one env
-  * var away for A/Bs and for the tiny-state local demos where provider
-  * startup cost dominates.
-  *
-  * [[graft.GraftSession]], which builds every graft session (the mains and
-  * the test suites), routes through [[providerClass]];
-  * `SPARK_GRAFT_STATE_PROVIDER=heap`
-  * forces the Spark default heap provider, `rocksdb` (or unset) the RocksDB
-  * one.
+  * The maintained streaming MVs carry state that grows with the key domain
+  * (st19's per-(user, day) spans are linear at 239 B/row on the heap
+  * provider), so at scale the executor heap is the ceiling. RocksDB measured
+  * wall-neutral-or-better at every scale with ~8× smaller resident state
+  * (native memory + SST files, incremental checkpoints; SCALE.md §0g.4,
+  * §0i). [[graft.GraftSession]] sets [[providerClass]] on every session;
+  * `SPARK_GRAFT_STATE_PROVIDER=heap` selects Spark's heap provider for A/Bs.
+  * The state-partition count is set per run by [[StreamRunner]], on a
+  * private session clone.
   */
 object StateStores {
   val ConfKey = "spark.sql.streaming.stateStore.providerClass"
@@ -33,23 +24,4 @@ object StateStores {
   }
 
   def providerClass: String = if (providerTag == "heap") Heap else RocksDB
-
-  /** Run `body` (which must START its streaming queries inside — the conf
-    * is snapshotted per query at start) with `spark.sql.shuffle.partitions`
-    * set to the data-derived stateful-stream count
-    * ([[graft.sources.Layout.statePartitionsFor]]), restoring the session
-    * value after. Stateful operators can't be AQE-coalesced, so the batch
-    * side's core-count floor is pure per-partition store open/commit cost
-    * on them (measured: halves an sf0.1 complete-mode run). Results are
-    * unaffected: every state aggregate in the catalog is order-free
-    * mergeable (count / sum(decimal) / min / max / min(struct)), and join /
-    * dedup outputs are partitioning-independent row sets.
-    */
-  def withStatePartitions[T](spark: org.apache.spark.sql.SparkSession, dir: String)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, graft.sources.Layout
-      .statePartitionsFor(dir, spark.sparkContext.defaultParallelism).toString)
-    try body finally spark.conf.set(key, prev)
-  }
 }

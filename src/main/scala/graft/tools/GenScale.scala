@@ -42,8 +42,8 @@ import org.apache.spark.sql.functions._
   *
   * Output layout matches the driver's: ONE parquet FILE per table at
   * `<dstDir>/<table>.parquet` (sys02's oracle and Layout assume it). Note
-  * events.ts is written as TIMESTAMP(MICROS) — Spark cannot produce the
-  * source's TIMESTAMP(NANOS) physical type — and Tables.events handles both.
+  * events.ts is written as naive TIMESTAMP(MICROS), the source's type, and
+  * Tables.decodeEventsTs reads every stored `ts` type.
   */
 object GenScale {
 
@@ -145,7 +145,7 @@ object GenScale {
     // user_id ⊂ c_custkey: offset with the CUSTOMER stride so the subset
     // relation (and the user→country dimension join) survives replication.
     // ts is cast to TIMESTAMP_NTZ before writing: the source stores naive
-    // TIMESTAMP(NANOS) and a plain TimestampType write would come out as
+    // TIMESTAMP(MICROS) and a plain TimestampType write would come out as
     // isAdjustedToUTC=true (TIMESTAMPTZ to DuckDB), changing the oracle's
     // column type; NTZ keeps both engines on naive timestamps. Session tz is
     // UTC, so the wall-clock values are byte-identical instants.

@@ -45,9 +45,16 @@ class SessionHygieneSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
-  test("src/main sets or unsets session conf only in StateStores.withStatePartitions") {
+  test("src/main sets or unsets session conf only on StreamRunner's private clone") {
     val hits = scan("src/main", """\bconf\.(set|unset)\b""".r)
-      .filterNot(h => fileName(h) == "StateStores.scala" && h.enclosingDef == "withStatePartitions")
+      .filterNot(h => fileName(h) == "StreamRunner.scala" && h.enclosingDef == "run" &&
+        h.text.trim.startsWith("clone.conf.set("))
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("graft.streaming starts and awaits streaming queries only in StreamRunner") {
+    val hits = scan("src/main/scala/graft/streaming", """\.start\(\)|\bawaitTermination\b""".r)
+      .filterNot(fileName(_) == "StreamRunner.scala")
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 

@@ -173,6 +173,20 @@ class ScrubSpec extends SparkSpec {
     } finally spark.conf.unset(TextAnalysis.BpeLocalMaxVocabKey)
   }
 
+  test("bp02: the driver-local argmax breaks count ties in Spark's UTF-8 byte order") {
+    import org.apache.spark.sql.functions.{asc, desc}
+    import spark.implicits._
+    // U+1F600 is a surrogate pair in UTF-16 (D83D DE00), so a Java String
+    // sorts it BELOW U+FF21; as UTF-8 bytes (F0 9F 98 80 vs EF BC A1), the
+    // order Spark uses, it sorts above
+    val rows = Seq(("\uD83D\uDE00", "x", 5L), ("\uFF21", "x", 5L), ("a", "b", 4L))
+    val viaSpark = rows.toDF("a", "b", "cnt")
+      .orderBy(desc("cnt"), asc("a"), asc("b")).head()
+    val ((a, b), c) = TextAnalysis.bestPair(rows.map { case (a, b, c) => ((a, b), c) })
+    assert((a, b, c) == ((viaSpark.getString(0), viaSpark.getString(1), viaSpark.getLong(2))))
+    assert(a == "\uFF21")
+  }
+
   test("bp02: a winning pair outside [a-z]+ fails loudly (regex-interp guard)") {
     import spark.implicits._
     val docs = Seq((1L, "a1 a1 a1")).toDF("doc_id", "text")

@@ -74,6 +74,13 @@ class MvCascadeSpec extends SparkSpec {
       // wall covers the query's whole life, busy only its triggers
       assert(c.wallSec >= c.busySec * 0.5, s"$n wall/busy inconsistent")
     }
+    StreamingMVs.warm(spark, sf())
+    val warmed = StreamingMVs.maintenanceBreakdown(sf()).toMap
+    val expected = Set("st02_hourly_upsert", "st10_interval_join", "st11_dedup",
+      "st14_ivf_routing", "st15_histogram", "st16_retention", "st17_decontam",
+      "st18_neardup_probe", "st19_concurrency", "st21_url_dedup")
+    assert(expected.subsetOf(warmed.keySet), s"missing: ${expected -- warmed.keySet}")
+    expected.foreach(n => assert(warmed(n) > 0, s"$n wall not captured"))
   }
 
   test("re-running the cascade against its checkpoints changes nothing (exactly-once)") {

@@ -185,6 +185,39 @@ class StreamingSpec extends SparkSpec {
     assert(graft.Residency.residentRddCount(spark) >= 0) // sanity: callable post-release
   }
 
+  test("st13 streams from a private clone: the session's shuffle partitions never change") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.shuffle.partitions"
+    val own = spark.conf.get(key)
+    val stateParts = graft.sources.Layout
+      .statePartitionsFor(sf(), spark.sparkContext.defaultParallelism)
+    assume(own != stateParts.toString, "the session and state counts coincide on this box")
+    // every streaming progress event also reaches the context's listener bus
+    val reported = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case p: QueryProgressEvent if p.progress.name == "st13_streaming_quality_gate" =>
+            p.progress.stateOperators.foreach(o => reported.add(o.numShufflePartitions))
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var building = true
+    val reader = new Thread(() => while (building) seen.add(spark.conf.get(key)))
+    reader.start()
+    try graft.Catalog.byName("st13_streaming_quality_gate").build(spark, sf()).collect()
+    finally { building = false; reader.join() }
+    val deadline = System.currentTimeMillis() + 10000
+    while (reported.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    spark.sparkContext.removeSparkListener(listener)
+    assert(seen.asScala == Set(own), s"a concurrent reader saw ${seen.asScala}")
+    assert(!reported.isEmpty && reported.asScala.forall(_ == stateParts),
+      s"state operators ran on ${reported.asScala} partitions, expected $stateParts")
+  }
+
   test("st13: gate partitions every event, discriminates, equals batch recompute") {
     import org.apache.spark.sql.functions._
     val r = graft.Catalog.byName("st13_streaming_quality_gate").build(spark, sf()).collect()
