@@ -342,7 +342,7 @@ object Bench {
       System.err.println(s"[bench] CODEGEN GATE FAILED: $codegenTotal whole-stage " +
         s"fallback(s) across the catalog (offenders: ${fallbackEntries.keys.mkString(", ")})")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$rounds,"queries":${fmtMap(minOf)},"queries_median":${fmtMap(medianOf)},"streaming_setup_sec":$streamingSetup,"setup_phases":$setupPhasesJson,"setup_gc_ms":$setupGcMs,"setup_heap_mb":[$setupHeap0,$setupHeap1],"cascade_mvs":$cascadeBreakdown,"stream_mvs":$streamMvs,"codegen_fallbacks":$codegenTotal,"codegen_fallback_entries":$fallbacksJson,"ingest_events_per_sec":${eps.median},"ingest_eps_min":${eps.min},"ingest_eps_max":${eps.max},"ingest_eps_spread_pct":${eps.spreadPct},"ingest_spread_cause":"${eps.spreadCause}","ingest_eps_overall":${eps.overall},"ingest_windows":${eps.windowsJson},"canary_cpu_s":$canaryCpuS,"canary_mem_s":$canaryMemS,"box_cpu_coef":$boxCpuCoef,"box_mem_coef":$boxMemCoef,"canary_cpu_end_s":$canaryCpuEndS,"canary_mem_end_s":$canaryMemEndS,"box_cpu_coef_end":$boxCpuCoefEnd,"box_mem_coef_end":$boxMemCoefEnd,"canary_sched_s":$canarySchedS,"box_sched_coef":$boxSchedCoef,"canary_sched_end_s":$canarySchedEndS,"box_sched_coef_end":$boxSchedCoefEnd,"canary_end_mode":"$canaryEndMode","state_provider":"${graft.streaming.StateStores.providerTag}","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$rounds,"queries":${fmtMap(minOf)},"queries_median":${fmtMap(medianOf)},"streaming_setup_sec":$streamingSetup,"setup_phases":$setupPhasesJson,"setup_gc_ms":$setupGcMs,"setup_heap_mb":[$setupHeap0,$setupHeap1],"cascade_mvs":$cascadeBreakdown,"stream_mvs":$streamMvs,"codegen_fallbacks":$codegenTotal,"codegen_fallback_entries":$fallbacksJson,"ingest_events_per_sec":${eps.median},"ingest_eps_min":${eps.min},"ingest_eps_max":${eps.max},"ingest_eps_spread_pct":${eps.spreadPct},"ingest_spread_cause":"${eps.spreadCause}","ingest_eps_overall":${eps.overall},"ingest_windows":${eps.windowsJson},"canary_cpu_s":$canaryCpuS,"canary_mem_s":$canaryMemS,"box_cpu_coef":$boxCpuCoef,"box_mem_coef":$boxMemCoef,"canary_cpu_end_s":$canaryCpuEndS,"canary_mem_end_s":$canaryMemEndS,"box_cpu_coef_end":$boxCpuCoefEnd,"box_mem_coef_end":$boxMemCoefEnd,"canary_sched_s":$canarySchedS,"box_sched_coef":$boxSchedCoef,"canary_sched_end_s":$canarySchedEndS,"box_sched_coef_end":$boxSchedCoefEnd,"canary_end_mode":"$canaryEndMode","sf":"$sfDir"}"""
     // The driver keeps only a bounded (~2000-char) stdout tail and parses the
     // JSON line out of it; the full-name two-map line above is ~6 KB and has
     // never fit (BENCH_r1–r3 all show `parsed: null`). Print a compact line —
@@ -407,9 +407,7 @@ object Bench {
   /** Isolate the state-store provider's one-time cost (RocksDB JNI library
     * load + first store open + first snapshot machinery) on a 3-row
     * MemoryStream dedup, so the cascade phase that follows measures MV work,
-    * not provider bring-up. Runs under whatever provider StateStores routed
-    * into the session conf — heap mode times its (near-zero) init the same
-    * way.
+    * not provider bring-up.
     */
   private def stateProviderInitProbe(spark: SparkSession): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.sum
 
 /** One catalog entry: a named DataFrame query plus (when SQL-expressible) the
   * equivalent DuckDB oracle SQL the driver hash-compares against.
@@ -9,7 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - Every output column is aliased identically in the Spark build and the
   *     oracle SQL (the driver sorts columns by name before hashing).
   *   - Money/measure doubles are aggregated through exact `DECIMAL(18,2)`
-  *     casts on BOTH sides, then cast to DOUBLE — bit-identical results.
+  *     casts on BOTH sides, then cast to DOUBLE — bit-identical results
+  *     ([[QueryDef.dec]], [[QueryDef.decSum]], [[QueryDef.decSumSql]]).
   *   - Integer outputs are cast to BIGINT on both sides (DuckDB `count` et al
   *     are int64; Spark `hour`/`year` are int32 — unify). This includes every
   *     integer SUM in the ORACLE: DuckDB types `SUM(BIGINT)` as HUGEINT
@@ -33,4 +35,13 @@ object QueryDef {
   /** Entry without an oracle (non-SQL-expressible → driver does a rows-only check). */
   def rowsOnly(name: String)(build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, None)(build)
+
+  /** Exact decimal view of a 2-decimal double column. */
+  def dec(c: Column): Column = c.cast("decimal(18,2)")
+
+  /** SUM through the exact decimal view, as DOUBLE. */
+  def decSum(c: Column): Column = sum(dec(c)).cast("double")
+
+  /** The oracle-side twin of [[decSum]]. */
+  def decSumSql(c: String): String = s"CAST(SUM(CAST($c AS DECIMAL(18,2))) AS DOUBLE)"
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -35,15 +34,6 @@ object VectorExpressions {
     if (bad.isEmpty) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$name requires array<float> arguments, got ${bad.map(_.catalogString).mkString(", ")}")
-  }
-
-  /** Register SQL-callable names (graft_fdot / graft_fsumsq) on a session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_fdot",
-      args => FloatVecDot(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_fsumsq",
-      args => FloatVecSumSq(args.head), "scala_udf")
   }
 }
 

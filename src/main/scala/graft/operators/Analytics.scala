@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.QueryDef.{dec, decSum, decSumSql}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,10 +12,6 @@ import org.apache.spark.sql.functions._
   * enrichment. Mirrors 05-add-refreshable-mvs.sql.disabled in the reference.
   */
 object Analytics {
-
-  private def dec(c: Column): Column = c.cast("decimal(18,2)")
-  private def decSum(c: Column): Column = sum(dec(c)).cast("double")
-  private def decSumSql(c: String) = s"CAST(SUM(CAST($c AS DECIMAL(18,2))) AS DOUBLE)"
 
   /** Basket caps for the pair self-joins (q15/q17) — the one plan family that
     * goes QUADRATIC on a hot key: a user (q17) or order (q15) with n distinct

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.QueryDef.{dec, decSum, decSumSql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,16 +18,12 @@ import org.apache.spark.sql.functions._
   */
 object RelationalCore {
 
-  /** Exact decimal view of a 2-decimal double column. */
-  private def dec(c: Column): Column = c.cast("decimal(18,2)")
-  private def decSum(c: Column): Column = sum(dec(c)).cast("double")
   /** revenue measure: extendedprice * (1 - discount), exact decimal. */
   private def revenueExpr(df: DataFrame): Column =
     sum(dec(df("l_extendedprice")) * (lit(1) - dec(df("l_discount")))).cast("double")
 
   private val revenueSql =
     "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)"
-  private def decSumSql(c: String) = s"CAST(SUM(CAST($c AS DECIMAL(18,2))) AS DOUBLE)"
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, SparkSession}
+import graft.QueryDef.dec
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,10 +12,6 @@ import org.apache.spark.sql.functions._
   * otherwise re-associate double addition) and only cast to DOUBLE at output.
   */
 object Windows {
-
-  private def dec(c: Column): Column = c.cast("decimal(18,2)")
-  private def decSum(c: Column): Column = sum(dec(c)).cast("double")
-  private def decSumSql(c: String) = s"CAST(SUM(CAST($c AS DECIMAL(18,2))) AS DOUBLE)"
 
   val defs: Seq[QueryDef] = Seq(
 

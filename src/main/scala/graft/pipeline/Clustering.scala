@@ -36,12 +36,7 @@ object Clustering {
   }
 
   private def recompute(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cluster"), posexplode(col("embedding"))).toDF("cluster", "dim", "v")
-      .groupBy("cluster", "dim").agg(avg("v").as("c"))
-      .groupBy("cluster")
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
-        x => x.getField("c")).cast("array<float>").as("centroid"))
+    VectorOps.centroids(assigned, Seq("cluster"), "embedding")
 
   /** Shared oracle CTE chain for km01 (and mx02's cluster grouping): the
     * one-Lloyd-round assignment, ending in `asg(vec_id, cluster BIGINT,

@@ -149,8 +149,9 @@ object Decontam {
     // class. Driver-side collect of one few-MB blob is the same
     // metadata-scale boundary as dd06's 64-double mean vector.
     // Render cost of the literal (ADVICE r7): Literal.toString hex-encodes
-    // binary, so every plan render (explain, PlanAudit's executedPlan
-    // string, UI/event-log plan strings) builds a ~2×-blob-size string.
+    // binary, so every plan render (explain, the CatalogSpec plan audit's
+    // executedPlan string, UI/event-log plan strings) builds a ~2×-blob-size
+    // string.
     // At the sizeBits clamp's 16 MB ceiling that is a 32 MB string per
     // render — acceptable at the observed ~1 MB blobs and bounded by the
     // clamp, but a reason to wrap the blob in a non-printing expression if

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * (dd02/dd03/dd04) or hyperplane-LSH buckets (dd06) whose fan-out is bounded
   * by bucket occupancy, so the shuffle volume tracks the duplicate density,
   * not n². The one deliberate exception is dd05: an all-pairs theta join kept
-  * as the oracle-checkable exact baseline (PlanAudit lists its BNLJ as
-  * accounted for) — at scale you run dd06, the bucketed variant of the same
-  * cosine threshold, and accept LSH recall in exchange for sublinear work.
+  * as the oracle-checkable exact baseline (CatalogSpec's plan audit lists
+  * its BNLJ as accounted for) — at scale you run dd06, the bucketed variant
+  * of the same cosine threshold, and accept LSH recall in exchange for
+  * sublinear work.
   */
 object Dedup {
 

@@ -999,12 +999,7 @@ object Similarity {
   private def pqTrain(sub: DataFrame): DataFrame = {
     val seeds = sub.filter(col("vec_id") < PqK)
       .select(col("m"), col("vec_id").as("cluster"), col("sv").as("centroid"))
-    pqAssign(sub, seeds)
-      .select(col("m"), col("cluster"), posexplode(col("sv")).as(Seq("dim", "v")))
-      .groupBy("m", "cluster", "dim").agg(avg("v").as("c"))
-      .groupBy("m", "cluster")
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
-        x => x.getField("c")).cast("array<float>").as("centroid"))
+    VectorOps.centroids(pqAssign(sub, seeds), Seq("m", "cluster"), "sv")
   }
 
   /** (qid, nid, approx_dot, rnk) — the ADC score table behind ann07/ann08,
@@ -1080,18 +1075,11 @@ object Similarity {
       .select("qid", "rnk", "nid", "cosine")
   }
 
-  /** Per-label mean centroid (double avg → array<float>) — the IVF coarse
-    * quantizer shared by ann03/ann05 (probe + exact re-rank) and ann09
-    * (probe + residual-PQ ADC). The float cast matters: r1 passed the double
-    * array straight into the float-vector kernel and getFloat read garbage
-    * off 8-byte slots (caught by the kernel's type check).
+  /** Per-label mean centroid — the IVF coarse quantizer shared by
+    * ann03/ann05 (probe + exact re-rank) and ann09 (probe + residual-PQ ADC).
     */
   private def labelCentroids(e: DataFrame): DataFrame =
-    e.select(col("label"), posexplode(col("embedding"))).toDF("label", "dim", "v")
-      .groupBy("label", "dim").agg(avg("v").as("c"))
-      .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
-        x => x.getField("c")).cast("array<float>").as("centroid"))
+    VectorOps.centroids(e, Seq("label"), "embedding")
 
   private def ivfTopK(spark: SparkSession, dir: String, probes: Int): DataFrame = {
     val e = Tables(spark, dir).embeddings

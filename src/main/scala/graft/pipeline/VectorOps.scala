@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.{FloatVecDot, FloatVecSumSq}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -34,4 +34,16 @@ object VectorOps {
   /** Cosine similarity: dot / (|a| * |b|). */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
+
+  /** Per-key mean vectors: `keys` + `centroid`, the element-wise DOUBLE
+    * average of `vec` cast to `array<float>` in dimension order — the
+    * recipe the oracles replay (km01's). The float cast matters: a double
+    * array fed to the float-vector kernels reads garbage off 8-byte slots.
+    */
+  def centroids(df: DataFrame, keys: Seq[String], vec: String): DataFrame =
+    df.select(keys.map(col) :+ posexplode(col(vec)): _*).toDF(keys :+ "dim" :+ "v": _*)
+      .groupBy((keys :+ "dim").map(col): _*).agg(avg("v").as("c"))
+      .groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
+        x => x.getField("c")).cast("array<float>").as("centroid"))
 }

@@ -7,12 +7,13 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Count, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DecimalType, LongType}
+import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
 
 /** Transparent materialized-view routing — the projections-auto-selection
   * analog (reference: 03-add-projections.sql:18–99 + README.md:66, where
@@ -33,8 +34,10 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   * streaming cascade, so the rewrite trades no freshness beyond the MV lag.
   *
   * Conservative-by-construction: the rewrite only fires when
-  *   - the aggregate's child flattens (through alias-inlining Projects) to
-  *     exactly the registered base relation — any Filter/Join declines;
+  *   - the aggregate's child strips (one walker: Projects inlined, Filter
+  *     conjuncts collected) to a registered base relation, the
+  *     events ⋈ customer ⋈ nation join, or the gap-session aggregate —
+  *     any other core declines, and so does a filter the MV cannot answer;
   *   - every grouping expression matches a canonical key form extracted from
   *     a reference plan compiled in the same session (identical analyzer /
   *     optimizer normalization, no hand-built expression trees);
@@ -184,7 +187,21 @@ object MvRouting {
   final case class Canon(
       relation: LogicalRelation,
       keyForms: Seq[(Key, Expression)],
-      aggForms: Seq[(Agg, AggregateFunction)])
+      aggForms: Seq[(Agg, AggregateFunction)]) {
+
+    /** The same forms over another scan of the same table. */
+    def onto(rel: LogicalRelation): Canon = {
+      val rb = rebase(relation, rel)
+      Canon(rel, keyForms.map { case (k, e) => (k, rb(e)) },
+        aggForms.map { case (a, f) => (a, rb(f).asInstanceOf[AggregateFunction]) })
+    }
+  }
+
+  /** Re-point attributes of `from` at the same-named attributes of `to`. */
+  private def rebase(from: LogicalRelation, to: LogicalRelation): Expression => Expression = {
+    val m = from.output.map(_.name).zip(to.output).toMap
+    _.transformUp { case a: AttributeReference => m.getOrElse(a.name, a) }
+  }
 
   private val canonCache = TrieMap[(String, String), Canon]()
 
@@ -292,19 +309,15 @@ object MvRouting {
     val flat = refs.map(r => flatten(r.queryExecution.optimizedPlan))
     if (flat.exists(_.isEmpty)) return None
     val frames = flat.map(_.get)
-    val baseRel = frames.head._3
-    def rebase(from: LogicalRelation, e: Expression): Expression = {
-      val m = from.output.map(_.name).zip(baseRel.output).toMap
-      e.transformUp { case a: AttributeReference => m.getOrElse(a.name, a) }
-    }
+    val baseRel = frames.head._2
     val keys = Seq.newBuilder[(Key, Expression)]
     val aggs = Seq.newBuilder[(Agg, AggregateFunction)]
-    for ((entries, _, rel) <- frames; (name, _, expr) <- entries) {
-      keyNames.get(name).foreach(k => keys += k -> rebase(rel, expr))
+    for ((entries, rel) <- frames; rb = rebase(rel, baseRel); (name, _, expr) <- entries) {
+      keyNames.get(name).foreach(k => keys += k -> rb(expr))
       aggNames.get(name).foreach { a =>
         expr match {
           case ae: AggregateExpression =>
-            aggs += a -> rebase(rel, ae.aggregateFunction).asInstanceOf[AggregateFunction]
+            aggs += a -> rb(ae.aggregateFunction).asInstanceOf[AggregateFunction]
           case _ => return None
         }
       }
@@ -312,36 +325,45 @@ object MvRouting {
     Some(Canon(baseRel, keys.result(), aggs.result()))
   }
 
-  /** Inline any stack of Projects (and collect Filter conjuncts) between an
-    * Aggregate and its relation: returns (name, exprId, substituted expr) per
-    * output, the filter conjuncts (substituted down to relation attributes),
-    * and the relation. Any other node declines.
+  /** An aggregate's outputs read through the Project/Filter stack down to
+    * its relation; any other core declines.
     */
-  private[plans] def flatten(plan: LogicalPlan): Option[(Seq[(String, ExprId, Expression)], Seq[Expression], LogicalRelation)] = {
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    @tailrec
-    def loop(
-        entries: Seq[(String, ExprId, Expression)],
-        conds: Seq[Expression],
-        p: LogicalPlan): Option[(Seq[(String, ExprId, Expression)], Seq[Expression], LogicalRelation)] =
-      p match {
-        case pr: Project =>
-          val subst: Map[ExprId, Expression] =
-            pr.projectList.collect { case al: Alias => al.exprId -> al.child }.toMap
-          def sub(e: Expression): Expression =
-            e.transformUp { case a: AttributeReference => subst.getOrElse(a.exprId, a) }
-          loop(entries.map { case (n, id, e) => (n, id, sub(e)) }, conds.map(sub), pr.child)
-        case f: Filter =>
-          loop(entries, conds ++ splitConjuncts(f.condition), f.child)
-        case rel: LogicalRelation => Some((entries, conds, rel))
+  private def flatten(plan: LogicalPlan): Option[(Seq[(String, ExprId, Expression)], LogicalRelation)] =
+    plan match {
+      case agg: Aggregate => strip(agg.child) match {
+        case (rel: LogicalRelation, subst, _) => Some((outputs(agg, subst), rel))
         case _ => None
       }
-    plan match {
-      case Aggregate(_, ae, child, _) =>
-        loop(ae.map(e => (e.name, e.exprId, stripAlias(e))), Nil, child)
       case _ => None
     }
+
+  /** Strip the Project/Filter stack above a plan's core: returns the core,
+    * every stripped alias (exprId -> child) and every filter conjunct.
+    */
+  private[plans] def strip(plan: LogicalPlan): (LogicalPlan, Map[ExprId, Expression], Seq[Expression]) = {
+    @tailrec
+    def loop(p: LogicalPlan, subst: Map[ExprId, Expression], conds: Seq[Expression]): (LogicalPlan, Map[ExprId, Expression], Seq[Expression]) =
+      p match {
+        case pr: Project =>
+          loop(pr.child, subst ++ pr.projectList.collect { case al: Alias => al.exprId -> al.child }, conds)
+        case f: Filter => loop(f.child, subst, conds ++ splitConjuncts(f.condition))
+        case core => (core, subst, conds)
+      }
+    loop(plan, Map.empty, Nil)
   }
+
+  /** `e` with every alias in `subst` inlined, to a fixpoint. ExprIds are
+    * unique and an alias only refers to attributes below it, so the
+    * substitution is acyclic and terminates without a pass cap.
+    */
+  private[plans] def inline(subst: Map[ExprId, Expression])(e: Expression): Expression =
+    e.transformUp {
+      case a: AttributeReference if subst.contains(a.exprId) => inline(subst)(subst(a.exprId))
+    }
+
+  /** (name, exprId, inlined expression) per aggregate output. */
+  private[plans] def outputs(agg: Aggregate, subst: Map[ExprId, Expression]): Seq[(String, ExprId, Expression)] =
+    agg.aggregateExpressions.map(e => (e.name, e.exprId, inline(subst)(stripAlias(e))))
 
   private[plans] def splitConjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
@@ -580,8 +602,8 @@ object MvRouting {
   )
 }
 
-/** The rule proper. Installable session-wide ([[GraftExtensions]]) or scoped
-  * via [[MvRouting.route]]. No-op until a cascade registers a root.
+/** The rule proper. Installable session-wide (post-optimizer injection) or
+  * scoped via [[MvRouting.route]]. No-op until a cascade registers a root.
   */
 case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import MvRouting._
@@ -590,6 +612,53 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case agg: Aggregate =>
       tryRoute(agg).orElse(tryCountryRoute(agg)).orElse(trySessionRoute(agg)).getOrElse(agg)
   }
+
+  private type Known = PartialFunction[Expression, Option[Expression]]
+
+  /** Rewrite rules for one MV: `known` maps the nodes it can answer (None =
+    * decline); a plain attribute it does not know declines, and any other
+    * node is rebuilt from its rewritten children. Non-deterministic nodes
+    * always decline: evaluated per MV row instead of per base row they
+    * would sample groups instead of events.
+    */
+  private def rebuild(known: Known)(e: Expression): Option[Expression] =
+    if (!e.deterministic) None
+    else known.applyOrElse(e, (x: Expression) => x match {
+      case _: Attribute => None
+      case _ if x.children.isEmpty => Some(x)
+      case _ => sequence(x.children.map(rebuild(known))).map(x.withNewChildren)
+    })
+
+  /** A base expression equal to one of `keys` reads that MV column, cast
+    * back to the base expression's type.
+    */
+  private def onKey(keys: Seq[(Expression, Attribute)]): Known =
+    Function.unlift((e: Expression) => keys.collectFirst {
+      case (g, attr) if e.semanticEquals(g) =>
+        Some(if (attr.dataType == g.dataType) attr else Cast(attr, g.dataType))
+    })
+
+  private def sequence[T](xs: Seq[Option[T]]): Option[Seq[T]] =
+    if (xs.exists(_.isEmpty)) None else Some(xs.flatten)
+
+  /** The analyzed scan of one MV and its columns by name. */
+  private def mvScan(root: String, name: String): (LogicalPlan, Map[String, Attribute]) = {
+    val scan = spark.read.parquet(s"$root/$name").queryExecution.analyzed
+    (scan, scan.output.map(a => a.name -> a).toMap)
+  }
+
+  /** `Aggregate` over the MV scan, filtered by `conds` when there are any. */
+  private def aggregateOver(
+      scan: LogicalPlan,
+      conds: Seq[Expression],
+      groupExprs: Seq[Expression],
+      outputs: Seq[NamedExpression]): LogicalPlan =
+    Aggregate(groupExprs, outputs, if (conds.isEmpty) scan else Filter(conds.reduce(And), scan))
+
+  /** The cascade materialized its date columns under a UTC session; any
+    * other zone draws different day boundaries, so date rewrites decline.
+    */
+  private def utcSession: Boolean = spark.sessionState.conf.sessionLocalTimeZone == "UTC"
 
   /** Route an aggregate over the gap-session relation (events sessionized by
     * `session_window(ts, '30 minutes') × user_id`) onto the row-per-session
@@ -605,19 +674,8 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * goes back through the optimizer.
     */
   private[plans] def trySessionRoute(agg: Aggregate): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    import org.apache.spark.sql.types.DateType
     if (MvRouting.isBuilding) return None
-
-    @tailrec
-    def loop(p: LogicalPlan, subst: Map[ExprId, Expression], fs: Seq[Expression]): (LogicalPlan, Map[ExprId, Expression], Seq[Expression]) =
-      p match {
-        case pr: Project =>
-          loop(pr.child, subst ++ pr.projectList.collect { case al: Alias => al.exprId -> al.child }, fs)
-        case f: Filter => loop(f.child, subst, fs ++ splitConjuncts(f.condition))
-        case other => (other, subst, fs)
-      }
-    val (core, subst, conds) = loop(agg.child, Map.empty, Nil)
+    val (core, subst, conds) = strip(agg.child)
 
     // the core must BE the canonical session aggregate over a registered
     // events table (sameResult declines pruned/reordered variants — safe)
@@ -646,32 +704,15 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
       if (core.output.length != 4) return None
       MvRouting.freshRootFor(dir, Seq("events")).flatMap { root =>
         val Seq(sw, uid, cnt, vd) = core.output
-        val scan = spark.read.parquet(s"$root/mv_sessions").queryExecution.analyzed
-        val mvAttr: Map[String, Attribute] = scan.output.map(a => a.name -> a).toMap
+        val (scan, mvAttr) = mvScan(root, "mv_sessions")
         val (sessionDate, sessionStart, sessionEnd) =
           (mvAttr("session_date"), mvAttr("session_start"), mvAttr("session_end"))
-
-        // fixpoint-substitute the stripped Projects' aliases
-        def sub(e: Expression): Expression = {
-          var cur = e
-          var i = 0
-          while (i < 4 && cur.exists { case a: AttributeReference => subst.contains(a.exprId); case _ => false }) {
-            cur = cur.transformUp { case a: AttributeReference => subst.getOrElse(a.exprId, a) }
-            i += 1
-          }
-          cur
-        }
 
         def isSwField(e: Expression, ord: Int): Boolean = e match {
           case GetStructField(a: AttributeReference, o, _) => a.exprId == sw.exprId && o == ord
           case _ => false
         }
-        // session_date = to_date(session_start) under the UTC session the
-        // cascade materialized with; any other zone draws different day
-        // boundaries — decline rather than misroute
-        val utcSession = spark.sessionState.conf.sessionLocalTimeZone == "UTC"
-
-        def rewrite(e: Expression): Option[Expression] = if (!e.deterministic) None else e match {
+        val rewrite = rebuild {
           // to_date(session_window.start) → the session_date PARTITION column
           // (analyzed form: ParseToDate; post-analysis casts handled too)
           case pd: ParseToDate if utcSession && pd.format.isEmpty && isSwField(pd.left, 0) =>
@@ -684,25 +725,14 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
           case a: AttributeReference if a.exprId == uid.exprId => Some(mvAttr("user_id"))
           case a: AttributeReference if a.exprId == cnt.exprId => Some(mvAttr("session_events"))
           case a: AttributeReference if a.exprId == vd.exprId => Some(mvAttr("val_dec"))
-          case _: Attribute => None // bare struct ref or foreign column
-          case _ if e.children.isEmpty => Some(e)
-          case _ =>
-            val kids = e.children.map(rewrite)
-            if (kids.exists(_.isEmpty)) None else Some(e.withNewChildren(kids.map(_.get)))
-        }
+        } _
 
-        val newGe = agg.groupingExpressions.map(g => rewrite(sub(g)))
-        val newAe = agg.aggregateExpressions.map { ne =>
-          rewrite(sub(stripAlias(ne))).map(r => Alias(r, ne.name)(exprId = ne.exprId))
-        }
-        val newConds = conds.map(c => rewrite(sub(c)))
-        if (newGe.exists(_.isEmpty) || newAe.exists(_.isEmpty) || newConds.exists(_.isEmpty)) None
-        else {
-          val source =
-            if (newConds.isEmpty) scan
-            else Filter(newConds.flatten.reduce(And), scan)
-          Some(Aggregate(newGe.flatten, newAe.flatten, source))
-        }
+        for {
+          newGe <- sequence(agg.groupingExpressions.map(g => rewrite(inline(subst)(g))))
+          newAe <- sequence(outputs(agg, subst).map { case (name, id, e) =>
+            rewrite(e).map(r => Alias(r, name)(exprId = id)) })
+          newConds <- sequence(conds.map(c => rewrite(inline(subst)(c))))
+        } yield aggregateOver(scan, newConds, newGe, newAe)
       }
     }
   }
@@ -716,24 +746,7 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * isnotnull(join key) all decline.
     */
   private def tryCountryRoute(agg: Aggregate): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    import org.apache.spark.sql.catalyst.plans.Inner
     if (MvRouting.isBuilding) return None
-
-    // strip Project/Filter stacks, accumulating alias substitutions and
-    // filter conjuncts (substitution applied to fixpoint at the end)
-    def strip(p: LogicalPlan): (LogicalPlan, Map[ExprId, Expression], Seq[Expression]) = {
-      @tailrec
-      def loop(p: LogicalPlan, subst: Map[ExprId, Expression], fs: Seq[Expression]): (LogicalPlan, Map[ExprId, Expression], Seq[Expression]) =
-        p match {
-          case pr: Project =>
-            loop(pr.child, subst ++ pr.projectList.collect { case al: Alias => al.exprId -> al.child }, fs)
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            loop(f.child, subst, fs ++ splitConjuncts(f.condition))
-          case other => (other, subst, fs)
-        }
-      loop(p, Map.empty, Nil)
-    }
 
     def relOf(p: LogicalPlan, table: String): Option[(LogicalRelation, String)] = p match {
       case rel: LogicalRelation => tableOf(rel).collect { case (dir, t) if t == table => (rel, dir) }
@@ -746,9 +759,9 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
         val (lc, ls, lf) = strip(l1)
         val (rc, rs, rf) = strip(r1)
         // nation on one side, Join(events, customer) on the other
-        val natSide = relOf(lc, "nation").map(n => (n, rc, rf)).orElse(
-          relOf(rc, "nation").map(n => (n, lc, lf)))
-        natSide.flatMap { case ((natRel, natDir), innerCore, innerFs) =>
+        val natSide = relOf(lc, "nation").map(n => (n, rc)).orElse(
+          relOf(rc, "nation").map(n => (n, lc)))
+        natSide.flatMap { case ((natRel, natDir), innerCore) =>
           innerCore match {
             case Join(l2, r2, Inner, Some(innerCond), _) =>
               val (lc2, ls2, lf2) = strip(l2)
@@ -762,16 +775,8 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
                 // the join MV depends on the dimension tables too
                 MvRouting.freshRootFor(evDir, Seq("events", "customer", "nation")).flatMap { root =>
                   canonFor(spark, evDir, "events").flatMap { canonRaw =>
-                    val allSubst = s0 ++ ls ++ rs ++ ls2 ++ rs2
-                    def sub(e: Expression): Expression = {
-                      var cur = e
-                      var i = 0
-                      while (i < 4 && cur.exists { case a: AttributeReference => allSubst.contains(a.exprId); case _ => false }) {
-                        cur = cur.transformUp { case a: AttributeReference => allSubst.getOrElse(a.exprId, a) }
-                        i += 1
-                      }
-                      cur
-                    }
+                    val subst = s0 ++ ls ++ rs ++ ls2 ++ rs2
+                    val sub = inline(subst) _
                     def attr(rel: LogicalRelation, n: String): Option[Attribute] =
                       rel.output.find(_.name == n)
                     (attr(evRel, "user_id"), attr(custRel, "c_custkey"),
@@ -790,18 +795,10 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
                           case IsNotNull(a: AttributeReference) => joinKeyIds.contains(a.exprId)
                           case _ => false
                         }
-                        // rebase the events canon onto THIS events relation
-                        val m = canonRaw.relation.output.map(_.name).zip(evRel.output).toMap
-                        def rb(e: Expression): Expression =
-                          e.transformUp { case a: AttributeReference => m.getOrElse(a.name, a) }
-                        val keyForms = canonRaw.keyForms.map { case (k, e) => (k, rb(e)) } :+
-                          (KCountry -> (nName: Expression))
-                        val aggForms = canonRaw.aggForms.map { case (k, f) =>
-                          (k, rb(f).asInstanceOf[AggregateFunction]) }
-                        val entries = agg.aggregateExpressions.map(e =>
-                          (e.name, e.exprId, sub(stripAlias(e))))
-                        val ge = agg.groupingExpressions.map(sub)
-                        tryMv(countryMv, root, ge, conds, entries, keyForms, aggForms)
+                        val canon = canonRaw.onto(evRel)
+                        tryMv(countryMv, root, agg.groupingExpressions.map(sub), conds,
+                          outputs(agg, subst),
+                          canon.copy(keyForms = canon.keyForms :+ (KCountry -> (nName: Expression))))
                       case _ => None
                     }
                   }
@@ -823,44 +820,19 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def tryRoute(agg: Aggregate): Option[LogicalPlan] = {
     if (MvRouting.isBuilding) return None
-    // flatten to (entries, relation); grouping exprs get the same inlining
-    val flatAe = flatten(agg)
-    flatAe.flatMap { case (entries, conds, rel) =>
-      baseTableOf(rel).flatMap { case (dir, table, root) =>
-        canonFor(spark, dir, table).flatMap { canonRaw =>
-          // rebase canon forms onto THIS relation instance's attributes
-          val m = canonRaw.relation.output.map(_.name).zip(rel.output).toMap
-          def rb(e: Expression): Expression =
-            e.transformUp { case a: AttributeReference => m.getOrElse(a.name, a) }
-          val keyForms = canonRaw.keyForms.map { case (k, e) => (k, rb(e)) }
-          val aggForms = canonRaw.aggForms.map { case (k, f) =>
-            (k, rb(f).asInstanceOf[AggregateFunction]) }
-          val ge = flattenGroupExprs(agg, rel)
-          ge.flatMap { groupExprs =>
+    strip(agg.child) match {
+      case (rel: LogicalRelation, subst, conds) =>
+        baseTableOf(rel).flatMap { case (dir, table, root) =>
+          canonFor(spark, dir, table).flatMap { canonRaw =>
+            val canon = canonRaw.onto(rel)
+            val groupExprs = agg.groupingExpressions.map(inline(subst))
             val mvs = if (table == "events") eventMvs else productMvs
-            mvs.view.flatMap(mv =>
-              tryMv(mv, root, groupExprs, conds, entries, keyForms, aggForms)).headOption
+            mvs.view.flatMap(mv => tryMv(mv, root, groupExprs, conds.map(inline(subst)),
+              outputs(agg, subst), canon)).headOption
           }
         }
-      }
-    }
-  }
-
-  /** Grouping expressions inlined through the same Project/Filter stack. */
-  private def flattenGroupExprs(agg: Aggregate, rel: LogicalRelation): Option[Seq[Expression]] = {
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    @tailrec
-    def loop(ge: Seq[Expression], p: LogicalPlan): Option[Seq[Expression]] = p match {
-      case pr: Project =>
-        val subst: Map[ExprId, Expression] =
-          pr.projectList.collect { case al: Alias => al.exprId -> al.child }.toMap
-        loop(ge.map(_.transformUp { case a: AttributeReference => subst.getOrElse(a.exprId, a) }), pr.child)
-      case f: Filter => loop(ge, f.child)
-      case r: LogicalRelation if r.eq(rel) => Some(ge)
-      case _: LogicalRelation => Some(ge)
       case _ => None
     }
-    loop(agg.groupingExpressions, agg.child)
   }
 
   /** (dir, table) for any single-parquet-file relation. */
@@ -893,21 +865,17 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
       groupExprs: Seq[Expression],
       conds: Seq[Expression],
       entries: Seq[(String, ExprId, Expression)],
-      keyForms: Seq[(Key, Expression)],
-      aggForms: Seq[(Agg, AggregateFunction)]): Option[LogicalPlan] = {
-
-    val scan = spark.read.parquet(s"$root/${mv.name}").queryExecution.analyzed
-    val mvAttr: Map[String, Attribute] = scan.output.map(a => a.name -> a).toMap
+      canon: Canon): Option[LogicalPlan] = {
+    val Canon(_, keyForms, aggForms) = canon
+    val (scan, mvAttr) = mvScan(root, mv.name)
 
     def keyOf(e: Expression): Option[Key] =
       keyForms.collectFirst { case (k, form) if e.semanticEquals(form) => k }
 
     // every grouping expression must be a key this MV exposes
-    val keyed: Seq[Option[(Expression, Attribute)]] = groupExprs.map { g =>
+    val keyMap: Seq[(Expression, Attribute)] = sequence(groupExprs.map { g =>
       keyOf(g).flatMap(k => mv.keys.get(k)).map(c => g -> mvAttr(c))
-    }
-    if (keyed.exists(_.isEmpty)) return None
-    val keyMap: Seq[(Expression, Attribute)] = keyed.flatten
+    }).getOrElse(return None)
     val userGrouped = groupExprs.exists(g => keyOf(g).contains(KUser))
     val dateGrouped = groupExprs.exists(g => keyOf(g).contains(KDate))
 
@@ -922,43 +890,37 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // rewrites `to_date(ts) >= d` into `ts_conv >= timestamp(d 00:00)`),
     // and the date key's MV attribute
     val dateInput: Option[Expression] = keyForms.collectFirst {
-      case (KDate, Cast(c, org.apache.spark.sql.types.DateType, _, _)) => c
+      case (KDate, Cast(c, DateType, _, _)) => c
     }
     val dateAttr: Option[Attribute] = mv.keys.get(KDate).map(mvAttr)
     val hourAttr: Option[Attribute] = mv.keys.get(KHour).map(mvAttr)
     val MicrosPerDay = 86400000000L
     val MicrosPerHour = 3600000000L
-    // the midnight-alignment test below (us % MicrosPerDay == 0 → date
-    // literal) is only valid when the session day boundary IS the UTC day
-    // boundary; in any other zone decline rather than misroute
-    val utcSession = spark.sessionState.conf.sessionLocalTimeZone == "UTC"
     // The raw parquet `ts` column may be TIMESTAMP (tz-aware) or
     // TIMESTAMP_NTZ (driver-generated testdata is tz-less timestamp[us]).
     // In the NTZ case the date key form is to_date(cast(ts AS timestamp)),
     // and Spark's cast-unwrapping rewrites `to_date(...) >= d` into a bound
     // on the BARE NTZ attribute with a TIMESTAMP_NTZ literal. Under the UTC
-    // session (already required by every case below) the NTZ micros denote
-    // the same instant as the LTZ micros, so match either flavor.
+    // session (already required by every case below, whose midnight test
+    // us % MicrosPerDay == 0 is only valid on the UTC day boundary) the NTZ
+    // micros denote the same instant as the LTZ micros, so match either
+    // flavor.
     def onDateInput(t: Expression): Boolean = dateInput.exists { di =>
       t.semanticEquals(di) || (di match {
-        case Cast(c, org.apache.spark.sql.types.TimestampType, _, _) => t.semanticEquals(c)
+        case Cast(c, TimestampType, _, _) => t.semanticEquals(c)
         case _ => false
       })
     }
     object TsMicros {
       def unapply(e: Expression): Option[Long] = e match {
-        case Literal(us: Long, org.apache.spark.sql.types.TimestampType |
-                               org.apache.spark.sql.types.TimestampNTZType) => Some(us)
+        case Literal(us: Long, TimestampType | TimestampNTZType) => Some(us)
         case _ => None
       }
     }
-    def dayLit(us: Long): Expression =
-      Literal((us / MicrosPerDay).toInt, org.apache.spark.sql.types.DateType)
+    def dayLit(us: Long): Expression = Literal((us / MicrosPerDay).toInt, DateType)
 
-    // filter conjuncts must be expressible purely over MV keys; relocating a
-    // non-deterministic predicate from base rows to pre-aggregated MV rows
-    // would sample groups instead of events — decline those outright
-    def rewriteCond(e: Expression): Option[Expression] = if (!e.deterministic) None else e match {
+    // filter conjuncts must be expressible purely over MV keys
+    val condCases: Known = {
       case _: AggregateExpression => None
       // midnight-aligned timestamp bounds on the date key's input are exact
       // at date grain; anything finer-grained than a day declines
@@ -998,21 +960,9 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
         mvKeyMap.collectFirst {
           case (form, attr) if form.references.contains(a) => IsNotNull(attr)
         }
-      case _ =>
-        mvKeyMap.find { case (g, _) => e.semanticEquals(g) } match {
-          case Some((g, attr)) =>
-            Some(if (attr.dataType == g.dataType) attr else Cast(attr, g.dataType))
-          case None => e match {
-            case _: Attribute => None // non-key base column in the filter
-            case _ if e.children.isEmpty => Some(e)
-            case _ =>
-              val kids = e.children.map(rewriteCond)
-              if (kids.exists(_.isEmpty)) None else Some(e.withNewChildren(kids.map(_.get)))
-          }
-        }
     }
-    val newConds = conds.map(rewriteCond)
-    if (newConds.exists(_.isEmpty)) return None
+    val rewriteCond = rebuild(condCases orElse onKey(mvKeyMap)) _
+    val newConds = sequence(conds.map(rewriteCond)).getOrElse(return None)
 
     def mapAgg(ae: AggregateExpression): Option[Expression] = {
       if (ae.filter.nonEmpty) return None
@@ -1045,35 +995,11 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
     // rewrite one output expression; None = this MV cannot answer it
-    // (same determinism rule as rewriteCond: a non-deterministic output
-    // evaluated per MV row instead of per base row changes the draw count)
-    def rewriteExpr(e: Expression): Option[Expression] = if (!e.deterministic) None else e match {
-      case ae: AggregateExpression => mapAgg(ae)
-      case _ =>
-        keyMap.find { case (g, _) => e.semanticEquals(g) } match {
-          case Some((g, attr)) =>
-            Some(if (attr.dataType == g.dataType) attr else Cast(attr, g.dataType))
-          case None => e match {
-            case _: Attribute => None // unmatched base column outside any aggregate
-            case _ if e.children.isEmpty => Some(e)
-            case _ =>
-              val kids = e.children.map(rewriteExpr)
-              if (kids.exists(_.isEmpty)) None
-              else Some(e.withNewChildren(kids.map(_.get)))
-          }
-        }
-    }
+    val aggCases: Known = { case ae: AggregateExpression => mapAgg(ae) }
+    val rewriteExpr = rebuild(aggCases orElse onKey(keyMap)) _
 
-    val newAe: Seq[Option[NamedExpression]] = entries.map { case (name, id, expr) =>
+    sequence(entries.map { case (name, id, expr) =>
       rewriteExpr(expr).map(ne => Alias(ne, name)(exprId = id))
-    }
-    if (newAe.exists(_.isEmpty)) return None
-
-    val newGe: Seq[Expression] = keyMap.map(_._2).distinct
-    val source =
-      if (newConds.isEmpty) scan
-      else org.apache.spark.sql.catalyst.plans.logical.Filter(
-        newConds.flatten.reduce(And), scan)
-    Some(Aggregate(newGe, newAe.flatten, source))
+    }).map(newAe => aggregateOver(scan, newConds, keyMap.map(_._2).distinct, newAe))
   }
 }

@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Custom whole-operator: per-group top-K without sorting whole groups.
   *
@@ -23,8 +22,8 @@ import org.apache.spark.sql.SparkSessionExtensions
   * pass re-heaps and ranks. It demonstrates the full
   * Catalyst extension stack per the build guidance: logical node ([[TopKPerGroupNode]]) →
   * planner strategy ([[TopKStrategy]]) → physical exec ([[TopKPerGroupExec]]),
-  * registered via `SparkSessionExtensions` ([[GraftExtensions]]) or
-  * `spark.experimental.extraStrategies` ([[TopKPerGroup.install]]).
+  * registered on first use via `spark.experimental.extraStrategies`
+  * ([[TopKPerGroup.install]]).
   *
   * Semantics: rows ranked per group by `sortCol` DESC, ties broken by
   * `tieCol` ASC; emits child columns + `rnk` (1..k). Identical to the window
@@ -588,17 +587,4 @@ case class TopKPerGroupExec(
 
   override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
     copy(child = newChild)
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` registration path:
-  * installs the full operator stack — planner strategy AND the window-idiom
-  * auto-rewrite — on every session of the application.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => TopKStrategy)
-    e.injectOptimizerRule(_ => WindowTopKRewrite)
-    // transparent MV routing (no-op until a cascade registers a root)
-    e.injectOptimizerRule(session => MvRoutingRule(session))
-  }
 }

@@ -240,15 +240,10 @@ object StreamingMVs {
     */
   def ivfRoutingMv(spark: SparkSession, dir: String): DataFrame =
     StreamRunner.maintainedTable(spark, dir, "st14_ivf_routing", "complete") { s =>
-      // per-label double-avg→float centroids (km01's proven recipe), ordered
-      // by label ASC so the strict-> fold below keeps the LOWEST cell on
-      // exact cosine ties — the same tiebreak as the oracle's ROW_NUMBER
-      val cents: Array[(Int, Array[Float])] = Tables(s, dir).embeddings
-        .select(col("label"), posexplode(col("embedding")).as(Seq("d", "v")))
-        .groupBy("label", "d").agg(avg(col("v").cast("double")).as("c"))
-        .groupBy("label")
-        .agg(transform(array_sort(collect_list(struct(col("d"), col("c")))),
-          x => x.getField("c")).cast("array<float>").as("centroid"))
+      // per-label centroids in label order; the argmax below breaks exact
+      // cosine ties toward the LOWEST cell, like the oracle's ROW_NUMBER
+      val cents: Array[(Int, Array[Float])] = graft.pipeline.VectorOps
+        .centroids(Tables(s, dir).embeddings, Seq("label"), "embedding")
         .orderBy("label").collect()
         .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       require(cents.nonEmpty && cents.length <= 64,
@@ -260,7 +255,7 @@ object StreamingMVs {
       // nested-when fold embedded the running best TWICE per cell, growing
       // the tree exponentially — at K=10 the generated code crossed janino's
       // 64 KB method limit and the whole stage silently fell back to
-      // interpreted evaluation (caught by PlanAudit's audit run).
+      // interpreted evaluation (caught by a plan-audit run over the catalog).
       val scored = array(cents.map { case (cellId, c) =>
         struct(
           graft.pipeline.VectorOps.cosine(col("embedding"), typedLit(c)).as("ccos"),

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Source scan: one session builder, and no operator code that changes
-  * session-global state as it runs. Queries built in one session run
+/** Source scan: one session builder, no one-shot mains, and no operator
+  * code that changes session-global state as it runs. Queries built in one session run
   * concurrently (`Concurrently`, the serving shim), so a conf set by one
   * entry leaks into whatever runs next to it.
   */
@@ -61,6 +61,13 @@ class SessionHygieneSpec extends AnyFunSuite {
   test("src/main assigns spark.experimental only in TopKPerGroup.install") {
     val hits = scan("src/main", """\bexperimental\.\w+\s*=(?!=)""".r)
       .filterNot(h => fileName(h) == "TopKPerGroup.scala" && h.enclosingDef == "install")
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("src/main defines a main only in Bench, Verify, Explain and GenScale") {
+    val mains = Set("Bench.scala", "Verify.scala", "Explain.scala", "GenScale.scala")
+    val hits = scan("src/main", """\bdef\s+main\s*\(|\bextends\s+App\b""".r)
+      .filterNot(h => mains(fileName(h)))
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }

@@ -175,6 +175,27 @@ class MvRoutingSpec extends graft.SparkSpec {
       s"expected a session_date partition filter on the routed scan, got $pf")
   }
 
+  test("gap-session aggregate regrouped through five chained derivations routes") {
+    graft.streaming.MvCascade.run(spark, dir)
+    // d0 = to_date(session_window.start), then d1..d5 each derived from the
+    // one before: the grouping key is six aliases deep in the Project stack
+    def q = {
+      val sessions = Tables(spark, dir).events
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,2)")).as("v"))
+        .withColumn("d0", to_date(col("session_window.start")))
+      (1 to 5).foldLeft(sessions)((df, i) => df.withColumn(s"d$i", date_add(col(s"d${i - 1}"), 0)))
+        .groupBy(col("d5").as("session_date"))
+        .agg(count(lit(1)).as("sessions"),
+          countDistinct(col("user_id")).as("users"),
+          sum(col("n")).as("events"),
+          sum(col("v")).cast("double").as("value"))
+    }
+    val r = MvRouting.route(q)
+    assertRouted(r, "mv_sessions")
+    sameRows(r, q)
+  }
+
   test("session routing is path-spelling-proof (relative dir still routes)") {
     // r7 sf3 regression: HadoopFsRelation equality includes the path OPTION
     // string, so a relative caller dir never sameResult'ed the canon built
