@@ -9,6 +9,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * results to JSON. The `collect()` here is the documented serving edge
   * (post-LIMIT result sets only) — the single place driver-side
   * materialization is allowed.
+  *
+  * [[run]] and [[toJson]] always plan and run the entry. [[HttpServing]]
+  * calls them only when its [[ResultCache]] misses: on an entry's first
+  * request, after a file the entry reads has changed, and on every request
+  * for an entry that reads anything but files. Any other request is answered
+  * from the body the last run produced, with no query.
   */
 object Serving {
 
