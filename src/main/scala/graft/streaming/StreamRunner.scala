@@ -12,22 +12,38 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Streami
 
 /** The one place the catalog's streams are started and awaited.
   *
-  * A run starts its queries from a private clone of the caller's session
-  * whose `spark.sql.shuffle.partitions` is the data-derived state-partition
-  * count ([[graft.sources.Layout.statePartitionsFor]]), so the caller's conf
-  * is never written: queries running next to a stream (`Concurrently`, the
-  * serving threads) keep the session's own value, and each stream's count
-  * is its own. Stateful operators can't be AQE-coalesced, so a core-count
-  * partition floor would be pure per-partition store open/commit cost on
-  * them (measured: halves an sf0.1 complete-mode run). Results are
-  * unaffected: every state aggregate in the catalog is order-free mergeable
-  * (count / sum(decimal) / min / max / min(struct)), and join / dedup
-  * outputs are partitioning-independent row sets.
+  * A run starts its queries from a private clone of the caller's session,
+  * so the caller's conf is never written: queries running next to a stream
+  * (`Concurrently`, the serving threads) keep the session's own settings.
+  * The clone carries three settings of its own:
+  *
+  *  - `spark.sql.shuffle.partitions` is the data-derived state-partition
+  *    count ([[graft.sources.Layout.statePartitionsFor]]), so each stream's
+  *    count is its own. Stateful operators can't be AQE-coalesced, so a
+  *    core-count partition floor would be pure per-partition store
+  *    open/commit cost on them (measured: halves an sf0.1 complete-mode
+  *    run). Results are unaffected: every state aggregate in the catalog is
+  *    order-free mergeable (count / sum(decimal) / min / max / min(struct)),
+  *    and join / dedup outputs are partitioning-independent row sets.
+  *  - `spark.sql.artifact.isolation.enabled` is off. Each streaming query
+  *    runs on a clone of its own, and with isolation on every clone gets
+  *    its own artifact class loader; generated code is cached per (class
+  *    loader, source), so every run of a stream recompiled every class (11
+  *    per st13 run). Off, the query's clone runs under the default class
+  *    loader and hits the session's warm codegen cache. Isolation only
+  *    separates artifacts added to a session, and no code in graft adds
+  *    one (`SessionHygieneSpec` pins that).
+  *  - `spark.sql.streaming.checkpointFileManagerClass` is
+  *    [[LocalCheckpointFileManager]], which writes `file:` checkpoints
+  *    without the processes Hadoop's local file system forks.
   *
   * Every query runs under `Trigger.AvailableNow` to exhaustion. The runner
   * records one [[Cost]] per (dir, query name), memoizes maintained streams
   * once per (dir, name), and hands memory-sink results back as frames in
-  * the caller's session.
+  * the caller's session. When a run ends, the streaming listener buses of
+  * the clone and of each query's own session are detached from the
+  * context's shared listener bus, where they would otherwise stay for the
+  * life of the context.
   */
 object StreamRunner {
 
@@ -60,6 +76,9 @@ object StreamRunner {
     val clone = ColumnBridge.cloneSession(spark)
     clone.conf.set("spark.sql.shuffle.partitions", graft.sources.Layout
       .statePartitionsFor(dir, spark.sparkContext.defaultParallelism).toString)
+    clone.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    clone.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[LocalCheckpointFileManager].getName)
     val t0 = System.nanoTime()
     val writers = queries(clone)
     // the memory sink's view and the query itself live in the clone, so the
@@ -76,6 +95,8 @@ object StreamRunner {
     } finally {
       started.foreach(_._2.stop()) // a no-op once a query has ended
       clone.streams.removeListener(progress)
+      (clone +: started.map(q => ColumnBridge.querySession(q._2)))
+        .foreach(ColumnBridge.detachStreamingBus)
     }
     clone
   }

@@ -70,4 +70,12 @@ class SessionHygieneSpec extends AnyFunSuite {
       .filterNot(h => mains(fileName(h)))
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
+
+  test("src/main adds no session artifacts") {
+    // StreamRunner's clones turn artifact isolation off, so every streaming
+    // query runs under the default class loader; that is safe only while no
+    // session adds a jar or another artifact of its own
+    val hits = scan("src/main", """\baddArtifacts?\b|\baddJar\b|(?i)\badd\s+jars?\b""".r)
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
 }

@@ -370,4 +370,64 @@ class StreamingSpec extends SparkSpec {
     assert(streamed(0).getTimestamp(1) == batch(0).getTimestamp(1),
       s"incremental peak instant ${streamed(0)} diverged from batch ${batch(0)}")
   }
+
+  test("st13's second build in one session compiles no classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val st13 = graft.Catalog.byName("st13_streaming_quality_gate")
+    val first = st13.build(spark, sf()).collect()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = st13.build(spark, sf()).collect()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the second st13 build compiled $compiled classes")
+    assert(second.toSeq == first.toSeq)
+  }
+
+  test("StreamRunner runs leave the context's listener count flat over 5 st13 builds") {
+    import org.apache.spark.sql.graftbridge.BusProbe
+    val st13 = graft.Catalog.byName("st13_streaming_quality_gate")
+    st13.build(spark, sf()).collect()
+    val before = BusProbe.listeners(spark.sparkContext)
+    (1 to 5).foreach(_ => st13.build(spark, sf()).collect())
+    val after = BusProbe.listeners(spark.sparkContext)
+    // streaming listener buses only: a session's execution listener bus is
+    // removed by Spark's context cleaner once the session is collected, so
+    // their number moves with garbage collection
+    def streamingBuses(ls: Seq[String]) = ls.count(_.endsWith(".StreamingQueryListenerBus"))
+    assert(streamingBuses(after) == streamingBuses(before),
+      s"${before.size} listeners before 5 st13 builds, ${after.size} after; added: ${after.diff(before)}")
+  }
+
+  test("restart under StreamRunner's settings: a file-source aggregate resumes from its checkpoint") {
+    import spark.implicits._
+    val src = java.nio.file.Files.createTempDirectory("graft_restart_src").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_restart_ckpt").toString
+    val schema = batch1.toDF().schema
+    def agg(df: org.apache.spark.sql.DataFrame) = df
+      .groupBy(to_date(col("ts")).as("event_date"), col("event_type"))
+      .agg(count(lit(1)).as("events"), sum(col("value").cast("decimal(18,2)")).as("val"))
+    def runOnce(): Set[Seq[Any]] = {
+      val clone = StreamRunner.run(spark, sf()) { s =>
+        Seq("restart_test" -> agg(s.readStream.schema(schema).parquet(src))
+          .writeStream.outputMode("complete").format("memory")
+          .option("checkpointLocation", ckpt))
+      }
+      clone.table("restart_test").collect().map(_.toSeq).toSet
+    }
+    batch1.toDF().coalesce(1).write.mode("append").parquet(src)
+    val afterFirst = runOnce()
+    assert(afterFirst == agg(batch1.toDF()).collect().map(_.toSeq).toSet)
+    // the second file arrives after the stop; only the checkpointed state
+    // carries batch 1's counts into the restarted query
+    batch2.toDF().coalesce(1).write.mode("append").parquet(src)
+    val restarted = runOnce()
+    assert(restarted == agg((batch1 ++ batch2).toDF()).collect().map(_.toSeq).toSet)
+    val commits = new java.io.File(ckpt, "commits").list().filterNot(_.startsWith("."))
+    assert(commits.sorted.toSeq == Seq("0", "1"), s"expected one commit per run, got ${commits.toSeq}")
+    // the runner's checkpoint manager writes the offset and commit logs
+    // without the hidden `.name.crc` side files of Hadoop's checksummed
+    // local file system
+    val logs = Seq("offsets", "commits").flatMap(d => new java.io.File(ckpt, d).list().toSeq)
+    assert(logs.nonEmpty && !logs.exists(n => n.startsWith(".") && n.endsWith(".crc")),
+      s"checkpoint logs written through FileContext: $logs")
+  }
 }
