@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   *     the round's numbers;
   *   - [[Residency.release]] runs between every pair of measurements and the
   *     harness asserts nothing stayed resident — `clearCache()` alone cannot
-  *     free localCheckpoint blocks (the r2 q19/q20 contamination);
+  *     free snapped blocks (the r2 q19/q20 contamination);
   *   - the one-time streaming-cascade machinery (st04–st09 MV builds, which
   *     sq06 also reads) is executed before timing and reported separately as
   *     `streaming_setup_sec` — r2 misattributed its ~28 s to whichever query

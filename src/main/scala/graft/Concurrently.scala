@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Overlap INDEPENDENT eager subchains of a composition entry (optimization
   * guide §2.6 "overlap independent jobs"): DataFrame *builds* in this
-  * codebase can run eager jobs (localCheckpoint snaps, metadata collects,
+  * codebase can run eager jobs (`Residency.snap`, metadata collects,
   * the ts02 union-find's edge collect), which serialize on the entry's
   * build thread even though Spark would happily back-fill executor slack
   * with the other subchain's tasks. Each extra thunk runs on its own thread;

@@ -17,7 +17,7 @@ object Explain {
     Residency.release(spark)
     (1 to runs).foreach { r =>
       // rebuild per run + release after, matching Bench methodology — a
-      // released localCheckpoint cannot be re-materialized from the same frame
+      // released snap cannot be re-materialized from the same frame
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"[explain] $name run $r: ${(System.nanoTime() - t0) / 1e9}%.3f s")

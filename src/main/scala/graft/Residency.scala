@@ -1,23 +1,39 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Deterministic release of block-manager residency between queries.
+/** How an entry holds a reused intermediate, and how its blocks are freed.
   *
-  * Multi-consumer intermediates use eager `localCheckpoint(true)`. The
-  * checkpoint's RDD blocks are freed only when the frame becomes unreachable
-  * AND the ContextCleaner runs — `spark.catalog.clearCache()` never touches
-  * them. In a long-lived session the stragglers occupy unified memory and
-  * starve execution for later queries (round 2 shipped q19 0.99 s → 23.2 s
-  * purely from a *previous* query's leaked blocks). Harnesses (Bench, Verify,
-  * specs) call [[release]] after consuming each query's result.
+  * An intermediate read by two or more consumers that exchange reuse cannot
+  * share (separate jobs, a driver-side collect, an iterated plan that must
+  * be truncated) goes through [[snap]]; no other code in `src/main` holds a
+  * frame in block storage.
+  *
+  * Lifetime contract:
+  *   - [[snap]] runs one job that stores the frame's rows in the block
+  *     manager and returns a frame whose plan reads those blocks, so every
+  *     consumer shares one computation.
+  *   - A snap is not a Dataset cache: it is never matched by plan, so a
+  *     later build of the same entry computes afresh and sees changed
+  *     files. `spark.catalog.clearCache()` does not free its blocks.
+  *   - Its blocks are freed when the returned frame becomes unreachable and
+  *     the ContextCleaner runs, or at once by [[release]]. Stragglers in a
+  *     long-lived session hold unified memory and starve later queries, so
+  *     harnesses (Bench, Verify, specs) call [[release]] after consuming
+  *     each query's result.
+  *   - A task attempt killed or failed while the snap job runs is retried
+  *     from lineage; once stored, the blocks are the only copy, so a
+  *     released or lost block fails any frame that still reads it.
   */
 object Residency {
 
+  /** Materialize `df` once, eagerly, and return a frame over the stored rows. */
+  def snap(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+
   /** Drop cached tables AND every persisted/checkpointed RDD's blocks.
     * Safe only once the frames built by the previous query are fully
-    * consumed — a localCheckpointed RDD cannot be recomputed after its
-    * blocks are gone.
+    * consumed — a snapped frame cannot be recomputed after its blocks are
+    * gone.
     */
   def release(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

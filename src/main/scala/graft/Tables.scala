@@ -42,7 +42,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * ROW-GROUP granularity, and every sf0.1 testdata file is a single row
     * group — so every map-side stage over these tables runs on ONE task
     * regardless of core count (OPTIMIZATION_r15.md §2: pp03's redact+gate stage,
-    * 2.83 s wall / 2.82 s cpu, 1 task on a 32-core session; localCheckpoint
+    * 2.83 s wall / 2.82 s cpu, 1 task on a 32-core session; a snap
     * then pins the 1-partition layout for the rest of the chain). For a
     * KERNEL-HEAVY MAP consumer (regex scrubbing, shingle/signature builds,
     * per-pair vector kernels) a hash repartition to the session parallelism

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import graft.QueryDef.{dec, decSum, decSumSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -142,8 +142,7 @@ object Analytics {
       val t = Tables(spark, dir)
       // both self-join sides consume the same capped distinct: ReusedExchange
       // shares the cap's exchange across them (verified in the physical
-      // plan), so no eager materialization — round 2's localCheckpoint here
-      // broke the reuse AND leaked blocks past clearCache (see Residency).
+      // plan), so no snap — a snap here would break that reuse.
       // No .distinct() — capBasket's dedup heap folds it into its one exchange
       val items = capBasket(
         t.lineitem.select("l_orderkey", "l_partkey"),
@@ -228,11 +227,7 @@ object Analytics {
     ) { (spark, dir) =>
       val t = Tables(spark, dir)
       // three consumers (buyers, pair side a, pair side b) all hang off the
-      // same capped distinct — the cap's exchange is shared via
-      // ReusedExchange, so the plan runs the join+distinct+cap once without
-      // materialization (round 2's eager localCheckpoint here caused a 6.9×
-      // regression: an extra full materialization job plus blocks clearCache
-      // can't free).
+      // same capped distinct (snapped below).
       // Measured alternative (round 4): collect_list per-user baskets +
       // posexplode×slice pair generation is ~1.8× SLOWER at sf0.1 (6.3 s vs
       // 3.6 s) — the first explode carries a copy of the whole basket array
@@ -253,13 +248,11 @@ object Analytics {
       // the only regime where the screen can't pay (mass past the sketch
       // ceiling).
       //
-      // The sketch pass is a SECOND job over the capped baskets, which
-      // ReusedExchange cannot span (reuse is per-query-execution), so the
-      // capped distinct is persisted once — the mass probe, the sketch
-      // pass, and the main pass all read the columnar cache, still
-      // clustered by user. Residency.release drops the persisted blocks
-      // after the entry is consumed.
-      val upC = up.persist()
+      // The mass probe, the sketch pass and the main pass are separate jobs
+      // over the capped baskets, which ReusedExchange cannot span (reuse is
+      // per-query-execution), so the capped distinct is snapped once and
+      // all three read its blocks.
+      val upC = Residency.snap(up)
       val buyers = upC.groupBy("part_id").agg(count(lit(1)).as("buyer_count"))
       val a = upC.toDF("u", "part_a")
       val b = upC.toDF("u", "part_b")
@@ -326,8 +319,7 @@ object Analytics {
       val pairStream = a.join(b, Seq("u")).filter(col("part_a") < col("part_b"))
         .select(shiftleft(col("part_a"), 32).bitwiseOR(col("part_b")).as("pk"))
       val screened = {
-        // exact screened mass from the capped basket sizes: upC is already
-        // clustered by user, so this aggregate adds no exchange
+        // exact screened mass from the capped basket sizes
         val massRow = upC.groupBy("user_id").agg(count(lit(1)).as("n"))
           .agg(sum(col("n") * (col("n") - lit(1)))).head()
         val pairMass = if (massRow.isNullAt(0)) 0L else massRow.getLong(0) / 2
@@ -802,7 +794,7 @@ object Analytics {
     * instant it is reached.
     */
   private[graft] def peakFromSpans(spans: DataFrame): DataFrame = {
-    // r16 note: checkpointing iv here was MEASURED A SLOWDOWN (q55
+    // snapping iv here was MEASURED A SLOWDOWN (q55
     // 0.68→0.98 s, st19 1.21→1.48 s at sf0.1) — the endpoint union's double
     // read of the span source is map-side-cheap while the eager snap pays a
     // serialize+store of every span row plus a job. Left as lineage.
@@ -810,11 +802,9 @@ object Analytics {
     val pts = iv.select(col("s").as("ts"), lit(1L).as("delta"))
       .unionAll(iv.select(col("e").as("ts"), lit(-1L).as("delta")))
     val net = pts.groupBy("ts").agg(sum(col("delta")).as("net"))
-    // two consumers (the max agg and the filter probe) — eager checkpoint so
-    // the prefix-sum window evaluates ONCE over the ranged blocks (r11
-    // advisory; harness releases via Residency)
-    val run = DistributedRank.withRunningTotal(net, "conc", "net", col("ts"))
-      .localCheckpoint(true)
+    // two consumers (the max agg and the filter probe) — snapped so the
+    // prefix-sum window evaluates ONCE over the ranged blocks
+    val run = Residency.snap(DistributedRank.withRunningTotal(net, "conc", "net", col("ts")))
     run.join(broadcast(run.agg(max(col("conc")).as("mxc"))), col("conc") === col("mxc"))
       .groupBy(col("mxc").cast("long").as("max_concurrency"))
       .agg(min(col("ts")).as("at_ts"))

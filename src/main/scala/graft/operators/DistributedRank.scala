@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,18 +30,14 @@ object DistributedRank {
   def withGlobalRank(df: DataFrame, rankCol: String, keys: Column*): DataFrame = {
     val spark = df.sparkSession
     val numParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // localCheckpoint (eager): the offsets collect and the final plan must
-    // observe the SAME range partitioning — repartitionByRange samples
-    // boundaries per execution, and two independent executions can split
-    // borderline keys differently (observed at sf0.1: offsets for a
-    // partitioning the final run didn't have). The checkpoint materializes
-    // the ranged RDD once so both passes share it, and — unlike the r1
-    // persist(), which leaked a cache entry per call for the session
-    // lifetime — its blocks are freed by the ContextCleaner as soon as the
-    // caller drops the returned frame.
-    val ranged = df.repartitionByRange(numParts, keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+    // snapped: the offsets collect and the final plan must observe the SAME
+    // range partitioning — repartitionByRange samples boundaries per
+    // execution, and two independent executions can split borderline keys
+    // differently (observed at sf0.1: offsets for a partitioning the final
+    // run didn't have). The snap materializes the ranged rows once so both
+    // passes share them.
+    val ranged = Residency.snap(df.repartitionByRange(numParts, keys: _*)
+      .withColumn("__pid", spark_partition_id()))
     // one row per partition — tiny, metadata-scale collect
     val sizes = ranged.groupBy("__pid").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -68,9 +64,8 @@ object DistributedRank {
   def withRunningTotal(df: DataFrame, totalCol: String, valueCol: String, keys: Column*): DataFrame = {
     val spark = df.sparkSession
     val numParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = df.repartitionByRange(numParts, keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Residency.snap(df.repartitionByRange(numParts, keys: _*)
+      .withColumn("__pid", spark_partition_id()))
     val sums = ranged.groupBy("__pid").agg(sum(col(valueCol)).as("s"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets: Map[Int, Long] = {

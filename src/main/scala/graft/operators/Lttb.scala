@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -56,14 +56,13 @@ object Lttb {
       .withColumn("rn", row_number().over(ordered).cast("long") - 1L)
       .withColumn("n", count(lit(1)).over(bySeries))
       .withColumn("xr", col("x") - min(col("x")).over(bySeries))
-      // r16: base feeds FIVE consumers (small, edge ×2, mid → bucketSums and
+      // base feeds FIVE consumers (small, edge ×2, mid → bucketSums and
       // the scored join) — without materialization each re-executed the
       // upstream pre-aggregation + the window (ReuseExchange dedupes only
       // the shuffle write, not the window compute). base is series×minutes —
-      // MV-sized, never raw events — so one eager checkpoint is linear in
-      // the served points and the rest of the operator reads materialized
-      // blocks (released by Residency).
-      .localCheckpoint(true)
+      // MV-sized, never raw events — so one snap is linear in the served
+      // points.
+      .transform(Residency.snap)
     val small = base.filter(col("n") <= k).select("series", "x", "y")
     val big = base.filter(col("n") > k)
     val edge = big.filter(col("rn") === 0 || col("rn") === col("n") - 1)

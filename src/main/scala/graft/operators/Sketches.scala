@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -186,8 +186,8 @@ object Sketches {
       // each task to ≤ |candidates| partial rows before the shuffle
       val exact = words.join(broadcast(cands), Seq("word"), "left_semi")
         .groupBy("word").agg(count(lit(1)).as("freq"))
-      val top = exact.orderBy(desc("freq"), asc("word")).limit(20)
-        .localCheckpoint(true) // 20 rows; feeds the result AND the kth scalar
+      // 20 rows; feeds the result AND the kth scalar
+      val top = Residency.snap(exact.orderBy(desc("freq"), asc("word")).limit(20))
       // N from a doc-level metadata aggregate (split width, no explode) —
       // pass 1 in a real deployment carries this alongside the summaries
       val totals = docs.agg(

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -150,7 +150,7 @@ object Clustering {
     val coarse = assign(e, recompute(assign(e, seed)))
       .withColumnRenamed("cluster", "coarse")
       .withColumnRenamed("ccos", "ccos_c")
-      .localCheckpoint(true)
+      .transform(Residency.snap)
     val fs = coarse.filter(col("vec_id") < k)
       .select(col("coarse"), col("vec_id").as("fseed_id"), col("embedding").as("fseed_emb"))
     val fw = Window.partitionBy("vec_id").orderBy(desc_nulls_last("fc"), asc_nulls_last("fseed_id"))
@@ -161,7 +161,7 @@ object Clustering {
       .select(col("vec_id"), col("embedding"),
         coalesce(col("fseed_id"), -(col("coarse") + lit(1))).as("cluster"),
         coalesce(col("fc"), col("ccos_c")).as("ccos"))
-      .localCheckpoint(true)
+      .transform(Residency.snap)
   }
 
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {

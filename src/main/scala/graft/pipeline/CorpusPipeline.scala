@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -172,8 +172,8 @@ object CorpusPipeline {
     // redact/gate; segment-keyed + doc-keyed shuffles for dedup; broadcast
     // charset² model; DistributedRank running totals — no single-partition
     // window; cluster-map left join; shuffle-free partitioned export). The
-    // two localCheckpoints hold stage outputs that feed 2+ consumers each —
-    // corpus-sized, linear, released by Residency.
+    // snaps hold stage outputs that feed 2+ consumers each — corpus-sized,
+    // linear.
     QueryDef.sql(
       "pp03_curation_chain",
       s"""WITH px AS (
@@ -312,9 +312,9 @@ object CorpusPipeline {
       lit(".0."), (col("doc_id") % 250L).cast("string"), lit(" end"))
     val t1 = regexp_replace(regexp_replace(regexp_replace(planted,
       Scrub.EmailRe, "<EMAIL>"), Scrub.PhoneRe, "<PHONE>"), Scrub.IpRe, "<IP>")
-    // documentsWide (r15): the redact+gate head was a measured 2.83 s
+    // documentsWide: the redact+gate head was a measured 2.83 s
     // SINGLE-TASK stage (OPTIMIZATION_r15.md §2) — the whole chain then inherited the
-    // 1-partition layout through its checkpoints. The localCheckpoint is a
+    // 1-partition layout through its snaps. The snap is a
     // PUSHDOWN BARRIER, not a convenience: without it Catalyst pushes the
     // quality gate's filter (which re-embeds the full triple-regex chain in
     // each of its six conditions) below the widening exchange, putting all
@@ -322,7 +322,7 @@ object CorpusPipeline {
     // optimizedPlan: Filter(regexp_replace…) under RepartitionByExpression).
     val redacted = Tables(spark, dir).documentsWide
       .select(col("doc_id"), t1.as("t1"))
-      .localCheckpoint(true)
+      .transform(Residency.snap)
 
     // 2. quality gate (qf01's rules, applied to the REDACTED text)
     val words1 = split(col("t1"), " ")
@@ -354,13 +354,13 @@ object CorpusPipeline {
         sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_kept"))
       .filter(col("n_kept") > 0)
       .select("doc_id", "t2")
-      .localCheckpoint(true) // feeds the LM model, scoring, and selection
+      .transform(Residency.snap) // feeds the LM model, scoring, and selection
 
     // 4. LM score (lm01's charset² bigram model over the SURVIVING corpus)
     val inst = deduped
       .select(col("doc_id"), explode(TextExpressions.charBigrams(col("t2"))).as("bg"))
       .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds the model AND the scoring join
+      .transform(Residency.snap) // feeds the model AND the scoring join
     val model = inst.groupBy("bg").agg(sum("c").cast("long").as("c_bg"))
     val uni = model.groupBy(substring(col("bg"), 1, 1).as("c1"))
       .agg(sum("c_bg").cast("long").as("c_uni"))
@@ -382,7 +382,7 @@ object CorpusPipeline {
     val scored = survived
       .select(col("doc_id"), col("t2"), size(words2).cast("long").as("n_tokens"),
         quality.as("quality_score"))
-      .localCheckpoint(true) // budget scalar + running total both read it
+      .transform(Residency.snap) // budget scalar + running total both read it
     val budgetRow = scored.agg(sum("n_tokens")).head()
     val budget = if (budgetRow.isNullAt(0)) 0L else budgetRow.getLong(0) / 2
     graft.operators.DistributedRank

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,7 +69,7 @@ object Curation {
       .select(col("doc_id"),
         explode(graft.functions.TextExpressions.charBigrams(col("text"))).as("bg"))
       .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // feeds the model AND the scoring join
+      .transform(Residency.snap) // feeds the model AND the scoring join
     val model = inst.groupBy("bg").agg(sum("c").cast("long").as("c_bg"))
     val uni = model.groupBy(substring(col("bg"), 1, 1).as("c1"))
       .agg(sum("c_bg").cast("long").as("c_uni"))
@@ -370,7 +370,7 @@ object Curation {
         .select(col("doc_id"), col("lang"),
           explode(graft.functions.TextExpressions.charBigrams(col("text"))).as("bg"))
         .groupBy("doc_id", "lang", "bg").agg(count(lit(1)).as("c"))
-        .localCheckpoint(true) // feeds both models AND the scoring join
+        .transform(Residency.snap) // feeds both models AND the scoring join
       val modelR = inst.groupBy("bg").agg(sum("c").cast("long").as("c_r"))
       val modelT = inst.filter(col("lang") === "en")
         .groupBy("bg").agg(sum("c").cast("long").as("c_t"))

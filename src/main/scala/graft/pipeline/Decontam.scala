@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,7 +27,7 @@ object Decontam {
     array_distinct(graft.functions.TextExpressions.wordShingles(text))
 
   /** On-disk (compressed) size of the documents table — file or directory of
-    * parts. Input to dc02's checkpoint-residency gate; metadata-scale.
+    * parts. Input to dc02's snap-residency gate; metadata-scale.
     */
   private def docsFileBytes(dir: String): Long = {
     def len(f: java.io.File): Long = {
@@ -124,19 +124,19 @@ object Decontam {
     val shC = corpus.repartition(col("doc_id"))
       .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
     // Two consumers (per-doc denominator + bloom-survivor stream): the
-    // materialize-once-vs-recompute-twice trade. localCheckpoint stores the
-    // FULL ~500×-amplified shingle stream in executor storage — residency
-    // that scales with corpus size, against this operator's bounded-by-
-    // overlap-mass posture. So the checkpoint is GATED: estimated shingle
+    // materialize-once-vs-recompute-twice trade. A snap stores the FULL
+    // ~500×-amplified shingle stream in executor storage — residency that
+    // scales with corpus size, against this operator's bounded-by-
+    // overlap-mass posture. So the snap is GATED: estimated shingle
     // residency (compressed documents bytes × ~32 for decompress + shingle
     // amplification + row overhead) must fit a quarter of the heap;
     // past that, recompute the map-side explode per consumer — two cheap
-    // scans instead of an executor-storage cliff (ADVICE r7). Every driven
-    // scale (sf0.1/sf1/sf3/sf10 ≈ tens of MB compressed) keeps the
-    // checkpoint; the gate exists for the corpus that wouldn't.
+    // scans instead of an executor-storage cliff. Every driven scale
+    // (sf0.1/sf1/sf3/sf10 ≈ tens of MB compressed) keeps the snap; the
+    // gate exists for the corpus that wouldn't.
     val estResidency = docsFileBytes(dir) * 32L
     val shCMat =
-      if (estResidency <= Runtime.getRuntime.maxMemory / 4) shC.localCheckpoint(true)
+      if (estResidency <= Runtime.getRuntime.maxMemory / 4) Residency.snap(shC)
       else shC
     val nc = shCMat.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
     // The blob reaches the probe as a LITERAL, not a cross-joined column.

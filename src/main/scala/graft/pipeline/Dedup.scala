@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -101,7 +101,7 @@ object Dedup {
     * that are order-insensitive: the global range-partition sort exchange is
     * pure overhead there (guide §2.4 "an orderBy used only to make output
     * deterministic"), and EliminateSorts does not remove a sort under a
-    * union/localCheckpoint.
+    * union or a snap.
     */
   private[graft] def nearDupEdges(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardPairsRaw(Tables(spark, dir).documentsWide,
@@ -117,12 +117,12 @@ object Dedup {
     val kept = shAll.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap).select("s")
     // sh feeds three consumers (per-doc counts, join side a, join side b) —
-    // materialize the POST-cap join result once. The uncapped explode shAll
-    // is deliberately NOT checkpointed and runs twice (df aggregate + join
-    // input): it is cheap codegen map work, while materializing it would
-    // pin the full pre-cap explode — the largest intermediate here — in
-    // block storage for no downstream reuse beyond these two.
-    val sh = shAll.join(kept, "s").select("doc_id", "s").localCheckpoint(true)
+    // snap the POST-cap join result once. The uncapped explode shAll is
+    // deliberately NOT snapped and runs twice (df aggregate + join input):
+    // it is cheap codegen map work, while materializing it would pin the
+    // full pre-cap explode — the largest intermediate here — in block
+    // storage for no downstream reuse beyond these two.
+    val sh = Residency.snap(shAll.join(kept, "s").select("doc_id", "s"))
     val n = sh.groupBy("doc_id").agg(count(lit(1)).as("ns"))
     val a = sh.toDF("doc_a", "s")
     val b = sh.toDF("doc_b", "s")
@@ -156,7 +156,7 @@ object Dedup {
     */
   private[graft] def corpusIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val corpus = Tables(spark, dir).documentsWide.filter(col("doc_id") % 10 =!= 0)
-    val sigs = signatures(shingleHashes(corpus)).localCheckpoint(true)
+    val sigs = Residency.snap(signatures(shingleHashes(corpus)))
     val bands = sigs.select(col("doc_id"), posexplode(bandArray(col("sig"))))
       .toDF("corpus_id", "band_id", "band_hash")
     (bands, sigs.toDF("corpus_id", "sig_c"))
@@ -191,12 +191,11 @@ object Dedup {
 
   /** Candidate near-dup pairs via banded LSH + signature-estimated Jaccard. */
   private[pipeline] def minhashPairs(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
-    // localCheckpoint, not cache: 3 consumers (bands, sig_a, sig_b), and the
-    // blocks free themselves when the result frame is dropped.
-    // documentsWide (r15): the shingle+128-permutation signature build is
-    // the kernel-heavy map stage; widening by doc_id parallelizes it AND
-    // its groupBy(doc_id) reuses the same hash partitioning (no exchange).
-    val sigs = signatures(shingleHashes(Tables(spark, dir).documentsWide)).localCheckpoint(true)
+    // snapped: 3 consumers (bands, sig_a, sig_b).
+    // documentsWide: the shingle+128-permutation signature build is the
+    // kernel-heavy map stage; widening by doc_id parallelizes it AND its
+    // groupBy(doc_id) reuses the same hash partitioning (no exchange).
+    val sigs = Residency.snap(signatures(shingleHashes(Tables(spark, dir).documentsWide)))
     val bands = sigs.select(
       col("doc_id"),
       posexplode(transform(sequence(lit(0), lit(NumBands - 1)), b =>
@@ -247,7 +246,7 @@ object Dedup {
   }
 
   private[pipeline] def simhashPairs(spark: SparkSession, dir: String, maxDist: Int): DataFrame = {
-    val sh = simhashes(Tables(spark, dir).documentsWide).localCheckpoint(true)
+    val sh = Residency.snap(simhashes(Tables(spark, dir).documentsWide))
     val chunks = sh.select(col("doc_id"), col("simhash"),
       posexplode(expr("transform(sequence(0, 3), c -> (simhash >> (c * 16)) & 65535)")))
       .toDF("doc_id", "simhash", "chunk_id", "chunk")
@@ -341,14 +340,14 @@ object Dedup {
       // unordered edge set (same rows as dd02's entry): the truth frame only
       // feeds a join and a count — see nearDupEdges. Truth (shingle snap)
       // and candidates (signature snap) build independently — overlap their
-      // eager checkpoint jobs (guide §2.6).
+      // snap jobs (guide §2.6).
       val (truth0, j0) = graft.Concurrently(spark,
         nearDupEdges(spark, dir),
         minhashPairs(spark, dir, threshold = 0.0))
       val truth = truth0.withColumn("t", lit(1L))
       val j = j0
         .join(truth, Seq("doc_a", "doc_b"), "left")
-        .localCheckpoint(true) // feeds both stage aggregates
+        .transform(Residency.snap) // feeds both stage aggregates
       val nTruth = truth.agg(count(lit(1)).cast("long").as("n_truth"))
       def stage(name: String, df: DataFrame) =
         df.agg(count(lit(1)).cast("long").as("n_pairs"),
@@ -370,7 +369,7 @@ object Dedup {
     // MAINTAINED index bucketed on (band_id, band_hash) (st11's streaming
     // state is the exact-hash twin of it), so only the tiny batch side
     // shuffles; here both sides derive in-plan from the same signatures
-    // (localCheckpoint'd once, shared). Per batch doc: the best corpus
+    // (snapped once, shared). Per batch doc: the best corpus
     // match above the 0.5 estimated-Jaccard threshold, or a loud
     // no-match row — the roster left join keeps every batch doc in the
     // output so a downstream filter can't silently drop unmatched docs.
@@ -401,8 +400,7 @@ object Dedup {
       val docs = Tables(spark, dir).documents
       // signature build over the widened scan (see minhashPairs); the
       // roster read below keeps the narrow scan — it is one thin column
-      val sigs = signatures(shingleHashes(Tables(spark, dir).documentsWide))
-        .localCheckpoint(true)
+      val sigs = Residency.snap(signatures(shingleHashes(Tables(spark, dir).documentsWide)))
       val bands = sigs.select(
         col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(NumBands - 1)), b =>

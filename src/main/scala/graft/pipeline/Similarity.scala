@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -286,8 +286,7 @@ object Similarity {
   private def lshTopK(spark: SparkSession, dir: String, multiProbe: Boolean): DataFrame = {
     val e = Tables(spark, dir).embeddings
     val h = adaptiveBits(CorpusMeta.embeddingCount(spark, dir))
-    val bk = buckets(e, h, CorpusMeta.embeddingMeans(spark, dir))
-      .localCheckpoint(true) // 2 consumers; harness releases
+    val bk = Residency.snap(buckets(e, h, CorpusMeta.embeddingMeans(spark, dir))) // 2 consumers
     val qbBase = bk.filter(col("vec_id") < NumQueries).toDF("qid", "table_id", "bucket")
     val qb =
       if (!multiProbe) qbBase
@@ -678,7 +677,7 @@ object Similarity {
         .filter(col("lang") === "de").select(col("doc_id").as("nid"))
       val filtered = e.select(col("vec_id").as("nid"), col("embedding").as("ne"))
         .join(docs, "nid")
-        .localCheckpoint(true) // guard count + search scan share one build
+        .transform(Residency.snap) // guard count + search scan share one build
       ExactBaseline.guard(spark, filtered.count(), "ann10_filtered_topk",
         "the postfilter path (probe ann02/ann03 buckets, then apply the predicate)")
       val q = e.filter(col("vec_id") < NumQueries)
@@ -1007,10 +1006,9 @@ object Similarity {
     * takes rnk ≤ 10, ann08 shortlists rnk ≤ [[RerankShortlist]].
     */
   private def pqScores(spark: SparkSession, dir: String): DataFrame = {
-    val sub = pqSub(Tables(spark, dir).embeddings).localCheckpoint(true)
+    val sub = Residency.snap(pqSub(Tables(spark, dir).embeddings))
     // one Lloyd step: assign to seeds, recompute as double-avg → float
-    val cent1 = pqTrain(sub)
-      .localCheckpoint(true) // feeds the encode pass AND the query LUT
+    val cent1 = Residency.snap(pqTrain(sub)) // feeds the encode pass AND the query LUT
     val enc = pqAssign(sub, cent1).select(col("vec_id"), col("m"), col("cluster").as("code"))
     val lut = sub.filter(col("vec_id") < NumQueries)
       .join(broadcast(cent1), Seq("m"))
@@ -1117,12 +1115,12 @@ object Similarity {
     */
   private def ivfPqTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir).embeddings
-    val cent = labelCentroids(e).localCheckpoint(true) // residual pass + probing
+    val cent = Residency.snap(labelCentroids(e)) // residual pass + probing
     val resid = e.join(broadcast(cent), Seq("label"))
       .select(col("vec_id"), col("label"),
         zip_with(col("embedding"), col("centroid"), (a, b) => a - b).as("resid"))
-    val sub = pqSub(resid, "resid", Seq("label")).localCheckpoint(true)
-    val cent1 = pqTrain(sub).localCheckpoint(true) // encode pass + query LUTs
+    val sub = Residency.snap(pqSub(resid, "resid", Seq("label")))
+    val cent1 = Residency.snap(pqTrain(sub)) // encode pass + query LUTs
     val enc = pqAssign(sub, cent1, keep = Seq("label"))
       .select(col("vec_id"), col("label"), col("m"), col("cluster").as("code"))
     val q = e.filter(col("vec_id") < NumQueries)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,9 +75,8 @@ object SparseText {
       |w AS (SELECT doc_id, t.term, tf / df AS wt FROM terms t JOIN df ON t.term = df.term)""".stripMargin
 
   /** The Spark-side weight frame matching [[weightCtes]]: per-(doc, term)
-    * tf/df weight over 3-word shingle terms. Materialized once
-    * (localCheckpoint) because every consumer fans out over it several
-    * times; blocks are freed by the ContextCleaner when the frame drops.
+    * tf/df weight over 3-word shingle terms. Snapped once because every
+    * consumer fans out over it several times.
     */
   private[graft] def weights(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     val shingles = graft.functions.TextExpressions.wordShingles(col("text"))
@@ -87,7 +86,7 @@ object SparseText {
       .agg(count(lit(1)).cast("double").as("tf"))
     terms.join(terms.groupBy("term").agg(count(lit(1)).cast("double").as("df")), "term")
       .select(col("doc_id"), col("term"), (col("tf") / col("df")).as("wt"))
-      .localCheckpoint(true)
+      .transform(Residency.snap)
   }
 
   /** Conf key bounding ts02's label-propagation rounds (default 20). */
@@ -177,9 +176,8 @@ object SparseText {
     * Each round's frame references the previous one twice (neighbor-min +
     * outer join), so without plan truncation the logical plan doubles per
     * round and Catalyst analysis alone goes exponential — this, not the
-    * data, was the 225 s r1 cost. localCheckpoint(eager) replaces the plan
-    * with the materialized RDD each round (superseded block sets are freed
-    * by the ContextCleaner as the old frames become unreachable).
+    * data, was the 225 s r1 cost. A snap replaces the plan with the
+    * materialized rows each round.
     * Convergence is an aggregated max(changed) over the just-materialized
     * frame — metadata-scale, no second join job.
     *
@@ -199,18 +197,18 @@ object SparseText {
     // neighbors ≡ least(label, min over neighbors). The convergence probe
     // rides the SAME aggregate output (sum of labels strictly decreases
     // until fixpoint for min-propagation, so an unchanged checksum ⇔ no
-    // label changed), read from the just-materialized checkpoint — one
+    // label changed), read from the just-materialized snap — one
     // metadata-scale action instead of a second join job.
     val nodes = undirected.select(col("src").as("doc")).distinct()
     val withSelf = undirected
       .unionByName(nodes.select(col("doc").as("src"), col("doc").as("dst")))
-      .localCheckpoint(true)
+      .transform(Residency.snap)
     // decimal(38,0) checksum: a BIGINT sum could overflow at extreme
     // node-count × id-width products and ANSI mode would abort the query
     def labelSum(df: org.apache.spark.sql.DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head()
         .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    var labels = nodes.withColumn("label", col("doc")).localCheckpoint(true)
+    var labels = Residency.snap(nodes.withColumn("label", col("doc")))
     var prevSum = labelSum(labels)
     var converged = false
     var iter = 0
@@ -219,7 +217,7 @@ object SparseText {
         .join(labels.withColumnRenamed("doc", "src").withColumnRenamed("label", "src_label"), "src")
         .groupBy(col("dst").as("doc"))
         .agg(min("src_label").as("label"))
-        .localCheckpoint(true)
+        .transform(Residency.snap)
       val sumNow = labelSum(next)
       converged = sumNow.compareTo(prevSum) == 0
       prevSum = sumNow
@@ -287,10 +285,9 @@ object SparseText {
       // presentation ORDER BY — both component algorithms are
       // order-insensitive, and the union below is not a node EliminateSorts
       // removes a sort beneath, so the range-partition sort exchange was
-      // materialized into the checkpoint for nothing)
-      val edges = Dedup.nearDupEdges(spark, dir)
-        .localCheckpoint(true) // reused by count + (collect | every round);
-                               // snap the expensive dd02 shingle join once
+      // materialized into the snap for nothing). Reused by count +
+      // (collect | every round): snap the expensive dd02 shingle join once.
+      val edges = Residency.snap(Dedup.nearDupEdges(spark, dir))
       clusterMap(spark, edges)
     },
 

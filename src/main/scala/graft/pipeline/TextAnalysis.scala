@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Residency, Tables}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -170,17 +170,17 @@ object TextAnalysis {
         trim(regexp_replace(regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), " +", " ")).as("clean"))
       val f = n.withColumn("kept",
         graft.functions.TextExpressions.filterNotInSet(split(col("clean"), " "), stopEn))
-      // materialize the FINAL (small) projection before the global sort:
+      // snap the FINAL (small) projection before the global sort:
       // RangePartitioning's boundary-sampling job re-executes the child, so
       // an unmaterialized sort tail paid the whole regex map twice (SCALE.md
-      // §0c, sf3: 8.3 s map → 17.0 s with orderBy). The checkpoint stores the
+      // §0c, sf3: 8.3 s map → 17.0 s with orderBy). The snap stores the
       // ~100 B/doc output columns, not the text — the dc02
       // materialize-once-vs-recompute-twice trade, on the cheap side.
       f.select(col("doc_id"), col("lang"),
         length(col("clean")).cast("long").as("clean_chars"),
         size(col("kept")).cast("long").as("kept_words"),
         concat_ws(" ", slice(col("kept"), 1, 8)).as("preview"))
-        .localCheckpoint(true)
+        .transform(Residency.snap)
         .orderBy("doc_id")
     },
 
@@ -590,7 +590,7 @@ object TextAnalysis {
   /** Conf key for the small-vocab fast path (r16): a weighted vocabulary at
     * or below this many rows is collected and the merge rounds run on the
     * driver — the ts02 union-find pattern. The distributed loop costs 2
-    * dispatch-bound jobs per round (pair TakeOrdered + checkpoint) however
+    * dispatch-bound jobs per round (pair TakeOrdered + snap) however
     * small the vocab; the corpus vocab here is tens of rows. Bound chosen
     * for driver memory, not speed; 0 disables (A/B + equivalence-test
     * control).
@@ -658,7 +658,7 @@ object TextAnalysis {
       .groupBy("w").agg(count(lit(1)).as("c"))
       .filter(length(col("w")) >= 2)
       .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("sp"), col("c"))
-      .localCheckpoint(true) // vocab-sized; re-read every merge round
+      .transform(Residency.snap) // vocab-sized; re-read every merge round
     val maxLocal = spark.conf.get(BpeLocalMaxVocabKey, "2000000").toLong
     if (maxLocal > 0 && cur.count() <= maxLocal)
       return trainMergesLocal(
@@ -684,9 +684,8 @@ object TextAnalysis {
       charsetGuard(step, a, b)
       steps += ((step, a, b, a + b, best.getLong(2)))
       if (step < rounds)
-        cur = cur.select(
-          regexp_replace(col("sp"), s"\\b$a $b\\b", a + b).as("sp"), col("c"))
-          .localCheckpoint(true)
+        cur = Residency.snap(cur.select(
+          regexp_replace(col("sp"), s"\\b$a $b\\b", a + b).as("sp"), col("c")))
       }
     }
     steps.result()

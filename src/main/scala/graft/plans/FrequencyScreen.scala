@@ -58,11 +58,9 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 object FrequencyScreen {
 
   /** 2^31 2-bit lanes = 512 MB — sized so the sf10 pair mass (~1.3 B) runs
-    * at λ ≈ 0.6. Override (e.g. down, for executor-memory-constrained
-    * clusters) via SPARK_GRAFT_SCREEN_MAX_CELLS.
+    * at λ ≈ 0.6.
     */
-  val MaxCells: Long = sys.env.get("SPARK_GRAFT_SCREEN_MAX_CELLS")
-    .map(_.toLong).getOrElse(1L << 31)
+  val MaxCells: Long = 1L << 31
   val MinCells: Long = 1L << 20
   /** Loads above this saturate too many lanes to pay for the extra pass. */
   val MaxLoad = 1.5

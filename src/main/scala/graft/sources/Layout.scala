@@ -61,11 +61,10 @@ object Layout {
     * st19's warm 45.7 s vs 17.2 s against a 32-pin. State shards provision
     * by update throughput (input volume) UP TO the session's execution
     * slots; a cluster drive raises the cap automatically through
-    * SPARK_GRAFT_CPUS. `SPARK_GRAFT_STATE_PARTS` overrides for A/Bs.
+    * SPARK_GRAFT_CPUS.
     */
   def statePartitionsFor(dir: String, cpus: Int): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt).getOrElse(
-      math.min(cpus.toLong, math.max(1L, inputBytes(dir) / (8L << 20))).toInt)
+    math.min(cpus.toLong, math.max(1L, inputBytes(dir) / (8L << 20))).toInt
 
   /** Write events in the reference's events-table layout: monthly partitions,
     * sorted by (event_type, ts, user_id) within each, bloom filter on user_id.
