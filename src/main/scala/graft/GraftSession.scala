@@ -18,7 +18,7 @@ object GraftSession {
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       // Reducer count tracks data size: AQE starts every un-pinned shuffle
-      // at inputBytes/8 MB partitions (floor cpus, cap 1024) and coalesces
+      // at input bytes/8 MB partitions (floor cpus, cap 1024) and coalesces
       // back by measured bytes. Fixed core-count reducers made q17's
       // near-no-reduction pair aggregate spill 62 GB at sf3 (SCALE.md §0c.1).
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",

@@ -9,7 +9,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Catalog.all.map(d => d.name -> d.build).toMap
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    Catalog.all.flatMap(d => d.oracle.map(d.name -> _)).toMap
+    Catalog.all.map(d => d.name -> d.oracle).toMap
 }

@@ -14,17 +14,13 @@ import org.apache.spark.sql.functions._
   *     in `broadcast()` so fact-side shuffles never include dimension data.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  /** r15 (guide §1.2 "per-task work" / §7.3 driver latency): every bare
-    * `spark.read.parquet(path)` runs a 1-task footer-read JOB at DataFrame
-    * BUILD time to infer the schema — a stage timeline measured 3 such jobs plus
-    * their driver gaps ≈ 150 ms at the head of q15's 1.9 s wall
-    * (OPTIMIZATION_r15.md §1), paid again
-    * on every rebuild of every entry (the bench rebuilds each entry 3×).
-    * The testdata files are immutable for a process lifetime, so the schema
-    * is cached per path JVM-wide and handed to the reader explicitly —
-    * plans unchanged (schema identical), the inference job simply never
-    * runs again. NOT result caching: only the parquet footer's StructType
-    * is held (~KB per table).
+  /** A bare `spark.read.parquet(path)` runs a 1-task footer-read job at
+    * DataFrame build time to infer the schema, paid again on every rebuild
+    * of every entry (about 50 ms each, with its driver gap). The schema is
+    * held per path JVM-wide and handed to the reader explicitly: plans are
+    * unchanged and the inference job never runs again. Only the footer's
+    * StructType is held (~KB per table), never data. No supported flow
+    * rewrites a table's schema in place.
     */
   private def t(name: String): DataFrame =
     spark.read.schema(storedSchema(name)).parquet(s"$dir/$name.parquet")
@@ -33,17 +29,15 @@ final case class Tables(spark: SparkSession, dir: String) {
   def storedSchema(name: String): org.apache.spark.sql.types.StructType =
     Tables.metaCache.computeIfAbsent(s"$dir/$name.parquet", { p =>
       val st = spark.read.parquet(p).schema
-      val rowGroups = Tables.rowGroupCount(spark, p)
-      val bytes = try new java.io.File(p).length() catch { case _: Throwable => 0L }
-      Tables.TableMeta(st, rowGroups, bytes)
+      Tables.TableMeta(st, Tables.rowGroupCount(spark, p))
     }).schema
 
-  /** r15 (guide §2.5 "one huge unsplittable file"): parquet scans split at
-    * ROW-GROUP granularity, and every sf0.1 testdata file is a single row
-    * group — so every map-side stage over these tables runs on ONE task
-    * regardless of core count (OPTIMIZATION_r15.md §2: pp03's redact+gate stage,
-    * 2.83 s wall / 2.82 s cpu, 1 task on a 32-core session; a snap
-    * then pins the 1-partition layout for the rest of the chain). For a
+  /** Parquet scans split at ROW-GROUP granularity, and every sf0.1 testdata
+    * file is a single row group — so every map-side stage over these tables
+    * runs on ONE task regardless of core count (OPTIMIZATION_r15.md §2:
+    * pp03's redact+gate stage, 2.83 s wall / 2.82 s cpu, 1 task on a 32-core
+    * session; a snap then pins the 1-partition layout for the rest of the
+    * chain). For a
     * KERNEL-HEAVY MAP consumer (regex scrubbing, shingle/signature builds,
     * per-pair vector kernels) a hash repartition to the session parallelism
     * restores the lost cores for one small exchange.
@@ -98,9 +92,6 @@ final case class Tables(spark: SparkSession, dir: String) {
     * queries). Joined in via broadcast cross-join so it stays in-plan.
     */
   def eventAnchor: DataFrame = events.agg(max(col("ts")).as("anchor_ts"))
-
-  /** Same for orders ( `max(o_orderdate)` ). */
-  def orderAnchor: DataFrame = orders.agg(max(col("o_orderdate")).as("anchor_dt"))
 }
 
 object Tables {
@@ -125,8 +116,7 @@ object Tables {
     case _ => df
   }
 
-  final case class TableMeta(schema: org.apache.spark.sql.types.StructType,
-      rowGroups: Int, bytes: Long)
+  final case class TableMeta(schema: org.apache.spark.sql.types.StructType, rowGroups: Int)
 
   /** Parquet footer metadata (schema + row-group count) by absolute path —
     * see [[Tables.t]]. Metadata only, never data.

@@ -1,64 +1,40 @@
 package graft.pipeline
 
 import graft.Tables
+import graft.sources.Listing
 import org.apache.spark.sql.SparkSession
 
-/** Session-lifetime cache for metadata-scale corpus aggregates that several
-  * catalog entries recompute identically: the embeddings row count (adaptive
-  * LSH width, exact-baseline guards) and the 64-double per-dimension mean
-  * (hyperplane centering). r6 measured these driver-side jobs as most of
-  * dd06's 0.87 → 1.67 s sf0.1 regression — dd06, ann02, and ann04 each ran
-  * both from scratch.
+/** Metadata-scale corpus aggregates that several catalog entries would
+  * otherwise recompute identically: the embeddings row count (adaptive LSH
+  * width, exact-baseline guards), the 64-double per-dimension mean
+  * (hyperplane centering) and the benchmark slice's distinct shingle count.
   *
-  * Keys carry a parquet fingerprint (every file's mtime+length under the
-  * table path), so a rewritten corpus — including the same dir re-generated
-  * at another scale — misses the cache instead of serving stale metadata.
-  * Values are plain JVM scalars (a Long and 64 doubles), not Spark state, so
-  * the cache survives `Residency.release` and holds no executor resources.
+  * Each is held per (table, tag) while the table's files are unchanged
+  * ([[Listing.Memo]]), so a rewritten corpus, including the same dir
+  * re-generated at another scale, is counted again. Values are plain JVM
+  * scalars, not Spark state, so they survive `Residency.release` and hold no
+  * executor resources.
   */
 object CorpusMeta {
 
-  private val counts = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private val means = scala.collection.concurrent.TrieMap.empty[String, Array[Double]]
-  private val benchShingles = scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val held = new Listing.Memo[Any]
 
-  private def fingerprint(f: java.io.File): Long = {
-    val children = f.listFiles()
-    if (children == null) f.lastModified() ^ (f.length() * 1000003L)
-    else children.foldLeft(f.lastModified()) { (acc, c) =>
-      acc * 31L + fingerprint(c)
-    }
-  }
+  private def memo[T](dir: String, table: String, tag: String)(compute: => T): T =
+    held(s"$dir/$table.parquet", tag)(compute).asInstanceOf[T]
 
-  private def key(dir: String, table: String = "embeddings"): String = {
-    val f = new java.io.File(s"$dir/$table.parquet")
-    s"${f.getCanonicalPath}:${fingerprint(f)}"
-  }
-
-  /** COUNT(*) of the embeddings table, cached per (path, fingerprint). */
+  /** COUNT(*) of the embeddings table. */
   def embeddingCount(spark: SparkSession, dir: String): Long =
-    counts.getOrElseUpdate(key(dir), Tables(spark, dir).embeddings.count())
+    memo(dir, "embeddings", "count")(Tables(spark, dir).embeddings.count())
 
-  /** Per-dimension mean of the embeddings table, cached likewise. */
+  /** Per-dimension mean of the embeddings table. */
   def embeddingMeans(spark: SparkSession, dir: String): Array[Double] =
-    means.getOrElseUpdate(key(dir), Similarity.dimMeans(Tables(spark, dir).embeddings))
+    memo(dir, "embeddings", "means")(Similarity.dimMeans(Tables(spark, dir).embeddings))
 
-  /** Distinct benchmark-slice shingle count (dc02's Bloom sizing input),
-    * cached per (documents path, fingerprint). The count runs only over the
-    * benchmark slice — small by construction — and exists so the filter's
-    * bit budget tracks the eval suite's actual size instead of a constant
-    * that a 100× suite would silently saturate.
+  /** Distinct benchmark-slice shingle count (dc02's Bloom sizing input). The
+    * count runs only over the benchmark slice, small by construction, so the
+    * filter's bit budget tracks the eval suite's actual size instead of a
+    * constant that a 100× suite would silently saturate.
     */
   def benchShingleCount(spark: SparkSession, dir: String)(count: => Long): Long =
-    benchShingles.getOrElseUpdate(key(dir, "documents"), count)
-
-  private val scalars = scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  /** Generic memoized Long-valued metadata aggregate, keyed by
-    * (tag, table path, parquet fingerprint). Same lifetime/fingerprint rules
-    * as the dedicated caches above; `tag` namespaces independent aggregates
-    * over the same table (e.g. q17's pair-mass estimate over lineitem).
-    */
-  def tableScalar(dir: String, table: String, tag: String)(compute: => Long): Long =
-    scalars.getOrElseUpdate(s"$tag:${key(dir, table)}", compute)
+    memo(dir, "documents", "bench_shingles")(count)
 }

@@ -26,17 +26,6 @@ object Decontam {
   private def shingles(text: Column): Column =
     array_distinct(graft.functions.TextExpressions.wordShingles(text))
 
-  /** On-disk (compressed) size of the documents table — file or directory of
-    * parts. Input to dc02's snap-residency gate; metadata-scale.
-    */
-  private def docsFileBytes(dir: String): Long = {
-    def len(f: java.io.File): Long = {
-      val children = f.listFiles()
-      if (children == null) f.length() else children.map(len).sum
-    }
-    len(new java.io.File(s"$dir/documents.parquet"))
-  }
-
   /** dc02's shingle builder, exposed for st17's streaming twin. */
   private[graft] def docShingles(text: Column): Column = shingles(text)
 
@@ -88,10 +77,9 @@ object Decontam {
     * a mergeable Bloom filter over the benchmark shingles (fixed few-MB blob
     * however large the suite text — [[graft.functions.BloomBuildAgg]]),
     * collects the one-row blob driver-side and embeds it as a LITERAL in the
-    * probe expression (the crossJoin-a-one-row-frame column form was
-    * abandoned after the r7 sf3 drive: codegen re-copies a column-borne blob
-    * per probe row — see the comment at the probe site), and drops
-    * non-overlapping shingles map-side inside codegen. Only bloom survivors
+    * probe expression (not a crossJoin-ed one-row-frame column: codegen
+    * re-copies a column-borne blob per probe row — see the comment at the
+    * probe site), and drops non-overlapping shingles map-side inside codegen. Only bloom survivors
     * — true overlap plus ~2e-4 false positives — reach the exact-confirm
     * join, so the join input is bounded by overlap mass, not corpus size,
     * and AQE is left to pick the confirm strategy (broadcast here; at a
@@ -134,7 +122,7 @@ object Decontam {
     // scans instead of an executor-storage cliff. Every driven scale
     // (sf0.1/sf1/sf3/sf10 ≈ tens of MB compressed) keeps the snap; the
     // gate exists for the corpus that wouldn't.
-    val estResidency = docsFileBytes(dir) * 32L
+    val estResidency = graft.sources.Listing.bytes(s"$dir/documents.parquet") * 32L
     val shCMat =
       if (estResidency <= Runtime.getRuntime.maxMemory / 4) Residency.snap(shC)
       else shC
@@ -148,7 +136,7 @@ object Decontam {
     // 2.83 M pairs). A literal is one object reference in the generated
     // class. Driver-side collect of one few-MB blob is the same
     // metadata-scale boundary as dd06's 64-double mean vector.
-    // Render cost of the literal (ADVICE r7): Literal.toString hex-encodes
+    // Render cost of the literal: Literal.toString hex-encodes
     // binary, so every plan render (explain, the CatalogSpec plan audit's
     // executedPlan string, UI/event-log plan strings) builds a ~2×-blob-size
     // string.

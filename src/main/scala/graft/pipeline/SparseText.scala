@@ -89,35 +89,29 @@ object SparseText {
       .transform(Residency.snap)
   }
 
-  /** Conf key bounding ts02's label-propagation rounds (default 20). */
-  val LabelPropMaxItersKey = "graft.labelProp.maxIters"
+  /** Rounds ts02's label propagation may take before it refuses. */
+  private val LabelPropMaxIters = 20
 
-  /** Conf key for the small-graph fast path (r16): an edge set at or below
-    * this many pairs is collected and resolved by exact union-find on the
-    * driver instead of the distributed fixpoint. Bound chosen for driver
-    * memory — 2 M pairs × 16 B ≈ 32 MB plus hash-map overhead — NOT for
-    * speed: the distributed path stays the default above it. 0 disables the
-    * local path (A/B control).
+  /** The small-graph fast path: an edge set at or below this many pairs is
+    * collected and resolved by exact union-find on the driver instead of the
+    * distributed fixpoint. Bound chosen for driver memory — 2 M pairs × 16 B
+    * ≈ 32 MB plus hash-map overhead — not for speed: the distributed path
+    * stays the default above it.
     */
-  val LabelPropLocalMaxEdgesKey = "graft.labelProp.localMaxEdges"
-  private val LabelPropLocalMaxEdgesDefault = 2000000L
+  private val LabelPropLocalMaxEdges = 2000000L
 
   /** (doc_id, cluster_id = min member) for every node of the (doc_a, doc_b)
     * edge set, sorted by doc_id: driver union-find up to
-    * [[LabelPropLocalMaxEdgesKey]] edges, the distributed fixpoint above it.
+    * [[LabelPropLocalMaxEdges]] edges, [[clusterMapDistributed]] above it.
     * `edges` is read twice (count, then collect or every round), so callers
     * pass a materialized frame.
     */
-  private[pipeline] def clusterMap(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val maxLocal = spark.conf.get(LabelPropLocalMaxEdgesKey,
-      LabelPropLocalMaxEdgesDefault.toString).toLong
+  private[pipeline] def clusterMap(spark: SparkSession, edges: DataFrame): DataFrame =
     // metadata job over the materialized blocks, not a recompute
-    val nEdges = edges.count()
-    if (maxLocal > 0 && nEdges <= maxLocal) {
-      // Small-graph fast path: exact union-find on the collected edge
-      // list (bounded by maxLocal — see the key's doc). Same components,
-      // same (doc_id, min-member) rows; the result is driver-local, so
-      // downstream joins (dd07/dd11/sp01/sp02/pp03) broadcast it for free.
+    if (edges.count() <= LabelPropLocalMaxEdges) {
+      // Same components, same (doc_id, min-member) rows; the result is
+      // driver-local, so downstream joins (dd07/dd11/sp01/sp02/pp03)
+      // broadcast it for free.
       val comp = localComponents(
         edges.collect().map(r => (r.getLong(0), r.getLong(1))))
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -130,15 +124,16 @@ object SparseText {
         spark.sparkContext.parallelize(
           comp.map(p => org.apache.spark.sql.Row(p._1, p._2)), 1),
         schema)
-    } else {
-      val undirected = edges
-        .unionByName(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-        .toDF("src", "dst")
-      val maxIters = spark.conf.get(LabelPropMaxItersKey, "20").toInt
-      propagateMinLabels(undirected, maxIters)
-        .select(col("doc").as("doc_id"), col("label").cast("long").as("cluster_id"))
-        .orderBy("doc_id")
-    }
+    } else clusterMapDistributed(edges)
+
+  /** [[clusterMap]] by the distributed fixpoint, whatever the edge count. */
+  private[pipeline] def clusterMapDistributed(edges: DataFrame): DataFrame = {
+    val undirected = edges
+      .unionByName(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      .toDF("src", "dst")
+    propagateMinLabels(undirected, LabelPropMaxIters)
+      .select(col("doc").as("doc_id"), col("label").cast("long").as("cluster_id"))
+      .orderBy("doc_id")
   }
 
   /** Exact connected components of an edge list by union-find with path
@@ -175,24 +170,24 @@ object SparseText {
     *
     * Each round's frame references the previous one twice (neighbor-min +
     * outer join), so without plan truncation the logical plan doubles per
-    * round and Catalyst analysis alone goes exponential — this, not the
-    * data, was the 225 s r1 cost. A snap replaces the plan with the
+    * round and Catalyst analysis alone goes exponential (225 s of analysis,
+    * not data, in an untruncated run). A snap replaces the plan with the
     * materialized rows each round.
     * Convergence is an aggregated max(changed) over the just-materialized
     * frame — metadata-scale, no second join job.
     *
-    * THROWS on cap exit (r7 verdict item 6): an unconverged labeling is not
-    * a fixpoint — shipping it silently would feed non-canonical cluster ids
+    * THROWS on cap exit: an unconverged labeling is not a fixpoint —
+    * shipping it silently would feed non-canonical cluster ids
     * into dd07's survivor selection. Convergence needs rounds ≥ the largest
-    * cluster's min-label eccentricity, so a legitimately deep graph raises
-    * [[LabelPropMaxItersKey]] explicitly rather than truncating silently —
+    * cluster's min-label eccentricity, so a legitimately deep graph needs a
+    * higher [[LabelPropMaxIters]] rather than a silent truncation —
     * the same refuse-loudly contract as the dd05/ann01 exact-baseline guard.
     */
   private[graft] def propagateMinLabels(
       undirected: org.apache.spark.sql.DataFrame, maxIters: Int): org.apache.spark.sql.DataFrame = {
-    // r15 (per-round cost, OPTIMIZATION_r15.md §3: 2 rounds × ~0.3–0.6 s on a 512-row
-    // graph — fixed job latency, not data): the neighbor-min and the keep-
-    // own-label leg fold into ONE join + ONE aggregate per round by adding
+    // Per-round cost is fixed job latency, not data (2 rounds × ~0.3–0.6 s
+    // on a 512-row graph, OPTIMIZATION_r15.md §3), so the neighbor-min and
+    // the keep-own-label leg fold into ONE join + ONE aggregate per round by adding
     // self-loops to the edge frame once up front — min over {self} ∪
     // neighbors ≡ least(label, min over neighbors). The convergence probe
     // rides the SAME aggregate output (sum of labels strictly decreases
@@ -226,9 +221,9 @@ object SparseText {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"label propagation exited UNCONVERGED at the $maxIters-round cap " +
-          s"($LabelPropMaxItersKey): cluster labels are not a fixpoint and must " +
-          "not feed downstream survivor selection (dd07). Raise the cap for a " +
+        s"label propagation exited UNCONVERGED at the $maxIters-round cap: " +
+          "cluster labels are not a fixpoint and must not feed downstream " +
+          "survivor selection (dd07). Raise the cap for a " +
           "legitimately deep cluster graph; rounds must cover the largest " +
           "cluster's min-label propagation distance.")
     labels

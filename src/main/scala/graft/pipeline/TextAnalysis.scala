@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, Residency, Tables}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,8 +19,8 @@ object TextAnalysis {
   private val stopZh = Seq("de5", "shi4", "le5", "zai4", "wo3", "you3", "he2")
 
   // Occurrence count per stopword list: a codegen'd set-membership loop
-  // (graft.functions.ArrayCountInSet). The r1 formulation
-  // size(filter(words, w -> array_contains(list, w))) evaluated the lambda
+  // (graft.functions.ArrayCountInSet). The formulation
+  // size(filter(words, w -> array_contains(list, w))) evaluates the lambda
   // interpreted per row × 5 lists — 25.8 s at sf0.1; the kernel is map-speed
   // and keeps identical occurrence semantics (array_intersect would dedup).
   private def hits(words: Column, list: Seq[String]): Column =
@@ -309,8 +309,8 @@ object TextAnalysis {
         |FROM f ORDER BY doc_id""".stripMargin,
     ) { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
-      // Codegen'd rolling-hash kernel (StringPolyHash) — the r1 interpreted
-      // aggregate-HOF over a per-character split was 5 s at sf0.1 for a
+      // Codegen'd rolling-hash kernel (StringPolyHash) — an interpreted
+      // aggregate-HOF over a per-character split is 5 s at sf0.1 for a
       // map-side op; the kernel folds the UTF-16 units directly.
       Tables(spark, dir).documents
         .select(col("doc_id"),
@@ -514,7 +514,7 @@ object TextAnalysis {
     * catalog pins a small default so the oracle CTE chain (unrolled once per
     * round) stays readable and the entries' hashes stable across rounds.
     * [[bp02TrainCtes]]/[[trainMerges]] take the count as a parameter — the
-    * operator itself is round-count-generic (r8 verdict item 7).
+    * operator itself is round-count-generic.
     */
   // `final` without a type ascription = compile-time constant, inlined at
   // use sites — immune to the declared-after-`defs` init-order zero read
@@ -576,26 +576,13 @@ object TextAnalysis {
            |      (SELECT a FROM b$i) || (SELECT b FROM b$i), 'g')""".stripMargin
     }
 
-  /** bp02's merge loop, shared with bp03's apply pass: `rounds` rounds of
-    * (pair-count over the frequency-weighted vocab → argmax → merge).
-    * Returns (step, left, right, merged, count) per round; the per-round
-    * argmax is a 1-row driver collect (the k-means-convergence class).
-    *
-    * Learned tokens are interpolated into regex patterns on BOTH engines
-    * (`\ba b\b` here, the `'\b' || a || ...` CTEs in the oracle), which is
-    * only exact while tokens are word characters with no regex
-    * metacharacters — so a winning pair outside [a-z]+ fails LOUDLY here
-    * instead of silently mis-merging (ADVICE r8).
+  /** The small-vocab fast path: a weighted vocabulary at or below this many
+    * rows is collected and the merge rounds run on the driver — the ts02
+    * union-find pattern. The distributed loop costs 2 dispatch-bound jobs
+    * per round (pair TakeOrdered + snap) however small the vocab; the corpus
+    * vocab here is tens of rows. Bound chosen for driver memory, not speed.
     */
-  /** Conf key for the small-vocab fast path (r16): a weighted vocabulary at
-    * or below this many rows is collected and the merge rounds run on the
-    * driver — the ts02 union-find pattern. The distributed loop costs 2
-    * dispatch-bound jobs per round (pair TakeOrdered + snap) however
-    * small the vocab; the corpus vocab here is tens of rows. Bound chosen
-    * for driver memory, not speed; 0 disables (A/B + equivalence-test
-    * control).
-    */
-  private[pipeline] val BpeLocalMaxVocabKey = "graft.bpe.localMaxVocab"
+  private val BpeLocalMaxVocab = 2000000L
 
   /** The distributed loop's argmax, `orderBy(desc("cnt"), asc("a"),
     * asc("b"))`, on the driver. Spark orders strings by their UTF-8 bytes;
@@ -615,8 +602,8 @@ object TextAnalysis {
     * java.util.regex replacement both engines use. Pinned equal to the
     * distributed loop in ScrubSpec.
     */
-  private def trainMergesLocal(vocab: Array[(String, Long)], rounds: Int,
-      guard: (Int, String, String) => Unit): Seq[(Int, String, String, String, Long)] = {
+  private def trainMergesLocal(vocab: Array[(String, Long)], rounds: Int)
+      : Seq[(Int, String, String, String, Long)] = {
     var cur = vocab
     val steps = Seq.newBuilder[(Int, String, String, String, Long)]
     var exhausted = false
@@ -634,7 +621,7 @@ object TextAnalysis {
       if (cnt.isEmpty) exhausted = true
       else {
         val ((a, b), c) = bestPair(cnt)
-        guard(step, a, b)
+        charsetGuard(step, a, b)
         steps += ((step, a, b, a + b, c))
         if (step < rounds)
           cur = cur.map { case (sp, w) =>
@@ -645,24 +632,45 @@ object TextAnalysis {
     steps.result()
   }
 
-  private def trainMerges(spark: org.apache.spark.sql.SparkSession, dir: String,
-      rounds: Int = DefaultMergeRounds): Seq[(Int, String, String, String, Long)] = {
-    def charsetGuard(step: Int, a: String, b: String): Unit =
-      for (t <- Seq(a, b))
-        require(t.matches("[a-z]+"),
-          s"BPE merge round $step won a pair outside [a-z]+ ('$a','$b'): regex-interpolated " +
-            "merges are only exact for plain lowercase tokens — extend the charset contract " +
-            "(and escape the interpolation on both engines) before training on this corpus")
-    var cur = Tables(spark, dir).documents
+  private def charsetGuard(step: Int, a: String, b: String): Unit =
+    for (t <- Seq(a, b))
+      require(t.matches("[a-z]+"),
+        s"BPE merge round $step won a pair outside [a-z]+ ('$a','$b'): regex-interpolated " +
+          "merges are only exact for plain lowercase tokens — extend the charset contract " +
+          "(and escape the interpolation on both engines) before training on this corpus")
+
+  /** The frequency-weighted vocab (spaced word, count) the merge loop reads. */
+  private def vocab(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).documents
       .select(explode(split(col("text"), " ")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
       .filter(length(col("w")) >= 2)
       .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("sp"), col("c"))
       .transform(Residency.snap) // vocab-sized; re-read every merge round
-    val maxLocal = spark.conf.get(BpeLocalMaxVocabKey, "2000000").toLong
-    if (maxLocal > 0 && cur.count() <= maxLocal)
-      return trainMergesLocal(
-        cur.collect().map(r => (r.getString(0), r.getLong(1))), rounds, charsetGuard)
+
+  /** bp02's merge loop, shared with bp03's apply pass: `rounds` rounds of
+    * (pair-count over the frequency-weighted vocab → argmax → merge).
+    * Returns (step, left, right, merged, count) per round; the per-round
+    * argmax is a 1-row driver collect (the k-means-convergence class).
+    *
+    * Learned tokens are interpolated into regex patterns on BOTH engines
+    * (`\ba b\b` here, the `'\b' || a || ...` CTEs in the oracle), which is
+    * only exact while tokens are word characters with no regex
+    * metacharacters — so a winning pair outside [a-z]+ fails LOUDLY here
+    * instead of silently mis-merging.
+    */
+  private def trainMerges(spark: org.apache.spark.sql.SparkSession, dir: String,
+      rounds: Int = DefaultMergeRounds): Seq[(Int, String, String, String, Long)] = {
+    val v = vocab(spark, dir)
+    if (v.count() <= BpeLocalMaxVocab)
+      trainMergesLocal(v.collect().map(r => (r.getString(0), r.getLong(1))), rounds)
+    else trainMergesDistributed(v, rounds)
+  }
+
+  /** The merge loop as Spark jobs, one pair count and one snap per round. */
+  private def trainMergesDistributed(vocab: DataFrame, rounds: Int)
+      : Seq[(Int, String, String, String, Long)] = {
+    var cur = vocab
     val steps = Seq.newBuilder[(Int, String, String, String, Long)]
     var exhausted = false
     for (step <- 1 to rounds if !exhausted) {
@@ -678,14 +686,14 @@ object TextAnalysis {
       // BPE stops here (fewer steps than asked; the pinned catalog default
       // never hits this on the corpus — the oracle CTE chain assumes it)
       else {
-      val best = top.head
-      val a: String = best.getString(0)
-      val b: String = best.getString(1)
-      charsetGuard(step, a, b)
-      steps += ((step, a, b, a + b, best.getLong(2)))
-      if (step < rounds)
-        cur = Residency.snap(cur.select(
-          regexp_replace(col("sp"), s"\\b$a $b\\b", a + b).as("sp"), col("c")))
+        val best = top.head
+        val a: String = best.getString(0)
+        val b: String = best.getString(1)
+        charsetGuard(step, a, b)
+        steps += ((step, a, b, a + b, best.getLong(2)))
+        if (step < rounds)
+          cur = Residency.snap(cur.select(
+            regexp_replace(col("sp"), s"\\b$a $b\\b", a + b).as("sp"), col("c")))
       }
     }
     steps.result()
@@ -695,4 +703,11 @@ object TextAnalysis {
   private[pipeline] def trainMergesAt(spark: org.apache.spark.sql.SparkSession,
       dir: String, rounds: Int): Seq[(Int, String, String, String, Long)] =
     trainMerges(spark, dir, rounds)
+
+  /** Test seam: [[trainMergesAt]] by the distributed loop, whatever the
+    * vocab size.
+    */
+  private[pipeline] def trainMergesDistributedAt(spark: org.apache.spark.sql.SparkSession,
+      dir: String, rounds: Int): Seq[(Int, String, String, String, Long)] =
+    trainMergesDistributed(vocab(spark, dir), rounds)
 }

@@ -4,6 +4,7 @@ import scala.annotation.tailrec
 import scala.collection.concurrent.TrieMap
 
 import graft.Tables
+import graft.sources.Listing
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Count, Sum}
@@ -35,7 +36,7 @@ import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
   *
   * Conservative-by-construction: the rewrite only fires when
   *   - the aggregate's child strips (one walker: Projects inlined, Filter
-  *     conjuncts collected) to a registered base relation, the
+  *     conjuncts collected) to a base relation with a fresh cascade, the
   *     events ⋈ customer ⋈ nation join, or the gap-session aggregate —
   *     any other core declines, and so does a filter the MV cannot answer;
   *   - every grouping expression matches a canonical key form extracted from
@@ -47,58 +48,12 @@ import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
   */
 object MvRouting {
 
-  private def norm(dir: String): String =
-    java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-
-  /** Registration carries a freshness fingerprint (size + mtime of each base
-    * table file at cascade time): routing must serve the MV only while the
-    * MV provably reflects the base table — if the base file has changed
-    * since the cascade ran, the rewrite silently declines rather than
-    * returning stale aggregates (re-running the cascade re-registers).
+  /** The cascade root for `dir` while the files under `dir` are those the
+    * cascade ran over ([[graft.streaming.MvCascade.freshRoot]]): routing
+    * serves an MV only while it provably reflects the base tables, and
+    * declines rather than return stale aggregates once any file changes.
     */
-  private final case class Registration(root: String, fingerprints: Map[String, (Long, Long)])
-
-  // base data dir -> cascade root + base-table fingerprints
-  private val roots = TrieMap[String, Registration]()
-
-  private def fingerprint(dir: String, table: String): Option[(Long, Long)] = {
-    val p = java.nio.file.Paths.get(dir, s"$table.parquet")
-    if (java.nio.file.Files.exists(p))
-      Some((java.nio.file.Files.size(p),
-        java.nio.file.Files.getLastModifiedTime(p).toMillis))
-    else None
-  }
-
-  private val fingerprintTables = Seq("events", "lineitem", "customer", "nation")
-
-  /** Snapshot the base-table fingerprints — taken by MvCascade BEFORE the
-    * cascade starts reading, so a base overwrite landing mid-cascade is
-    * caught at registration time instead of being fingerprinted as fresh.
-    */
-  def fingerprintNow(dir: String): Map[String, (Long, Long)] =
-    fingerprintTables.flatMap(t => fingerprint(dir, t).map(t -> _)).toMap
-
-  /** Called by MvCascade once a cascade run has completed for `dir`.
-    * `pre` is the fingerprint snapshot taken before the cascade started; if
-    * any base file changed while the cascade ran, the MVs reflect an unknown
-    * mix of old and new data — registration is declined (and any stale prior
-    * registration for the dir is dropped).
-    */
-  def register(dir: String, root: String, pre: Map[String, (Long, Long)]): Unit = {
-    val now = fingerprintNow(dir)
-    if (now == pre) roots.put(norm(dir), Registration(root, pre))
-    else roots.remove(norm(dir))
-  }
-
-  def rootFor(dir: String): Option[String] = roots.get(norm(dir)).map(_.root)
-
-  /** The cascade root, only while `table` (and, for the join MV, its
-    * dimension inputs) are bit-unchanged since registration.
-    */
-  def freshRootFor(dir: String, tables: Seq[String]): Option[String] =
-    roots.get(norm(dir)).filter { reg =>
-      tables.forall(t => reg.fingerprints.get(t).exists(fp => fingerprint(dir, t).contains(fp)))
-    }.map(_.root)
+  def rootFor(dir: String): Option[String] = graft.streaming.MvCascade.freshRoot(dir)
 
   /** Replan `df` with MV routing (scoped — same contract as
     * [[TopKPerGroup.withAutoRewrite]]): the optimized plan is rewritten once,
@@ -219,7 +174,7 @@ object MvRouting {
     * compares like with like (no hand-modeled Cast/timezone/fold shapes).
     */
   private[plans] def canonFor(spark: SparkSession, dir: String, table: String): Option[Canon] =
-    canonCache.get((norm(dir), table)).orElse {
+    canonCache.get((Listing.norm(dir), table)).orElse {
       building.set(true)
       try buildCanon(spark, dir, table)
       finally building.set(false)
@@ -243,7 +198,7 @@ object MvRouting {
   private val sessionCanonCache = TrieMap[String, LogicalPlan]()
 
   private[plans] def sessionCanonFor(spark: SparkSession, dir: String): LogicalPlan =
-    sessionCanonCache.getOrElseUpdate(norm(dir), {
+    sessionCanonCache.getOrElseUpdate(Listing.norm(dir), {
       building.set(true)
       try Tables(spark, dir).events
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
@@ -294,7 +249,7 @@ object MvRouting {
             Map("_kp" -> KPart, "_kf" -> KFlag))
         case _ => None
       }
-      built.foreach(c => canonCache.put((norm(dir), table), c))
+      built.foreach(c => canonCache.put((Listing.norm(dir), table), c))
       built
     }
 
@@ -381,7 +336,7 @@ object MvRouting {
   import graft.QueryDef
 
   private def routed(spark: SparkSession, dir: String)(df: => DataFrame): DataFrame = {
-    graft.streaming.MvCascade.run(spark, dir) // ensure the MVs exist + registry
+    graft.streaming.MvCascade.run(spark, dir) // MVs fresh for the current files
     route(df)
   }
 
@@ -603,7 +558,7 @@ object MvRouting {
 }
 
 /** The rule proper. Installable session-wide (post-optimizer injection) or
-  * scoped via [[MvRouting.route]]. No-op until a cascade registers a root.
+  * scoped via [[MvRouting.route]]. No-op until a cascade has run over the current files.
   */
 case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import MvRouting._
@@ -677,7 +632,7 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (MvRouting.isBuilding) return None
     val (core, subst, conds) = strip(agg.child)
 
-    // the core must BE the canonical session aggregate over a registered
+    // the core must BE the canonical session aggregate over a freshly cascaded
     // events table (sameResult declines pruned/reordered variants — safe)
     val evDir = core.collect { case r: LogicalRelation => r } match {
       case Seq(rel) => tableOf(rel).collect { case (dir, "events") => dir }
@@ -688,8 +643,8 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // with target/testdata/sf3) never equals the canon's absolute one even
     // though location.rootPaths (always absolute) are identical. Compare
     // modulo the options map; the FileIndex equality still pins the files.
-    // Found by the r7 sf3 oracle drive: the decline fell pr08 back to the
-    // batch plan, whose pushed-down session filter changed boundary rows.
+    // A decline here falls pr08 back to the batch plan, whose pushed-down
+    // session filter changes boundary rows (seen at sf3).
     def dropPathOpts(p: LogicalPlan): LogicalPlan = p.transformUp {
       case lr: LogicalRelation =>
         lr.relation match {
@@ -702,7 +657,7 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
       if (!dropPathOpts(core).sameResult(dropPathOpts(MvRouting.sessionCanonFor(spark, dir))))
         return None
       if (core.output.length != 4) return None
-      MvRouting.freshRootFor(dir, Seq("events")).flatMap { root =>
+      MvRouting.rootFor(dir).flatMap { root =>
         val Seq(sw, uid, cnt, vd) = core.output
         val (scan, mvAttr) = mvScan(root, "mv_sessions")
         val (sessionDate, sessionStart, sessionEnd) =
@@ -772,8 +727,7 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
                   relOf(lc2, "customer").map(c => (e, c))))
               evCust.flatMap { case ((evRel, evDir), (custRel, custDir)) =>
                 if (evDir != natDir || evDir != custDir) return None
-                // the join MV depends on the dimension tables too
-                MvRouting.freshRootFor(evDir, Seq("events", "customer", "nation")).flatMap { root =>
+                MvRouting.rootFor(evDir).flatMap { root =>
                   canonFor(spark, evDir, "events").flatMap { canonRaw =>
                     val subst = s0 ++ ls ++ rs ++ ls2 ++ rs2
                     val sub = inline(subst) _
@@ -849,13 +803,13 @@ case class MvRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  /** (dir, table, cascadeRoot) when `rel` scans a registered, still-fresh
-    * base table.
+  /** (dir, table, cascadeRoot) when `rel` scans events or lineitem and the
+    * cascade over its dir is fresh.
     */
   private def baseTableOf(rel: LogicalRelation): Option[(String, String, String)] =
     tableOf(rel).flatMap { case (parent, table) =>
       if (table == "events" || table == "lineitem")
-        MvRouting.freshRootFor(parent, Seq(table)).map(root => (parent, table, root))
+        MvRouting.rootFor(parent).map(root => (parent, table, root))
       else None
     }
 

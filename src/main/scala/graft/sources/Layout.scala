@@ -25,26 +25,19 @@ import scala.jdk.CollectionConverters._
 object Layout {
 
   /** AQE initial shuffle-partition count for a testdata dir: one reducer
-    * per 8 MB of input (the same granule as files.maxPartitionBytes),
-    * floored at the core count and capped at 1024. At sf0.1 (~110 MB) this
+    * per 8 MB of input ([[Listing.bytes]]; the same granule as
+    * files.maxPartitionBytes), floored at the core count and capped at
+    * 1024. At sf0.1 (~110 MB) this
     * is just `cpus` — identical plans to a fixed setting; at sf1/sf3/sf10
     * the big near-no-reduction shuffles (q17's pair count) get reducers
     * proportional to data so per-reducer hash state stays bounded, and AQE
     * coalesces the small shuffles back down. See [[graft.GraftSession]].
     */
-  /** Total bytes under a data directory — the scale signal the AQE reducer
-    * sizing and the q17 screen gate derive from (r15).
-    */
-  def inputBytes(dir: String): Long =
-    try Files.walk(Paths.get(dir)).iterator().asScala
-      .filter(Files.isRegularFile(_)).map(Files.size).sum
-    catch { case _: Throwable => 0L }
-
   def initialPartitionsFor(dir: String, cpus: Int): Int =
-    math.min(1024L, math.max(cpus.toLong, inputBytes(dir) / (8L << 20))).toInt
+    math.min(1024L, math.max(cpus.toLong, Listing.bytes(dir) / (8L << 20))).toInt
 
   /** Shuffle-partition count for STATEFUL streaming queries over a testdata
-    * dir (r16): the same 8 MB-of-input granule as [[initialPartitionsFor]],
+    * dir: the same 8 MB-of-input granule as [[initialPartitionsFor]],
     * but with NO core-count floor and a core-count CAP — a stateful
     * operator's partitioning is frozen at checkpoint creation (AQE never
     * coalesces it), and every micro-batch pays a per-partition state-store
@@ -64,7 +57,7 @@ object Layout {
     * SPARK_GRAFT_CPUS.
     */
   def statePartitionsFor(dir: String, cpus: Int): Int =
-    math.min(cpus.toLong, math.max(1L, inputBytes(dir) / (8L << 20))).toInt
+    math.min(cpus.toLong, math.max(1L, Listing.bytes(dir) / (8L << 20))).toInt
 
   /** Write events in the reference's events-table layout: monthly partitions,
     * sorted by (event_type, ts, user_id) within each, bloom filter on user_id.

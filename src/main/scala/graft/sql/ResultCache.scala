@@ -2,7 +2,8 @@ package graft.sql
 
 import scala.collection.immutable.SortedMap
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import graft.sources.Listing
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{CurrentDate, CurrentTime, CurrentTimestampLike, LocalTimestamp}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -11,15 +12,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 /** One HTTP server's route results, keyed by catalog entry name: routes that
   * share an entry share its result.
   *
-  * An entry's version is the sorted (path, length, mtime) of every file under
-  * the root paths of the parquet relations its analyzed plan reads, walked
-  * recursively, so a directory table and a file-sink MV count too. The roots
-  * come from the entry's first build and are kept. A request lists the files
-  * and returns the held body when the version is unchanged; otherwise it reads
-  * the version first, then builds and runs the entry as [[Serving]] does, so a
-  * file that changes mid-query costs one more run, never a stale body. (On the
-  * first build the roots are unknown until the frame exists, so there the
-  * version is read between the build and the run.)
+  * An entry's version is the [[Listing]] of the root paths of the parquet
+  * relations its analyzed plan reads, walked recursively, so a directory
+  * table and a file-sink MV count too. The roots come from the entry's first
+  * build and are kept. A request lists the files and returns the held body
+  * when the version is unchanged; otherwise it reads the version first, then
+  * builds and runs the entry as [[Serving]] does, so a file that changes
+  * mid-query costs one more run, never a stale body. (On the first build the
+  * roots are unknown until the frame exists, so there the version is read
+  * between the build and the run.)
   *
   * An entry whose plan has another leaf (a checkpointed RDD, a local relation,
   * a memory-sink table, a stream) or an expression that is non-deterministic
@@ -30,7 +31,6 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 final class ResultCache(spark: SparkSession, dir: String) {
   import ResultCache._
 
-  private val hadoopConf = spark.sessionState.newHadoopConf()
   private val entries: Map[String, Entry] =
     Serving.endpoints.values.toSeq.distinct.map(_ -> new Entry).toMap
 
@@ -61,12 +61,12 @@ final class ResultCache(spark: SparkSession, dir: String) {
         case null =>
           val df = Serving.run(route, spark, dir)
           e.roots = fileRoots(df.queryExecution.analyzed)
-          val version = e.roots.map(versionOf)
+          val version = e.roots.map(Listing.of)
           val out = Serving.toJson(df)
           version.foreach { v => e.version = v; e.body = out }
           (out, false)
         case Some(roots) =>
-          val version = versionOf(roots)
+          val version = Listing.of(roots)
           if (e.body != null && version == e.version) (e.body, true)
           else {
             val out = run(route)
@@ -77,17 +77,6 @@ final class ResultCache(spark: SparkSession, dir: String) {
         case None => (run(route), false)
       }
     }
-
-  /** Walks the roots with `listStatus`, not `listFiles`: `listFiles` returns
-    * located statuses, which read each file's owner and permissions — on the
-    * local file system a forked `ls` per file, about 5 ms each.
-    */
-  private def versionOf(roots: Seq[Path]): Seq[(String, Long, Long)] = {
-    def files(fs: FileSystem, p: Path): Seq[FileStatus] =
-      fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) files(fs, s.getPath) else Seq(s))
-    roots.flatMap(root => files(root.getFileSystem(hadoopConf), root))
-      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
-  }
 }
 
 object ResultCache {
@@ -124,7 +113,7 @@ object ResultCache {
     */
   private final class Entry {
     @volatile var roots: Option[Seq[Path]] = _
-    var version: Seq[(String, Long, Long)] = _
+    var version: Listing.Files = _
     var body: String = _
     val stats = new Stats
   }

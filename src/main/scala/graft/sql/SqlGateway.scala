@@ -196,7 +196,7 @@ object SqlGateway {
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
     ) { (spark, dir) =>
-      graft.streaming.MvCascade.run(spark, dir) // MVs + routing registry
+      graft.streaming.MvCascade.run(spark, dir) // MVs fresh for routing
       graft.plans.MvRouting.route(execute(spark, dir,
         """SELECT event_type, count() AS events,
           |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value

@@ -18,10 +18,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * JOINs at query time" property the reference gets from denormalized MV
   * columns (events has no country column; customer→nation supplies it).
   *
-  * The cascade runs ONCE per data dir (memoized by [[StreamRunner]]): the
-  * catalog entries st04–st08 read back one MV each, and every one is
-  * hash-checked against its batch SQL — incremental-equals-batch, per MV,
-  * while all MVs ran concurrently off the same source.
+  * The cascade runs once per version of the data dir's files (memoized by
+  * [[StreamRunner]]): the catalog entries st04–st08 read back one MV each,
+  * and every one is hash-checked against its batch SQL —
+  * incremental-equals-batch, per MV, while all MVs ran concurrently off the
+  * same source.
   *
   * st09 is the AggregatingMergeTree analog (01:119–132 `uniqState`): each
   * micro-batch appends a "part" (dir keyed by batchId — idempotent under
@@ -43,24 +44,27 @@ object MvCascade {
   def setupBreakdown(dir: String): Seq[(String, StreamRunner.Cost)] =
     StreamRunner.costs(dir, members)
 
-  /** Run the cascade once per data dir; returns its root. */
+  /** Run the cascade over `dir`, again only when the files under `dir`
+    * change; returns its root.
+    */
   def run(spark: SparkSession, dir: String): String =
     StreamRunner.maintainedRoot(dir, "cascade")(executeAt(spark, dir, _))
+
+  /** The root of the last cascade over `dir` while its files are unchanged:
+    * the MVs there reflect exactly the base tables. A file that changed
+    * while the cascade ran leaves no fresh root, so the next [[run]] runs
+    * again.
+    */
+  def freshRoot(dir: String): Option[String] = StreamRunner.freshRoot(dir, "cascade")
 
   /** Run the cascade against an explicit root (checkpoints live under it):
     * re-running with the same root is the checkpoint-recovery path — every
     * query's AvailableNow trigger finds its source offsets already committed
     * and changes nothing (MvCascadeSpec asserts this exactly-once property).
     */
-  private[streaming] def executeAt(spark: SparkSession, dir: String, root: String): Unit = {
-    // fingerprint the base tables BEFORE any stream reads them: if a base
-    // overwrite lands mid-cascade, register() sees the mismatch and declines
-    val preFingerprints = graft.plans.MvRouting.fingerprintNow(dir)
+  private[streaming] def executeAt(spark: SparkSession, dir: String, root: String): Unit =
     // all eight run concurrently off the same source
     StreamRunner.run(spark, dir)(queries(_, dir, root))
-    // MVs complete for `dir` → eligible for transparent aggregate routing
-    graft.plans.MvRouting.register(dir, root, preFingerprints)
-  }
 
   private def queries(spark: SparkSession, dir: String, root: String)
       : Seq[(String, DataStreamWriter[Row])] = {

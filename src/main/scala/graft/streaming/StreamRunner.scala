@@ -6,6 +6,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.Listing
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryListener, Trigger}
@@ -39,9 +40,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Streami
   *
   * Every query runs under `Trigger.AvailableNow` to exhaustion. The runner
   * records one [[Cost]] per (dir, query name), memoizes maintained streams
-  * once per (dir, name), and hands memory-sink results back as frames in
-  * the caller's session. When a run ends, the streaming listener buses of
-  * the clone and of each query's own session are detached from the
+  * per (dir, name) while the files under `dir` are unchanged
+  * ([[graft.sources.Listing.Memo]]), and hands memory-sink results back as
+  * frames in the caller's session. When a run ends, the streaming listener
+  * buses of the clone and of each query's own session are detached from the
   * context's shared listener bus, where they would otherwise stay for the
   * life of the context.
   */
@@ -58,8 +60,8 @@ object StreamRunner {
   private val recorded = TrieMap[(String, String), Cost]()
   // maintained streams: the clone a memory sink's view is registered in, or
   // the root directory a file sink wrote
-  private val clones = TrieMap[(String, String), SparkSession]()
-  private val roots = TrieMap[(String, String), String]()
+  private val clones = new Listing.Memo[SparkSession]
+  private val roots = new Listing.Memo[String]
 
   /** The last recorded cost of each of `names` over `dir`, in `names` order;
     * a name that never ran is absent.
@@ -108,20 +110,26 @@ object StreamRunner {
       (query: SparkSession => DataFrame): DataFrame =
     view(spark, runTable(spark, dir, name, mode, query), name)
 
-  /** [[table]], run once per (dir, name). */
+  /** [[table]], run again only when the files under `dir` change. */
   def maintainedTable(spark: SparkSession, dir: String, name: String, mode: String)
       (query: SparkSession => DataFrame): DataFrame =
-    view(spark, clones.getOrElseUpdate((dir, name), runTable(spark, dir, name, mode, query)), name)
+    view(spark, clones(dir, name)(runTable(spark, dir, name, mode, query)), name)
 
-  /** Run `build` once per (dir, name) with a fresh root directory for its
-    * file sinks and checkpoints; returns the root.
+  /** Run `build` with a fresh root directory for its file sinks and
+    * checkpoints, again only when the files under `dir` change; returns the
+    * root.
     */
   def maintainedRoot(dir: String, name: String)(build: String => Unit): String =
-    roots.getOrElseUpdate((dir, name), {
+    roots(dir, name) {
       val root = java.nio.file.Files.createTempDirectory(s"graft_${name}_").toString
       build(root)
       root
-    })
+    }
+
+  /** The root of maintained stream `name` over `dir` while the files under
+    * `dir` are those it ran over.
+    */
+  def freshRoot(dir: String, name: String): Option[String] = roots.fresh(dir, name)
 
   private def runTable(spark: SparkSession, dir: String, name: String, mode: String,
       query: SparkSession => DataFrame): SparkSession =

@@ -73,6 +73,14 @@ class SessionHygieneSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
+  test("src/main reads file modification times only in Listing.of") {
+    // one listing decides whether inputs changed: result caches, maintained
+    // streams, MV routing and corpus metadata must agree on it
+    val hits = scan("src/main", """\b(lastModified|getLastModifiedTime|getModificationTime)\b""".r)
+      .filterNot(h => fileName(h) == "Listing.scala" && h.enclosingDef == "of")
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
   test("src/main defines a main only in Bench, Verify, Explain and GenScale") {
     val mains = Set("Bench.scala", "Verify.scala", "Explain.scala", "GenScale.scala")
     val hits = scan("src/main", """\bdef\s+main\s*\(|\bextends\s+App\b""".r)

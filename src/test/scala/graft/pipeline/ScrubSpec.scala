@@ -165,12 +165,9 @@ class ScrubSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("bp02eq").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val local = TextAnalysis.trainMergesAt(spark, dir, 6) // default: local path
-    spark.conf.set(TextAnalysis.BpeLocalMaxVocabKey, "0") // force distributed
-    try {
-      val dist = TextAnalysis.trainMergesAt(spark, dir, 6)
-      assert(local == dist, s"local $local vs distributed $dist")
-    } finally spark.conf.unset(TextAnalysis.BpeLocalMaxVocabKey)
+    val local = TextAnalysis.trainMergesAt(spark, dir, 6) // the vocab is small: local path
+    val dist = TextAnalysis.trainMergesDistributedAt(spark, dir, 6)
+    assert(local == dist, s"local $local vs distributed $dist")
   }
 
   test("bp02: the driver-local argmax breaks count ties in Spark's UTF-8 byte order") {

@@ -10,15 +10,14 @@ class SparseTextSpec extends SparkSpec {
     // the fixpoint needs 11 propagation rounds plus one no-change round.
     // Capped at 3 the loop exits UNCONVERGED — the old code would silently
     // ship non-canonical cluster ids into dd07's survivor selection; now it
-    // must refuse loudly, naming the knob.
+    // must refuse loudly, naming the cap.
     val edges = (1L to 11L).map(i => (i, i + 1))
     val undirected = edges.toDF("src", "dst")
       .unionByName(edges.map(_.swap).toDF("src", "dst"))
     val e = intercept[IllegalStateException] {
       SparseText.propagateMinLabels(undirected, maxIters = 3)
     }
-    assert(e.getMessage.contains("UNCONVERGED") &&
-      e.getMessage.contains(SparseText.LabelPropMaxItersKey))
+    assert(e.getMessage.contains("UNCONVERGED") && e.getMessage.contains("3-round cap"))
     // and with an adequate cap the same graph converges to one cluster
     val labels = SparseText.propagateMinLabels(undirected, maxIters = 20)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -49,7 +48,7 @@ class SparseTextSpec extends SparkSpec {
       SparseText.localComponents(edges).map(_._1).toSeq.sorted)
   }
 
-  test("localMaxEdges = 0 forces the distributed fixpoint, even on an empty edge set") {
+  test("the distributed fixpoint gives the union-find rows, even on no edges") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.Sort
     // the distributed path ends in the ORDER BY; the driver union-find
@@ -60,15 +59,13 @@ class SparseTextSpec extends SparkSpec {
     val chain = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
     assert(!distributed(SparseText.clusterMap(spark, empty)))
     val local = SparseText.clusterMap(spark, chain).collect().map(_.toSeq).toSeq
-    spark.conf.set(SparseText.LabelPropLocalMaxEdgesKey, "0")
-    try {
-      val e = SparseText.clusterMap(spark, empty)
-      assert(distributed(e) && e.isEmpty)
-      val c = SparseText.clusterMap(spark, chain)
-      assert(distributed(c))
-      assert(c.collect().map(_.toSeq).toSeq == local)
-      assert(local == Seq(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 1L), Seq(5L, 5L), Seq(6L, 5L)))
-    } finally spark.conf.unset(SparseText.LabelPropLocalMaxEdgesKey)
+    assert(!distributed(SparseText.clusterMap(spark, chain)))
+    val e = SparseText.clusterMapDistributed(empty)
+    assert(distributed(e) && e.isEmpty)
+    val c = SparseText.clusterMapDistributed(chain)
+    assert(distributed(c))
+    assert(c.collect().map(_.toSeq).toSeq == local)
+    assert(local == Seq(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 1L), Seq(5L, 5L), Seq(6L, 5L)))
   }
 
   test("ir01: BM25 top-20 matches a brute-force recompute of every doc's score") {

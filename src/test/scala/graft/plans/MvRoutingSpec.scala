@@ -374,23 +374,44 @@ class MvRoutingSpec extends graft.SparkSpec {
   }
 
   test("base overwrite landing mid-cascade declines registration") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Files.createTempDirectory("graft_midrace_").toString
-    for (t <- Seq("events", "lineitem", "customer", "nation"))
-      Files.copy(Paths.get(dir, s"$t.parquet"), Paths.get(tmp, s"$t.parquet"),
-        StandardCopyOption.COPY_ATTRIBUTES)
-    // fingerprint taken before the (simulated) cascade starts…
-    val pre = MvRouting.fingerprintNow(tmp)
-    // …base table changes while the cascade runs…
-    Files.setLastModifiedTime(Paths.get(tmp, "events.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000))
-    // …so registration must decline: the MVs reflect an unknown mix
-    MvRouting.register(tmp, "/tmp/graft_nonexistent_root", pre)
+    import java.nio.file.{Files, Paths}
+    val tmp = tableCopy()
+    // the cascade memo reads the listing before its run, so a base table
+    // that changes while the (simulated) cascade runs leaves it stale…
+    val stale = graft.streaming.StreamRunner.maintainedRoot(tmp, "cascade") { _ =>
+      Files.setLastModifiedTime(Paths.get(tmp, "events.parquet"),
+        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000))
+    }
+    // …so routing declines: the MVs would reflect an unknown mix
     assert(MvRouting.rootFor(tmp).isEmpty)
-    // and with an honest (unchanged) snapshot it registers
-    val pre2 = MvRouting.fingerprintNow(tmp)
-    MvRouting.register(tmp, "/tmp/graft_nonexistent_root", pre2)
-    assert(MvRouting.rootFor(tmp).isDefined)
+    def q = Tables(spark, tmp).events
+      .groupBy(col("event_type")).agg(count(lit(1)).as("c"))
+    assertUnrouted(MvRouting.route(q), "events.parquet")
+    // and the next cascade run runs again, on a fresh root that routes
+    val root = graft.streaming.MvCascade.run(spark, tmp)
+    assert(root != stale && MvRouting.rootFor(tmp).contains(root))
+    assertRouted(MvRouting.route(q), "mv_hourly_events")
+  }
+
+  test("after events.parquet changes, pr01 reads a new cascade root and equals the base") {
+    val tmp = tableCopy()
+    val pr01 = Catalog.byName("pr01_mv_route_type_rollup")
+    def base = Tables(spark, tmp).events.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("events"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
+    val first = pr01.build(spark, tmp)
+    assertRouted(first, "mv_hourly_events")
+    sameRows(first, base)
+    val firstRoot = MvRouting.rootFor(tmp).get
+    rewriteEvents(tmp)(_.filter(col("event_type") =!= "purchase"))
+    val df = pr01.build(spark, tmp)
+    val root = MvRouting.rootFor(tmp)
+    assert(root.exists(_ != firstRoot), s"no new cascade root: $root, first $firstRoot")
+    val paths = scanPaths(df)
+    assert(paths.nonEmpty && paths.forall(_.startsWith(root.get)),
+      s"expected only scans under ${root.get}, got $paths")
+    assert(!df.collect().exists(_.getString(0) == "purchase"), "the routed rows predate the rewrite")
+    sameRows(df, base)
   }
 
   test("date filter prunes the routed MV in BOTH ts flavors (explicit NTZ and tz-aware fixtures)") {
@@ -446,7 +467,7 @@ class MvRoutingSpec extends graft.SparkSpec {
     assert(names.nonEmpty && names.forall(_.startsWith("pr")))
     for (n <- names) {
       val d = Catalog.byName(n)
-      assert(d.oracle.isDefined)
+      assert(d.oracle.nonEmpty)
       val df = d.build(spark, dir)
       assert(df.count() > 0)
       // every pr entry must actually ROUTE: the executed plan may scan MV

@@ -1,14 +1,13 @@
 package graft.sql
 
 import java.net.URI
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.{Catalog, SparkSpec, Tables}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, rand}
 
@@ -107,22 +106,6 @@ class ServingSpec extends SparkSpec {
 
   private def direct(route: String, dir: String): String =
     Serving.toJson(Serving.run(route, spark, dir))
-
-  /** A private copy of the sf0.001 tables, so a test may rewrite one. */
-  private def tableCopy(): String = {
-    val out = Files.createTempDirectory("graft_serving")
-    Files.list(Paths.get(sf())).forEach(f => Files.copy(f, out.resolve(f.getFileName)))
-    out.toString
-  }
-
-  /** Replace `dir`'s events.parquet out of band with `keep` of its rows. */
-  private def rewriteEvents(dir: String)(keep: DataFrame => DataFrame): Unit = {
-    val tmp = Files.createTempDirectory("graft_events").resolve("out").toString
-    keep(spark.read.parquet(s"$dir/events.parquet")).coalesce(1).write.parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).filter(_.getFileName.toString.endsWith(".parquet"))
-      .findFirst().get
-    Files.move(part, Paths.get(dir, "events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-  }
 
   private def roots(name: String, dir: String): Seq[String] =
     ResultCache.fileRoots(Catalog.byName(name).build(spark, dir).queryExecution.analyzed)

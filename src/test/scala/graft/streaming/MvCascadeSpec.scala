@@ -60,6 +60,20 @@ class MvCascadeSpec extends SparkSpec {
       "mv_product_revenue")
   }
 
+  test("st04 after events.parquet changes equals the batch over the new file") {
+    val dir = tableCopy()
+    val st04 = graft.Catalog.byName("st04_cascade_daily_activity")
+    def batch = Tables(spark, dir).events
+      .groupBy(to_date(col("ts")).as("event_date"), col("user_id"))
+      .agg(count(lit(1)).as("total_events"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
+    assertSameRows(st04.build(spark, dir), batch, "st04")
+    val before = batch.collect().toSet
+    rewriteEvents(dir)(_.filter(col("event_type") =!= "purchase"))
+    assert(batch.collect().toSet != before, "the rewrite did not change the batch rows")
+    assertSameRows(st04.build(spark, dir), batch, "st04 after the rewrite")
+  }
+
   test("setup breakdown names all 8 MVs with positive wall/busy and >=1 batch") {
     MvCascade.run(spark, sf()) // memoized — reuses the first test's run if present
     val bd = MvCascade.setupBreakdown(sf()).toMap

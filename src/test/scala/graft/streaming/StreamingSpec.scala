@@ -371,6 +371,20 @@ class StreamingSpec extends SparkSpec {
       s"incremental peak instant ${streamed(0)} diverged from batch ${batch(0)}")
   }
 
+  test("st11 after events.parquet changes equals the batch over the new file") {
+    val dir = tableCopy()
+    val st11 = graft.Catalog.byName("st11_streaming_dedup")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def batch = rows(graft.Tables(spark, dir).events
+      .select("event_id", "ts", "user_id", "event_type", "value"))
+    assert(rows(st11.build(spark, dir)) == batch)
+    val before = batch
+    rewriteEvents(dir)(_.filter(col("event_type") =!= "purchase"))
+    assert(batch != before, "the rewrite did not change the batch rows")
+    val after = rows(st11.build(spark, dir))
+    assert(after == batch, s"st11 serves ${after.size} rows, the new file has ${batch.size}")
+  }
+
   test("st13's second build in one session compiles no classes") {
     import org.apache.spark.metrics.source.CodegenMetrics
     val st13 = graft.Catalog.byName("st13_streaming_quality_gate")
