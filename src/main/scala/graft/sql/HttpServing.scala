@@ -3,10 +3,13 @@ package graft.sql
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicLong
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import graft.sources.Listing
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -21,13 +24,24 @@ import org.apache.spark.sql.functions._
   * planning or running anything. Otherwise — the first request for an entry,
   * a changed input file, or an entry whose plan reads something other than
   * files — it runs the entry's catalog query and serializes the post-LIMIT
-  * result (Serving.toJson — the one documented collect edge). The SSE route
-  * is never cached; it replays the reference's tail loop: poll events with
-  * `event_id > last-seen` in id order (Ingest.changeFeed — min/max-pruned
-  * scan + TakeOrderedAndProject), emit one `data:` frame per event, advance
-  * the cursor, sleep, repeat. `/metrics` reports the cache's per-entry
-  * requests, hits, misses and latency, and each active stream's last
-  * progress.
+  * result (Serving.toJson — the one documented collect edge).
+  *
+  * The SSE route replays the reference's tail loop: each round emits the
+  * events with `event_id > cursor` in id order, at most [[Round]] of them,
+  * one `data:` frame per event, advances the cursor and sleeps. A
+  * connection prefetches instead of querying per round: one
+  * [[graft.streaming.Ingest.changeFeed]] query for `Round × rounds-left`
+  * events fills a buffer, held with the [[graft.sources.Listing]] of the
+  * feed's files read before the query, and rounds are served from it. A
+  * round queries again only when the listing has changed, or when the
+  * buffer is used up and the last query did not reach the end of the
+  * table; so every frame is the one a per-round query would have sent. (The
+  * cursor is a literal that Spark inlines into generated code, so a
+  * per-round query also compiled new classes every round.)
+  *
+  * `/metrics` reports the cache's per-entry requests, hits, misses and
+  * latency, the SSE route's connections, rounds and feed queries, and each
+  * active stream's last progress.
   *
   * Every route answers only its exact path (the JDK server matches contexts
   * by prefix); anything longer is a 404.
@@ -46,6 +60,19 @@ object HttpServing {
 
   private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
+  /** Events per SSE round: the reference's `LIMIT 50`. */
+  val Round = 50
+
+  /** The SSE route's counters: connections served, rounds run and change-feed
+    * queries, so `rounds / feed_queries` is the rounds one query served.
+    */
+  private final class SseStats {
+    val connections, rounds, feedQueries = new AtomicLong
+
+    def snapshot: Map[String, Long] = Map("connections" -> connections.get,
+      "rounds" -> rounds.get, "feed_queries" -> feedQueries.get)
+  }
+
   /** Start on 127.0.0.1:`port` (0 = ephemeral); returns the bound handle. */
   def start(spark: SparkSession, dir: String, port: Int = 0): Handle = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
@@ -53,14 +80,16 @@ object HttpServing {
       val t = new Thread(r, "graft-http"); t.setDaemon(true); t
     }))
     val cache = new ResultCache(spark, dir)
+    val sse = new SseStats
     Serving.endpoints.keys.foreach { route =>
       server.createContext(route, exact(route)(ex => respond(ex, 200, cache.body(route))))
     }
-    server.createContext("/api/stream", exact("/api/stream")(sseHandler(spark, dir)))
+    server.createContext("/api/stream", exact("/api/stream")(sseHandler(spark, dir, sse)))
     server.createContext("/health", exact("/health")(respond(_, 200, """{"status":"ok"}""")))
     server.createContext("/metrics", exact("/metrics")(ex =>
       respond(ex, 200, mapper.writeValueAsString(Map(
         "entries" -> cache.metrics,
+        "sse" -> sse.snapshot,
         "streams" -> spark.streams.active.toSeq.map { q =>
           val p = Option(q.lastProgress)
           Map("id" -> q.id.toString, "name" -> q.name,
@@ -101,9 +130,10 @@ object HttpServing {
     * Bounded rounds (the reference loops forever; a bound keeps the handler
     * testable and the executor pool drainable) — a dashboard client simply
     * reconnects with its last seen id, which is also the reference's
-    * reconnect semantics.
+    * reconnect semantics. The 100-round cap bounds a connection's buffer at
+    * 100 × [[Round]] rows.
     */
-  private def sseHandler(spark: SparkSession, dir: String)(ex: HttpExchange): Unit = {
+  private def sseHandler(spark: SparkSession, dir: String, stats: SseStats)(ex: HttpExchange): Unit = {
     val p = queryParams(ex)
     Seq("last_id", "rounds", "interval_ms").find(k => p.get(k).exists(_.toLongOption.isEmpty)) match {
       case Some(bad) => error(ex, 400, s"$bad must be an integer")
@@ -114,25 +144,67 @@ object HttpServing {
         ex.getResponseHeaders.add("Content-Type", "text/event-stream")
         ex.getResponseHeaders.add("Cache-Control", "no-cache")
         ex.sendResponseHeaders(200, 0) // chunked
+        stats.connections.incrementAndGet()
         // past the headers a failure can only end the stream early
         try {
           val os = ex.getResponseBody
-          var last = param("last_id", -1L)
+          val feed = new Feed(spark, dir, param("last_id", -1L), stats.feedQueries)
           var r = 0
           while (r < rounds) {
-            val feed = graft.streaming.Ingest.changeFeed(spark, dir, last)
-            // one collect: the event_id cursor and the JSON payload together
-            val batch = feed.select(col("event_id"),
-              to_json(struct(feed.columns.toIndexedSeq.map(col): _*)).as("j")).collect()
-            batch.foreach(row => os.write(s"data: ${row.getString(1)}\n\n".getBytes(UTF_8)))
+            feed.next(rounds - r).foreach(json => os.write(s"data: $json\n\n".getBytes(UTF_8)))
             os.flush()
-            last = batch.lastOption.map(_.getLong(0)).getOrElse(last)
             r += 1
+            stats.rounds.incrementAndGet()
             if (r < rounds) Thread.sleep(intervalMs)
           }
           os.close()
         } catch { case _: Throwable => () }
         finally ex.close()
+    }
+  }
+
+  /** One SSE connection's change feed from `cursor` on: a buffer of (event_id,
+    * JSON) rows in id order, from the last feed query, and the listing of the
+    * feed's files read before that query. `roots` is null before the first
+    * query, then the feed plan's file roots, or None when it reads something
+    * other than files (then every round queries).
+    */
+  private final class Feed(spark: SparkSession, dir: String, private var cursor: Long,
+      queries: AtomicLong) {
+    private var roots: Option[Seq[Path]] = _
+    private var version: Listing.Files = _
+    private var rows = IndexedSeq.empty[(Long, String)]
+    private var pos = 0
+    private var reachedEnd = false
+
+    /** The JSON of the next at most [[Round]] events with `event_id > cursor`;
+      * `left` rounds remain, this one included.
+      */
+    def next(left: Int): Seq[String] = {
+      // a buffered row at or below the cursor was sent, or repeats the last
+      // sent id, which a per-round query would skip too
+      while (pos < rows.size && rows(pos)._1 <= cursor) pos += 1
+      val changed = roots match {
+        case null | None => true
+        case Some(files) => Listing.of(files) != version
+      }
+      if (changed || (pos == rows.size && !reachedEnd)) query(Round * left)
+      val out = rows.slice(pos, pos + Round)
+      pos += out.size
+      out.lastOption.foreach(r => cursor = r._1)
+      out.map(_._2)
+    }
+
+    private def query(limit: Int): Unit = {
+      val feed = graft.streaming.Ingest.changeFeed(spark, dir, cursor, limit)
+      if (roots == null) roots = ResultCache.fileRoots(feed.queryExecution.analyzed)
+      version = roots.map(Listing.of).orNull
+      // one collect: the event_id cursor and the JSON payload together
+      rows = feed.select(col("event_id"), to_json(struct(feed.columns.toIndexedSeq.map(col): _*)))
+        .collect().toIndexedSeq.map(r => (r.getLong(0), r.getString(1)))
+      pos = 0
+      reachedEnd = rows.size < limit
+      queries.incrementAndGet()
     }
   }
 }

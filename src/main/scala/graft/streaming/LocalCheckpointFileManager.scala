@@ -77,6 +77,11 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
 
 object LocalCheckpointFileManager {
 
+  /** The conf key naming a checkpoint file manager; `CheckpointFileManager.create`
+    * reads it from the Hadoop conf, where a session's SQL conf is copied.
+    */
+  val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
+
   private def isCrc(p: Path): Boolean = {
     val n = p.getName
     n.startsWith(".") && n.endsWith(".crc")

@@ -36,7 +36,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Streami
   *    one (`SessionHygieneSpec` pins that).
   *  - `spark.sql.streaming.checkpointFileManagerClass` is
   *    [[LocalCheckpointFileManager]], which writes `file:` checkpoints
-  *    without the processes Hadoop's local file system forks.
+  *    without the processes Hadoop's local file system forks. The clone
+  *    needs it for the offset, commit and source logs; the state store's
+  *    own files go through it in any session ([[StateStores]]).
   *
   * Every query runs under `Trigger.AvailableNow` to exhaustion. The runner
   * records one [[Cost]] per (dir, query name), memoizes maintained streams
@@ -79,8 +81,7 @@ object StreamRunner {
     clone.conf.set("spark.sql.shuffle.partitions", graft.sources.Layout
       .statePartitionsFor(dir, spark.sparkContext.defaultParallelism).toString)
     clone.conf.set("spark.sql.artifact.isolation.enabled", "false")
-    clone.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-      classOf[LocalCheckpointFileManager].getName)
+    clone.conf.set(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
     val t0 = System.nanoTime()
     val writers = queries(clone)
     // the memory sink's view and the query itself live in the clone, so the
@@ -118,13 +119,29 @@ object StreamRunner {
   /** Run `build` with a fresh root directory for its file sinks and
     * checkpoints, again only when the files under `dir` change; returns the
     * root.
+    *
+    * Each root is deleted when the JVM exits, by one shutdown hook. A root
+    * that a later run replaces stays until then too: a frame built over it
+    * (a route request, a `Concurrently` branch) may still be reading it.
     */
   def maintainedRoot(dir: String, name: String)(build: String => Unit): String =
     roots(dir, name) {
-      val root = java.nio.file.Files.createTempDirectory(s"graft_${name}_").toString
-      build(root)
-      root
+      val root = java.nio.file.Files.createTempDirectory(s"graft_${name}_")
+      deletedAtExit.add(root)
+      build(root.toString)
+      root.toString
     }
+
+  /** The maintained roots created in this JVM, deleted by a shutdown hook
+    * registered with the first of them.
+    */
+  private[streaming] lazy val deletedAtExit: java.util.Set[java.nio.file.Path] = {
+    val created = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+    sys.addShutdownHook(created.forEach { root =>
+      try LocalCheckpointFileManager.deleteTree(root) catch { case _: java.io.IOException => () }
+    })
+    created
+  }
 
   /** The root of maintained stream `name` over `dir` while the files under
     * `dir` are those it ran over.

@@ -1,15 +1,19 @@
 package graft.sql
 
 import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.{Catalog, SparkSpec, Tables}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, rand}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.functions.{col, rand, struct, to_json}
 
 class ServingSpec extends SparkSpec {
 
@@ -84,6 +88,90 @@ class ServingSpec extends SparkSpec {
       val ids = frames.map(f => "\"event_id\":(\\d+)".r.findFirstMatchIn(f).get.group(1).toLong)
       assert(ids.distinct.length == ids.length, "change feed re-emitted an event id")
     } finally handle.close()
+  }
+
+  /** The `data:` frames of one SSE connection, read as they arrive;
+    * `onFrame` runs after each frame with the number read so far.
+    */
+  private def sseFrames(url: String)(onFrame: Int => Unit = _ => ()): Seq[String] = {
+    val conn = URI.create(url).toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
+    conn.setConnectTimeout(5000)
+    conn.setReadTimeout(120000)
+    assert(conn.getResponseCode == 200)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(conn.getInputStream, UTF_8))
+    try Iterator.continually(in.readLine()).takeWhile(_ != null).filter(_.startsWith("data: "))
+      .zipWithIndex.map { case (frame, i) => onFrame(i + 1); frame }.toList
+    finally { in.close(); conn.disconnect() }
+  }
+
+  /** The frames of `rounds` rounds of the SSE tail loop with one change-feed
+    * query per round, from `lastId` over the files in `dir`, per round.
+    */
+  private def perRoundFrames(dir: String, lastId: Long, rounds: Int): Seq[Seq[String]] = {
+    var last = lastId
+    (1 to rounds).map { _ =>
+      val feed = graft.streaming.Ingest.changeFeed(spark, dir, last)
+      val batch = feed.select(col("event_id"),
+        to_json(struct(feed.columns.toIndexedSeq.map(col): _*))).collect()
+      last = batch.lastOption.map(_.getLong(0)).getOrElse(last)
+      batch.toSeq.map(row => s"data: ${row.getString(1)}")
+    }
+  }
+
+  private def eventId(frame: String): Long =
+    "\"event_id\":(\\d+)".r.findFirstMatchIn(frame).get.group(1).toLong
+
+  private val Round = HttpServing.Round
+
+  test("an SSE connection sends the frames of a per-round change-feed query, in order") {
+    val ids = Tables(spark, sf()).events.select("event_id").collect().map(_.getLong(0)).sorted
+    assert(ids.length > 3 * Round, ids.length)
+    withServer(sf()) { base =>
+      // from the start; then from 2.4 rounds before the end of the table, so
+      // the third round is short and the fourth is empty
+      for ((last, rounds, sizes) <- Seq((-1L, 3, Seq(Round, Round, Round)),
+          (ids(ids.length - 121), 4, Seq(Round, Round, 20, 0)))) {
+        val want = perRoundFrames(sf(), last, rounds)
+        assert(want.map(_.size) == sizes)
+        val got = sseFrames(s"$base/api/stream?last_id=$last&rounds=$rounds&interval_ms=0")()
+        assert(got == want.flatten, s"last_id=$last rounds=$rounds")
+      }
+    }
+  }
+
+  test("on unchanged files one SSE connection runs one feed query and compiles nothing after its first round") {
+    val rounds = 4
+    withServer(sf()) { base =>
+      sseFrames(s"$base/api/stream?last_id=-1&rounds=1&interval_ms=0")() // table footers warm
+      var afterFirst = -1L
+      val (frames, _, executions) = workOf {
+        sseFrames(s"$base/api/stream?last_id=-1&rounds=$rounds&interval_ms=200") { n =>
+          if (n == Round) afterFirst = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        }
+      }
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - afterFirst
+      assert(frames.size == rounds * Round && afterFirst >= 0)
+      assert(executions == 1, s"$rounds rounds ran $executions SQL executions")
+      assert(compiled == 0, s"rounds 2-$rounds compiled $compiled classes")
+      val sse = metrics(base).get("sse")
+      assert(sse.get("connections").asLong == 2 && sse.get("rounds").asLong == rounds + 1 &&
+        sse.get("feed_queries").asLong == 2, sse)
+    }
+  }
+
+  test("an SSE round after events.parquet is rewritten reads the new file") {
+    val dir = tableCopy()
+    val before = perRoundFrames(dir, -1L, 2)
+    withServer(dir) { base =>
+      // the server sleeps 6 s between the rounds; the rewrite lands in it
+      val frames = sseFrames(s"$base/api/stream?last_id=-1&rounds=2&interval_ms=6000") { n =>
+        if (n == Round) rewriteEvents(dir)(_.filter(col("event_id") % 2 === 0))
+      }
+      assert(frames.take(Round) == before.head)
+      val want = perRoundFrames(dir, eventId(frames(Round - 1)), 1).head
+      assert(want.nonEmpty && want.forall(eventId(_) % 2 == 0) && want != before(1))
+      assert(frames.drop(Round) == want)
+    }
   }
 
   private def withServer[T](dir: String)(body: String => T): T = {
@@ -192,10 +280,12 @@ class ServingSpec extends SparkSpec {
     }
   }
 
-  test("concurrent requests for one cold entry run one query") {
-    val route = "/api/stats"
-    direct(route, sf()) // table footers and codegen warm
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+  /** `body`'s result and the jobs and SQL executions it started: the
+    * listener bus is drained before and after `body` by a marker job, and
+    * counted once the marker has been seen.
+    */
+  private def workOf[T](body: => T): (T, Int, Int) = {
+    val jobs, executions = new AtomicInteger()
     val marker = "graft-serving-marker"
     @volatile var markerSeen = false
     val listener = new SparkListener {
@@ -203,35 +293,46 @@ class ServingSpec extends SparkSpec {
         if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
           markerSeen = true
         else jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+        case _ => ()
+      }
     }
-    /** Jobs started by `body`: the listener bus is drained once a marker job
-      * submitted after it has been seen.
-      */
-    def jobsOf(body: => Unit): Int = {
+    def drain(): Unit = {
       markerSeen = false
-      jobs.set(0)
-      body
       spark.sparkContext.setJobDescription(marker)
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setJobDescription(null)
       val deadline = System.currentTimeMillis() + 30000
       while (!markerSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
       assert(markerSeen, "the listener bus did not drain")
-      jobs.get()
     }
     spark.sparkContext.addSparkListener(listener)
-    try withServer(sf()) { base =>
+    try {
+      drain()
+      jobs.set(0)
+      executions.set(0)
+      val out = body
+      drain()
+      (out, jobs.get, executions.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("concurrent requests for one cold entry run one query") {
+    val route = "/api/stats"
+    direct(route, sf()) // table footers and codegen warm
+    withServer(sf()) { base =>
       val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
       try {
-        val served = jobsOf {
+        val (_, served, _) = workOf {
           val fs = (1 to 8).map(_ => pool.submit(() => httpGet(s"$base$route")))
           fs.foreach(f => assert(f.get()._1 == 200))
         }
-        val once = jobsOf(direct(route, sf()))
+        val (_, once, _) = workOf(direct(route, sf()))
         assert(once > 0 && served == once, s"8 requests ran $served jobs, one query runs $once")
         assert(entryCounts(base)("q18_kpi_snapshot") == (7L -> 1L))
       } finally pool.shutdown()
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("/metrics reports per-entry counts and latency and each active stream") {
@@ -252,6 +353,12 @@ class ServingSpec extends SparkSpec {
         assert(e.get("requests").asLong == 2 && e.get("hits").asLong == 1 && e.get("misses").asLong == 1)
         assert(e.get("cacheable").asBoolean)
         assert(e.get("p50_ms").asDouble > 0 && e.get("p99_ms").asDouble >= e.get("p50_ms").asDouble)
+        val sse = metrics(base).get("sse")
+        assert(Seq("connections", "rounds", "feed_queries").map(sse.get(_).asLong) == Seq(0L, 0L, 0L), sse)
+        assert(httpGet(s"$base/api/stream?last_id=-1&rounds=3&interval_ms=0")._1 == 200)
+        val after = metrics(base).get("sse")
+        assert(Seq("connections", "rounds", "feed_queries").map(after.get(_).asLong) == Seq(1L, 3L, 1L),
+          after)
         val idle = m.get("entries").get("q07_user_segments")
         assert(idle.get("requests").asLong == 0 && idle.get("p50_ms").isNull && idle.get("cacheable").isNull)
         val streams = m.get("streams")

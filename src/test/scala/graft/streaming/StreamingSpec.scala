@@ -411,6 +411,15 @@ class StreamingSpec extends SparkSpec {
       s"${before.size} listeners before 5 st13 builds, ${after.size} after; added: ${after.diff(before)}")
   }
 
+  test("a maintained root is registered for deletion at exit") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_exit_dir").toString
+    val root = StreamRunner.maintainedRoot(dir, "exit_probe") { r =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(r, "part"), "x")
+    }
+    assert(java.nio.file.Paths.get(root).getFileName.toString.startsWith("graft_exit_probe_"))
+    assert(StreamRunner.deletedAtExit.contains(java.nio.file.Paths.get(root)))
+  }
+
   test("restart under StreamRunner's settings: a file-source aggregate resumes from its checkpoint") {
     import spark.implicits._
     val src = java.nio.file.Files.createTempDirectory("graft_restart_src").toString
