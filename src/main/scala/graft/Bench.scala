@@ -43,7 +43,7 @@ object Bench {
     // conditions (cold JIT, settled heap), so the pinned COLD references
     // stay valid for both and start ≈ end on a sustained box.
     if (sys.env.contains("SPARK_GRAFT_CANARY_ONLY")) {
-      val s = GraftSession.builder("graft-canary-child", sfDir, cpus).getOrCreate()
+      val s = GraftSession.session("graft-canary-child", sfDir, cpus)
       s.sparkContext.setLogLevel("ERROR")
       val (c, m, sc) = runCanaries(s)
       s.stop()
@@ -51,7 +51,7 @@ object Bench {
       realOut.flush()
       return
     }
-    val spark = GraftSession.builder("graft-bench", sfDir, cpus).getOrCreate()
+    val spark = GraftSession.session("graft-bench", sfDir, cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // Route ALL log4j output to a file (target/bench_spark.log) and nothing
     // to the console: r5's captured tail carried `ERROR DataWritingSparkTask:

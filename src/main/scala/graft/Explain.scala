@@ -11,7 +11,7 @@ object Explain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val spark = GraftSession.builder("graft-explain", sfDir).getOrCreate()
+    val spark = GraftSession.session("graft-explain", sfDir)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     Residency.release(spark)

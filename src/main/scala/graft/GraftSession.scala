@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session configuration every graft main and test suite runs
-  * under. Callers that need an extra setting add a `.config` to the
-  * returned builder before `getOrCreate()`.
+  * under. Callers that need an extra setting pass it in `conf`.
   */
 object GraftSession {
 
@@ -12,7 +11,17 @@ object GraftSession {
   def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  def builder(appName: String, dataDir: String, cpus: Int = defaultCpus): SparkSession.Builder =
+  /** The session over `dataDir` on `local[cpus]`, with graft's planner
+    * strategies and dialect functions installed ([[Extensions.install]]).
+    */
+  def session(appName: String, dataDir: String, cpus: Int = defaultCpus,
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val spark = builder(appName, dataDir, cpus).config(conf).getOrCreate()
+    Extensions.install(spark)
+    spark
+  }
+
+  private def builder(appName: String, dataDir: String, cpus: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)

@@ -12,8 +12,19 @@ import org.apache.spark.sql.functions._
   *   - Dimension tables (`region`, `nation`, `supplier`, `part`) are small by
   *     construction (TPC-H star schema); join helpers in the catalog wrap them
   *     in `broadcast()` so fact-side shuffles never include dimension data.
+  *   - A table that fits in one file split is read by one task whatever the
+  *     plan, so [[graft.plans.SmallInputs]] plans it as one partition and the
+  *     aggregates, windows and joins above it need no exchange or broadcast.
+  *     That is a planner strategy, not a `coalesce(1)` here, so the logical
+  *     plans [[graft.plans.MvRouting]] matches keep their shape.
+  *
+  * Constructing a `Tables` installs graft's planner strategies and dialect
+  * functions in `spark` ([[Extensions.install]]), so every session that reads
+  * the tables plans them the same way, whoever built it.
   */
 final case class Tables(spark: SparkSession, dir: String) {
+  Extensions.install(spark)
+
   /** A bare `spark.read.parquet(path)` runs a 1-task footer-read job at
     * DataFrame build time to infer the schema, paid again on every rebuild
     * of every entry (about 50 ms each, with its driver gap). The schema is
@@ -37,10 +48,13 @@ final case class Tables(spark: SparkSession, dir: String) {
     * runs on ONE task regardless of core count (OPTIMIZATION_r15.md §2:
     * pp03's redact+gate stage, 2.83 s wall / 2.82 s cpu, 1 task on a 32-core
     * session; a snap then pins the 1-partition layout for the rest of the
-    * chain). For a
+    * chain). The same fact is why [[graft.plans.SmallInputs]] plans a table
+    * that fits in one split as one partition: its scan was one task already,
+    * and the exchanges above it only fanned a few KB out and back in. For a
     * KERNEL-HEAVY MAP consumer (regex scrubbing, shingle/signature builds,
     * per-pair vector kernels) a hash repartition to the session parallelism
-    * restores the lost cores for one small exchange.
+    * restores the lost cores for one small exchange; it is an explicit
+    * repartition, so it stays in the plan over a one-partition scan.
     *
     * Deliberately OPT-IN per call site, never blanket: a measured blanket
     * version (applied inside [[t]]) ran the catalog 2× SLOWER — for

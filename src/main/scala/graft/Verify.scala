@@ -9,7 +9,7 @@ object Verify {
     // name prefixes — run just those catalog entries.
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val spark = GraftSession.builder("graft-verify", sfDir).getOrCreate()
+    val spark = GraftSession.session("graft-verify", sfDir)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

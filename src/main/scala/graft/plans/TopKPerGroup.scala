@@ -1,11 +1,11 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.LongType
@@ -22,8 +22,7 @@ import org.apache.spark.sql.types.LongType
   * pass re-heaps and ranks. It demonstrates the full
   * Catalyst extension stack per the build guidance: logical node ([[TopKPerGroupNode]]) →
   * planner strategy ([[TopKStrategy]]) → physical exec ([[TopKPerGroupExec]]),
-  * registered on first use via `spark.experimental.extraStrategies`
-  * ([[TopKPerGroup.install]]).
+  * installed once per session by [[graft.Extensions.install]].
   *
   * Semantics: rows ranked per group by `sortCol` DESC, ties broken by
   * `tieCol` ASC; emits child columns + `rnk` (1..k). Identical to the window
@@ -59,7 +58,6 @@ object TopKPerGroup {
     plan(df, groupCols, itemCol, itemCol, k, dedup = true, ascending = true)
 
   private def plan(df: DataFrame, groupCols: Seq[String], sortCol: String, tieCol: String, k: Int, dedup: Boolean, ascending: Boolean = false): DataFrame = {
-    install(df.sparkSession)
     val child = df.queryExecution.analyzed
     def attr(n: String): Attribute = child.output.find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(s"column $n not in ${child.output.map(_.name)}"))
@@ -67,21 +65,12 @@ object TopKPerGroup {
     ColumnBridge.ofRows(df.sparkSession, node)
   }
 
-  /** Idempotently add the planner strategy to a session. */
-  def install(spark: SparkSession): Unit = {
-    val s = spark.experimental.extraStrategies
-    if (!s.exists(_.isInstanceOf[TopKStrategy.type]))
-      spark.experimental.extraStrategies = s :+ TopKStrategy
-  }
-
   /** `df` with [[WindowTopKRewrite]] applied once to its optimized plan.
     * Only this frame gets the rewrite; the session's rule set is never
     * touched, so concurrent queries in the session keep their plans.
     */
-  def withAutoRewrite(df: DataFrame): DataFrame = {
-    install(df.sparkSession)
+  def withAutoRewrite(df: DataFrame): DataFrame =
     ColumnBridge.ofRows(df.sparkSession, WindowTopKRewrite(df.queryExecution.optimizedPlan))
-  }
 
   import graft.{QueryDef, Tables}
   import org.apache.spark.sql.functions._
@@ -499,7 +488,8 @@ private[plans] object TopKHeaps {
 
 /** Map-side combine: emits each input partition's per-group top-k survivors
   * (unranked — ranking needs the group complete). No required distribution,
-  * so it runs before the exchange on whatever partitioning the child has.
+  * so it runs before the exchange on whatever partitioning the child has, and
+  * keeps that partitioning: it filters rows within each partition.
   */
 case class TopKPerGroupPartialExec(
     k: Int,
@@ -511,6 +501,7 @@ case class TopKPerGroupPartialExec(
     ascending: Boolean = false) extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val (childOutput, kL, gL, sL, tL, dL, aL) = (child.output, k, groupExprs, sortExpr, tieExpr, dedup, ascending)
@@ -548,6 +539,8 @@ case class TopKPerGroupExec(
 
   override def output: Seq[Attribute] = child.output :+ rankAttr
   override def producedAttributes: AttributeSet = AttributeSet(rankAttr)
+  // ranks rows within each partition, so the child's partitioning holds
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   // co-locate each group's rows on one partition; Spark inserts the exchange
   override def requiredChildDistribution: Seq[Distribution] =

@@ -28,16 +28,17 @@ import org.apache.spark.sql.functions._
   *
   * The SSE route replays the reference's tail loop: each round emits the
   * events with `event_id > cursor` in id order, at most [[Round]] of them,
-  * one `data:` frame per event, advances the cursor and sleeps. A
-  * connection prefetches instead of querying per round: one
-  * [[graft.streaming.Ingest.changeFeed]] query for `Round × rounds-left`
-  * events fills a buffer, held with the [[graft.sources.Listing]] of the
-  * feed's files read before the query, and rounds are served from it. A
-  * round queries again only when the listing has changed, or when the
-  * buffer is used up and the last query did not reach the end of the
-  * table; so every frame is the one a per-round query would have sent. (The
-  * cursor is a literal that Spark inlines into generated code, so a
-  * per-round query also compiled new classes every round.)
+  * one `data:` frame per event, advances the cursor and sleeps. Rounds are
+  * served from a buffer the server's connections share ([[Feed]]): one
+  * [[graft.streaming.Ingest.changeFeed]] query for [[FeedRows]] events,
+  * held with the [[graft.sources.Listing]] of the feed's files read before
+  * the query. A round queries again only when the listing has changed, or
+  * when the buffer does not hold the round (its cursor is before the
+  * buffer's start, or past its end short of the table's end); so every
+  * frame is the one a per-round query would have sent, and a reconnect from
+  * a cursor inside the buffer runs no query. (The cursor is a literal that
+  * Spark inlines into generated code, so each query with a new cursor
+  * compiles new classes.)
   *
   * `/metrics` reports the cache's per-entry requests, hits, misses and
   * latency, the SSE route's connections, rounds and feed queries, and each
@@ -63,6 +64,12 @@ object HttpServing {
   /** Events per SSE round: the reference's `LIMIT 50`. */
   val Round = 50
 
+  /** Rounds per connection, at most. */
+  private val MaxRounds = 100
+
+  /** Events one change-feed query buffers: a whole connection's rounds. */
+  val FeedRows: Int = Round * MaxRounds
+
   /** The SSE route's counters: connections served, rounds run and change-feed
     * queries, so `rounds / feed_queries` is the rounds one query served.
     */
@@ -84,7 +91,8 @@ object HttpServing {
     Serving.endpoints.keys.foreach { route =>
       server.createContext(route, exact(route)(ex => respond(ex, 200, cache.body(route))))
     }
-    server.createContext("/api/stream", exact("/api/stream")(sseHandler(spark, dir, sse)))
+    val feed = new Feed(spark, dir, sse.feedQueries)
+    server.createContext("/api/stream", exact("/api/stream")(sseHandler(feed, sse)))
     server.createContext("/health", exact("/health")(respond(_, 200, """{"status":"ok"}""")))
     server.createContext("/metrics", exact("/metrics")(ex =>
       respond(ex, 200, mapper.writeValueAsString(Map(
@@ -130,16 +138,15 @@ object HttpServing {
     * Bounded rounds (the reference loops forever; a bound keeps the handler
     * testable and the executor pool drainable) — a dashboard client simply
     * reconnects with its last seen id, which is also the reference's
-    * reconnect semantics. The 100-round cap bounds a connection's buffer at
-    * 100 × [[Round]] rows.
+    * reconnect semantics. At most [[MaxRounds]] rounds.
     */
-  private def sseHandler(spark: SparkSession, dir: String, stats: SseStats)(ex: HttpExchange): Unit = {
+  private def sseHandler(feed: Feed, stats: SseStats)(ex: HttpExchange): Unit = {
     val p = queryParams(ex)
     Seq("last_id", "rounds", "interval_ms").find(k => p.get(k).exists(_.toLongOption.isEmpty)) match {
       case Some(bad) => error(ex, 400, s"$bad must be an integer")
       case None =>
         def param(k: String, default: Long): Long = p.get(k).fold(default)(_.toLong)
-        val rounds = math.min(param("rounds", 3L), 100L).toInt
+        val rounds = math.min(param("rounds", 3L), MaxRounds.toLong).toInt
         val intervalMs = math.max(0L, math.min(param("interval_ms", 200L), 10000L))
         ex.getResponseHeaders.add("Content-Type", "text/event-stream")
         ex.getResponseHeaders.add("Cache-Control", "no-cache")
@@ -148,11 +155,13 @@ object HttpServing {
         // past the headers a failure can only end the stream early
         try {
           val os = ex.getResponseBody
-          val feed = new Feed(spark, dir, param("last_id", -1L), stats.feedQueries)
+          var cursor = param("last_id", -1L)
           var r = 0
           while (r < rounds) {
-            feed.next(rounds - r).foreach(json => os.write(s"data: $json\n\n".getBytes(UTF_8)))
+            val out = feed.round(cursor)
+            out.foreach { case (_, json) => os.write(s"data: $json\n\n".getBytes(UTF_8)) }
             os.flush()
+            out.lastOption.foreach(e => cursor = e._1)
             r += 1
             stats.rounds.incrementAndGet()
             if (r < rounds) Thread.sleep(intervalMs)
@@ -163,47 +172,44 @@ object HttpServing {
     }
   }
 
-  /** One SSE connection's change feed from `cursor` on: a buffer of (event_id,
-    * JSON) rows in id order, from the last feed query, and the listing of the
-    * feed's files read before that query. `roots` is null before the first
-    * query, then the feed plan's file roots, or None when it reads something
-    * other than files (then every round queries).
+  /** The server's change feed, shared by its SSE connections: the first at
+    * most [[FeedRows]] events with `event_id > from`, as (event_id, JSON) in
+    * id order, from the last feed query, and the listing of the feed's files
+    * read before that query. `roots` is null before the first query, then
+    * the feed plan's file roots, or None when it reads something other than
+    * files (then every round queries).
     */
-  private final class Feed(spark: SparkSession, dir: String, private var cursor: Long,
-      queries: AtomicLong) {
+  private final class Feed(spark: SparkSession, dir: String, queries: AtomicLong) {
     private var roots: Option[Seq[Path]] = _
     private var version: Listing.Files = _
+    private var from = Long.MaxValue
     private var rows = IndexedSeq.empty[(Long, String)]
-    private var pos = 0
-    private var reachedEnd = false
+    private var complete = false
 
-    /** The JSON of the next at most [[Round]] events with `event_id > cursor`;
-      * `left` rounds remain, this one included.
-      */
-    def next(left: Int): Seq[String] = {
-      // a buffered row at or below the cursor was sent, or repeats the last
-      // sent id, which a per-round query would skip too
-      while (pos < rows.size && rows(pos)._1 <= cursor) pos += 1
-      val changed = roots match {
-        case null | None => true
-        case Some(files) => Listing.of(files) != version
-      }
-      if (changed || (pos == rows.size && !reachedEnd)) query(Round * left)
-      val out = rows.slice(pos, pos + Round)
-      pos += out.size
-      out.lastOption.foreach(r => cursor = r._1)
-      out.map(_._2)
+    /** The next at most [[Round]] events with `event_id > cursor`. */
+    def round(cursor: Long): IndexedSeq[(Long, String)] = synchronized {
+      if (!holds(cursor)) query(cursor)
+      val start = rows.indexWhere(_._1 > cursor) match { case -1 => rows.size; case i => i }
+      rows.slice(start, start + Round)
     }
 
-    private def query(limit: Int): Unit = {
-      val feed = graft.streaming.Ingest.changeFeed(spark, dir, cursor, limit)
+    /** Whether the buffer holds the round after `cursor` for the files as
+      * they are now: it starts at or before the cursor, and it holds a whole
+      * round past it or every event past its start.
+      */
+    private def holds(cursor: Long): Boolean =
+      roots != null && from <= cursor && (complete || rows.count(_._1 > cursor) >= Round) &&
+        roots.exists(files => Listing.of(files) == version)
+
+    private def query(cursor: Long): Unit = {
+      val feed = graft.streaming.Ingest.changeFeed(spark, dir, cursor, FeedRows)
       if (roots == null) roots = ResultCache.fileRoots(feed.queryExecution.analyzed)
       version = roots.map(Listing.of).orNull
       // one collect: the event_id cursor and the JSON payload together
       rows = feed.select(col("event_id"), to_json(struct(feed.columns.toIndexedSeq.map(col): _*)))
         .collect().toIndexedSeq.map(r => (r.getLong(0), r.getString(1)))
-      pos = 0
-      reachedEnd = rows.size < limit
+      from = cursor
+      complete = rows.size < FeedRows
       queries.incrementAndGet()
     }
   }

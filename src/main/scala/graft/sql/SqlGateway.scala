@@ -32,7 +32,9 @@ object SqlGateway {
     }
   }
 
-  /** Register the testdata tables as temp views + dialect functions, then run. */
+  /** Register the testdata tables as temp views, then run. Reading the tables
+    * installs the dialect functions ([[graft.Extensions]]).
+    */
   def execute(spark: SparkSession, dir: String, sql: String): DataFrame =
     validate(sql) match {
       case Left(err) => throw new IllegalArgumentException(s"rejected query: $err")
@@ -44,7 +46,6 @@ object SqlGateway {
           "lineitem" -> t.lineitem, "events" -> t.events,
           "documents" -> t.documents, "embeddings" -> t.embeddings,
         ).foreach { case (n, df) => df.createOrReplaceTempView(n) }
-        Dialect.register(spark)
         spark.sql(Dialect.translate(q))
     }
 
@@ -67,7 +68,6 @@ object SqlGateway {
         |LIMIT 10""".stripMargin,
     ) { (spark, dir) =>
       graft.sources.DemoSchema.register(spark, dir)
-      Dialect.register(spark)
       spark.sql(Dialect.translate(
         """SELECT country,
           |  count() AS total_users,
@@ -89,7 +89,6 @@ object SqlGateway {
         |ORDER BY order_month""".stripMargin,
     ) { (spark, dir) =>
       graft.sources.DemoSchema.register(spark, dir)
-      Dialect.register(spark)
       spark.sql(Dialect.translate(
         """SELECT CAST(toYYYYMM(order_date) AS BIGINT) AS order_month,
           |  count() AS orders,
@@ -113,7 +112,6 @@ object SqlGateway {
         |LIMIT 500""".stripMargin,
     ) { (spark, dir) =>
       graft.sources.DemoSchema.register(spark, dir)
-      Dialect.register(spark)
       spark.sql(Dialect.translate(
         """SELECT user_id,
           |  toStartOfInterval(event_timestamp, INTERVAL 30 MINUTE) AS session_start,
@@ -146,7 +144,6 @@ object SqlGateway {
     ) { (spark, dir) =>
       graft.streaming.MvCascade.mv(spark, dir, "mv_user_funnel")
         .createOrReplaceTempView("mv_user_funnel")
-      Dialect.register(spark)
       spark.sql(Dialect.translate(
         """SELECT countMerge(total_events) AS total_events,
           |  sumMerge(views) AS views,

@@ -72,11 +72,11 @@ object Ingest {
     * bounded batch — the reference's SSE tail loop
     * (`WHERE event_id > $last ORDER BY event_id LIMIT 50`). The monotonic-id
     * predicate prunes via parquet column stats; at scale the sort is a
-    * TakeOrderedAndProject, never a full sort. The SSE route asks for
-    * several rounds' worth at once (`limit` = 50 × rounds left, at most
-    * 5,000) and serves the rounds from that buffer while the events files
-    * are unchanged ([[graft.sql.HttpServing]]): `lastSeenId` is inlined into
-    * the generated code, so each query with a new cursor compiles anew.
+    * TakeOrderedAndProject, never a full sort. The SSE route asks for a
+    * whole connection's worth at once (`limit` = 5,000) and serves every
+    * connection's rounds from that buffer while the events files are
+    * unchanged ([[graft.sql.HttpServing]]): `lastSeenId` is inlined into the
+    * generated code, so each query with a new cursor compiles anew.
     */
   def changeFeed(spark: SparkSession, dir: String, lastSeenId: Long, limit: Int = 50): DataFrame =
     Tables(spark, dir).events

@@ -51,9 +51,8 @@ object GenScale {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "target/testdata/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = graft.GraftSession.builder("graft-genscale", src)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
+    val spark = graft.GraftSession.session("graft-genscale", src,
+      conf = Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     spark.sparkContext.setLogLevel("WARN")
     run(spark, src, dst, factor)
     spark.stop()

@@ -7,16 +7,18 @@ class CatalogSpec extends SparkSpec {
     assert(names.distinct.size == names.size)
   }
 
+  // on the distributed twin: the flags describe plans for inputs larger than
+  // one file split
   test("every entry has unique column names and only its allowlisted plan flags") {
     def show(fs: Set[String]) = fs.toSeq.sorted.mkString("{", ", ", "}")
     val wrong = Catalog.all.flatMap { d =>
-      val df = d.build(spark, sf())
+      val df = d.build(distributed, sf())
       // The driver sorts columns by name before hashing — duplicate names
       // would make the compare ambiguous.
       val cols = df.columns
       assert(cols.distinct.length == cols.length, s"${d.name} has duplicate columns: ${cols.mkString(",")}")
       val plan = df.queryExecution.executedPlan.toString
-      Residency.release(spark) // eager checkpoints materialize during build
+      Residency.release(distributed) // eager checkpoints materialize during build
       val flags = PlanFlags.Flags.filter(plan.contains).toSet
       val allowed = PlanFlags.allowed.getOrElse(d.name, Set.empty).map(_.flag)
       if (flags == allowed) None else Some(s"${d.name}: plans ${show(flags)}, allowed ${show(allowed)}")

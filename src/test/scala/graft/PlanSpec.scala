@@ -4,12 +4,13 @@ package graft
   * dimension is joined, pushdown reaching the parquet scan, top-K planning as
   * TakeOrderedAndProject, map-literal dictionaries joining nothing. A
   * regression here means a future change silently bought a shuffle or a full
-  * scan that small-SF correctness tests would never notice.
+  * scan that small-SF correctness tests would never notice. Plans are taken
+  * on the distributed twin, where no input fits in one file split.
   */
 class PlanSpec extends SparkSpec {
 
   private def plan(name: String): String =
-    Catalog.byName(name).build(spark, sf()).queryExecution.executedPlan.toString
+    Catalog.byName(name).build(distributed, sf()).queryExecution.executedPlan.toString
 
   test("dimension enrichment joins broadcast") {
     assert(plan("q02_region_rollup").contains("BroadcastHashJoin"))

@@ -59,9 +59,9 @@ class SessionHygieneSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
-  test("src/main assigns spark.experimental only in TopKPerGroup.install") {
+  test("src/main assigns spark.experimental only in Extensions.install") {
     val hits = scan("src/main", """\bexperimental\.\w+\s*=(?!=)""".r)
-      .filterNot(h => fileName(h) == "TopKPerGroup.scala" && h.enclosingDef == "install")
+      .filterNot(h => fileName(h) == "Extensions.scala" && h.enclosingDef == "install")
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +12,22 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession =
-    GraftSession.builder(getClass.getSimpleName, sf(), cpus = 4)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
+    GraftSession.session(getClass.getSimpleName, sf(), cpus = 4, conf = Map(
+      "spark.sql.warehouse.dir" -> Files.createTempDirectory("graft_warehouse").toString))
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** A clone of [[spark]] whose file split is smaller than any sf0.001 table,
+    * so [[graft.plans.SmallInputs]] never applies: its plans take the shape
+    * they have for inputs larger than one split, with the exchanges and
+    * broadcasts the 100 TB posture tests look for.
+    */
+  lazy val distributed: SparkSession = {
+    val clone = org.apache.spark.sql.graftbridge.ColumnBridge.cloneSession(spark)
+    val smallest = Files.list(Paths.get(sf())).iterator().asScala.map(Files.size).min
+    clone.conf.set("spark.sql.files.maxPartitionBytes", (smallest - 1).toString)
+    clone
+  }
 
   /** A private copy of the sf0.001 tables, so a test may rewrite one. */
   def tableCopy(): String = {

@@ -4,10 +4,9 @@ import graft.SparkSpec
 
 class DialectSpec extends SparkSpec {
 
-  private def sql1(q: String): Any = {
-    Dialect.register(spark)
+  // the spec session has the dialect functions (GraftSession installs them)
+  private def sql1(q: String): Any =
     spark.sql(Dialect.translate(q)).collect()(0).get(0)
-  }
 
   test("toYYYYMM") {
     assert(sql1("SELECT toYYYYMM(DATE '2024-03-15')") == 202403)

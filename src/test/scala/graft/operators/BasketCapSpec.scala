@@ -21,25 +21,27 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   3. the plan keeps the scale posture: map-side partial heap bounds the
   *      exchange, the self-join shares one exchange (ReusedExchange), and
   *      nothing degenerates to a cartesian product.
+  *
+  * All run on the distributed twin, where no input fits in one file split.
   */
 class BasketCapSpec extends SparkSpec {
 
   private def registerViews(): Unit =
     for (t <- Seq("lineitem", "orders", "part"))
-      spark.read.parquet(s"${sf()}/$t.parquet").createOrReplaceTempView(t)
+      distributed.read.parquet(s"${sf()}/$t.parquet").createOrReplaceTempView(t)
 
   test("q15/q17 match their capped oracle SQL run through Spark SQL") {
     registerViews()
     for (name <- Seq("q15_market_basket", "q17_product_affinity")) {
       val d = Catalog.byName(name)
-      val got = d.build(spark, sf()).collect().toSeq
-      val exp = spark.sql(d.oracle).collect().toSeq
+      val got = d.build(distributed, sf()).collect().toSeq
+      val exp = distributed.sql(d.oracle).collect().toSeq
       assert(got == exp, s"$name diverges from its oracle SQL")
     }
   }
 
   test("cap truncates a key that exceeds it") {
-    import spark.implicits._
+    import distributed.implicits._
     // one hot key with 10 items, one normal key with 2
     val df = ((1 to 10).map(i => (1L, i.toLong)) ++ Seq((2L, 5L), (2L, 9L)))
       .toDF("k", "item")
@@ -69,13 +71,13 @@ class BasketCapSpec extends SparkSpec {
         if (fn == "localCheckpoint") snaps.add(finalPlan(qe))
       override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.listenerManager.register(l)
+    distributed.listenerManager.register(l)
     try {
-      val df = Catalog.byName(name).build(spark, sf())
+      val df = Catalog.byName(name).build(distributed, sf())
       df.collect()
-      BusProbe.drain(spark.sparkContext)
+      BusProbe.drain(distributed.sparkContext)
       (finalPlan(df.queryExecution), snaps.asScala.toSeq)
-    } finally spark.listenerManager.unregister(l)
+    } finally distributed.listenerManager.unregister(l)
   }
 
   test("capped pair-join plan: map-side heap, shared exchange, no cartesian") {
@@ -103,11 +105,11 @@ class BasketCapSpec extends SparkSpec {
     registerViews()
     val initKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     try {
-      spark.conf.set(initKey, "4")
-      Catalog.byName("q15_market_basket").build(spark, sf())
-      Catalog.byName("q17_product_affinity").build(spark, sf())
-      assert(spark.conf.get(initKey).toInt == 4,
+      distributed.conf.set(initKey, "4")
+      Catalog.byName("q15_market_basket").build(distributed, sf())
+      Catalog.byName("q17_product_affinity").build(distributed, sf())
+      assert(distributed.conf.get(initKey).toInt == 4,
         "a pair entry silently re-grew the per-job reducer raise")
-    } finally spark.conf.unset(initKey)
+    } finally distributed.conf.unset(initKey)
   }
 }

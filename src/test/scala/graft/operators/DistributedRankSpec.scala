@@ -4,10 +4,11 @@ import graft.{Catalog, SparkSpec, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** On the distributed twin: the rank's plan is for inputs larger than one file split. */
 class DistributedRankSpec extends SparkSpec {
 
   test("distributed global rank equals single-partition window rank") {
-    val cust = Tables(spark, sf()).customer
+    val cust = Tables(distributed, sf()).customer
     val viaWindow = cust
       .withColumn("rank", row_number().over(Window.orderBy("c_acctbal", "c_custkey")).cast("long"))
       .select("c_custkey", "rank")
@@ -20,7 +21,7 @@ class DistributedRankSpec extends SparkSpec {
   }
 
   test("distributed rank plan has no single-partition window stage") {
-    val cust = Tables(spark, sf()).customer
+    val cust = Tables(distributed, sf()).customer
     val plan = DistributedRank
       .withGlobalRank(cust, "rank", col("c_acctbal"), col("c_custkey"))
       .queryExecution.executedPlan.toString
@@ -30,9 +31,9 @@ class DistributedRankSpec extends SparkSpec {
   }
 
   test("q36 matches q22 values exactly") {
-    val q22 = Catalog.byName("q22_customer_percentiles").build(spark, sf())
+    val q22 = Catalog.byName("q22_customer_percentiles").build(distributed, sf())
       .collect().map(r => (r.getLong(0), r.getDouble(2), r.getLong(3))).toSet
-    val q36 = Catalog.byName("q36_distributed_percentiles").build(spark, sf())
+    val q36 = Catalog.byName("q36_distributed_percentiles").build(distributed, sf())
       .collect().map(r => (r.getLong(0), r.getDouble(2), r.getLong(3))).toSet
     assert(q36 == q22)
   }

@@ -25,7 +25,7 @@ class TopKPerGroupSpec extends SparkSpec {
   }
 
   test("physical plan uses TopKPerGroupExec with a clustered exchange, no sort") {
-    val t = Tables(spark, sf())
+    val t = Tables(distributed, sf())
     val rev = t.lineitem.groupBy("l_partkey", "l_suppkey")
       .agg(sum("l_quantity").cast("double").as("qty"))
     val plan = TopKPerGroup.topK(rev, Seq("l_suppkey"), "qty", "l_partkey", 3)

@@ -55,7 +55,6 @@ class GatewaySpec extends SparkSpec {
   }
 
   test("formatReadableSize matches ClickHouse rendering") {
-    graft.functions.Dialect.register(spark)
     val got = spark.sql(
       "SELECT formatReadableSize(999), formatReadableSize(1024), " +
         "formatReadableSize(1536), formatReadableSize(1073741824), formatReadableSize(0)")

@@ -141,8 +141,9 @@ class ServingSpec extends SparkSpec {
 
   test("on unchanged files one SSE connection runs one feed query and compiles nothing after its first round") {
     val rounds = 4
+    // table footers warm, on a server of its own: a server's connections share its feed buffer
+    withServer(sf())(base => sseFrames(s"$base/api/stream?last_id=-1&rounds=1&interval_ms=0")())
     withServer(sf()) { base =>
-      sseFrames(s"$base/api/stream?last_id=-1&rounds=1&interval_ms=0")() // table footers warm
       var afterFirst = -1L
       val (frames, _, executions) = workOf {
         sseFrames(s"$base/api/stream?last_id=-1&rounds=$rounds&interval_ms=200") { n =>
@@ -154,8 +155,26 @@ class ServingSpec extends SparkSpec {
       assert(executions == 1, s"$rounds rounds ran $executions SQL executions")
       assert(compiled == 0, s"rounds 2-$rounds compiled $compiled classes")
       val sse = metrics(base).get("sse")
-      assert(sse.get("connections").asLong == 2 && sse.get("rounds").asLong == rounds + 1 &&
-        sse.get("feed_queries").asLong == 2, sse)
+      assert(sse.get("connections").asLong == 1 && sse.get("rounds").asLong == rounds &&
+        sse.get("feed_queries").asLong == 1, sse)
+    }
+  }
+
+  test("on unchanged files a reconnect from inside the feed buffer runs no query and compiles nothing") {
+    withServer(sf()) { base =>
+      val first = sseFrames(s"$base/api/stream?last_id=-1&rounds=2&interval_ms=0")()
+      assert(first.size == 2 * Round)
+      val last = eventId(first.last)
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (frames, _, executions) = workOf {
+        sseFrames(s"$base/api/stream?last_id=$last&rounds=3&interval_ms=0")()
+      }
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+      assert(executions == 0, s"the reconnect ran $executions SQL executions")
+      assert(compiled == 0, s"the reconnect compiled $compiled classes")
+      assert(frames == perRoundFrames(sf(), last, 3).flatten)
+      val sse = metrics(base).get("sse")
+      assert(sse.get("connections").asLong == 2 && sse.get("feed_queries").asLong == 1, sse)
     }
   }
 
