@@ -56,28 +56,6 @@ object Analytics {
       df.select(keyCol, itemCol), Seq(keyCol), itemCol, cap)
       .drop("rnk")
 
-  /** REMOVED in round 11: the r9/r10 pair-mass shuffle sizing
-    * (pairMassUpperBound + sizePairShuffle — raise this job's AQE
-    * initialPartitionNum to pairMass/1M reducers, the local[] stand-in for
-    * per-job shuffle sizing). A monotonic isolated-process min-of-3 A/B
-    * falsified its premise on this box (SCALE.md §0f.3):
-    *
-    *   q17 sf10: 150 parts (input-derived, no raise) 155.1 s
-    *             433 parts 270.3 s · 1024 parts 324.6 s
-    *   q17 sf3:   39 parts 37.6 s · 394 parts 38.7 s
-    *
-    * On a fixed-width box, reducers beyond the input-derived count add only
-    * task scheduling + shuffle-file overhead: concurrency is pinned at the
-    * core count, and the per-reducer aggregation state the sizing tried to
-    * bound (1 M groups ≈ 64 MB) spills GRACEFULLY at 8 M groups/reducer —
-    * the map-side partial, not the reducer hash map, owns the spill
-    * (§0f.0's slice A/B: the whole stage's residual is 32-thread memory
-    * contention, distribution-safe). On a real cluster, per-job reducer
-    * sizing belongs to the scheduler (reducer count tracks executor slots,
-    * which DO grow with the job); encoding it as a local conf raise was
-    * modeling a resource the box doesn't have.
-    */
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----- q14: date-spine LEFT JOIN gap filling (J5/S6 — sample_queries.sql:370–383).

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, Residency, Tables}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,19 +20,7 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  // Same Knuth multiplicative constant as Sampling's permille buckets.
-  // The bucket is ((rep % 1000) * A) % 1000 — identical to (rep*A) % 1000
-  // for every id (A·rep mod 1000 depends only on rep mod 1000) but immune
-  // to int64 overflow at rep > ~3.47e9, where DuckDB raises while Spark
-  // wraps (ADVICE r8). Note the same algebra means the permille bucket is
-  // effectively a fixed permutation of rep mod 1000 (2654435761 ≡ 761 mod
-  // 1000): split FRACTIONS are exact for any id population that covers
-  // residues evenly (sequential ids, hashes), and a stride-1000-replicated
-  // id family would need a pre-hash (xxhash64 both engines) — documented
-  // trade, same idiom as Sampling's buckets.
-  private[pipeline] val KnuthA = 2654435761L
-
-  // sp01 split fractions in permille of the hash space.
+  // sp01 split fractions in permille of the Knuth bucket space.
   private[pipeline] val TrainUpper = 800L
   private[pipeline] val ValidUpper = 900L
 
@@ -39,35 +28,68 @@ object Curation {
   // corpus's own model) falls below this is out-of-distribution text.
   private[pipeline] val Lm01Flag = 0.25
 
-  /** lm01's oracle chain ending in `lmsc(doc_id, n_bigrams, avg_prob,
-    * min_prob)` — the per-doc naturalness scores, shared with cur01's
-    * curriculum ranking.
+  /** dd09's segment dedup over `text` in `docs`: per doc_id, its 5-word
+    * segment count `n_segs`, the count `n_kept` of its segments that are the
+    * corpus-wide first occurrence (ordered by doc_id, then segment index),
+    * and those segments re-joined in order as `cleaned` ("" when none
+    * survive).
     */
-  private lazy val lm01Ctes: String =
-    """bg AS (
-      |  SELECT doc_id, unnest(list_transform(generate_series(1, length(text) - 1),
-      |    i -> substring(text, i, 2))) AS bg
-      |  FROM documents),
-      |inst AS (SELECT doc_id, bg, COUNT(*) AS c FROM bg GROUP BY 1, 2),
-      |model AS (SELECT bg, CAST(SUM(c) AS BIGINT) AS c_bg FROM inst GROUP BY 1),
-      |uni AS (SELECT substring(bg, 1, 1) AS c1, CAST(SUM(c_bg) AS BIGINT) AS c_uni
-      |  FROM model GROUP BY 1),
-      |p AS (SELECT m.bg, CAST(c_bg AS DOUBLE) / c_uni AS prob
-      |  FROM model m JOIN uni u ON substring(m.bg, 1, 1) = u.c1),
-      |lmsc AS (SELECT i.doc_id,
-      |    CAST(SUM(i.c) AS BIGINT) AS n_bigrams,
-      |    round(SUM(i.c * p.prob) / SUM(i.c), 9) AS avg_prob,
-      |    MIN(p.prob) AS min_prob
-      |  FROM inst i JOIN p ON i.bg = p.bg
-      |  GROUP BY i.doc_id)""".stripMargin
+  private[pipeline] def segmentsKept(docs: DataFrame, text: String): DataFrame = {
+    val segs = docs
+      .select(col("doc_id"), split(col(text), " ").as("words"))
+      .select(col("doc_id"), posexplode(expr(
+        "transform(sequence(0, cast(ceil(size(words) / 5.0) as int) - 1)," +
+          " i -> array_join(slice(words, i*5 + 1, 5), ' '))")).as(Seq("idx", "seg")))
+    val rk = segs.withColumn("rn",
+      row_number().over(Window.partitionBy("seg").orderBy("doc_id", "idx")))
+    val keptInOrder = array_join(
+      transform(
+        array_sort(collect_list(when(col("rn") === 1, struct(col("idx"), col("seg"))))),
+        x => x.getField("seg")),
+      " ")
+    rk.groupBy("doc_id")
+      .agg(count(lit(1)).cast("long").as("n_segs"),
+        sum(when(col("rn") === 1, 1L).otherwise(0L)).cast("long").as("n_kept"),
+        keptInOrder.as("cleaned"))
+  }
 
-  /** Spark twin of [[lm01Ctes]]'s `lmsc`: (doc_id, n_bigrams, avg_prob,
+  /** Oracle twin of [[segmentsKept]] over `text` in `rel`, ending in
+    * `sgk(doc_id, n_segs, n_kept, cleaned)` (`cleaned` is NULL when no
+    * segment survives).
+    */
+  private[pipeline] def segmentCtes(rel: String, text: String): String =
+    s"""sgw AS (SELECT doc_id, string_split($text, ' ') AS words FROM $rel),
+       |sgi AS (SELECT doc_id, words,
+       |    generate_series(0, CAST(ceil(len(words) / 5.0) AS BIGINT) - 1) AS ids FROM sgw),
+       |sgs AS (SELECT doc_id, unnest(ids) AS idx,
+       |    unnest(list_transform(ids, i -> array_to_string(words[i*5+1 : i*5+5], ' '))) AS seg
+       |  FROM sgi),
+       |sgr AS (SELECT doc_id, idx, seg,
+       |    ROW_NUMBER() OVER (PARTITION BY seg ORDER BY doc_id, idx) AS rn
+       |  FROM sgs),
+       |sgk AS (SELECT doc_id,
+       |    CAST(COUNT(*) AS BIGINT) AS n_segs,
+       |    CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+       |    string_agg(seg, ' ' ORDER BY idx) FILTER (WHERE rn = 1) AS cleaned
+       |  FROM sgr GROUP BY doc_id)""".stripMargin
+
+  /** dd09's entry over any `(doc_id, text)` frame (shared with CurationSpec's
+    * planted-duplicate cases).
+    */
+  def segmentDedup(docs: DataFrame): DataFrame =
+    segmentsKept(docs, "text")
+      .select(col("doc_id"), col("n_segs"), col("n_kept"),
+        md5(col("cleaned").cast("binary")).as("cleaned_md5"))
+      .orderBy("doc_id")
+
+  /** lm01's character-bigram scores over `text` in `docs`, under the model
+    * the same frame's bigrams define: (doc_id, n_bigrams, avg_prob,
     * min_prob).
     */
-  private def lmScored(spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val inst = Tables(spark, dir).documents
+  private[pipeline] def lmScored(docs: DataFrame, text: String): DataFrame = {
+    val inst = docs
       .select(col("doc_id"),
-        explode(graft.functions.TextExpressions.charBigrams(col("text"))).as("bg"))
+        explode(graft.functions.TextExpressions.charBigrams(col(text))).as("bg"))
       .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
       .transform(Residency.snap) // feeds the model AND the scoring join
     val model = inst.groupBy("bg").agg(sum("c").cast("long").as("c_bg"))
@@ -82,27 +104,80 @@ object Curation {
         min("prob").as("min_prob"))
   }
 
-  /** dd09's core over any `(doc_id, text)` frame (shared with CurationSpec's
-    * planted-duplicate cases).
+  /** Oracle twin of [[lmScored]] over `text` in `rel`, ending in
+    * `lmsc(doc_id, n_bigrams, avg_prob, min_prob)`.
     */
-  def segmentDedup(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val segs = docs
-      .select(col("doc_id"), split(col("text"), " ").as("words"))
-      .select(col("doc_id"), posexplode(expr(
-        "transform(sequence(0, cast(ceil(size(words) / 5.0) as int) - 1)," +
-          " i -> array_join(slice(words, i*5 + 1, 5), ' '))")).as(Seq("idx", "seg")))
-    val rk = segs.withColumn("rn",
-      row_number().over(Window.partitionBy("seg").orderBy("doc_id", "idx")))
-    val keptInOrder = array_join(
-      transform(
-        array_sort(collect_list(when(col("rn") === 1, struct(col("idx"), col("seg"))))),
-        x => x.getField("seg")),
-      " ")
-    rk.groupBy("doc_id")
-      .agg(count(lit(1)).cast("long").as("n_segs"),
-        sum(when(col("rn") === 1, 1L).otherwise(0L)).cast("long").as("n_kept"),
-        md5(keptInOrder.cast("binary")).as("cleaned_md5"))
-      .orderBy("doc_id")
+  private[pipeline] def lmCtes(rel: String, text: String): String =
+    s"""bg AS (
+       |  SELECT doc_id, unnest(list_transform(generate_series(1, length($text) - 1),
+       |    i -> substring($text, i, 2))) AS bg
+       |  FROM $rel),
+       |inst AS (SELECT doc_id, bg, COUNT(*) AS c FROM bg GROUP BY 1, 2),
+       |model AS (SELECT bg, CAST(SUM(c) AS BIGINT) AS c_bg FROM inst GROUP BY 1),
+       |uni AS (SELECT substring(bg, 1, 1) AS c1, CAST(SUM(c_bg) AS BIGINT) AS c_uni
+       |  FROM model GROUP BY 1),
+       |p AS (SELECT m.bg, CAST(c_bg AS DOUBLE) / c_uni AS prob
+       |  FROM model m JOIN uni u ON substring(m.bg, 1, 1) = u.c1),
+       |lmsc AS (SELECT i.doc_id,
+       |    CAST(SUM(i.c) AS BIGINT) AS n_bigrams,
+       |    round(SUM(i.c * p.prob) / SUM(i.c), 9) AS avg_prob,
+       |    MIN(p.prob) AS min_prob
+       |  FROM inst i JOIN p ON i.bg = p.bg
+       |  GROUP BY i.doc_id)""".stripMargin
+
+  /** sel01's ranking input over `text` in `docs`: doc_id, the `carry`
+    * columns, `n_tokens` and tx02's `quality_score`.
+    */
+  private[pipeline] def budgetScored(docs: DataFrame, text: String, carry: String*): DataFrame = {
+    val words = split(col(text), " ")
+    docs.select((col("doc_id") +: carry.map(col)) ++ Seq(
+      size(words).cast("long").as("n_tokens"),
+      TextAnalysis.qualityScore(words).as("quality_score")): _*)
+  }
+
+  /** sel01's cut over a [[budgetScored]] frame: the running token total
+    * `cum_tokens` in (quality_score desc, doc_id) order, from
+    * DistributedRank's range-partition + broadcast-prefix running sum (no
+    * single-partition window), and `selected` while it stays within half
+    * the frame's tokens — a 1-row metadata scalar, so the cut is
+    * scale-invariant.
+    */
+  private[pipeline] def withTokenBudget(scored: DataFrame): DataFrame = {
+    val total = scored.agg(sum("n_tokens")).head()
+    val budget = if (total.isNullAt(0)) 0L else total.getLong(0) / 2
+    graft.operators.DistributedRank
+      .withRunningTotal(scored, "cum_tokens", "n_tokens",
+        col("quality_score").desc, col("doc_id"))
+      .withColumn("selected", col("cum_tokens") <= budget)
+  }
+
+  /** Oracle twin of [[budgetScored]] + [[withTokenBudget]] over `text` in
+    * `rel`, ending in `bud(doc_id, <carry>, n_tokens, quality_score,
+    * cum_tokens, selected)`.
+    */
+  private[pipeline] def budgetCtes(rel: String, text: String, carry: String*): String = {
+    val cs = carry.map(_ + ", ").mkString
+    s"""bw AS (SELECT doc_id, $cs string_split($text, ' ') AS words FROM $rel),
+       |bq AS (SELECT doc_id, $cs CAST(len(words) AS BIGINT) AS n_tokens,
+       |    ${TextAnalysis.qualityOfWordsSql} AS quality_score
+       |  FROM bw),
+       |bud AS (SELECT *, cum_tokens <= (SELECT SUM(n_tokens) // 2 FROM bq) AS selected FROM (
+       |  SELECT *, SUM(n_tokens) OVER (ORDER BY quality_score DESC, doc_id) AS cum_tokens
+       |  FROM bq))""".stripMargin
+  }
+
+  /** sp01's train/valid/test split of a document whose near-dup cluster
+    * representative is `rep`: its Knuth permille bucket against the split
+    * fractions.
+    */
+  private[pipeline] def splitOf(rep: Column): Column = {
+    val bkt = Sampling.bucket(rep)
+    when(bkt < TrainUpper, "train").when(bkt < ValidUpper, "valid").otherwise("test")
+  }
+  // oracle twin of splitOf
+  private[pipeline] def splitSql(rep: String): String = {
+    val bkt = Sampling.bucketSql(rep)
+    s"CASE WHEN $bkt < $TrainUpper THEN 'train' WHEN $bkt < $ValidUpper THEN 'valid' ELSE 'test' END"
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -124,20 +199,9 @@ object Curation {
     // so the oracle replays the exact grouping.
     QueryDef.sql(
       "dd09_segment_dedup",
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-        |seg AS (SELECT doc_id,
-        |    unnest(generate_series(0, CAST(ceil(len(words) / 5.0) AS BIGINT) - 1)) AS idx,
-        |    unnest(list_transform(generate_series(0, CAST(ceil(len(words) / 5.0) AS BIGINT) - 1),
-        |      i -> array_to_string(words[i*5+1 : i*5+5], ' '))) AS seg
-        |  FROM w),
-        |rk AS (SELECT doc_id, idx, seg,
-        |    ROW_NUMBER() OVER (PARTITION BY seg ORDER BY doc_id, idx) AS rn
-        |  FROM seg)
-        |SELECT doc_id,
-        |  CAST(COUNT(*) AS BIGINT) AS n_segs,
-        |  CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  md5(COALESCE(string_agg(seg, ' ' ORDER BY idx) FILTER (WHERE rn = 1), '')) AS cleaned_md5
-        |FROM rk GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+      s"""WITH ${segmentCtes("documents", "text")}
+         |SELECT doc_id, n_segs, n_kept, md5(COALESCE(cleaned, '')) AS cleaned_md5
+         |FROM sgk ORDER BY doc_id""".stripMargin,
     ) { (spark, dir) =>
       segmentDedup(Tables(spark, dir).documents)
     },
@@ -160,12 +224,12 @@ object Curation {
     // scoring join never shuffles the corpus.
     QueryDef.sql(
       "lm01_char_bigram_model",
-      s"""WITH $lm01Ctes
+      s"""WITH ${lmCtes("documents", "text")}
          |SELECT doc_id, n_bigrams, avg_prob, min_prob,
          |  avg_prob < $Lm01Flag AS flagged
          |FROM lmsc ORDER BY doc_id""".stripMargin,
     ) { (spark, dir) =>
-      lmScored(spark, dir)
+      lmScored(Tables(spark, dir).documents, "text")
         .select(col("doc_id"), col("n_bigrams"), col("avg_prob"), col("min_prob"),
           (col("avg_prob") < Lm01Flag).as("flagged"))
         .orderBy("doc_id")
@@ -181,7 +245,7 @@ object Curation {
     // integer arithmetic on the rank, so both engines agree bit-for-bit.
     QueryDef.sql(
       "cur01_curriculum_phases",
-      s"""WITH $lm01Ctes,
+      s"""WITH ${lmCtes("documents", "text")},
          |r AS (SELECT doc_id, avg_prob,
          |    CAST(ROW_NUMBER() OVER (ORDER BY avg_prob DESC, doc_id) AS BIGINT) AS rnk
          |  FROM lmsc),
@@ -190,7 +254,7 @@ object Curation {
          |  CAST(((rnk - 1) * 3) // n AS BIGINT) AS phase
          |FROM r, nn ORDER BY doc_id""".stripMargin,
     ) { (spark, dir) =>
-      val sc = lmScored(spark, dir).select(col("doc_id"), col("avg_prob"))
+      val sc = lmScored(Tables(spark, dir).documents, "text").select(col("doc_id"), col("avg_prob"))
       val n = sc.count() // 1-row metadata scalar (sel01's budget class)
       graft.operators.DistributedRank
         .withGlobalRank(sc, "rnk", col("avg_prob").desc, col("doc_id"))
@@ -209,33 +273,14 @@ object Curation {
     // derived from the data so the entry is scale-invariant.
     QueryDef.sql(
       "sel01_token_budget_select",
-      s"""WITH ${TextAnalysis.qualityCtes},
-         |t AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |j AS (SELECT t.doc_id, n_tokens, quality_score FROM t JOIN qs USING (doc_id)),
-         |c AS (SELECT doc_id, n_tokens, quality_score,
-         |    SUM(n_tokens) OVER (ORDER BY quality_score DESC, doc_id) AS cum_tokens
-         |  FROM j)
+      s"""WITH ${budgetCtes("documents", "text")}
          |SELECT doc_id, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens, quality_score,
-         |  cum_tokens <= (SELECT SUM(n_tokens) // 2 FROM t) AS selected
-         |FROM c ORDER BY doc_id""".stripMargin,
+         |  selected
+         |FROM bud ORDER BY doc_id""".stripMargin,
     ) { (spark, dir) =>
-      val words = split(col("text"), " ")
-      val ttr = size(array_distinct(words)).cast("double") / size(words)
-      val swr = graft.functions.TextExpressions
-        .countInSet(words, TextAnalysis.stopEn).cast("double") / size(words)
-      val nWords = size(words)
-      val quality = ttr * 0.5 + swr * 0.3 +
-        when(nWords >= 20 && nWords <= 1000, 0.2).otherwise(0.0)
-      val j = Tables(spark, dir).documents
-        .select(col("doc_id"), nWords.cast("long").as("n_tokens"),
-          quality.as("quality_score"))
-      val budget = j.agg(sum("n_tokens")).head().getLong(0) / 2
-      graft.operators.DistributedRank
-        .withRunningTotal(j, "cum_tokens", "n_tokens",
-          col("quality_score").desc, col("doc_id"))
+      withTokenBudget(budgetScored(Tables(spark, dir).documents, "text"))
         .select(col("doc_id"), col("n_tokens"), col("cum_tokens").cast("long").as("cum_tokens"),
-          col("quality_score"), (col("cum_tokens") <= budget).as("selected"))
+          col("quality_score"), col("selected"))
         .orderBy("doc_id")
     },
 
@@ -255,21 +300,17 @@ object Curation {
       s"""WITH ${SparseText.clusterCtes}
          |SELECT d.doc_id,
          |  CAST(COALESCE(cl.cluster_id, d.doc_id) AS BIGINT) AS rep_id,
-         |  CAST(((COALESCE(cl.cluster_id, d.doc_id) % 1000) * $KnuthA) % 1000 AS BIGINT) AS bkt,
-         |  CASE WHEN ((COALESCE(cl.cluster_id, d.doc_id) % 1000) * $KnuthA) % 1000 < $TrainUpper THEN 'train'
-         |       WHEN ((COALESCE(cl.cluster_id, d.doc_id) % 1000) * $KnuthA) % 1000 < $ValidUpper THEN 'valid'
-         |       ELSE 'test' END AS split
+         |  CAST(${Sampling.bucketSql("COALESCE(cl.cluster_id, d.doc_id)")} AS BIGINT) AS bkt,
+         |  ${splitSql("COALESCE(cl.cluster_id, d.doc_id)")} AS split
          |FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id
          |ORDER BY d.doc_id""".stripMargin,
     ) { (spark, dir) =>
       val clusters = graft.Catalog.byName("ts02_dedup_clusters").build(spark, dir)
       val rep = coalesce(col("cluster_id"), col("doc_id"))
-      val bkt = pmod((rep % 1000L) * KnuthA, lit(1000L))
       Tables(spark, dir).documents
         .join(clusters, Seq("doc_id"), "left")
-        .select(col("doc_id"), rep.cast("long").as("rep_id"), bkt.cast("long").as("bkt"),
-          when(bkt < TrainUpper, "train").when(bkt < ValidUpper, "valid")
-            .otherwise("test").as("split"))
+        .select(col("doc_id"), rep.cast("long").as("rep_id"),
+          Sampling.bucket(rep).cast("long").as("bkt"), splitOf(rep).as("split"))
         .orderBy("doc_id")
     },
 
@@ -306,15 +347,13 @@ object Curation {
          |SELECT m.doc_id, CAST(m.rep AS BIGINT) AS rep_id,
          |  CAST(CASE WHEN rf.has_bench = 1 OR rf.has_contam = 1 THEN 1 ELSE 0 END AS BIGINT) AS quarantined,
          |  CASE WHEN rf.has_bench = 1 OR rf.has_contam = 1 THEN 'quarantine'
-         |       WHEN ((m.rep % 1000) * $KnuthA) % 1000 < $TrainUpper THEN 'train'
-         |       WHEN ((m.rep % 1000) * $KnuthA) % 1000 < $ValidUpper THEN 'valid'
-         |       ELSE 'test' END AS split
+         |       ELSE ${splitSql("m.rep")} END AS split
          |FROM mem m JOIN rf ON m.rep = rf.rep
          |WHERE m.doc_id % 20 <> 0
          |ORDER BY m.doc_id""".stripMargin,
     ) { (spark, dir) =>
       // cluster map and contamination verdicts derive independently; overlap
-      // their eager build jobs (guide §2.6)
+      // their eager build jobs
       val (clusters, cont0) = graft.Concurrently(spark,
         graft.Catalog.byName("ts02_dedup_clusters").build(spark, dir),
         graft.Catalog.byName("dc01_decontamination").build(spark, dir))
@@ -327,15 +366,11 @@ object Curation {
         .agg(max(when(col("doc_id") % 20 === 0, 1).otherwise(0)).as("has_bench"),
           max(coalesce(col("contaminated"), lit(0L))).as("has_contam"))
       val quarantined = col("has_bench") === 1 || col("has_contam") === 1
-      val bkt = pmod((col("rep") % 1000L) * KnuthA, lit(1000L))
       mem.join(rf, "rep")
         .filter(col("doc_id") % 20 =!= 0)
         .select(col("doc_id"), col("rep").cast("long").as("rep_id"),
           when(quarantined, 1L).otherwise(0L).as("quarantined"),
-          when(quarantined, "quarantine")
-            .when(bkt < TrainUpper, "train")
-            .when(bkt < ValidUpper, "valid")
-            .otherwise("test").as("split"))
+          when(quarantined, "quarantine").otherwise(splitOf(col("rep"))).as("split"))
         .orderBy("doc_id")
     },
 
@@ -412,7 +447,7 @@ object Curation {
          |k AS (
          |  SELECT s.doc_id, s.lang, s.importance,
          |    s.importance - mn.mn + 1e-9 AS w,
-         |    (((s.doc_id % 1048576 + 1048576) % 1048576) * $KnuthA) % 1048576 AS u
+         |    ${Sampling.bucketSql("s.doc_id", 1048576L)} AS u
          |  FROM scored s CROSS JOIN mn)
          |SELECT doc_id, lang, importance, CAST(u + 1 AS DOUBLE) / w AS rank
          |FROM k ORDER BY rank, doc_id LIMIT 100""".stripMargin,
@@ -422,7 +457,7 @@ object Curation {
       val mn = scored.agg(min("importance").as("mn"))
       scored.crossJoin(broadcast(mn))
         .select(col("doc_id"), col("lang"), col("importance"),
-          ((pmod(pmod(col("doc_id"), lit(1048576L)) * KnuthA, lit(1048576L)) + 1L).cast("double") /
+          ((Sampling.bucket(col("doc_id"), 1048576L) + 1L).cast("double") /
             (col("importance") - col("mn") + 1e-9)).as("rank"))
         .orderBy("rank", "doc_id").limit(100)
     },

@@ -266,7 +266,7 @@ object Dedup {
     // ----- dd01: exact dedup — hash-groupBy on full text; keeper = min doc_id.
     QueryDef.sql(
       "dd01_exact_dedup",
-      """WITH keep AS (SELECT text, MIN(doc_id) AS keeper, COUNT(*) AS copies FROM documents GROUP BY text)
+      s"""WITH keep AS (${keeperSql("documents")})
         |SELECT d.doc_id,
         |  CAST(CASE WHEN d.doc_id = k.keeper THEN 1 ELSE 0 END AS BIGINT) AS is_keeper,
         |  CAST(k.copies AS BIGINT) AS copies
@@ -537,7 +537,7 @@ object Dedup {
     // rather than the pairs? dd14 monitors it ~10× cheaper via sampling.
     QueryDef.sql(
       "dd06_embedding_neardup_lsh",
-      s"""WITH ${Similarity.bucketCtes},
+      s"""WITH ${Similarity.bucketCtes()},
          |cands AS (
          |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
          |  FROM bk a JOIN bk b ON b.table_id = a.table_id AND b.bucket = a.bucket
@@ -580,7 +580,7 @@ object Dedup {
     // wide family is hash-checked end-to-end like the shipping one.
     QueryDef.sql(
       "dd15_embedding_neardup_lsh_wide",
-      s"""WITH ${Similarity.bucketCtesFor(12, 16)},
+      s"""WITH ${Similarity.bucketCtes(12, 16)},
          |cands AS (
          |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
          |  FROM bk a JOIN bk b ON b.table_id = a.table_id AND b.bucket = a.bucket
@@ -595,9 +595,9 @@ object Dedup {
          |ORDER BY cosine DESC, vec_a, vec_b""".stripMargin,
     ) { (spark, dir) =>
       val e = Tables(spark, dir).embeddings
-      val bk = Similarity.bucketsFor(e, 12,
-        Similarity.adaptiveBitsFor(CorpusMeta.embeddingCount(spark, dir), 16),
-        CorpusMeta.embeddingMeans(spark, dir))
+      val bk = Similarity.buckets(e,
+        Similarity.adaptiveBits(CorpusMeta.embeddingCount(spark, dir), 16),
+        CorpusMeta.embeddingMeans(spark, dir), lp = 12)
       val a = bk.toDF("vec_a", "table_id", "bucket")
       val b = bk.toDF("vec_b", "table_id", "bucket")
       val cands = a.join(b, Seq("table_id", "bucket"))
@@ -633,13 +633,12 @@ object Dedup {
     // Thompson expansions. Accuracy/cost operating curve: SCALE.md §0e.
     QueryDef.sql(
       "dd14_sampled_confirm",
-      s"""WITH ${Similarity.bucketCtes},
+      s"""WITH ${Similarity.bucketCtes()},
          |cands AS (
          |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
          |  FROM bk a JOIN bk b ON b.table_id = a.table_id AND b.bucket = a.bucket
          |   AND a.vec_id < b.vec_id
-         |  WHERE ((((a.vec_id % 1048576) * 1048583 + (b.vec_id % 1048576)) % 1000)
-         |         * 2654435761) % 1000 < 100),
+         |  WHERE ${Sampling.bucketSql("((a.vec_id % 1048576) * 1048583 + (b.vec_id % 1048576))")} < 100),
          |conf AS (
          |  SELECT s.vec_a, s.vec_b,
          |    ${Similarity.cosSql("ea.embedding", "eb.embedding")} AS cosine
@@ -661,10 +660,9 @@ object Dedup {
       val a = bk.toDF("vec_a", "table_id", "bucket")
       val b = bk.toDF("vec_b", "table_id", "bucket")
       // modulo-first pair fingerprint: (vec % 2^20) terms keep every product
-      // inside int64 at ANY id (the Sampling.KnuthA doctrine)
-      val sampleKey = pmod(
-        pmod(pmod(col("vec_a"), lit(1048576L)) * 1048583L
-          + pmod(col("vec_b"), lit(1048576L)), lit(1000L)) * 2654435761L, lit(1000L))
+      // inside int64 at ANY id, as Sampling.bucket does for the hash itself
+      val sampleKey = Sampling.bucket(pmod(col("vec_a"), lit(1048576L)) * 1048583L
+        + pmod(col("vec_b"), lit(1048576L)))
       // sample gate BEFORE the distinct: map-side on the bucket join's
       // output, so only the drawn 10% ever reaches the dedup exchange
       val sampled = a.join(b, Seq("table_id", "bucket"))
@@ -789,8 +787,7 @@ object Dedup {
       s"""WITH ${graft.pipeline.SparseText.clusterCtes},
          |${graft.pipeline.TextAnalysis.qualityCtes},
          |${graft.pipeline.Clustering.sd01Ctes},
-         |ek AS (SELECT text, MIN(doc_id) AS keeper, COUNT(*) AS copies
-         |  FROM documents GROUP BY text),
+         |ek AS (${keeperSql("documents")}),
          |ex AS (SELECT d.doc_id,
          |    CASE WHEN d.doc_id = k.keeper THEN 1 ELSE 0 END AS is_keeper, k.copies
          |  FROM documents d JOIN ek k ON d.text = k.text),
@@ -932,14 +929,23 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Exact dedup verdict per document (shared with the dd01 entry and tests). */
-  def exactDedup(docs: DataFrame): DataFrame = {
+  /** dd01's keeper rule: `docs` joined to its text group's `keeper` (the
+    * min doc_id) and `copies` (the group size).
+    */
+  private[pipeline] def withKeeper(docs: DataFrame): DataFrame = {
     val keep = docs.groupBy("text")
       .agg(min("doc_id").as("keeper"), count(lit(1)).as("copies"))
     docs.join(keep, "text")
+  }
+  // oracle twin of withKeeper's per-text aggregate over `rel`
+  private[pipeline] def keeperSql(rel: String): String =
+    s"SELECT text, MIN(doc_id) AS keeper, COUNT(*) AS copies FROM $rel GROUP BY text"
+
+  /** Exact dedup verdict per document (shared with the dd01 entry and tests). */
+  def exactDedup(docs: DataFrame): DataFrame =
+    withKeeper(docs)
       .select(col("doc_id"),
         when(col("doc_id") === col("keeper"), 1L).otherwise(0L).as("is_keeper"),
         col("copies").cast("long").as("copies"))
       .orderBy("doc_id")
-  }
 }

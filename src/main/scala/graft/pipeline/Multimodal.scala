@@ -610,11 +610,8 @@ object Multimodal {
       .unionByName(audGate.select(lit("aud").as("kind"), col("media_id"),
         col("fingerprint").as("sig_hi"), col("amp_sum").as("sig_lo")))
       .withColumn("shard", pmod(col("media_id"), lit(4L)))
-    val out = s"target/export_pp04_${math.abs(dir.hashCode)}"
-    kept.write.mode("overwrite").partitionBy("kind", "shard").json(out)
-    val back = spark.read
-      .schema("media_id BIGINT, sig_hi BIGINT, sig_lo BIGINT, kind STRING, shard BIGINT")
-      .json(out)
+    val back = Sampling.exportedJsonl(kept, "pp04", dir,
+      "media_id BIGINT, sig_hi BIGINT, sig_lo BIGINT, kind STRING, shard BIGINT", "kind", "shard")
     val itemMd5 = md5(concat_ws(":", col("kind"), col("media_id"),
       col("sig_hi"), col("sig_lo")).cast("binary"))
     val chainMd5 = md5(concat_ws("",

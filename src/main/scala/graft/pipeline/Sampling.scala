@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Corpus subsampling and sequence packing — the selection stages of a
@@ -16,18 +16,57 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  // Knuth's multiplicative constant. MODULO-FIRST everywhere (ADVICE r9):
-  // (id mod M)·A ≡ id·A (mod M), and reducing the id before the multiply
-  // keeps the product ≤ (M−1)·A — overflow-immune at ANY id, where the
-  // direct id·A form silently wraps in Spark but RAISES in DuckDB for ids
-  // above ~3.47e9 (a latent engine divergence at 100 TB id ranges). Same
-  // fix sp01/sp02/pp03 took in r9 (Curation.KnuthA scaladoc).
+  // Knuth's multiplicative constant, applied MODULO-FIRST: (id mod M)·A ≡
+  // id·A (mod M), and reducing the id before the multiply keeps the product
+  // ≤ (M−1)·A — overflow-immune at ANY id, where the direct id·A form
+  // silently wraps in Spark but RAISES in DuckDB for ids above ~3.47e9.
+  // Since A ≡ 761 (mod 1000), a permille bucket is a fixed permutation of
+  // id mod 1000: fractions are exact for any id population that covers the
+  // residues evenly (sequential ids, hashes); a stride-1000-replicated id
+  // family would need a pre-hash (xxhash64 on both engines).
   private val KnuthA = 2654435761L
-  private def bucket1000 = pmod(pmod(col("doc_id"), lit(1000L)) * KnuthA, lit(1000L))
-  // oracle-side twin of bucket1000 (doc_id is non-negative, so the inner
+
+  /** Knuth hash bucket of `id` in [0, m): the permille sampling and split
+    * buckets (m = 1000) and the order-sampling uniforms (m = 2^20).
+    */
+  private[pipeline] def bucket(id: Column, m: Long = 1000L): Column =
+    pmod(pmod(id, lit(m)) * KnuthA, lit(m))
+  // oracle-side twin of bucket (ids are non-negative, so the inner
   // (x % m + m) % m wrap only defends hypothetical negative ids)
-  private def bucket1000Sql(idExpr: String) =
-    s"((($idExpr % 1000 + 1000) % 1000) * $KnuthA) % 1000"
+  private[pipeline] def bucketSql(id: String, m: Long = 1000L): String =
+    s"((($id % $m + $m) % $m) * $KnuthA) % $m"
+
+  /** sh01's epoch order over `docs` (which has a doc_id): its columns plus
+    * the seeded md5 `shuffle_key`, the 1-based epoch `position` from
+    * DistributedRank's global rank (no single-partition window) and the
+    * round-robin `shard` of `shards`.
+    */
+  private[pipeline] def epochShuffled(docs: DataFrame, shards: Long): DataFrame = {
+    val keyed = docs.withColumn("shuffle_key",
+      md5(concat(lit("ep7:"), col("doc_id").cast("string")).cast("binary")))
+    graft.operators.DistributedRank
+      .withGlobalRank(keyed, "position", col("shuffle_key"), col("doc_id"))
+      .withColumn("shard", pmod(col("position") - 1, lit(shards)).cast("long"))
+      .withColumn("position", col("position").cast("long"))
+  }
+  // oracle twin of epochShuffled: a subquery of rel's columns plus
+  // shuffle_key, position and shard
+  private[pipeline] def epochShuffledSql(rel: String, shards: Int): String =
+    s"""(SELECT *, (position - 1) % $shards AS shard FROM (
+       |  SELECT *, ROW_NUMBER() OVER (ORDER BY shuffle_key, doc_id) AS position FROM (
+       |    SELECT *, md5('ep7:' || CAST(doc_id AS VARCHAR)) AS shuffle_key FROM $rel)))""".stripMargin
+
+  /** ex01's sink: `df` written as line-delimited JSON partitioned by `by`
+    * (one directory per partition value, the layout a data loader maps to
+    * workers), then read back with `schema` (data columns, then `by`), so a
+    * result computed from the read-back witnesses the round trip.
+    */
+  private[pipeline] def exportedJsonl(df: DataFrame, tag: String, dir: String,
+      schema: String, by: String*): DataFrame = {
+    val out = s"target/export_${tag}_${math.abs(dir.hashCode)}"
+    df.write.mode("overwrite").partitionBy(by: _*).json(out)
+    df.sparkSession.read.schema(schema).json(out)
+  }
 
   // per-language sampling rates in permille: downsample dominant languages,
   // keep the tail — class-balance reweighting by deterministic selection
@@ -41,7 +80,7 @@ object Sampling {
     QueryDef.sql(
       "spl01_stratified_sample",
       s"""WITH b AS (
-         |  SELECT doc_id, lang, ${bucket1000Sql("doc_id")} AS bkt
+         |  SELECT doc_id, lang, ${bucketSql("doc_id")} AS bkt
          |  FROM documents),
          |r(lang, permille) AS (VALUES ${ratesPermille.map { case (l, p) => s"('$l', $p)" }.mkString(", ")})
          |SELECT b.doc_id, b.lang
@@ -52,7 +91,7 @@ object Sampling {
       import spark.implicits._
       val rates = ratesPermille.toDF("lang", "permille")
       Tables(spark, dir).documents
-        .select(col("doc_id"), col("lang"), bucket1000.as("bkt"))
+        .select(col("doc_id"), col("lang"), bucket(col("doc_id")).as("bkt"))
         .join(broadcast(rates), "lang")
         .filter(col("bkt") < col("permille"))
         .select("doc_id", "lang")
@@ -67,7 +106,7 @@ object Sampling {
     QueryDef.sql(
       "spl02_reservoir_per_group",
       s"""WITH b AS (
-         |  SELECT doc_id, lang, ${bucket1000Sql("doc_id")} AS bkt
+         |  SELECT doc_id, lang, ${bucketSql("doc_id")} AS bkt
          |  FROM documents),
          |r AS (
          |  SELECT doc_id, lang, bkt,
@@ -77,7 +116,7 @@ object Sampling {
          |ORDER BY lang, rnk""".stripMargin,
     ) { (spark, dir) =>
       val b = Tables(spark, dir).documents
-        .select(col("doc_id"), col("lang"), bucket1000.as("bkt"))
+        .select(col("doc_id"), col("lang"), bucket(col("doc_id")).as("bkt"))
       graft.plans.TopKPerGroup.topK(b, Seq("lang"), "bkt", "doc_id", 5)
         .select(col("lang"), col("rnk"), col("doc_id"))
         .orderBy("lang", "rnk")
@@ -173,7 +212,7 @@ object Sampling {
          |s AS (
          |  SELECT d.source, COUNT(*) AS sampled_docs, CAST(SUM(d.toks) AS BIGINT) AS sampled_tokens
          |  FROM d JOIN r ON d.source = r.source
-         |  WHERE ${bucket1000Sql("d.doc_id")} < r.permille
+         |  WHERE ${bucketSql("d.doc_id")} < r.permille
          |  GROUP BY 1)
          |SELECT r.source, r.docs, r.tokens, r.permille,
          |  COALESCE(s.sampled_docs, 0) AS sampled_docs,
@@ -196,7 +235,7 @@ object Sampling {
           least(lit(1000L), floor(lit(500.0) * col("total_tokens")
             / (col("sumw") * sqrt(col("tokens").cast("double")))).cast("long")).as("permille"))
       val s = d.join(broadcast(r.select("source", "permille")), "source")
-        .filter(bucket1000 < col("permille"))
+        .filter(bucket(col("doc_id")) < col("permille"))
         .groupBy("source")
         .agg(count(lit(1)).as("sampled_docs"), sum("toks").cast("long").as("sampled_tokens"))
       r.join(s, Seq("source"), "left")
@@ -250,7 +289,7 @@ object Sampling {
          |s AS (
          |  SELECT dc.cluster, COUNT(*) AS sampled_docs, CAST(SUM(dc.toks) AS BIGINT) AS sampled_tokens
          |  FROM dc JOIN r ON dc.cluster = r.cluster
-         |  WHERE ${bucket1000Sql("dc.doc_id")} < r.permille
+         |  WHERE ${bucketSql("dc.doc_id")} < r.permille
          |  GROUP BY 1)
          |SELECT r.cluster, r.docs, r.tokens, r.permille,
          |  COALESCE(s.sampled_docs, 0) AS sampled_docs,
@@ -276,7 +315,7 @@ object Sampling {
           least(lit(1000L), floor(lit(500.0) * col("total_tokens")
             / (col("sumw") * sqrt(col("tokens").cast("double")))).cast("long")).as("permille"))
       val s = dc.join(broadcast(r.select("cluster", "permille")), "cluster")
-        .filter(bucket1000 < col("permille"))
+        .filter(bucket(col("doc_id")) < col("permille"))
         .groupBy("cluster")
         .agg(count(lit(1)).as("sampled_docs"), sum("toks").cast("long").as("sampled_tokens"))
       r.join(s, Seq("cluster"), "left")
@@ -286,8 +325,6 @@ object Sampling {
         .orderBy("cluster")
     },
 
-    // ----- sh01: deterministic epoch shuffle + round-robin sharding — the
-    // final ordering stage of a training-data pipeline: every epoch the
     // ----- spl03: size-weighted πps sampling (sequential Poisson sampling,
     // Ohlsson 1998 — the order-sampling scheme statistics offices use for
     // probability-proportional-to-size draws): each doc gets a deterministic
@@ -303,7 +340,7 @@ object Sampling {
       s"""WITH k AS (
          |  SELECT doc_id, lang,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
-         |    (((doc_id % 1048576 + 1048576) % 1048576) * $KnuthA) % 1048576 AS u
+         |    ${bucketSql("doc_id", 1048576L)} AS u
          |  FROM documents)
          |SELECT doc_id, lang, toks,
          |  CAST(u + 1 AS DOUBLE) / toks AS rank
@@ -312,12 +349,14 @@ object Sampling {
       Tables(spark, dir).documents
         .select(col("doc_id"), col("lang"),
           size(split(col("text"), " ")).cast("long").as("toks"),
-          pmod(pmod(col("doc_id"), lit(1048576L)) * KnuthA, lit(1048576L)).as("u"))
+          bucket(col("doc_id"), 1048576L).as("u"))
         .select(col("doc_id"), col("lang"), col("toks"),
           ((col("u") + 1L).cast("double") / col("toks")).as("rank"))
         .orderBy("rank", "doc_id").limit(100)
     },
 
+    // ----- sh01: deterministic epoch shuffle + round-robin sharding — the
+    // final ordering stage of a training-data pipeline: every epoch the
     // corpus is re-ordered by a seeded hash (md5 of "ep<seed>:"+doc_id —
     // identical hex on any engine) and dealt into shards. The global
     // position comes from DistributedRank.withGlobalRank (range partitions
@@ -327,23 +366,13 @@ object Sampling {
     // reproduces the identical order on any cluster size.
     QueryDef.sql(
       "sh01_epoch_shuffle",
-      """WITH k AS (
-        |  SELECT doc_id, md5('ep7:' || CAST(doc_id AS VARCHAR)) AS shuffle_key
-        |  FROM documents)
-        |SELECT doc_id, shuffle_key,
-        |  CAST(ROW_NUMBER() OVER (ORDER BY shuffle_key, doc_id) AS BIGINT) AS position,
-        |  CAST((ROW_NUMBER() OVER (ORDER BY shuffle_key, doc_id) - 1) % 8 AS BIGINT) AS shard
-        |FROM k ORDER BY position""".stripMargin,
+      s"""SELECT doc_id, shuffle_key, CAST(position AS BIGINT) AS position,
+         |  CAST(shard AS BIGINT) AS shard
+         |FROM ${epochShuffledSql("(SELECT doc_id FROM documents)", 8)}
+         |ORDER BY position""".stripMargin,
     ) { (spark, dir) =>
-      val keyed = Tables(spark, dir).documents
-        .select(col("doc_id"),
-          md5(concat(lit("ep7:"), col("doc_id").cast("string")).cast("binary"))
-            .as("shuffle_key"))
-      graft.operators.DistributedRank
-        .withGlobalRank(keyed, "position", col("shuffle_key"), col("doc_id"))
-        .select(col("doc_id"), col("shuffle_key"),
-          col("position").cast("long").as("position"),
-          pmod(col("position") - 1, lit(8L)).cast("long").as("shard"))
+      epochShuffled(Tables(spark, dir).documents.select(col("doc_id")), 8L)
+        .select("doc_id", "shuffle_key", "position", "shard")
         .orderBy("position")
     },
 
@@ -361,32 +390,17 @@ object Sampling {
     // trainer interchange.
     QueryDef.sql(
       "ex01_sharded_export",
-      """WITH k AS (
-        |  SELECT doc_id, length(text) AS n_chars,
-        |    md5('ep7:' || CAST(doc_id AS VARCHAR)) AS shuffle_key
-        |  FROM documents),
-        |r AS (SELECT doc_id, n_chars,
-        |  (ROW_NUMBER() OVER (ORDER BY shuffle_key, doc_id) - 1) % 8 AS shard
-        |  FROM k)
-        |SELECT CAST(shard AS BIGINT) AS shard,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-        |  CAST(MIN(doc_id) AS BIGINT) AS min_doc,
-        |  CAST(MAX(doc_id) AS BIGINT) AS max_doc
-        |FROM r GROUP BY shard ORDER BY shard""".stripMargin,
+      s"""SELECT CAST(shard AS BIGINT) AS shard,
+         |  CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |  CAST(SUM(length(text)) AS BIGINT) AS total_chars,
+         |  CAST(MIN(doc_id) AS BIGINT) AS min_doc,
+         |  CAST(MAX(doc_id) AS BIGINT) AS max_doc
+         |FROM ${epochShuffledSql("(SELECT doc_id, text FROM documents)", 8)}
+         |GROUP BY shard ORDER BY shard""".stripMargin,
     ) { (spark, dir) =>
-      val docs = Tables(spark, dir).documents
-      val keyed = docs.select(col("doc_id"), col("text"),
-        md5(concat(lit("ep7:"), col("doc_id").cast("string")).cast("binary"))
-          .as("shuffle_key"))
-      val sharded = graft.operators.DistributedRank
-        .withGlobalRank(keyed, "position", col("shuffle_key"), col("doc_id"))
-        .select(col("doc_id"), col("text"),
-          pmod(col("position") - 1, lit(8L)).cast("long").as("shard"))
-      val out = s"target/export_ep7_${math.abs(dir.hashCode)}"
-      sharded.write.mode("overwrite").partitionBy("shard").json(out)
-      val schema = "doc_id BIGINT, text STRING"
-      spark.read.schema(schema + ", shard BIGINT").json(out)
+      val sharded = epochShuffled(Tables(spark, dir).documents.select("doc_id", "text"), 8L)
+        .select("doc_id", "text", "shard")
+      exportedJsonl(sharded, "ep7", dir, "doc_id BIGINT, text STRING, shard BIGINT", "shard")
         .groupBy("shard")
         .agg(count(lit(1)).cast("long").as("n_docs"),
           sum(length(col("text"))).cast("long").as("total_chars"),
@@ -430,7 +444,7 @@ object Sampling {
          |c AS (
          |  SELECT d.doc_id, d.source, d.toks,
          |    CAST(FLOOR(r.rate / 1000) AS BIGINT)
-         |      + CASE WHEN ${bucket1000Sql("d.doc_id")}
+         |      + CASE WHEN ${bucketSql("d.doc_id")}
          |               < r.rate - 1000 * FLOOR(r.rate / 1000) THEN 1 ELSE 0 END AS n_copies
          |  FROM d JOIN r ON d.source = r.source),
          |e AS (
@@ -463,7 +477,7 @@ object Sampling {
       val copies = d.join(rates, "source")
         .select(col("source"), col("toks"),
           (floor(col("rate") / 1000).cast("long") +
-            when(bucket1000 < col("rate") - lit(1000d) * floor(col("rate") / 1000), 1L)
+            when(bucket(col("doc_id")) < col("rate") - lit(1000d) * floor(col("rate") / 1000), 1L)
               .otherwise(0L)).as("n_copies"))
       val emitted = copies.filter(col("n_copies") >= 1L)
         .select(col("source"), col("toks"),

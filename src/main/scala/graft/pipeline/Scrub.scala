@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,52 +42,102 @@ object Scrub {
   private[pipeline] val MinStopHits = 2L
   private[pipeline] val MinTtr = 0.3
 
+  /** px01's planted PII: `text` plus an email, a phone number and an IP
+    * address derived from doc_id (the same concatenation on both engines).
+    */
+  private[pipeline] def planted(text: Column): Column = concat(
+    text, lit(" reach x"), col("doc_id").cast("string"),
+    lit("@example.com or call 555-"),
+    (lit(1000L) + col("doc_id") % 9000L).cast("string"),
+    lit(" from 10."), (col("doc_id") % 256L).cast("string"),
+    lit(".0."), (col("doc_id") % 250L).cast("string"), lit(" end"))
+  // oracle twin of planted
+  private[pipeline] def plantedSql(text: String): String =
+    s"""$text || ' reach x' || CAST(doc_id AS VARCHAR) ||
+       |    '@example.com or call 555-' ||
+       |    CAST(1000 + doc_id % 9000 AS VARCHAR) || ' from 10.' ||
+       |    CAST(doc_id % 256 AS VARCHAR) || '.0.' ||
+       |    CAST(doc_id % 250 AS VARCHAR) || ' end'""".stripMargin
+
+  /** px01's redaction: emails, then phones, then IPs (emails first so the IP
+    * pattern can't fire inside a redacted address's digits).
+    */
+  private[pipeline] def redacted(text: Column): Column =
+    regexp_replace(regexp_replace(regexp_replace(text,
+      EmailRe, "<EMAIL>"), PhoneRe, "<PHONE>"), IpRe, "<IP>")
+  // oracle twin of redacted
+  private[pipeline] def redactedSql(text: String): String =
+    s"""regexp_replace(regexp_replace(regexp_replace($text,
+       |        '$EmailRe', '<EMAIL>', 'g'),
+       |        '$PhoneRe', '<PHONE>', 'g'),
+       |        '$IpRe', '<IP>', 'g')""".stripMargin
+
+  /** qf01's per-document measures of `text`: n_words, mean_word_len,
+    * stop_hits, ttr. Mean word length exploits the single-space
+    * tokenization: (chars − (n−1) separators) / n — no second pass over the
+    * words.
+    */
+  private[pipeline] def qualityMeasures(text: Column): Seq[Column] = {
+    val words = split(text, " ")
+    val nWords = size(words).cast("long")
+    Seq(nWords.as("n_words"),
+      ((length(text).cast("double") - (nWords - 1)) / nWords).as("mean_word_len"),
+      graft.functions.TextExpressions.countInSet(words, TextAnalysis.stopEn).cast("long").as("stop_hits"),
+      (size(array_distinct(words)).cast("double") / nWords).as("ttr"))
+  }
+  /** qf01's rules over the [[qualityMeasures]] columns, each with the tag it
+    * adds to fail_reasons.
+    */
+  private[pipeline] val qualityRules: Seq[(String, Column)] = Seq(
+    "len;" -> col("n_words").between(MinWords, MaxWords),
+    "mwl;" -> (col("mean_word_len") >= MinMeanWl && col("mean_word_len") <= MaxMeanWl),
+    "stop;" -> (col("stop_hits") >= MinStopHits),
+    "ttr;" -> (col("ttr") >= MinTtr))
+  private[pipeline] def qualityKeep: Column = qualityRules.map(_._2).reduce(_ && _)
+
+  /** Oracle twin of [[qualityMeasures]]: a query over `rel` giving doc_id,
+    * `text` and the four measures.
+    */
+  private[pipeline] def qualityMeasuresSql(rel: String, text: String): String =
+    s"""SELECT doc_id, $text,
+       |    CAST(len(words) AS BIGINT) AS n_words,
+       |    (CAST(length($text) AS DOUBLE) - (len(words) - 1)) / len(words) AS mean_word_len,
+       |    CAST(${TextAnalysis.sqlHits(TextAnalysis.stopEn)} AS BIGINT) AS stop_hits,
+       |    CAST(len(list_distinct(words)) AS DOUBLE) / len(words) AS ttr
+       |  FROM (SELECT doc_id, $text, string_split($text, ' ') AS words FROM $rel)""".stripMargin
+  // oracle twin of qualityKeep
+  private[pipeline] def qualityKeepSql: String =
+    s"""(n_words BETWEEN $MinWords AND $MaxWords)
+       |    AND mean_word_len >= $MinMeanWl AND mean_word_len <= $MaxMeanWl
+       |    AND stop_hits >= $MinStopHits AND ttr >= $MinTtr""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // ----- px01: PII redaction. The synthetic documents contain no PII, so
     // the entry PLANTS deterministic PII derived from doc_id (same
     // concatenation on both engines), then redacts emails → phones → IPs in
-    // that order (emails first so the IP pattern can't fire inside a
-    // redacted address's digits). The md5 of the fully redacted text is the
+    // that order. The md5 of the fully redacted text is the
     // oracle-checked witness that both engines produced the identical
     // scrubbed string — not just identical match counts.
     QueryDef.sql(
       "px01_pii_redaction",
-      s"""WITH p AS (
-         |  SELECT doc_id,
-         |    text || ' reach x' || CAST(doc_id AS VARCHAR) ||
-         |    '@example.com or call 555-' ||
-         |    CAST(1000 + doc_id % 9000 AS VARCHAR) || ' from 10.' ||
-         |    CAST(doc_id % 256 AS VARCHAR) || '.0.' ||
-         |    CAST(doc_id % 250 AS VARCHAR) || ' end' AS planted
-         |  FROM documents)
+      s"""WITH p AS (SELECT doc_id, ${plantedSql("text")} AS planted FROM documents)
          |SELECT doc_id,
          |  CAST(len(regexp_extract_all(planted, '$EmailRe')) AS BIGINT) AS n_emails,
          |  CAST(len(regexp_extract_all(planted, '$PhoneRe')) AS BIGINT) AS n_phones,
          |  CAST(len(regexp_extract_all(planted, '$IpRe')) AS BIGINT) AS n_ips,
-         |  md5(regexp_replace(regexp_replace(regexp_replace(planted,
-         |        '$EmailRe', '<EMAIL>', 'g'),
-         |        '$PhoneRe', '<PHONE>', 'g'),
-         |        '$IpRe', '<IP>', 'g')) AS redacted_md5
+         |  md5(${redactedSql("planted")}) AS redacted_md5
          |FROM p ORDER BY doc_id""".stripMargin,
     ) { (spark, dir) =>
-      val planted = concat(
-        col("text"), lit(" reach x"), col("doc_id").cast("string"),
-        lit("@example.com or call 555-"),
-        (lit(1000L) + col("doc_id") % 9000L).cast("string"),
-        lit(" from 10."), (col("doc_id") % 256L).cast("string"),
-        lit(".0."), (col("doc_id") % 250L).cast("string"), lit(" end"))
-      val redacted = regexp_replace(regexp_replace(regexp_replace(col("planted"),
-        EmailRe, "<EMAIL>"), PhoneRe, "<PHONE>"), IpRe, "<IP>")
-      // documentsWide: 4 regexes over every doc are the entry's whole cost —
-      // the single-row-group scan serialized them on one core (r15)
+      // documentsWide: 4 regexes over every doc are the entry's whole cost,
+      // which a single-row-group scan would serialize on one core
       Tables(spark, dir).documentsWide
-        .select(col("doc_id"), planted.as("planted"))
+        .select(col("doc_id"), planted(col("text")).as("planted"))
         .select(col("doc_id"),
           regexp_count(col("planted"), lit(EmailRe)).cast("long").as("n_emails"),
           regexp_count(col("planted"), lit(PhoneRe)).cast("long").as("n_phones"),
           regexp_count(col("planted"), lit(IpRe)).cast("long").as("n_ips"),
-          md5(redacted.cast("binary")).as("redacted_md5"))
+          md5(redacted(col("planted")).cast("binary")).as("redacted_md5"))
         .orderBy("doc_id")
     },
 
@@ -94,48 +145,23 @@ object Scrub {
     // length bounds, ≥2 English stopwords, type-token ratio floor. Emits
     // the per-rule measurements, the keep verdict, and a stable
     // fail-reason string, so a pipeline can both filter and audit.
-    // mean word length exploits the single-space tokenization:
-    // (chars − (n−1) separators) / n — no second pass over the words.
     QueryDef.sql(
       "qf01_quality_rules",
-      s"""WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents),
-         |m AS (SELECT doc_id,
-         |    CAST(len(words) AS BIGINT) AS n_words,
-         |    (CAST(length(text) AS DOUBLE) - (len(words) - 1)) / len(words) AS mean_word_len,
-         |    CAST(${TextAnalysis.sqlHits(TextAnalysis.stopEn)} AS BIGINT) AS stop_hits,
-         |    CAST(len(list_distinct(words)) AS DOUBLE) / len(words) AS ttr
-         |  FROM w)
+      s"""WITH m AS (${qualityMeasuresSql("documents", "text")})
          |SELECT doc_id, n_words, mean_word_len, stop_hits, ttr,
-         |  (n_words BETWEEN $MinWords AND $MaxWords)
-         |    AND mean_word_len >= $MinMeanWl AND mean_word_len <= $MaxMeanWl
-         |    AND stop_hits >= $MinStopHits AND ttr >= $MinTtr AS keep,
+         |  $qualityKeepSql AS keep,
          |  (CASE WHEN n_words < $MinWords OR n_words > $MaxWords THEN 'len;' ELSE '' END) ||
          |  (CASE WHEN mean_word_len < $MinMeanWl OR mean_word_len > $MaxMeanWl THEN 'mwl;' ELSE '' END) ||
          |  (CASE WHEN stop_hits < $MinStopHits THEN 'stop;' ELSE '' END) ||
          |  (CASE WHEN ttr < $MinTtr THEN 'ttr;' ELSE '' END) AS fail_reasons
          |FROM m ORDER BY doc_id""".stripMargin,
     ) { (spark, dir) =>
-      val words = split(col("text"), " ")
-      val nWords = size(words).cast("long")
-      val meanWl = (length(col("text")).cast("double") - (nWords - 1)) / nWords
-      val stopHits = graft.functions.TextExpressions
-        .countInSet(words, TextAnalysis.stopEn).cast("long")
-      val ttr = size(array_distinct(words)).cast("double") / nWords
-      val m = Tables(spark, dir).documents
-        .select(col("doc_id"), nWords.as("n_words"), meanWl.as("mean_word_len"),
-          stopHits.as("stop_hits"), ttr.as("ttr"))
-      val rLen = col("n_words").between(MinWords, MaxWords)
-      val rMwl = col("mean_word_len") >= MinMeanWl && col("mean_word_len") <= MaxMeanWl
-      val rStop = col("stop_hits") >= MinStopHits
-      val rTtr = col("ttr") >= MinTtr
-      m.select(col("doc_id"), col("n_words"), col("mean_word_len"),
-          col("stop_hits"), col("ttr"),
-          (rLen && rMwl && rStop && rTtr).as("keep"),
-          concat(
-            when(!rLen, "len;").otherwise(""),
-            when(!rMwl, "mwl;").otherwise(""),
-            when(!rStop, "stop;").otherwise(""),
-            when(!rTtr, "ttr;").otherwise("")).as("fail_reasons"))
+      Tables(spark, dir).documents
+        .select(col("doc_id") +: qualityMeasures(col("text")): _*)
+        .select(col("doc_id"), col("n_words"), col("mean_word_len"),
+          col("stop_hits"), col("ttr"), qualityKeep.as("keep"),
+          concat(qualityRules.map { case (tag, rule) => when(!rule, tag).otherwise("") }: _*)
+            .as("fail_reasons"))
         .orderBy("doc_id")
     },
 
@@ -274,15 +300,9 @@ object Scrub {
         |FROM agg a JOIN top USING (source) ORDER BY a.source""".stripMargin,
     ) { (spark, dir) =>
       val words = split(col("text"), " ")
-      val ttr = size(array_distinct(words)).cast("double") / size(words)
-      val swr = graft.functions.TextExpressions
-        .countInSet(words, TextAnalysis.stopEn).cast("double") / size(words)
-      val nWords = size(words)
-      val quality = ttr * 0.5 + swr * 0.3 +
-        when(nWords >= 20 && nWords <= 1000, 0.2).otherwise(0.0)
       val t = Tables(spark, dir).documents
-        .select(col("source"), col("lang"), nWords.cast("long").as("n_tokens"),
-          quality.as("quality_score"))
+        .select(col("source"), col("lang"), size(words).cast("long").as("n_tokens"),
+          TextAnalysis.qualityScore(words).as("quality_score"))
       val wTop = Window.partitionBy("source").orderBy(desc("c"), asc("lang"))
       val top = t.groupBy("source", "lang").agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(wTop)).filter(col("rn") === 1)

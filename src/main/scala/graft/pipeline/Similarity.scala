@@ -81,16 +81,16 @@ object Similarity {
   private[pipeline] val HMin = 8
   private[pipeline] val HMax = 20
   private[pipeline] val TargetOcc = 8
-  /** Generalized over the occupancy target (r10 verdict item 4's geometry
-    * sweep — SCALE.md §0f.4): smaller occ → more leading bits → finer buckets
-    * → fewer candidates, traded against recall at the confirm threshold.
+  /** Leading bits for `n` vectors at occupancy target `occ` (SCALE.md
+    * §0f.4's geometry sweep): smaller occ → more leading bits → finer
+    * buckets → fewer candidates, traded against recall at the confirm
+    * threshold.
     */
-  private[graft] def adaptiveBitsFor(n: Long, occ: Int): Int = {
+  private[pipeline] def adaptiveBits(n: Long, occ: Int = TargetOcc): Int = {
     var h = HMin
     while (h < HMax && (1L << h) * occ < n) h += 1
     h
   }
-  private[pipeline] def adaptiveBits(n: Long): Int = adaptiveBitsFor(n, TargetOcc)
   private def planeSign(i: Long): Double = {
     val v0 = i * 2654435761L
     val v1 = v0 ^ (v0 >>> 13)
@@ -98,9 +98,9 @@ object Similarity {
     val v3 = v2 ^ (v2 >>> 17)
     if ((v3 & 65536L) == 0L) 1.0 else -1.0
   }
-  /** The full plane tensor for `lp` tables — [[planes]] is the shipping L=6
-    * prefix; the sweep diagnostics build wider families (the flat-index
-    * formula extends to any lp, and the oracle CTE interpolates the same lp).
+  /** The full plane tensor for `lp` tables; the flat-index formula extends
+    * to any lp, and the oracle CTE interpolates the same lp. The shipping
+    * L-table family, [[planes]], is computed once.
     */
   private[pipeline] def planesFor(lp: Int): Seq[Seq[Seq[Double]]] =
     Seq.tabulate(lp, HMax, 64)((l, h, d) => planeSign(((l * HMax + h) * 64 + d).toLong))
@@ -120,15 +120,13 @@ object Similarity {
       .groupBy("d").agg(avg(col("v").cast("double")).as("m"))
       .orderBy("d").collect().map(_.getDouble(1))
 
-  private[pipeline] def planeThresholdsFor(ps: Seq[Seq[Seq[Double]]], mu: Array[Double]): Array[Array[Double]] =
+  private def planeThresholds(ps: Seq[Seq[Seq[Double]]], mu: Array[Double]): Array[Array[Double]] =
     Array.tabulate(ps.length, HMax) { (l, h) =>
       var s = 0.0
       var d = 0
       while (d < mu.length && d < 64) { s += mu(d) * ps(l)(h)(d); d += 1 }
       s
     }
-  private def planeThresholds(mu: Array[Double]): Array[Array[Double]] =
-    planeThresholdsFor(planes, mu)
 
   /** DuckDB CTEs reconstructing the (vec_id, table_id, bucket) frame with the
     * same plane signs and the same `acc*2 + (dot>0)` bit packing as the
@@ -138,13 +136,12 @@ object Similarity {
     * floats; summation order is immaterial for the sign test away from
     * |dot| ≈ 1e-15 (the values are O(1)).
     *
-    * Geometry-parameterized (r10 verdict item 4): `lp` tables × occupancy
-    * target `occ`. The plane-sign indexing (l·HMax+h)·64+d is unchanged for
-    * l < lp, so a reduced-table oracle reconstructs a strict subset of the
-    * default plane set — exactly what the Spark side's `table_id < lp`
-    * filter scans. [[bucketCtes]] is the shipping (L, TargetOcc) instance.
+    * Geometry-parameterized: `lp` tables × occupancy target `occ`, the
+    * shipping (L, TargetOcc) by default. The plane-sign indexing
+    * (l·HMax+h)·64+d is unchanged for l < lp, so a reduced-table oracle
+    * reconstructs a strict subset of the default plane set.
     */
-  private[graft] def bucketCtesFor(lp: Int, occ: Int): String = {
+  private[pipeline] def bucketCtes(lp: Int = L, occ: Int = TargetOcc): String = {
     val hCases = (HMin until HMax)
       .map(h => s"WHEN COUNT(*) <= ${(1L << h) * occ} THEN $h").mkString(" ")
     s"""hh AS (SELECT CASE $hCases ELSE $HMax END AS h FROM embeddings),
@@ -175,8 +172,6 @@ object Similarity {
        |bk AS (
        |  SELECT vec_id, table_id, sg >> ($HMax - hh.h) AS bucket FROM sig, hh)""".stripMargin
   }
-
-  private[pipeline] val bucketCtes = bucketCtesFor(L, TargetOcc)
 
   /** Sequential-fold cosine between two list expressions — the SQL twin of
     * [[VectorOps.cosine]] (identical left-to-right double fold).
@@ -237,22 +232,11 @@ object Similarity {
     * formulation evaluated ~L×H×dim interpreted lambdas per row and dominated
     * every LSH entry's runtime.
     */
-  private[pipeline] def buckets(e: DataFrame, h: Int, mu: Array[Double]): DataFrame =
+  private[pipeline] def buckets(e: DataFrame, h: Int, mu: Array[Double], lp: Int = L): DataFrame = {
+    val ps = if (lp == L) planes else planesFor(lp)
     e.select(col("vec_id"),
       posexplode(graft.functions.LshExpressions.hyperplaneBuckets(
-        col("embedding"), planes, planeThresholds(mu))))
-      .toDF("vec_id", "table_id", "sig")
-      .select(col("vec_id"), col("table_id"),
-        shiftrightunsigned(col("sig"), HMax - h).as("bucket"))
-
-  /** [[buckets]] generalized to `lp` tables (sweep diagnostics; lp ≤ L is a
-    * strict prefix of the shipping family).
-    */
-  private[pipeline] def bucketsFor(e: DataFrame, lp: Int, h: Int, mu: Array[Double]): DataFrame = {
-    val ps = planesFor(lp)
-    e.select(col("vec_id"),
-      posexplode(graft.functions.LshExpressions.hyperplaneBuckets(
-        col("embedding"), ps, planeThresholdsFor(ps, mu))))
+        col("embedding"), ps, planeThresholds(ps, mu))))
       .toDF("vec_id", "table_id", "sig")
       .select(col("vec_id"), col("table_id"),
         shiftrightunsigned(col("sig"), HMax - h).as("bucket"))
@@ -266,7 +250,7 @@ object Similarity {
     * table l < MaxBucketTables by construction; Hoeffding on the gate bits
     * needs unconditioned Bernoullis — the old l+L base silently aliased
     * dd15's tables 6–11), and
-    * (b) [[bucketCtesFor]]-style SQL replays them with the same flat-index
+    * (b) [[bucketCtes]]-style SQL replays them with the same flat-index
     * sign formula. One codegen kernel call per row; (vec_id, gsig) rows are
     * ~8·(1+tables) bytes — metadata-scale next to the embeddings.
     */
@@ -321,7 +305,7 @@ object Similarity {
            |    CASE WHEN gi.i < 0 THEN b.bucket ELSE xor(b.bucket, CAST(1 AS BIGINT) << gi.i) END AS bucket
            |  FROM bk b, generate_series(-1, ${HMax - 1}) gi(i), hh
            |  WHERE b.vec_id < 8 AND gi.i < hh.h)""".stripMargin
-    s"""WITH $bucketCtes,
+    s"""WITH ${bucketCtes()},
        |$qb,
        |cands AS (
        |  SELECT DISTINCT qb.qid, nb.vec_id AS nid
@@ -420,7 +404,7 @@ object Similarity {
     // so the recall number measures the real index, not a re-derivation.
     QueryDef.sql(
       "ann06_lsh_recall",
-      s"""WITH $bucketCtes,
+      s"""WITH ${bucketCtes()},
          |qb AS (SELECT vec_id AS qid, table_id, bucket FROM bk WHERE vec_id < $NumQueries),
          |cands AS (
          |  SELECT DISTINCT qb.qid, nb.vec_id AS nid

@@ -29,20 +29,32 @@ object TextAnalysis {
   private[pipeline] def sqlHits(list: Seq[String]): String =
     s"len(list_filter(words, w -> list_contains([${list.map("'" + _ + "'").mkString(", ")}], w)))"
 
-  /** tx02's quality-score arithmetic as a CTE chain ending in
-    * `qs(doc_id, quality_score)` — shared with dd07's oracle. Every step
-    * mirrors the Spark expression tree op-for-op (ratio first, then the
-    * weighted sum), so the double is bit-identical across engines.
+  // tx02's signals over a split `words` array
+  private def typeTokenRatio(words: Column) = size(array_distinct(words)).cast("double") / size(words)
+  private def stopwordRatio(words: Column) = hits(words, stopEn).cast("double") / size(words)
+
+  /** tx02's quality score from its signals: ratios first, then the
+    * weighted sum, in the order [[qualityScoreSql]] mirrors, so the double
+    * is bit-identical across engines.
+    */
+  private def qualityScore(ttr: Column, swr: Column, nWords: Column): Column =
+    ttr * 0.5 + swr * 0.3 + when(nWords >= 20 && nWords <= 1000, 0.2).otherwise(0.0)
+  private[pipeline] def qualityScore(words: Column): Column =
+    qualityScore(typeTokenRatio(words), stopwordRatio(words), size(words))
+
+  private def qualityScoreSql(ttr: String, swr: String, nWords: String): String =
+    s"$ttr * 0.5 + $swr * 0.3 + (CASE WHEN $nWords >= 20 AND $nWords <= 1000 THEN 0.2 ELSE 0.0 END)"
+  /** Oracle twin of [[qualityScore]] over a `words` list column. */
+  private[pipeline] lazy val qualityOfWordsSql: String = qualityScoreSql(
+    "CAST(len(list_distinct(words)) AS DOUBLE) / len(words)",
+    s"CAST(${sqlHits(stopEn)} AS DOUBLE) / len(words)", "len(words)")
+
+  /** tx02's score over `documents` as CTEs ending in `qs(doc_id,
+    * quality_score)` — shared with prof02's and dd07's oracles.
     */
   private[pipeline] lazy val qualityCtes: String =
     s"""qw AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-       |qf AS (SELECT doc_id,
-       |  CAST(len(list_distinct(words)) AS DOUBLE) / len(words) AS ttr,
-       |  CAST(${sqlHits(stopEn)} AS DOUBLE) / len(words) AS swr,
-       |  len(words) AS nw FROM qw),
-       |qs AS (SELECT doc_id, ttr * 0.5 + swr * 0.3 +
-       |  (CASE WHEN nw >= 20 AND nw <= 1000 THEN 0.2 ELSE 0.0 END) AS quality_score
-       |  FROM qf)""".stripMargin
+       |qs AS (SELECT doc_id, $qualityOfWordsSql AS quality_score FROM qw)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -99,8 +111,7 @@ object TextAnalysis {
          |  (CAST(length(text) AS DOUBLE) - (len(words) - 1)) / len(words) AS avg_word_len
          |  FROM w)
          |SELECT doc_id, lang, n_words, n_chars, type_token_ratio, stopword_ratio, avg_word_len,
-         |  type_token_ratio * 0.5 + stopword_ratio * 0.3 +
-         |    (CASE WHEN n_words >= 20 AND n_words <= 1000 THEN 0.2 ELSE 0.0 END) AS quality_score
+         |  ${qualityScoreSql("type_token_ratio", "stopword_ratio", "n_words")} AS quality_score
          |FROM f ORDER BY doc_id""".stripMargin,
     ) { (spark, dir) =>
       val w = Tables(spark, dir).documents
@@ -109,13 +120,12 @@ object TextAnalysis {
       val f = w.select(col("doc_id"), col("lang"),
         size(col("words")).cast("long").as("n_words"),
         col("n_chars").cast("long").as("n_chars"),
-        (size(array_distinct(col("words"))).cast("double") / size(col("words"))).as("type_token_ratio"),
-        (hits(col("words"), stopEn).cast("double") / size(col("words"))).as("stopword_ratio"),
+        typeTokenRatio(col("words")).as("type_token_ratio"),
+        stopwordRatio(col("words")).as("stopword_ratio"),
         ((length(col("text")).cast("double") - (size(col("words")) - 1)) / size(col("words"))).as("avg_word_len"))
       f.select(col("doc_id"), col("lang"), col("n_words"), col("n_chars"),
         col("type_token_ratio"), col("stopword_ratio"), col("avg_word_len"),
-        (col("type_token_ratio") * 0.5 + col("stopword_ratio") * 0.3 +
-          when(col("n_words") >= 20 && col("n_words") <= 1000, 0.2).otherwise(0.0)).as("quality_score"))
+        qualityScore(col("type_token_ratio"), col("stopword_ratio"), col("n_words")).as("quality_score"))
         .orderBy("doc_id")
     },
 

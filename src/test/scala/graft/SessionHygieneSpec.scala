@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Source scan: one session builder, no one-shot mains, and no operator
-  * code that changes session-global state (a conf, a Dataset cache entry)
-  * as it runs. Queries built in one session run
+/** Source scan: one session builder, no one-shot mains, one builder per
+  * curation stage, and no operator code that changes session-global state
+  * (a conf, a Dataset cache entry) as it runs. Queries built in one session run
   * concurrently (`Concurrently`, the serving shim), so a conf set by one
   * entry leaks into whatever runs next to it.
   */
@@ -86,6 +86,34 @@ class SessionHygieneSpec extends AnyFunSuite {
     val hits = scan("src/main", """\bdef\s+main\s*\(|\bextends\s+App\b""".r)
       .filterNot(h => mains(fileName(h)))
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("src/main builds each curation stage once: one Spark builder, one oracle builder") {
+    // the per-stage entries and the pp03 chain compose one builder per stage,
+    // so a change to a stage reaches every entry that claims to test it. A
+    // hit is oracle SQL when it sits in a stripMargin line or after an
+    // interpolated string's opening quote; comments and the constant's own
+    // definition do not count.
+    val stages = Seq(
+      " reach x" -> "px01's PII plant",
+      "ep7:" -> "sh01's epoch-shuffle seed",
+      "/ 5.0" -> "dd09's 5-word segmenter",
+      "* 0.5 +" -> "tx02's quality weight",
+      "KnuthA" -> "the Knuth hash bucket")
+    val copied = stages.flatMap { case (literal, stage) =>
+      val hits = scan("src/main", java.util.regex.Pattern.quote(literal).r).filterNot { h =>
+        val t = h.text.trim
+        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*") || t.contains(s"val $literal ")
+      }
+      val (oracle, spark) = hits.partition { h =>
+        val before = h.text.substring(0, h.text.indexOf(literal))
+        h.text.trim.startsWith("|") || before.contains("s\"")
+      }
+      if (spark.size == 1 && oracle.size == 1) None
+      else Some(s"$stage ('$literal'): ${spark.size} Spark and ${oracle.size} oracle sites" +
+        hits.mkString("\n  ", "\n  ", ""))
+    }
+    assert(copied.isEmpty, copied.mkString("\n", "\n", ""))
   }
 
   test("src/main adds no session artifacts") {

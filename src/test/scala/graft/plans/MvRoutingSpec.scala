@@ -1,5 +1,7 @@
 package graft.plans
 
+import java.nio.file.Paths
+
 import graft.{Catalog, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -201,7 +203,7 @@ class MvRoutingSpec extends graft.SparkSpec {
     // string, so a relative caller dir never sameResult'ed the canon built
     // from the absolute rootPaths — pr08 silently fell back to the batch
     // plan, whose pushed-down session filter changes boundary rows
-    val relDir = "../testdata/sf0.001" // resolves to `dir` from the repo cwd
+    val relDir = Paths.get("").toAbsolutePath.relativize(Paths.get(sf())).toString
     graft.streaming.MvCascade.run(spark, relDir)
     val q = Tables(spark, relDir).events
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
