@@ -608,25 +608,28 @@ object Bench {
     // than that can elapse between two reads — differencing it undercounts
     // (even negatively) once early batches roll out of the window.
     //
-    // Both listeners filter on the ingest query's OWN runId (ADVICE r9): the
-    // session's listener bus carries QueryProgress events from EVERY stream,
-    // so a concurrently-running stream (a future refactor overlapping the
-    // cascade, a leaked warm stream) would silently pollute the counters.
+    // The listener counts rows and batches of the ingest query's OWN runId:
+    // the session's listener bus carries QueryProgress events from EVERY
+    // stream, so a concurrently-running stream (a leaked warm stream, a
+    // cascade overlapping the probe) would silently pollute the counters.
     val ingestRunId = new java.util.concurrent.atomic.AtomicReference[java.util.UUID]()
-    def isIngest(runId: java.util.UUID): Boolean = runId == ingestRunId.get()
     val totalRows = new java.util.concurrent.atomic.AtomicLong(0)
+    val batches = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new StreamingQueryListener {
-      // Capture the runId HERE (ADVICE r10): onQueryStarted fires
+      // Capture the runId HERE: onQueryStarted fires
       // synchronously on the bus before any progress event, so the id is
       // published before the first batch can count — no window where an
-      // instant first batch would be dropped by the isIngest filter. CAS
+      // instant first batch would be dropped by the runId filter. CAS
       // from null: only the FIRST stream started after this listener
       // registers is the probe (nothing else starts during it), and a
       // hypothetical second start can't steal the slot.
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
         ingestRunId.compareAndSet(null, e.runId)
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (isIngest(e.progress.runId)) totalRows.addAndGet(e.progress.numInputRows)
+        if (e.progress.runId == ingestRunId.get()) {
+          totalRows.addAndGet(e.progress.numInputRows)
+          batches.incrementAndGet()
+        }
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(listener)
@@ -634,71 +637,64 @@ object Bench {
       val q = graft.streaming.Ingest.generatedMinuteMv(spark, rowsPerBatch = 50000)
         .writeStream.outputMode("update").format("noop")
         .trigger(Trigger.ProcessingTime(0)).start()
-      // belt-and-braces: if the started event somehow didn't land yet, the
-      // CAS from the main thread publishes the same id
-      ingestRunId.compareAndSet(null, q.runId)
-      assert(ingestRunId.get() == q.runId,
-        s"ingest probe runId mismatch: listener saw ${ingestRunId.get()}, started ${q.runId}")
-      // warm-up: wait (bounded) for the first processed batch before timing,
-      // so slow stream startup under load doesn't read as zero throughput
-      val warmDeadline = System.currentTimeMillis() + 30000
-      while (totalRows.get() == 0 &&
-        System.currentTimeMillis() < warmDeadline) Thread.sleep(200)
-      // 5 s settle after the first processed batch: the stream's first
-      // seconds are JIT/codegen-cold, and folding them into window 1 trips
-      // the spread flag on every run (observed: 95k/110k/110k — a 13.6%
-      // "spread" that is really warm-up). The settle keeps the three
-      // windows comparable so the flag means variance, not ramp.
-      Thread.sleep(5000)
-      // Three consecutive fixed 10 s windows over the one running stream —
-      // similar total measurement time to the r5–r7 single 30 s window, but
-      // the median defends the headline against a GC/compaction burst in
-      // any one window, and the min/max spread makes run-to-run variance a
-      // REPORTED quantity instead of an invisible one.
-      val batches = new java.util.concurrent.atomic.AtomicLong(0)
-      val batchListener = new StreamingQueryListener {
-        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-          if (isIngest(e.progress.runId)) batches.incrementAndGet()
-        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      }
-      spark.streams.addListener(batchListener)
-      val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      def gcMillis: Long = {
-        var t = 0L; gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime)); t
-      }
-      val windows = (1 to 3).map { i =>
-        val rows0 = totalRows.get()
-        val batches0 = batches.get()
-        val gc0 = gcMillis
-        val t0 = System.nanoTime()
-        Thread.sleep(10000)
-        val secs = (System.nanoTime() - t0) / 1e9
-        val rows = totalRows.get() - rows0
-        // r8 verdict item 8 (ingest bimodality, min pinned 5k below median):
-        // per-window rows/batches/GC named in the log localizes whether a
-        // slow window lost a micro-batch (fewer batches) or lost time
-        // inside batches (GC/compaction) — the two look identical in ev/s.
-        val w = IngestWindow(rows / secs, rows, batches.get() - batches0, gcMillis - gc0)
-        System.err.println(f"[bench] ingest window $i: ${w.eps}%.0f ev/s " +
-          f"(${w.rows} rows, ${w.batches} batches, gc=${w.gcMs} ms)")
-        w
-      }
-      spark.streams.removeListener(batchListener)
-      q.stop()
-      // The 10 s windows quantize ev/s in 5 k steps (micro-batches are
-      // exactly 50 k rows at ~1 batch/s, so a window catches 10 or 11
-      // completions — r9 root cause of the r8 "bimodality": one batch
-      // quantum IS the observed 5 k min-median gap, GC flat across
-      // windows). `overall` spans all three windows — quantization 1/30
-      // of a batch — and is the unquantized headline companion.
-      val sorted = windows.map(_.eps).sorted.map(e => math.round(e * 10) / 10.0)
-      val overall = math.round(windows.map(_.eps).sum / 3 * 10) / 10.0
-      val stats = IngestStats(sorted(1), sorted.head, sorted.last, overall, windows)
-      if (stats.spreadPct > 10.0)
-        System.err.println(f"[bench] WARNING: ingest window spread ${stats.spreadPct}%.1f%% " +
-          f"of median exceeds the 10%% repeatability target (windows: ${sorted.mkString(", ")})")
-      stats
+      // stopped on every path: a probe left running would load every
+      // timed entry after it
+      try {
+        // belt-and-braces: if the started event somehow didn't land yet, the
+        // CAS from the main thread publishes the same id
+        ingestRunId.compareAndSet(null, q.runId)
+        assert(ingestRunId.get() == q.runId,
+          s"ingest probe runId mismatch: listener saw ${ingestRunId.get()}, started ${q.runId}")
+        // warm-up: wait (bounded) for the first processed batch before timing,
+        // so slow stream startup under load doesn't read as zero throughput
+        val warmDeadline = System.currentTimeMillis() + 30000
+        while (totalRows.get() == 0 &&
+          System.currentTimeMillis() < warmDeadline) Thread.sleep(200)
+        // 5 s settle after the first processed batch: the stream's first
+        // seconds are JIT/codegen-cold, and folding them into window 1 trips
+        // the spread flag on every run (observed: 95k/110k/110k — a 13.6%
+        // "spread" that is really warm-up). The settle keeps the three
+        // windows comparable so the flag means variance, not ramp.
+        Thread.sleep(5000)
+        // Three consecutive fixed 10 s windows over the one running stream —
+        // similar total measurement time to one 30 s window, but
+        // the median defends the headline against a GC/compaction burst in
+        // any one window, and the min/max spread makes run-to-run variance a
+        // REPORTED quantity instead of an invisible one.
+        val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+        def gcMillis: Long = {
+          var t = 0L; gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime)); t
+        }
+        val windows = (1 to 3).map { i =>
+          val rows0 = totalRows.get()
+          val batches0 = batches.get()
+          val gc0 = gcMillis
+          val t0 = System.nanoTime()
+          Thread.sleep(10000)
+          val secs = (System.nanoTime() - t0) / 1e9
+          val rows = totalRows.get() - rows0
+          // per-window rows/batches/GC named in the log localizes whether a
+          // slow window lost a micro-batch (fewer batches) or lost time
+          // inside batches (GC/compaction) — the two look identical in ev/s.
+          val w = IngestWindow(rows / secs, rows, batches.get() - batches0, gcMillis - gc0)
+          System.err.println(f"[bench] ingest window $i: ${w.eps}%.0f ev/s " +
+            f"(${w.rows} rows, ${w.batches} batches, gc=${w.gcMs} ms)")
+          w
+        }
+        // The 10 s windows quantize ev/s in 5 k steps (micro-batches are
+        // exactly 50 k rows at ~1 batch/s, so a window catches 10 or 11
+        // completions — one batch quantum IS the observed 5 k min-median
+        // gap, GC flat across windows). `overall` spans all three windows —
+        // quantization 1/30 of a batch — and is the unquantized headline
+        // companion.
+        val sorted = windows.map(_.eps).sorted.map(e => math.round(e * 10) / 10.0)
+        val overall = math.round(windows.map(_.eps).sum / 3 * 10) / 10.0
+        val stats = IngestStats(sorted(1), sorted.head, sorted.last, overall, windows)
+        if (stats.spreadPct > 10.0)
+          System.err.println(f"[bench] WARNING: ingest window spread ${stats.spreadPct}%.1f%% " +
+            f"of median exceeds the 10%% repeatability target (windows: ${sorted.mkString(", ")})")
+        stats
+      } finally q.stop()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] ingest throughput failed: ${e.getMessage}")
       IngestStats(-1.0, -1.0, -1.0)

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, Residency, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,17 +23,19 @@ import org.apache.spark.sql.functions._
   */
 object Decontam {
 
-  private def shingles(text: Column): Column =
-    array_distinct(graft.functions.TextExpressions.wordShingles(text))
+  import Dedup.{shingles, shinglesSql}
 
-  /** dc02's shingle builder, exposed for st17's streaming twin. */
-  private[graft] def docShingles(text: Column): Column = shingles(text)
-
-  /** Bench-side static artifacts of the streaming decontamination firewall
-    * (st17): the distinct benchmark shingle set and the Bloom blob over it —
-    * exactly dc02's bench build (same repartition-before-explode, same
-    * memoized sizeBits derivation), so the stream probes the identical
-    * filter the batch pass uses.
+  /** dc02's bench side: the distinct benchmark shingle set and the Bloom
+    * blob over it (sizeBits memoized per data dir). st17 pins the same pair
+    * at MV creation, so the stream probes the filter the batch pass uses.
+    *
+    * Repartition BEFORE the explode: a shingle explode amplifies each doc
+    * ~500×, so task count must be set by the post-explode volume, not the
+    * input split count — a single-file documents table otherwise runs the
+    * whole 30× corpus explode + partial aggregate in ONE task (measured:
+    * dc02 went ~40× on 10× data at sf1 purely from this; the sf3 drive sat
+    * 25+ min in one spilling task while 15 cores idled). The doc-hash
+    * shuffle moves only the raw docs (tiny next to the shingle stream).
     */
   private[graft] def benchShingleBloom(spark: SparkSession, dir: String): (Array[Byte], DataFrame) = {
     import graft.functions.BloomExpressions._
@@ -45,6 +47,11 @@ object Decontam {
       .head().getAs[Array[Byte]]("bf")
     (blob, shB)
   }
+
+  /** dc02's verdict over per-doc `overlap_frac` (st17's serve read too). */
+  private[graft] def setVerdict(counts: DataFrame): DataFrame =
+    counts.withColumn("contaminated", when(col("overlap_frac") >= 0.3, 1L).otherwise(0L))
+      .orderBy("doc_id")
 
   /** Per-corpus-document contamination verdict against the benchmark set. */
   def contamination(spark: SparkSession, dir: String): DataFrame = {
@@ -95,20 +102,9 @@ object Decontam {
     */
   def bloomContamination(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.BloomExpressions._
-    val docs = Tables(spark, dir).documents
-    val bench = docs.filter(col("doc_id") % 20 === 0)
-    val corpus = docs.filter(col("doc_id") % 20 =!= 0)
-    // Repartition BEFORE the explode: a shingle explode amplifies each doc
-    // ~500×, so task count must be set by the post-explode volume, not the
-    // input split count — a single-file documents table otherwise runs the
-    // whole 30× corpus explode + partial aggregate in ONE task (measured:
-    // dc02 went ~40× on 10× data at sf1 purely from this; the sf3 drive
-    // sat 25+ min in one spilling task while 15 cores idled). The doc-hash
-    // shuffle moves only the raw docs (tiny next to the shingle stream).
-    val shB = bench.repartition(col("doc_id"))
-      .select(explode(shingles(col("text"))).as("s")).distinct()
-    val bits = sizeBits(CorpusMeta.benchShingleCount(spark, dir)(shB.count()))
-    val bloomDf = shB.agg(bloomBuild(xxhash64(col("s")), bits, DefaultNumHashes).as("bf"))
+    val corpus = Tables(spark, dir).documents.filter(col("doc_id") % 20 =!= 0)
+    // the corpus explode is repartitioned first too: see benchShingleBloom
+    val (bfBlob, shB) = benchShingleBloom(spark, dir)
     val shC = corpus.repartition(col("doc_id"))
       .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
     // Two consumers (per-doc denominator + bloom-survivor stream): the
@@ -144,7 +140,6 @@ object Decontam {
     // render — acceptable at the observed ~1 MB blobs and bounded by the
     // clamp, but a reason to wrap the blob in a non-printing expression if
     // blobs ever grow toward the ceiling.
-    val bfBlob = bloomDf.head().getAs[Array[Byte]]("bf")
     val survivors = shCMat
       .where(bloomMightContain(lit(bfBlob), xxhash64(col("s"))))
       .select("doc_id", "s")
@@ -154,25 +149,26 @@ object Decontam {
       .select(col("doc_id"), col("n_shingles"),
         coalesce(col("n_matched"), lit(0L)).as("n_matched"),
         (coalesce(col("n_matched"), lit(0L)).cast("double") / col("n_shingles")).as("overlap_frac"))
-      .withColumn("contaminated",
-        when(col("overlap_frac") >= 0.3, 1L).otherwise(0L))
-      .orderBy("doc_id")
+      .transform(setVerdict)
   }
 
+  /** Oracle CTEs both verdicts start from: the corpus docs' distinct
+    * shingles `shc`, their counts `nc`, and the benchmark docs' word lists
+    * `wb` (corpus = doc_id % 20 ≠ 0, bench = % 20 = 0).
+    */
+  private def sidesCtes: String =
+    s"""wc AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents WHERE doc_id % 20 <> 0),
+      |shc AS (SELECT doc_id, unnest(${shinglesSql("words")}) AS s FROM wc),
+      |nc AS (SELECT doc_id, COUNT(*) AS ns FROM shc GROUP BY 1),
+      |wb AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents WHERE doc_id % 20 = 0)""".stripMargin
+
   /** dc01's oracle CTE chain ending in `best(doc_id, bench_id, frac)` — the
-    * top-overlapping benchmark doc per corpus doc (corpus = doc_id % 20 ≠ 0,
-    * bench = % 20 = 0). Shared with sp02's contamination-safe split oracle.
+    * top-overlapping benchmark doc per corpus doc. Shared with sp02's
+    * contamination-safe split oracle.
     */
   private[pipeline] lazy val dc01Ctes: String =
-    """wc AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents WHERE doc_id % 20 <> 0),
-      |shc AS (SELECT doc_id, unnest(list_distinct(list_transform(
-      |    generate_series(1, greatest(len(words) - 2, 1)),
-      |    i -> array_to_string(words[i:i+2], ' ')))) AS s FROM wc),
-      |wb AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents WHERE doc_id % 20 = 0),
-      |shb AS (SELECT doc_id AS bench_id, unnest(list_distinct(list_transform(
-      |    generate_series(1, greatest(len(words) - 2, 1)),
-      |    i -> array_to_string(words[i:i+2], ' ')))) AS s FROM wb),
-      |nc AS (SELECT doc_id, COUNT(*) AS ns FROM shc GROUP BY 1),
+    s"""$sidesCtes,
+      |shb AS (SELECT doc_id AS bench_id, unnest(${shinglesSql("words")}) AS s FROM wb),
       |ov AS (SELECT c.doc_id, b.bench_id, COUNT(*) AS c
       |  FROM shc c JOIN shb b ON c.s = b.s GROUP BY 1, 2),
       |best AS (SELECT doc_id, bench_id, frac FROM (
@@ -196,26 +192,9 @@ object Decontam {
     // ----- dc02: Bloom-prefiltered set-level decontamination. The oracle is
     // the exact (bloom-free) formulation — identical output because bloom
     // false positives are removed by the exact-confirm string join.
-    QueryDef.sql(
-      "dc02_bloom_decontamination",
-      """WITH wc AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents WHERE doc_id % 20 <> 0),
-        |shc AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(len(words) - 2, 1)),
-        |    i -> array_to_string(words[i:i+2], ' ')))) AS s FROM wc),
-        |wb AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents WHERE doc_id % 20 = 0),
-        |shb AS (SELECT DISTINCT unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(len(words) - 2, 1)),
-        |    i -> array_to_string(words[i:i+2], ' ')))) AS s FROM wb),
-        |nc AS (SELECT doc_id, COUNT(*) AS ns FROM shc GROUP BY 1),
-        |mt AS (SELECT c.doc_id, COUNT(*) AS m FROM shc c JOIN shb b ON c.s = b.s GROUP BY 1)
-        |SELECT n.doc_id, CAST(n.ns AS BIGINT) AS n_shingles,
-        |  CAST(COALESCE(m.m, 0) AS BIGINT) AS n_matched,
-        |  CAST(COALESCE(m.m, 0) AS DOUBLE) / n.ns AS overlap_frac,
-        |  CAST(CASE WHEN CAST(COALESCE(m.m, 0) AS DOUBLE) / n.ns >= 0.3
-        |       THEN 1 ELSE 0 END AS BIGINT) AS contaminated
-        |FROM nc n LEFT JOIN mt m ON n.doc_id = m.doc_id
-        |ORDER BY n.doc_id""".stripMargin,
-    ) { (spark, dir) => bloomContamination(spark, dir) },
+    QueryDef.sql("dc02_bloom_decontamination", setVerdictSql) { (spark, dir) =>
+      bloomContamination(spark, dir)
+    },
 
     // ----- dc03: SEMANTIC decontamination — the embedding-level net that
     // catches paraphrase leaks dc01/dc02's n-gram overlap misses (and the
@@ -268,4 +247,21 @@ object Decontam {
         .orderBy("vec_id")
     },
   )
+
+  /** dc02's verdict as oracle SQL: the exact, bloom-free set-level overlap.
+    * st17 maintains the same verdict on a stream and answers with this same
+    * query: a streaming query's answer is the batch answer over the prefix
+    * it has read.
+    */
+  private[graft] lazy val setVerdictSql: String =
+    s"""WITH $sidesCtes,
+      |shb AS (SELECT DISTINCT unnest(${shinglesSql("words")}) AS s FROM wb),
+      |mt AS (SELECT c.doc_id, COUNT(*) AS m FROM shc c JOIN shb b ON c.s = b.s GROUP BY 1)
+      |SELECT n.doc_id, CAST(n.ns AS BIGINT) AS n_shingles,
+      |  CAST(COALESCE(m.m, 0) AS BIGINT) AS n_matched,
+      |  CAST(COALESCE(m.m, 0) AS DOUBLE) / n.ns AS overlap_frac,
+      |  CAST(CASE WHEN CAST(COALESCE(m.m, 0) AS DOUBLE) / n.ns >= 0.3
+      |       THEN 1 ELSE 0 END AS BIGINT) AS contaminated
+      |FROM nc n LEFT JOIN mt m ON n.doc_id = m.doc_id
+      |ORDER BY n.doc_id""".stripMargin
 }

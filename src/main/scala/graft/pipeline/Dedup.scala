@@ -21,11 +21,33 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** 3-word shingles of a document, distinct. ~O(words) per doc; the window
+  /** 3-word shingles of a document, distinct unless `distinct` is false
+    * (qf02, tx07 and ts01 count repeats). ~O(words) per doc; the window
     * build is the codegen'd [[graft.functions.StringWordShingles]] kernel.
     */
-  private def shingleExpr(text: Column): Column =
-    array_distinct(graft.functions.TextExpressions.wordShingles(text))
+  private[graft] def shingles(text: Column, distinct: Boolean = true): Column = {
+    val all = graft.functions.TextExpressions.wordShingles(text)
+    if (distinct) array_distinct(all) else all
+  }
+
+  /** Oracle twin of [[shingles]] over a DuckDB word-list expression. */
+  private[pipeline] def shinglesSql(words: String, distinct: Boolean = true): String = {
+    val all = s"list_transform(generate_series(1, greatest(len($words) - 2, 1)), " +
+      s"i -> array_to_string($words[i:i+2], ' '))"
+    if (distinct) s"list_distinct($all)" else all
+  }
+
+  /** Oracle twin of [[graft.functions.LshExpressions.polyFold]]: the
+    * polynomial fold (acc * m + x) mod 1e9+7 over a BIGINT list, from 0.
+    */
+  private def polyFoldSql(list: String, m: Int = 31): String =
+    s"list_reduce(list_prepend(CAST(0 AS BIGINT), $list), (acc, c) -> (acc * $m + c) % 1000000007)"
+
+  /** Oracle twin of [[graft.functions.TextExpressions.polyHash]]: the fold
+    * over a string's character codes (dd03, dd04, tx04).
+    */
+  private[pipeline] def polyHashSql(s: String, m: Int = 31): String =
+    polyFoldSql(s"list_transform(generate_series(1, length($s)), i -> CAST(ascii($s[i:i]) AS BIGINT))", m)
 
   /** Document-frequency cap for blocking shingles (SCALE §4's named control):
     * a shingle present in more than this many documents is boilerplate —
@@ -34,8 +56,9 @@ object Dedup {
     * per-shingle fan-out at df²/2 ≤ cap²/2 instead of n². The cap sits far
     * above the measured maxima (max df 25 at sf1 — SCALE §4), so results are
     * unchanged at every tested scale; the capped definition is mirrored in
-    * the dd02 oracle SQL, so a corpus where the cap DOES bite stays
-    * oracle-consistent. Jaccard then reads "Jaccard over discriminative
+    * [[jaccardCtes]], the oracle of every entry built on these edges (dd02,
+    * dd13, ts02 and its consumers), so a corpus where the cap DOES bite
+    * stays oracle-consistent. Jaccard then reads "Jaccard over discriminative
     * shingles": the common count AND the per-doc sizes both use the kept
     * universe, keeping the score self-consistent. Same design as the
     * q15/q17 basket caps (13f28f0).
@@ -109,7 +132,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
 
   private def ngramJaccardPairsRaw(docs: DataFrame, threshold: Double, dfCap: Int): DataFrame = {
-    val shAll = docs.select(col("doc_id"), explode(shingleExpr(col("text"))).as("s"))
+    val shAll = docs.select(col("doc_id"), explode(shingles(col("text"))).as("s"))
     // df cap: drop boilerplate shingles BEFORE pair generation. The extra
     // aggregate shares the candidate join's shuffle key (s), and at scale a
     // hot shingle's rows are exactly what this prunes — an aggregate+join
@@ -138,12 +161,13 @@ object Dedup {
 
   private def shingleHashes(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      transform(shingleExpr(col("text")),
+      transform(shingles(col("text")),
         s => graft.functions.TextExpressions.polyHash(s)).as("hashes"))
 
   /** The banded keys of a signature as an in-row array (band_id implied by
-    * position): polyFold over each RowsPerBand slice — the same fold every
-    * batch band build inlines.
+    * position): polyFold over each RowsPerBand slice. Every band build —
+    * dd03, dd08, st18's corpus index and its stream — explodes this array;
+    * `mbands` in [[minhashCtes]] is its oracle twin.
     */
   private def bandArray(sig: Column): Column =
     transform(sequence(lit(0), lit(NumBands - 1)), b =>
@@ -196,11 +220,7 @@ object Dedup {
     // kernel-heavy map stage; widening by doc_id parallelizes it AND its
     // groupBy(doc_id) reuses the same hash partitioning (no exchange).
     val sigs = Residency.snap(signatures(shingleHashes(Tables(spark, dir).documentsWide)))
-    val bands = sigs.select(
-      col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(NumBands - 1)), b =>
-        graft.functions.LshExpressions.polyFold(
-          slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand))))))
+    val bands = sigs.select(col("doc_id"), posexplode(bandArray(col("sig"))))
       .toDF("doc_id", "band_id", "band_hash")
     val a = bands.toDF("doc_a", "band_id", "band_hash")
     val b = bands.toDF("doc_b", "band_id", "band_hash")
@@ -233,7 +253,7 @@ object Dedup {
   // the shingle hashes 64× per document and ran 155 s at sf0.1.
   private[pipeline] def simhashes(docs: DataFrame): DataFrame = {
     import graft.functions.TextExpressions.polyHash
-    val hs = docs.select(col("doc_id"), explode(shingleExpr(col("text"))).as("s"))
+    val hs = docs.select(col("doc_id"), explode(shingles(col("text"))).as("s"))
       .select(col("doc_id"),
         (shiftleft(polyHash(col("s"), 37), 31) + polyHash(col("s"), 31)).as("h"))
     val bitAggs = (0 until 64).map(i =>
@@ -281,10 +301,10 @@ object Dedup {
     QueryDef.sql(
       "dd02_ngram_jaccard",
       s"""WITH $jaccardCtes
-         |SELECT doc_a, doc_b, jaccard FROM jtruth
+         |SELECT doc_a, doc_b, jaccard FROM edges
          |ORDER BY jaccard DESC, doc_a, doc_b""".stripMargin,
     ) { (spark, dir) =>
-      // documentsWide (r15): the shingle explode + df-cap + pair join chain
+      // documentsWide: the shingle explode + df-cap + pair join chain
       // inherits the scan's single-partition layout; widening by doc_id
       // restores map parallelism for the kernel stages. ts02 → dd07/dd11
       // and sp01/sp02/pp03 inherit through Catalog.byName.
@@ -324,8 +344,8 @@ object Dedup {
          |j AS (
          |  SELECT m.doc_a, m.doc_b, m.est_jaccard,
          |    CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS tp
-         |  FROM mest m LEFT JOIN jtruth t USING (doc_a, doc_b)),
-         |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM jtruth),
+         |  FROM mest m LEFT JOIN edges t USING (doc_a, doc_b)),
+         |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM edges),
          |s AS (
          |  SELECT 'banding' AS stage, CAST(COUNT(*) AS BIGINT) AS n_pairs,
          |    CAST(SUM(tp) AS BIGINT) AS tp FROM j
@@ -373,39 +393,14 @@ object Dedup {
     // match above the 0.5 estimated-Jaccard threshold, or a loud
     // no-match row — the roster left join keeps every batch doc in the
     // output so a downstream filter can't silently drop unmatched docs.
-    // Oracle: dd03's full minhash CTE chain, restricted to cross-side
-    // pairs and re-keyed (batch, corpus).
-    QueryDef.sql(
-      "dd08_incremental_dedup",
-      s"""WITH $minhashCtes,
-         |hits AS (SELECT
-         |    CASE WHEN doc_a % 10 = 0 THEN doc_a ELSE doc_b END AS batch_id,
-         |    CASE WHEN doc_a % 10 = 0 THEN doc_b ELSE doc_a END AS corpus_id,
-         |    est_jaccard
-         |  FROM mest
-         |  WHERE est_jaccard >= 0.5 AND (doc_a % 10 = 0) <> (doc_b % 10 = 0)),
-         |best AS (SELECT batch_id, corpus_id, est_jaccard,
-         |    ROW_NUMBER() OVER (PARTITION BY batch_id
-         |      ORDER BY est_jaccard DESC, corpus_id) AS rn
-         |  FROM hits)
-         |SELECT d.doc_id,
-         |  COALESCE(b.corpus_id, -1) AS matched_corpus_doc,
-         |  COALESCE(b.est_jaccard, 0.0) AS est_jaccard,
-         |  b.corpus_id IS NOT NULL AS is_dup
-         |FROM documents d LEFT JOIN best b ON b.batch_id = d.doc_id AND b.rn = 1
-         |WHERE d.doc_id % 10 = 0
-         |ORDER BY d.doc_id""".stripMargin,
-    ) { (spark, dir) =>
+    // Oracle: [[incrementalVerdictSql]].
+    QueryDef.sql("dd08_incremental_dedup", incrementalVerdictSql) { (spark, dir) =>
       import org.apache.spark.sql.expressions.Window
       val docs = Tables(spark, dir).documents
       // signature build over the widened scan (see minhashPairs); the
       // roster read below keeps the narrow scan — it is one thin column
       val sigs = Residency.snap(signatures(shingleHashes(Tables(spark, dir).documentsWide)))
-      val bands = sigs.select(
-        col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(NumBands - 1)), b =>
-          graft.functions.LshExpressions.polyFold(
-            slice(col("sig"), b * RowsPerBand + 1, lit(RowsPerBand))))))
+      val bands = sigs.select(col("doc_id"), posexplode(bandArray(col("sig"))))
         .toDF("doc_id", "band_id", "band_hash")
       val batchBands = bands.filter(col("doc_id") % 10 === 0)
         .toDF("batch_id", "band_id", "band_hash")
@@ -438,17 +433,9 @@ object Dedup {
     // signature pack → chunk blocking → Hamming filter.
     QueryDef.sql(
       "dd04_simhash",
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(len(words) - 2, 1)),
-        |    i -> array_to_string(words[i:i+2], ' ')))) AS s FROM w),
-        |hh AS (SELECT doc_id,
-        |    (list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |       list_transform(generate_series(1, length(s)), i -> CAST(ascii(s[i:i]) AS BIGINT))),
-        |       (acc, c) -> (acc * 37 + c) % 1000000007) << 31)
-        |    + list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |       list_transform(generate_series(1, length(s)), i -> CAST(ascii(s[i:i]) AS BIGINT))),
-        |       (acc, c) -> (acc * 31 + c) % 1000000007) AS h
+      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
+        |sh AS (SELECT doc_id, unnest(${shinglesSql("words")}) AS s FROM w),
+        |hh AS (SELECT doc_id, (${polyHashSql("s", 37)} << 31) + ${polyHashSql("s")} AS h
         |  FROM sh),
         |bits AS (SELECT doc_id, gi.i,
         |    SUM(CASE WHEN ((h >> gi.i) & 1) = 1 THEN 1 ELSE -1 END) AS bsum
@@ -495,7 +482,7 @@ object Dedup {
       val t = Tables(spark, dir)
       ExactBaseline.guard(spark, CorpusMeta.embeddingCount(spark, dir),
         "dd05_embedding_neardup", "dd06_embedding_neardup_lsh")
-      // r15: (1) the BNLJ STREAM side reads the single-row-group embeddings
+      // (1) the BNLJ STREAM side reads the single-row-group embeddings
       // file — one task computed all n²/2 cosines; embeddingsWide restores
       // the cores (measured 3.2 → 0.45 s at sf0.1). The broadcast build
       // side keeps the narrow scan. (2) norms are projected per ROW before
@@ -516,8 +503,8 @@ object Dedup {
     // ----- dd06: the scale path for embedding near-dup — candidates share a
     // hyperplane-LSH bucket (Similarity's L=6 tables × ADAPTIVE-width
     // signatures: the leading h bits where 2^h·8 ≥ n, so expected occupancy
-    // stays ≤8 at any corpus size and candidates grow linearly — the r6 sf1
-    // run caught the fixed-width variant scaling 29× on 10× rows), exact
+    // stays ≤8 at any corpus size and candidates grow linearly — a
+    // fixed-width variant measured 29× on 10× rows at sf1), exact
     // cosine + the same 0.4 threshold within buckets only.
     //
     // *** MEASURED OPERATING POINT — READ BEFORE CALLING THIS A "DEDUP" ***
@@ -570,7 +557,7 @@ object Dedup {
     },
 
     // ----- dd15: the recall dial as a first-class operator — dd06's chain at
-    // the WIDE geometry (L=12 tables, occupancy target 16). Round 12's
+    // the WIDE geometry (L=12 tables, occupancy target 16). A
     // ground-truth sweep (SCALE.md §0g.1b) measured recall LINEAR in
     // candidate mass on this corpus (dups sit at cos 0.40–0.55 where the
     // hyperplane s-curve is shallow), so geometry is an honest knob, not a
@@ -613,7 +600,7 @@ object Dedup {
     },
 
     // ----- dd14: SAMPLED exact-confirm — dd06's 100 TB operating posture for
-    // the confirm stage (r9 verdict item 7; the doctrine dd13 pins in-code:
+    // the confirm stage (the doctrine dd13 pins in-code:
     // "at 100 TB you run this evaluation over a SAMPLE"). A pipeline that
     // only needs the DUP RATE (to monitor corpus health, tune LSH params, or
     // decide whether a full confirm is worth scheduling) draws a
@@ -841,49 +828,45 @@ object Dedup {
     },
   )
 
-  /** DuckDB CTE chain reconstructing [[minhashPairs]] bit-for-bit: shingles
-    * (dd02's formula) → rolling polyhash → K=128 permutation mins → per-band
-    * poly folds → band-bucket candidate join → signature-match Jaccard.
-    * `mest` is the estimated-Jaccard pair frame; shared with pp01's near-dup
-    * stage. The 256 permutation constants are embedded as a VALUES relation.
-    */
-  /** dd02's exact-Jaccard chain as oracle CTEs ending in
-    * `jtruth(doc_a, doc_b, jaccard)` (threshold 0.5, df-capped shingle
-    * universe) — shared with dd13's evaluation oracle.
+  /** dd02's exact-Jaccard chain as oracle CTEs over the df-capped shingle
+    * universe, ending in `edges(doc_a, doc_b, jaccard)` (threshold 0.5):
+    * dd02 and dd13 read it, and ts02's components (so dd07, dd11, sp01,
+    * sp02 and pp03) build on it, as their Spark sides build on
+    * [[nearDupEdges]]. `sh`, `n`, `common` and `edges` are the CTE names
+    * tools/check_sharded.py slices dd07's oracle at.
     */
   // lazy: referenced from `defs` above, which initializes first
   private[pipeline] lazy val jaccardCtes: String =
     s"""w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-       |sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-       |    generate_series(1, greatest(len(words) - 2, 1)),
-       |    i -> array_to_string(words[i:i+2], ' ')))) AS s FROM w),
+       |sh0 AS (SELECT doc_id, unnest(${shinglesSql("words")}) AS s FROM w),
        |keep AS (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) <= $ShingleDfCap),
        |sh AS (SELECT sh0.doc_id, sh0.s FROM sh0 JOIN keep USING (s)),
        |n AS (SELECT doc_id, COUNT(*) AS ns FROM sh GROUP BY 1),
        |common AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-       |jtruth AS (
+       |edges AS (SELECT doc_a, doc_b, jaccard FROM (
        |  SELECT doc_a, doc_b, CAST(c AS DOUBLE) / (na.ns + nb.ns - c) AS jaccard
-       |  FROM common JOIN n na ON doc_a = na.doc_id JOIN n nb ON doc_b = nb.doc_id
-       |  WHERE CAST(c AS DOUBLE) / (na.ns + nb.ns - c) >= 0.5)""".stripMargin
+       |  FROM common JOIN n na ON doc_a = na.doc_id JOIN n nb ON doc_b = nb.doc_id)
+       |  WHERE jaccard >= 0.5)""".stripMargin
 
+  /** DuckDB CTE chain reconstructing [[minhashPairs]] bit-for-bit: shingles
+    * → rolling polyhash → K=128 permutation mins → per-band poly folds →
+    * band-bucket candidate join → signature-match Jaccard. `mest` is the
+    * estimated-Jaccard pair frame; shared with dd08, dd13 and pp01. The 256
+    * permutation constants are embedded as a VALUES relation.
+    */
   // lazy: referenced from `defs` above, which initializes first
   private[graft] lazy val minhashCtes: String = {
     val permRows = (0 until K).map(j => s"($j, ${hashA(j)}, ${hashB(j)})").mkString(", ")
     s"""mw AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-       |msh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-       |    generate_series(1, greatest(len(words) - 2, 1)),
-       |    i -> array_to_string(words[i:i+2], ' ')))) AS s FROM mw),
-       |mhs AS (SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |    list_transform(generate_series(1, length(s)), i -> CAST(ascii(s[i:i]) AS BIGINT))),
-       |    (acc, c) -> (acc * 31 + c) % 1000000007) AS h FROM msh),
+       |msh AS (SELECT doc_id, unnest(${shinglesSql("words")}) AS s FROM mw),
+       |mhs AS (SELECT doc_id, ${polyHashSql("s")} AS h FROM msh),
        |perm(j, pa, pb) AS (VALUES $permRows),
        |msig AS (SELECT doc_id, p.j, MIN((p.pa * h + p.pb) % $P) AS m
        |  FROM mhs, perm p GROUP BY 1, 2),
        |msgl AS (SELECT doc_id, list(m ORDER BY j) AS sig FROM msig GROUP BY 1),
        |mbands AS (SELECT doc_id, gb.b AS band_id,
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT), sig[gb.b*$RowsPerBand+1 : gb.b*$RowsPerBand+$RowsPerBand]),
-       |      (acc, v) -> (acc * 31 + v) % 1000000007) AS band_hash
+       |    ${polyFoldSql(s"sig[gb.b*$RowsPerBand+1 : gb.b*$RowsPerBand+$RowsPerBand]")} AS band_hash
        |  FROM msgl, generate_series(0, ${NumBands - 1}) gb(b)),
        |mcand AS (SELECT DISTINCT a.doc_id AS doc_a, b2.doc_id AS doc_b
        |  FROM mbands a JOIN mbands b2
@@ -892,6 +875,33 @@ object Dedup {
        |    CAST(len(list_filter(list_zip(sa.sig, sb.sig), x -> x[1] = x[2])) AS DOUBLE) / $K AS est_jaccard
        |  FROM mcand c JOIN msgl sa ON sa.doc_id = c.doc_a JOIN msgl sb ON sb.doc_id = c.doc_b)""".stripMargin
   }
+
+  /** dd08's verdict as oracle SQL: [[minhashCtes]] restricted to cross-side
+    * pairs and re-keyed (batch, corpus), the best corpus match per batch doc
+    * (est DESC, corpus ASC), over the whole batch roster. st18 streams the
+    * batch side and answers with this same query: a streaming query's answer
+    * is the batch answer over the prefix it has read.
+    */
+  // lazy: referenced from `defs` above, which initializes first
+  private[graft] lazy val incrementalVerdictSql: String =
+    s"""WITH $minhashCtes,
+       |hits AS (SELECT
+       |    CASE WHEN doc_a % 10 = 0 THEN doc_a ELSE doc_b END AS batch_id,
+       |    CASE WHEN doc_a % 10 = 0 THEN doc_b ELSE doc_a END AS corpus_id,
+       |    est_jaccard
+       |  FROM mest
+       |  WHERE est_jaccard >= 0.5 AND (doc_a % 10 = 0) <> (doc_b % 10 = 0)),
+       |best AS (SELECT batch_id, corpus_id, est_jaccard,
+       |    ROW_NUMBER() OVER (PARTITION BY batch_id
+       |      ORDER BY est_jaccard DESC, corpus_id) AS rn
+       |  FROM hits)
+       |SELECT d.doc_id,
+       |  COALESCE(b.corpus_id, -1) AS matched_corpus_doc,
+       |  COALESCE(b.est_jaccard, 0.0) AS est_jaccard,
+       |  b.corpus_id IS NOT NULL AS is_dup
+       |FROM documents d LEFT JOIN best b ON b.batch_id = d.doc_id AND b.rn = 1
+       |WHERE d.doc_id % 10 = 0
+       |ORDER BY d.doc_id""".stripMargin
 
   /** dd10's core over any `(doc_id, text)` frame (shared with DedupSpec's
     * planted-duplicate cases). Overlapping duplicated grams merge naturally:

@@ -179,10 +179,8 @@ object Scrub {
     // dominant cost for zero benefit.
     QueryDef.sql(
       "qf02_dup_ngram_fraction",
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_transform(
-        |    generate_series(1, greatest(len(words) - 2, 1)),
-        |    i -> array_to_string(words[i:i+2], ' '))) AS s FROM w),
+      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
+        |sh AS (SELECT doc_id, unnest(${Dedup.shinglesSql("words", distinct = false)}) AS s FROM w),
         |inst AS (SELECT doc_id, s, COUNT(*) AS c FROM sh GROUP BY 1, 2),
         |corpus AS (SELECT s, SUM(c) AS n FROM inst GROUP BY 1)
         |SELECT doc_id,
@@ -197,7 +195,7 @@ object Scrub {
     ) { (spark, dir) =>
       val inst = Tables(spark, dir).documents
         .select(col("doc_id"),
-          explode(graft.functions.TextExpressions.wordShingles(col("text"))).as("s"))
+          explode(Dedup.shingles(col("text"), distinct = false)).as("s"))
         .groupBy("doc_id", "s").agg(count(lit(1)).as("c"))
       val dupInst = sum(when(col("n") >= 2, col("c")).otherwise(0L))
       val frac = dupInst.cast("double") / sum("c").cast("long")

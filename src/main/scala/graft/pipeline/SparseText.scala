@@ -29,23 +29,17 @@ object SparseText {
 
   private val CosineThreshold = 0.35
 
-  /** ts02's connected-components CTE chain (shared with dd07's oracle):
-    * exact near-dup edges (dd02's Jaccard ≥ 0.5 definition) → undirected
-    * graph → recursive transitive closure → `cl(doc_id, cluster_id)` with
-    * cluster_id = MIN(reachable doc). Only clustered docs appear in `cl`.
+  /** ts02's connected-components CTE chain (shared with the dd07, dd11,
+    * sp01, sp02 and pp03 oracles): dd02's df-capped near-dup edges
+    * ([[Dedup.jaccardCtes]], the edges ts02's Spark side reads from
+    * [[Dedup.nearDupEdges]]) → undirected graph → recursive transitive
+    * closure → `cl(doc_id, cluster_id)` with cluster_id = MIN(reachable
+    * doc). Only clustered docs appear in `cl`.
     */
-  private[pipeline] val clusterCtes: String =
-    """w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-      |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-      |    generate_series(1, greatest(len(words) - 2, 1)),
-      |    i -> array_to_string(words[i:i+2], ' ')))) AS s FROM w),
-      |n AS (SELECT doc_id, COUNT(*) AS ns FROM sh GROUP BY 1),
-      |common AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-      |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-      |edges AS (
-      |  SELECT doc_a, doc_b FROM common
-      |  JOIN n na ON doc_a = na.doc_id JOIN n nb ON doc_b = nb.doc_id
-      |  WHERE CAST(c AS DOUBLE) / (na.ns + nb.ns - c) >= 0.5),
+  // lazy: Dedup's defs (dd07, dd11) read it, and it reads Dedup's CTEs, so
+  // whichever object initializes first computes it
+  private[pipeline] lazy val clusterCtes: String =
+    s"""${Dedup.jaccardCtes},
       |undirected AS (
       |  SELECT doc_a AS src, doc_b AS dst FROM edges
       |  UNION ALL SELECT doc_b, doc_a FROM edges),
@@ -63,13 +57,11 @@ object SparseText {
     * operation mirrored by the Spark side.
     */
   private[pipeline] val weightCtes: String =
-    """terms AS (
+    s"""terms AS (
       |  SELECT doc_id, term, CAST(COUNT(*) AS DOUBLE) AS tf
       |  FROM (
-      |    SELECT doc_id, unnest(list_transform(
-      |      generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1)),
-      |      i -> array_to_string((string_split(text, ' '))[i:i+2], ' '))) AS term
-      |    FROM documents) t
+      |    SELECT doc_id, unnest(${Dedup.shinglesSql("words", distinct = false)}) AS term
+      |    FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)) t
       |  GROUP BY doc_id, term),
       |df AS (SELECT term, CAST(COUNT(*) AS DOUBLE) AS df FROM terms GROUP BY term),
       |w AS (SELECT doc_id, t.term, tf / df AS wt FROM terms t JOIN df ON t.term = df.term)""".stripMargin
@@ -79,7 +71,7 @@ object SparseText {
     * consumer fans out over it several times.
     */
   private[graft] def weights(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val shingles = graft.functions.TextExpressions.wordShingles(col("text"))
+    val shingles = Dedup.shingles(col("text"), distinct = false)
     val terms = Tables(spark, dir).documents
       .select(col("doc_id"), explode(shingles).as("term"))
       .groupBy("doc_id", "term")

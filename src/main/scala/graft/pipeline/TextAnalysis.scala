@@ -223,10 +223,8 @@ object TextAnalysis {
     // map-side shingle kernel + two-level aggregate.
     QueryDef.sql(
       "tx07_repetition",
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_transform(
-        |    generate_series(1, greatest(len(words) - 2, 1)),
-        |    i -> array_to_string(words[i:i+2], ' '))) AS s FROM w),
+      s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
+        |sh AS (SELECT doc_id, unnest(${Dedup.shinglesSql("words", distinct = false)}) AS s FROM w),
         |pc AS (SELECT doc_id, s, COUNT(*) AS c FROM sh GROUP BY 1, 2)
         |SELECT doc_id, CAST(SUM(c) AS BIGINT) AS total_shingles,
         |  CAST(MAX(c) AS BIGINT) AS top_count,
@@ -237,7 +235,7 @@ object TextAnalysis {
     ) { (spark, dir) =>
       val sh = Tables(spark, dir).documents
         .select(col("doc_id"),
-          explode(graft.functions.TextExpressions.wordShingles(col("text"))).as("s"))
+          explode(Dedup.shingles(col("text"), distinct = false)).as("s"))
       val ratio = col("top_count").cast("double") / col("total_shingles")
       sh.groupBy("doc_id", "s").agg(count(lit(1)).as("c"))
         .groupBy("doc_id")
@@ -309,10 +307,7 @@ object TextAnalysis {
     // any engine; groups exact duplicates without comparing full texts).
     QueryDef.sql(
       "tx04_fingerprint",
-      """WITH f AS (SELECT doc_id,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(generate_series(1, length(text)), i -> CAST(ascii(text[i:i]) AS BIGINT))),
-        |      (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint
+      s"""WITH f AS (SELECT doc_id, ${Dedup.polyHashSql("text")} AS fingerprint
         |  FROM documents)
         |SELECT doc_id, fingerprint,
         |  CAST(COUNT(*) OVER (PARTITION BY fingerprint) AS BIGINT) AS fp_copies

@@ -206,10 +206,10 @@ object StreamingMVs {
 
   /** st21's maintained MV: streaming URL dedup — ur01's first-seen-wins
     * canonical-URL dedup applied at ingestion time (the C4 opening stage as
-    * a live firewall). The r14 sketch suggested dropDuplicates-with-
-    * watermark (st11's pattern), but that keeps the first ARRIVED row and
-    * micro-batch arrival order is partition-parallel — a nondeterministic
-    * survivor when duplicates DIFFER (st11 got away with it because its
+    * a live firewall). dropDuplicates-with-watermark (st11's pattern)
+    * would not do: it keeps the first ARRIVED row, and micro-batch arrival
+    * order is partition-parallel — a nondeterministic survivor when
+    * duplicates DIFFER (st11 got away with it because its
     * duplicates are bit-identical events). First-seen here means smallest
     * doc_id, so the state is a per-canon_url `min(struct(doc_id, …))` —
     * an order-free mergeable aggregate (A8 discipline): any micro-batch
@@ -315,7 +315,7 @@ object StreamingMVs {
       val sh = tableStream(s, dir, "documents")
         .filter(col("doc_id") % 20 =!= 0)
         .select(col("doc_id"),
-          explode(graft.pipeline.Decontam.docShingles(col("text"))).as("s"))
+          explode(graft.pipeline.Dedup.shingles(col("text"))).as("s"))
       val probe = bloomMightContain(lit(blob), xxhash64(col("s")))
       val confirmed = sh.where(probe)
         .join(broadcast(shB.withColumn("hit", lit(1L))), Seq("s"), "left")
@@ -378,8 +378,8 @@ object StreamingMVs {
 
     // ----- st10: stream-stream interval join — purchases matched to the
     // same user's clicks in the preceding 30 minutes, both sides streaming
-    // with watermarks bounding join state (the attribution-join shape; r1
-    // covered it by unit test only, this entry is oracle-checked).
+    // with watermarks bounding join state (the attribution-join shape,
+    // oracle-checked).
     QueryDef.sql(
       "st10_stream_stream_interval_join",
       """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
@@ -565,8 +565,8 @@ object StreamingMVs {
     // and the per-batch join input is bounded by overlap mass. Survivor
     // and non-survivor branches re-union before ONE aggregation (Spark
     // allows a single streaming agg), whose per-doc counts are
-    // order-independent — incremental == batch, and the oracle is
-    // dc02's bloom-free exact formulation verbatim.
+    // order-independent — incremental == batch, so the oracle is dc02's
+    // (Decontam.setVerdictSql, the bloom-free exact formulation).
     //
     // 100 TB shape: per-doc verdict state IS the MV being maintained (the
     // keyed-sink/update-mode form at scale; complete mode here keeps the
@@ -574,32 +574,14 @@ object StreamingMVs {
     // the foreachBatch persist-once form removes that at scale.
     QueryDef.sql(
       "st17_streaming_decontam",
-      """WITH wc AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents WHERE doc_id % 20 <> 0),
-        |shc AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(len(words) - 2, 1)),
-        |    i -> array_to_string(words[i:i+2], ' ')))) AS s FROM wc),
-        |wb AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents WHERE doc_id % 20 = 0),
-        |shb AS (SELECT DISTINCT unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(len(words) - 2, 1)),
-        |    i -> array_to_string(words[i:i+2], ' ')))) AS s FROM wb),
-        |nc AS (SELECT doc_id, COUNT(*) AS ns FROM shc GROUP BY 1),
-        |mt AS (SELECT c.doc_id, COUNT(*) AS m FROM shc c JOIN shb b ON c.s = b.s GROUP BY 1)
-        |SELECT n.doc_id, CAST(n.ns AS BIGINT) AS n_shingles,
-        |  CAST(COALESCE(m.m, 0) AS BIGINT) AS n_matched,
-        |  CAST(COALESCE(m.m, 0) AS DOUBLE) / n.ns AS overlap_frac,
-        |  CAST(CASE WHEN CAST(COALESCE(m.m, 0) AS DOUBLE) / n.ns >= 0.3
-        |       THEN 1 ELSE 0 END AS BIGINT) AS contaminated
-        |FROM nc n LEFT JOIN mt m ON n.doc_id = m.doc_id
-        |ORDER BY n.doc_id""".stripMargin,
+      graft.pipeline.Decontam.setVerdictSql,
     ) { (spark, dir) =>
       // serve read of the maintained verdict MV
       decontamMv(spark, dir)
         .select(col("doc_id"), col("n_shingles").cast("long").as("n_shingles"),
           col("n_matched").cast("long").as("n_matched"),
           (col("n_matched").cast("double") / col("n_shingles")).as("overlap_frac"))
-        .withColumn("contaminated",
-          when(col("overlap_frac") >= 0.3, 1L).otherwise(0L))
-        .orderBy("doc_id")
+        .transform(graft.pipeline.Decontam.setVerdict)
     },
 
     // ----- st18: streaming near-dup firewall — dd08's incremental
@@ -612,32 +594,15 @@ object StreamingMVs {
     // spent on it), probes the index band-equi-keyed, and the single
     // streaming aggregation folds candidates to the best corpus match.
     // The no-match roster join happens on the materialized result.
-    // Incremental == batch because per-doc max is order-free; the oracle
-    // is dd08's verbatim.
+    // Incremental == batch because per-doc max is order-free, so the
+    // oracle is dd08's (Dedup.incrementalVerdictSql).
     //
     // 100 TB shape: only the arriving batch shuffles (band-key equi join
     // against the bucketed index); per-batch state is one row per arriving
     // doc — the MV being built.
     QueryDef.sql(
       "st18_streaming_neardup_probe",
-      s"""WITH ${graft.pipeline.Dedup.minhashCtes},
-         |hits AS (SELECT
-         |    CASE WHEN doc_a % 10 = 0 THEN doc_a ELSE doc_b END AS batch_id,
-         |    CASE WHEN doc_a % 10 = 0 THEN doc_b ELSE doc_a END AS corpus_id,
-         |    est_jaccard
-         |  FROM mest
-         |  WHERE est_jaccard >= 0.5 AND (doc_a % 10 = 0) <> (doc_b % 10 = 0)),
-         |best AS (SELECT batch_id, corpus_id, est_jaccard,
-         |    ROW_NUMBER() OVER (PARTITION BY batch_id
-         |      ORDER BY est_jaccard DESC, corpus_id) AS rn
-         |  FROM hits)
-         |SELECT d.doc_id,
-         |  COALESCE(b.corpus_id, -1) AS matched_corpus_doc,
-         |  COALESCE(b.est_jaccard, 0.0) AS est_jaccard,
-         |  b.corpus_id IS NOT NULL AS is_dup
-         |FROM documents d LEFT JOIN best b ON b.batch_id = d.doc_id AND b.rn = 1
-         |WHERE d.doc_id % 10 = 0
-         |ORDER BY d.doc_id""".stripMargin,
+      graft.pipeline.Dedup.incrementalVerdictSql,
     ) { (spark, dir) =>
       // serve read of the maintained probe MV; the no-match roster join runs
       // on the materialized result
@@ -679,7 +644,7 @@ object StreamingMVs {
       graft.operators.Analytics.peakFromSpans(concurrencyMv(spark, dir))
     },
 
-    // ----- st20: the live timeline at chart width (r13 verdict item 3) —
+    // ----- st20: the live timeline at chart width —
     // the reference's per-minute last-hour endpoint (app_interactive.py:
     // 218–254) re-queries raw events per request; here the minute grain is
     // MAINTAINED on the ingest stream (timelineMv) and the serve read runs
@@ -700,7 +665,7 @@ object StreamingMVs {
         spark.createDataFrame(mv.rdd, mv.schema))
     },
 
-    // ----- st21: streaming URL-dedup firewall (r14 verdict item 5) — ur01's
+    // ----- st21: streaming URL-dedup firewall — ur01's
     // first-seen-wins canonical-URL dedup maintained ON the ingest stream
     // (urlDedupMv: per-canon_url min-struct state, order-free mergeable so
     // incremental == batch — see the MV scaladoc for why dropDuplicates

@@ -7,10 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Source scan: one session builder, no one-shot mains, one builder per
-  * curation stage, and no operator code that changes session-global state
-  * (a conf, a Dataset cache entry) as it runs. Queries built in one session run
-  * concurrently (`Concurrently`, the serving shim), so a conf set by one
-  * entry leaks into whatever runs next to it.
+  * curation, near-dup and decontamination stage, and no operator code that
+  * changes session-global state (a conf, a Dataset cache entry) as it runs.
+  * Queries built in one session run concurrently (`Concurrently`, the
+  * serving shim), so a conf set by one entry leaks into whatever runs next
+  * to it.
   */
 class SessionHygieneSpec extends AnyFunSuite {
 
@@ -38,6 +39,16 @@ class SessionHygieneSpec extends AnyFunSuite {
     }
 
   private def fileName(h: Hit) = h.file.getFileName.toString
+
+  /** Code lines under src/main holding `literal`; comments and the
+    * literal's own `val` or `def` do not count.
+    */
+  private def sites(literal: String): Seq[Hit] =
+    scan("src/main", java.util.regex.Pattern.quote(literal).r).filterNot { h =>
+      val t = h.text.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*") ||
+        t.contains(s"val $literal ") || t.contains(s"def $literal")
+    }
 
   test("GraftSession is the only session builder in src/") {
     // split so this file does not match itself
@@ -101,10 +112,7 @@ class SessionHygieneSpec extends AnyFunSuite {
       "* 0.5 +" -> "tx02's quality weight",
       "KnuthA" -> "the Knuth hash bucket")
     val copied = stages.flatMap { case (literal, stage) =>
-      val hits = scan("src/main", java.util.regex.Pattern.quote(literal).r).filterNot { h =>
-        val t = h.text.trim
-        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*") || t.contains(s"val $literal ")
-      }
+      val hits = sites(literal)
       val (oracle, spark) = hits.partition { h =>
         val before = h.text.substring(0, h.text.indexOf(literal))
         h.text.trim.startsWith("|") || before.contains("s\"")
@@ -112,6 +120,28 @@ class SessionHygieneSpec extends AnyFunSuite {
       if (spark.size == 1 && oracle.size == 1) None
       else Some(s"$stage ('$literal'): ${spark.size} Spark and ${oracle.size} oracle sites" +
         hits.mkString("\n  ", "\n  ", ""))
+    }
+    assert(copied.isEmpty, copied.mkString("\n", "\n", ""))
+  }
+
+  test("src/main builds each near-dup and decontamination stage once") {
+    // the dedup and decontamination entries and their streaming firewalls
+    // compose one builder per stage, and st17/st18 answer with dc02's/dd08's
+    // oracle. Each literal below belongs to one stage's Spark or oracle
+    // builder and may sit on one code line only.
+    val stages = Seq(
+      "[i:i+2]" -> "3-word shingles, oracle",
+      "wordShingles(text)" -> "3-word shingles, Spark",
+      "[i:i])" -> "string hash fold, oracle",
+      "RowsPerBand + 1" -> "band fold, Spark",
+      "ORDER BY est_jaccard DESC, corpus_id" -> "dd08's incremental verdict, oracle",
+      "n.ns >= 0.3" -> "dc02's set-level verdict, oracle",
+      "col(\"overlap_frac\") >= 0.3" -> "dc02's set-level verdict, Spark",
+      "bloomBuild(" -> "benchmark shingle Bloom build, Spark")
+    val copied = stages.flatMap { case (literal, stage) =>
+      val hits = sites(literal)
+      if (hits.size == 1) None
+      else Some(s"$stage ('$literal'): ${hits.size} sites" + hits.mkString("\n  ", "\n  ", ""))
     }
     assert(copied.isEmpty, copied.mkString("\n", "\n", ""))
   }

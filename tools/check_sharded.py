@@ -114,11 +114,10 @@ def staged_minhash(sql, sfdir, workdir):
     """Stage the shared minhash chain: sigs.parquet, bands.parquet, per-band
     candidate files, and return SQL snippets for msgl/mcand views that read
     them — semantics identical to the original CTEs."""
-    pre_mbands, _, _ = slice_between(sql, "WITH mw AS", "mbands AS")
-    sig_with = pre_mbands.rstrip().rstrip(",")  # WITH mw ..., msgl AS (...)
+    # WITH [pp01's stage CTEs,] mw ..., msgl AS (...)
+    sig_with = sql[:sql.index("mbands AS")].rstrip().rstrip(",")
     run_stage(sfdir, workdir, [
-        f"COPY ({sig_with.replace('WITH mw AS', 'WITH mw AS', 1)} "
-        f"SELECT doc_id, sig FROM msgl) TO '{workdir}/sigs.parquet'"
+        f"COPY ({sig_with} SELECT doc_id, sig FROM msgl) TO '{workdir}/sigs.parquet'"
     ])
     mbands_chunk, _, _ = slice_between(sql, "mbands AS", "mcand AS")
     mbands_sel = cte_body(mbands_chunk, "mbands")
@@ -149,7 +148,9 @@ def check_minhash_family(name, sql, sfdir, outdir, workdir):
     j = sql.index(mest_end_anchor, i) + len(mest_end_anchor)
     mest_cte = sql[i:j]  # "mest AS ( ... c.doc_b)"
     tail = sql[j:]       # ",\nnext AS (...)...SELECT ..." or "\nSELECT ..."
-    full = (f"WITH msgl AS {msgl_view}, mcand AS {mcand_view}, "
+    # CTEs ahead of the minhash chain (pp01's stages, which its tail reads)
+    head = sql[sql.index("WITH ") + len("WITH "):sql.index("mw AS")]
+    full = (f"WITH {head}msgl AS {msgl_view}, mcand AS {mcand_view}, "
             f"{mest_cte}{tail}")
     cols = spark_cols(outdir, name)
     exp = hash_fold(workdir, sfdir, full, cols)
